@@ -14,8 +14,9 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * coordination. `update`'s left-anti check and the delete+append pair
   * are check-then-act across separate autocommit statements, so two
   * concurrent updates of the SAME files can insert duplicate filepath
-  * rows (benign for correctness — `Metastore.prune` de-duplicates
-  * filepaths — but add a DB-side unique index on filepath, or keep
+  * rows (benign for correctness — the zone-map snapshot merges a
+  * file's rows into their union interval, see `ZoneMap` — but add a
+  * DB-side unique index on filepath, or keep
   * maintenance single-writer, if duplicates matter), and a replace
   * racing an update can lose the update's rows. Serialize maintenance
   * per table, exactly as the reference's deployments do.

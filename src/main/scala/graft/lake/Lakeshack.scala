@@ -23,7 +23,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *
   * MID-COMPACTION SENTINEL: during the `.cbak` swap window the engine
   * scans the live dir unpruned, and no honest file count exists — the
-  * cached stats count the renamed-away files, and the live set is
+  * snapshot stats count the renamed-away files, and the live set is
   * changing under the in-flight swap. `filesTotal`/`filesScanned` are
   * both **-1** for such a query (prune counters are meaningless when
   * pruning was bypassed); consumers aggregating prune ratios must
@@ -58,7 +58,9 @@ final case class QueryTelemetry(
   *
   * Query lifecycle (SURVEY.md §3):
   *   1. normalize scalar→list input (lakeshack.py:514-515)
-  *   2. prune: stats range-join → surviving file list (metastore.py:414-481)
+  *   2. prune on the driver: the instance's [[ZoneMap]] snapshot of the
+  *      stats (collected once, on first use) → surviving file list
+  *      (metastore.py:414-481); no Spark job per query
   *   3. scan only those files; `isin` + clause conjunction + projection are
   *      pushed by Catalyst into the Parquet reader (row-group skipping
   *      included), replacing pyarrow's to_batches(filter=, columns=)
@@ -72,6 +74,11 @@ final case class QueryTelemetry(
   * may-contain (false positives allowed), so the scan filter re-applies
   * both the membership predicate and every clause — including clauses on
   * columns the metastore never indexed.
+  *
+  * Snapshot lifetime: the stats are read ONCE, on the first query (or
+  * `filesTotal`), and are immutable for the instance's lifetime. Files
+  * harvested by a later `Metastore.update` are unknown to the snapshot;
+  * build a new instance after updating the stats.
   */
 class Lakeshack(spark: SparkSession, stats: DataFrame, dataSchema: Option[StructType] = None,
                 dataPath: Option[String] = None) {
@@ -96,9 +103,11 @@ class Lakeshack(spark: SparkSession, stats: DataFrame, dataSchema: Option[Struct
     * rows/elapsed after its DataFrame first executes). */
   @volatile var lastTelemetry: Option[QueryTelemetry] = None
 
-  /** Total indexed files — the prune denominator. Computed once: the
-    * stats frame is immutable for this instance's lifetime. */
-  lazy val filesTotal: Long = stats.select("filepath").distinct().count()
+  /** The stats, collected once: every query prunes against it. */
+  private lazy val zoneMap: ZoneMap = ZoneMap(stats)
+
+  /** Total indexed files — the prune denominator: the snapshot's size. */
+  lazy val filesTotal: Long = zoneMap.files.size
 
   /** Point/range retrieval. Returns an unexecuted DataFrame so callers
     * can compose further operators (the host engine IS Spark).
@@ -157,7 +166,7 @@ class Lakeshack(spark: SparkSession, stats: DataFrame, dataSchema: Option[Struct
         return Lakeshack.observed(spark, this, telemetry, df)
       }
     }
-    val zonePruned = Metastore.prune(spark, stats, values, clauses)
+    val zonePruned = zoneMap.prune(values, clauses)
     val pruned = bloomStats match {
       // intersect with Bloom membership of the requested values — both
       // prunes are may-contain, so the intersection is too (the scan
@@ -307,15 +316,13 @@ object Lakeshack {
     }
 
   /** Build stats in one pass and return a ready-to-query engine. The
-    * stats DataFrame is cached: it is tiny (one row per file) and every
-    * query's prune step consumes it — without the cache each query
-    * would silently re-run the full stats-build scan of the data. */
+    * stats build runs once, when the engine takes its snapshot. */
   def apply(spark: SparkSession, dataPath: String, clusterColumn: String,
             optionalColumns: Seq[String] = Nil): Lakeshack = {
     // recursive, matching Metastore.build's discovery on nested layouts
     val schema = spark.read.option("recursiveFileLookup", "true").parquet(dataPath).schema
     new Lakeshack(spark,
-      Metastore.build(spark, dataPath, clusterColumn, optionalColumns).cache(),
+      Metastore.build(spark, dataPath, clusterColumn, optionalColumns),
       Some(schema), Some(dataPath))
   }
 
@@ -330,6 +337,6 @@ object Lakeshack {
                 clusterColumn: String, optionalColumns: Seq[String] = Nil): Lakeshack = {
     val schema = spark.read.option("recursiveFileLookup", "true").parquet(dataPath).schema
     val stats = Metastore.loadValidated(spark, statsPath, schema, clusterColumn, optionalColumns)
-    new Lakeshack(spark, stats.cache(), Some(schema), Some(dataPath))
+    new Lakeshack(spark, stats, Some(schema), Some(dataPath))
   }
 }

@@ -77,7 +77,7 @@ object Merge {
     // prune: stats side is tiny (one row per file) — broadcast it so an
     // arbitrarily large CDC batch streams through without a shuffle;
     // NULL bounds (all-null stat column in a file) must count as
-    // may-contain, mirroring Metastore.prunePairs' soundness rule
+    // may-contain, mirroring ZoneMap's soundness rule
     val affected = keys.join(
         broadcast(stats.select(col("filepath"),
           col(s"${cluster}_min").as("_lo"), col(s"${cluster}_max").as("_hi"))),

@@ -14,9 +14,10 @@ import org.apache.spark.sql.types._
   * name-recovery rule (lakeshack/metastore.py:117-126).
   *
   * Scale design (100 TB / ~100k files):
-  *  - stats stay tiny (1 row per file), so pruning is a broadcast range
-  *    join of requested values against [min,max] intervals — never a
-  *    shuffle of the data table;
+  *  - stats stay tiny (1 row per file), so pruning is driver-side math:
+  *    the stats are collected once into a [[ZoneMap]] snapshot and each
+  *    query's values are binary-searched against the [min,max]
+  *    intervals — no Spark job, never a shuffle of the data table;
   *  - `build` scans data once at ingest (distributed; the groupBy key is
   *    `input_file_name()` so partial min/max aggregation happens map-side
   *    per task and only per-file partials hit the exchange);
@@ -629,62 +630,11 @@ object Metastore {
       .map(_.dropRight(4))
       .getOrElse(throw new IllegalArgumentException("Not a metastore stats table: no *_min column"))
 
-  /** Zone-map pruning (reference O8, metastore.py:414-481) as ONE range
-    * join instead of the reference's per-value DB round-trip
-    * (metastore.py:446): requested values (tiny, broadcast) vs file
-    * [min,max] intervals. Returns (filepath, value) hit pairs — the
-    * file→values multiplicity of Metastore.query's dict result
-    * (metastore.py:442,476).
-    *
-    * Unknown clause columns are silently ignored for pruning
-    * (metastore.py:454-455) but still applied at scan time by
-    * Lakeshack.query — preserved behavior, load-bearing for
-    * test_query_ts_optional_where_clause.
-    */
-  def prunePairs(spark: SparkSession, stats: DataFrame, values: Seq[Any],
-                 clauses: Seq[Clause] = Nil): DataFrame = {
-    val cluster = clusterColumnOf(stats)
-    val statCols = stats.schema.fieldNames.toSet
-    // Floating-point stat columns: NaN is excluded from footer min/max
-    // by spec, and Spark orders NaN above every double, so max-side
-    // tests (>, >=, =) could prune a file whose NaN rows DO match — a
-    // false negative. Only <, <= remain sound; others fall back to the
-    // scan-time filter (may-contain preserved).
-    def fpCol(c: String): Boolean = stats.schema.fields
-      .find(_.name == c + "_min")
-      .exists(f => f.dataType == FloatType || f.dataType == DoubleType)
-    val applicable = clauses.filter(c => statCols.contains(c.column + "_min") &&
-      (!fpCol(c.column) || c.op == "<" || c.op == "<="))
-    // NULL stats (e.g. a file whose column had no footer statistics — INT96
-    // timestamps, or an all-null column) must NOT prune the file out:
-    // pruning may only produce false positives, never false negatives.
-    val clausePred = applicable
-      .map(c => c.toPruneColumn || col(c.column + "_min").isNull)
-      .reduceOption(_ && _).getOrElse(lit(true))
-    val valueType = stats.schema(cluster + "_min").dataType
-    val jrows = new java.util.ArrayList[Row](values.size)
-    values.foreach(v => jrows.add(Row(v)))
-    val valuesDf = spark.createDataFrame(jrows, StructType(Seq(StructField("value", valueType))))
-    // values side is tiny -> broadcast range join; the stats table itself
-    // is tiny (1 row/file) so this never shuffles data. A file with NULL
-    // cluster stats (no footer statistics — INT96, all-null column) must
-    // match EVERY value: `min <= v && v <= max` is NULL for it, which a
-    // bare join would treat as no-match — a false negative.
-    // NaN cluster values (float/double only): excluded from footer stats
-    // by spec, so the interval test would miss them — match every file
-    val nanBypass =
-      if (valueType == FloatType || valueType == DoubleType) isnan(col("value"))
-      else lit(false)
-    stats.where(clausePred)
-      .join(broadcast(valuesDf),
-        col(cluster + "_min").isNull || nanBypass ||
-          (col(cluster + "_min") <= col("value") && col("value") <= col(cluster + "_max")))
-      .select(col("filepath"), col("value"))
-  }
-
-  /** Surviving file list for a query (union of per-value hits). */
+  /** Surviving file list for a query (reference O8, metastore.py:414-481):
+    * collect the stats into a [[ZoneMap]] and run the kernel
+    * `Lakeshack.query` uses, so the API and the engine share one prune
+    * semantics. Pruning the same stats repeatedly? Hold the `ZoneMap`. */
   def prune(spark: SparkSession, stats: DataFrame, values: Seq[Any],
             clauses: Seq[Clause] = Nil): Seq[String] =
-    prunePairs(spark, stats, values, clauses)
-      .select("filepath").distinct().collect().map(_.getString(0)).toSeq
+    ZoneMap(stats).prune(values, clauses)
 }

@@ -2,7 +2,7 @@ package graft.lake
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
-import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.execution.datasources._
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types._
@@ -20,11 +20,10 @@ import org.apache.spark.sql.types._
   * files without knowing the Metastore exists. The reference cannot
   * express this layering (its host has no optimizer to hook).
   *
-  * Pruning semantics are exactly Metastore.prune's (reference O8,
-  * metastore.py:444-467), extended to the predicate shapes Catalyst
-  * actually pushes: =, IN/INSET, >, >=, <, <= (each one-sided, as in the
-  * reference), AND/OR recursion, literal-on-either-side. Anything else —
-  * unknown column, cast-wrapped attribute, UDF — keeps the file:
+  * Pruning semantics are Metastore.prune's — the shared [[ZoneMap]]
+  * kernel (reference O8, metastore.py:444-467) — over the predicate
+  * shapes Catalyst actually pushes (`ZoneMap.mayContain`). Anything
+  * else — unknown column, cast-wrapped attribute, UDF — keeps the file:
   * pruning may produce false positives, never false negatives
   * (SURVEY.md §2.3); the scan filter re-applies every predicate.
   *
@@ -49,7 +48,7 @@ class MetastoreFileIndex(
     * `statsSource` — a path-backed source (see `table(…, statsPath)`)
     * re-reads the stats table, so rows appended since are picked up. */
   @volatile private var intervals: Map[String, Map[String, (Literal, Literal)]] =
-    MetastoreFileIndex.intervalMap(statsSource())
+    ZoneMap(statsSource()).files
 
   /** Hadoop conf resolved ONCE at construction (the building thread has
     * a session in hand) — the compaction probe must not call
@@ -72,7 +71,7 @@ class MetastoreFileIndex(
   override def inputFiles: Array[String] = base.inputFiles
   override def refresh(): Unit = {
     base.refresh()
-    intervals = MetastoreFileIndex.intervalMap(statsSource())
+    intervals = ZoneMap(statsSource()).files
   }
   override def sizeInBytes: Long = base.sizeInBytes
   override def partitionSchema: StructType = base.partitionSchema
@@ -104,79 +103,15 @@ class MetastoreFileIndex(
       base.refresh()
       return base.listFiles(partitionFilters, dataFilters)
     }
-    var total = 0L
-    var kept = 0L
-    val out = base.listFiles(partitionFilters, dataFilters).map { pd =>
-      pd.copy(files = pd.files.filter { f =>
-        total += 1
-        val keep = intervals.get(f.getPath.toString) match {
-          case Some(stats) => dataFilters.forall(MetastoreFileIndex.mayContain(stats, _))
-          case None => true // file unknown to the metastore: never prune
-        }
-        if (keep) kept += 1
-        keep
-      })
-    }
-    // O19 telemetry for the transparent path (Lakeshack.query logs its
-    // own counters): at 100 TB "how many files did pruning skip" is the
-    // operational signal a plan regression shows up in first
-    if (dataFilters.nonEmpty)
-      MetastoreFileIndex.log.info(
-        s"metastore prune: files_scanned=$kept/$total files_pruned=${total - kept}")
-    out
+    val listing = base.listFiles(partitionFilters, dataFilters)
+    // a file unknown to the metastore (no interval entry) is never pruned
+    if (dataFilters.isEmpty) listing
+    else ZoneMap.pruneListing(listing, dataFilters, "metastore prune")(intervals.get)
   }
 
 }
 
 object MetastoreFileIndex {
-
-  /** May the file (with these column intervals) contain a row satisfying
-    * `e`? Unknown shapes answer true. Shared by this index and the
-    * catalog-side [[SnapshotFileIndex]] — ONE definition of the pruning
-    * semantics, so the SQL path cannot drift from the API path. */
-  private[lake] def mayContain(stats: Map[String, (Literal, Literal)], e: Expression): Boolean = {
-    // Floating-point columns: a spec-compliant writer EXCLUDES NaN from
-    // footer min/max, and Spark orders NaN above every double — so a
-    // NaN row satisfies `col > v`, `col >= v`, and `col === NaN` even
-    // when the recorded max says the file can't match. Only the
-    // min-side tests (<, <=) stay sound; everything else must keep the
-    // file. (Same rule as Metastore.prunePairs' float handling.)
-    def fp(a: Attribute): Boolean =
-      a.dataType == FloatType || a.dataType == DoubleType
-    def bounds(a: Attribute): Option[(Literal, Literal)] = stats.get(a.name)
-    def isTrue(p: Expression): Boolean = p.eval(null) == true
-    e match {
-      case And(l, r) => mayContain(stats, l) && mayContain(stats, r)
-      case Or(l, r) => mayContain(stats, l) || mayContain(stats, r)
-      // = : both bounds (metastore.py:461-463)
-      case EqualTo(a: Attribute, v: Literal) if !fp(a) =>
-        bounds(a).forall { case (mn, mx) =>
-          isTrue(LessThanOrEqual(mn, v)) && isTrue(LessThanOrEqual(v, mx)) }
-      case EqualTo(v: Literal, a: Attribute) => mayContain(stats, EqualTo(a, v))
-      case In(a: Attribute, vs) if !fp(a) && vs.forall(_.isInstanceOf[Literal]) =>
-        bounds(a).forall { case (mn, mx) => vs.exists { v =>
-          isTrue(LessThanOrEqual(mn, v)) && isTrue(LessThanOrEqual(v, mx)) } }
-      case InSet(a: Attribute, vs) if !fp(a) =>
-        bounds(a).forall { case (mn, mx) => vs.exists { v =>
-          val l = Literal(v, a.dataType)
-          isTrue(LessThanOrEqual(mn, l)) && isTrue(LessThanOrEqual(l, mx)) } }
-      // one-sided interval tests (metastore.py:459-467)
-      case GreaterThan(a: Attribute, v: Literal) if !fp(a) =>
-        bounds(a).forall { case (_, mx) => isTrue(LessThan(v, mx)) }
-      case GreaterThanOrEqual(a: Attribute, v: Literal) if !fp(a) =>
-        bounds(a).forall { case (_, mx) => isTrue(LessThanOrEqual(v, mx)) }
-      case LessThan(a: Attribute, v: Literal) =>
-        bounds(a).forall { case (mn, _) => isTrue(GreaterThan(v, mn)) }
-      case LessThanOrEqual(a: Attribute, v: Literal) =>
-        bounds(a).forall { case (mn, _) => isTrue(GreaterThanOrEqual(v, mn)) }
-      // literal-on-left mirrors
-      case GreaterThan(v: Literal, a: Attribute) => mayContain(stats, LessThan(a, v))
-      case GreaterThanOrEqual(v: Literal, a: Attribute) => mayContain(stats, LessThanOrEqual(a, v))
-      case LessThan(v: Literal, a: Attribute) => mayContain(stats, GreaterThan(a, v))
-      case LessThanOrEqual(v: Literal, a: Attribute) => mayContain(stats, GreaterThanOrEqual(a, v))
-      case _ => true
-    }
-  }
 
   private[lake] val log = org.slf4j.LoggerFactory.getLogger(classOf[MetastoreFileIndex])
 
@@ -272,24 +207,4 @@ object MetastoreFileIndex {
       case _ => throw new IllegalArgumentException(
         "DataFrame was not produced by MetastoreFileIndex.table")
     }
-
-  /** Collect the (tiny) stats table into filepath → column → (min,max)
-    * Literals. NULL bounds (a file with no footer stats for the column)
-    * drop the column's entry — that file is then never pruned on it.
-    * Paths are normalized through Hadoop `Path` so `_metadata.file_path`
-    * URIs (`file:///x`) match `FileStatus` URIs (`file:/x`). */
-  def intervalMap(stats: DataFrame): Map[String, Map[String, (Literal, Literal)]] = {
-    val statCols = stats.schema.fields.filter(_.name.endsWith("_min"))
-      .map(f => (f.name.dropRight(4), f.dataType))
-    stats.collect().map { row =>
-      val fp = new Path(row.getAs[String]("filepath")).toString
-      val byCol = statCols.flatMap { case (c, dt) =>
-        val mn = row.getAs[Any](c + "_min")
-        val mx = row.getAs[Any](c + "_max")
-        if (mn == null || mx == null) None
-        else Some(c -> (Literal.create(mn, dt), Literal.create(mx, dt)))
-      }.toMap
-      fp -> byCol
-    }.toMap
-  }
 }

@@ -23,27 +23,6 @@ final case class Clause(column: String, op: String, value: Any) {
     case "<"  => col(column) < lit(value)
     case "<=" => col(column) <= lit(value)
   }
-
-  /** Zone-map pruning predicate against `<col>_min` / `<col>_max` stats
-    * columns. One-sided by design, exactly the reference's op mapping
-    * (lakeshack/metastore.py:459-467):
-    *   `>=` → v <= max ; `>` → v < max ; `=` → min <= v <= max ;
-    *   `<`  → v > min  ; `<=` → v >= min.
-    * May-contain semantics: false positives allowed (filtered at scan
-    * time), false negatives never.
-    */
-  def toPruneColumn: Column = {
-    val mn = col(column + "_min")
-    val mx = col(column + "_max")
-    val v = lit(value)
-    op match {
-      case ">=" => v <= mx
-      case ">"  => v < mx
-      case "=" | "==" => mn <= v && v <= mx
-      case "<"  => v > mn
-      case "<=" => v >= mn
-    }
-  }
 }
 
 object Clause {

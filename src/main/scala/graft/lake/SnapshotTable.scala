@@ -26,7 +26,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *  1. ZONE-MAP FILE PRUNING ([[SnapshotFileIndex]]): `WHERE` clauses
   *     skip non-matching files at planning time from cached footer
   *     stats, exactly like the API path's
-  *     [[MetastoreFileIndex.tableForFiles]] (one shared `mayContain`,
+  *     [[MetastoreFileIndex.tableForFiles]] (one shared `ZoneMap.mayContain`,
   *     so the SQL and API pruning semantics cannot drift);
   *  2. DELETION-VECTOR application ([[DvScanBuilder]]): a version that
   *     carries DVs is readable in pure SQL — each dirty file's dead
@@ -377,19 +377,9 @@ private[lake] class SnapshotFileIndex(
         Metastore.isOrderable(schema(c).dataType))
     if (cols.isEmpty) return base
     val byCol = cols.map(c => c -> intervalsOf(c))
-    var total = 0; var kept = 0
-    val out = base.map { pd =>
-      pd.copy(files = pd.files.filter { f =>
-        total += 1
-        val p = f.getPath.toString
-        val stats = byCol.flatMap { case (c, m) => m.get(p).map(c -> _) }.toMap
-        val keep = dataFilters.forall(MetastoreFileIndex.mayContain(stats, _))
-        if (keep) kept += 1
-        keep
-      })
+    val out = ZoneMap.pruneListing(base, dataFilters, "snapshot catalog prune") { p =>
+      Some(byCol.flatMap { case (c, m) => m.get(p).map(c -> _) }.toMap)
     }
-    MetastoreFileIndex.log.info(
-      s"snapshot catalog prune: files_scanned=$kept/$total files_pruned=${total - kept}")
     bloomPrune(out, dataFilters)
   }
 

@@ -1,9 +1,8 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-import graft.lake.{ClusteredWriter, Metastore}
+import graft.lake.{ClusteredWriter, Metastore, ZoneMap}
 
 /** Zone-map-pruned reads of a PERSISTED index table — the machinery
   * shared by every disk-resident index in the library (the MinHash-LSH
@@ -17,9 +16,10 @@ import graft.lake.{ClusteredWriter, Metastore}
   * structures.
   *
   * The prune decision is DRIVER-SIDE MATH, not a Spark job: stats rows
-  * are collected once per path into a fingerprint-invalidated cache,
-  * and each probe binary-searches its sorted values against each
-  * file's interval — O(F log V). May-contain semantics: every caller
+  * are collected once per path into a fingerprint-invalidated
+  * [[graft.lake.ZoneMap]] snapshot, and each probe runs the shared
+  * zone-map kernel (sorted values, one binary search per file —
+  * O(F log V)). May-contain semantics: every caller
   * re-filters by an exact join or predicate, so pruning can only
   * shrink I/O, never change results.
   *
@@ -93,42 +93,18 @@ private[graft] object IndexRead {
     if (entries.iterator.map(_._2).sum < minPruneBytes) return full()
     cachedStats(spark, stats) match {
       case None => full()
-      case Some(rows) =>
+      case Some(zm) =>
         val vs = values.filter(_ != null).distinct
         if (vs.size > MaxPruneValues) return full()
-        // any-NaN value defeats interval tests (footer stats exclude
-        // NaN by spec) — read everything, as Metastore.prunePairs does
-        val hasNan = vs.exists {
-          case d: java.lang.Double => d.isNaN
-          case f: java.lang.Float  => f.isNaN
-          case _ => false
-        }
-        val sorted = vs.toArray.sortWith(cmpLt)
-        def mayContain(min: Any, max: Any): Boolean =
-          min == null || max == null || hasNan || {
-            // first value >= min, then check it is <= max
-            var lo = 0; var hi = sorted.length
-            while (lo < hi) {
-              val mid = (lo + hi) >>> 1
-              if (cmpLt(sorted(mid), min)) lo = mid + 1 else hi = mid
-            }
-            lo < sorted.length && !cmpLt(max, sorted(lo))
-          }
-        val known = rows.iterator.map(_._1).toSet
-        val kept = rows.iterator
-          .filter { case (_, mn, mx) => mayContain(mn, mx) }
-          .map(_._1).toSet
-        val files = listing.filter(p => kept.contains(p) || !known.contains(p))
+        val kept = zm.prune(vs).toSet
+        val files = listing.filter(p => kept.contains(p) || !zm.files.contains(p))
         lastPrune.put(tablePath, (files.size, listing.size))
         if (files.isEmpty) spark.read.parquet(tablePath).limit(0)
         else spark.read.parquet(files: _*)
     }
   }
 
-  private def cmpLt(a: Any, b: Any): Boolean =
-    a.asInstanceOf[Comparable[Any]].compareTo(b) < 0
-
-  /** Stats rows `(filepath, min, max)` collected once per stats path,
+  /** Stats snapshot collected once per stats path,
     * invalidated by the stats directory's listing fingerprint (name +
     * length + mtime of every file) — appends and compacts change the
     * listing, so a probe never prunes against stale bounds it could
@@ -138,11 +114,10 @@ private[graft] object IndexRead {
     * session): the rows derive from the files, and the listing
     * fingerprint already invalidates on any change — a session key
     * would only pin stopped sessions in the map. */
-  private val statsCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Array[(String, Any, Any)])]()
+  private val statsCache =
+    new java.util.concurrent.ConcurrentHashMap[String, (String, ZoneMap)]()
 
-  private def cachedStats(spark: SparkSession,
-                          statsPath: String): Option[Array[(String, Any, Any)]] = {
+  private def cachedStats(spark: SparkSession, statsPath: String): Option[ZoneMap] = {
     val root = new org.apache.hadoop.fs.Path(statsPath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return None
@@ -158,14 +133,9 @@ private[graft] object IndexRead {
     }
     val cached = statsCache.get(statsPath)
     if (cached != null && cached._1 == fp) return Some(cached._2)
-    val st = Metastore.load(spark, statsPath)
-    val cols = st.schema.fieldNames
-    val minCol = cols.find(_.endsWith("_min")).get
-    val maxCol = minCol.stripSuffix("_min") + "_max"
-    val rows = st.select(col("filepath"), col(minCol), col(maxCol))
-      .collect().map(r => (r.getString(0), r.get(1), r.get(2)))
-    statsCache.put(statsPath, (fp, rows))
-    Some(rows)
+    val zm = ZoneMap(Metastore.load(spark, statsPath))
+    statsCache.put(statsPath, (fp, zm))
+    Some(zm)
   }
 
   def exists(spark: SparkSession, dir: String): Boolean = {

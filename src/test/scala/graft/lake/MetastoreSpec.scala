@@ -143,7 +143,7 @@ class MetastoreSpec extends SparkSpec {
         Metastore.prune(spark, s, values, clauses).size
 
       // every requested id hits >= its own file, each hit within [min,max]
-      val pairs = Metastore.prunePairs(spark, s, ids).collect()
+      val pairs = PruneReference.prunePairs(spark, s, ids).collect()
       assert(pairs.map(_.getString(0)).distinct.length >= 10, s"$v: 10 per-file ids must hit all files")
 
       assert(nFiles(ids, Seq(Clause("timestamp", "<", min0))) === 0, s"$v: < global-min")
