@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.{PairKernel, PairsInBucket}
+
 /** Deduplication operators — exact, MinHash+LSH, SimHash, n-gram Jaccard,
   * embedding-cosine — over (id, text) corpora. Absent from the reference
   * (SURVEY.md §2.2 ★); designed for the 100 TB case:
@@ -465,7 +467,12 @@ object Dedup {
     * (pigeonhole: Hamming ≤ 3 ⟹ one of 4 16-bit chunks is identical,
     * so candidates come from equi-buckets, never a cross join). Same
     * aggregate-then-expand shape as candidatePairsFromBuckets so the
-    * fingerprint pipeline executes once, with the same skew cap. */
+    * fingerprint pipeline executes once, with the same skew cap.
+    *
+    * Ids should be unique. A repeated id is never paired with itself:
+    * each of its distinct fingerprints pairs with the other ids of its
+    * chunk buckets, so one (doc_a, doc_b) can appear once per distinct
+    * hamming distance. */
   def simhashCandidates(fps: DataFrame, maxHamming: Int = 3, maxBucket: Int = 1000): DataFrame = {
     // pigeonhole over 4 chunks only guarantees candidate recall for
     // Hamming <= 3; a larger threshold would silently miss pairs whose
@@ -474,32 +481,13 @@ object Dedup {
     val chunks = fps.select(col("doc"), col("simhash"),
       posexplode(array((0 until 4).map(i =>
         shiftright(col("simhash"), i * 16).bitwiseAND(0xFFFFL)): _*)).as(Seq("chunk_idx", "chunk")))
-    // the Hamming-filtered i<j expansion is the native
-    // graft.functions.SimhashPairExpand (round-19): the nested-HOF form
-    // (retained in [[simhashPairExpandHof]] as DedupSpec's reference)
-    // materialized a boxed struct per CANDIDATE pair before the
-    // hamming filter dropped almost all of them — survivors-only
-    // emission means the |bucket|²/2 volume never exists as structs
-    chunks.groupBy("chunk_idx", "chunk")
-      .agg(sort_array(collect_set(struct(col("doc"), col("simhash")))).as("items"))
-      .where(size(col("items")) >= 2 && size(col("items")) <= maxBucket)
-      .select(explode(org.apache.spark.sql.GraftColumnBridge.column(
-        graft.functions.SimhashPairExpand(
-          org.apache.spark.sql.GraftColumnBridge.expression(col("items")),
-          maxHamming))).as("p"))
-      .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"), col("p.hamming").as("hamming"))
+    // the Hamming test runs inside the bucket: in a dup-dense chunk
+    // bucket almost every candidate fails it, and only survivors become
+    // rows
+    pairsInBuckets(chunks, Seq("chunk_idx", "chunk"), struct(col("doc"), col("simhash")),
+        maxBucket, PairKernel.Hamming(maxHamming))
       .distinct()
   }
-
-  /** The superseded Hamming nested-HOF expansion (unfiltered — the
-    * Column filter was applied post-explode) — DedupSpec's bit-identity
-    * reference for [[graft.functions.SimhashPairExpand]], not called on
-    * any query path. */
-  private[ops] def simhashPairExpandHof(items: Column): Column =
-    flatten(transform(items, (a, i) =>
-      transform(slice(items, i + 2, size(items)), b =>
-        struct(a.getField("doc").as("doc_a"), b.getField("doc").as("doc_b"),
-          bit_count(a.getField("simhash").bitwiseXOR(b.getField("simhash"))).as("hamming")))))
 
   /** n-gram (shingle) Jaccard similarity via an inverted index:
     * explode shingles → per-shingle doc list → common-count per
@@ -565,14 +553,11 @@ object Dedup {
     * tail of [[ngramJaccard]] and [[ngramJaccardOnSets]]. */
   private def jaccardFromIndex(withN: DataFrame, threshold: Double,
                                maxShingleDf: Int): DataFrame = {
-    // inverted index: one row per shingle with its (deduped, doc-sorted)
-    // doc list; pair generation happens INSIDE the array, so there is no
-    // self-join, and the df cutoff (skew guard / recall knob) is a
-    // size() filter. struct puts doc first so sort_array orders by doc
-    // and the i<j expansion yields doc_a < doc_b.
-    val byShingle = withN.groupBy("sh")
-      .agg(sort_array(collect_set(struct(col("doc"), col("n_sh")))).as("docs")) // set: duplicate doc ids must not emit (d, d) self-pairs
-      .where(size(col("docs")) >= 2 && size(col("docs")) <= maxShingleDf)
+    // inverted index: one bucket per shingle holding its (doc, n_sh)
+    // items; pairs are generated inside the bucket, so there is no
+    // self-join, and the df cutoff (skew guard / recall knob) is the
+    // bucket cap. struct puts doc first so the sorted items yield
+    // doc_a < doc_b.
     // LENGTH FILTER (exact, classic similarity-join bound): n_common ≤
     // min(|A|,|B|) and |A∪B| ≥ max(|A|,|B|), so J ≤ min/max — a pair
     // whose sizes differ by more than the threshold ratio can NEVER
@@ -586,38 +571,15 @@ object Dedup {
     // 10× probe's J≥0.9 anchor. The 1e-9 slack makes a false drop at the
     // J = t boundary impossible (double rounding is ~1e-16); the few
     // extra pairs admitted are disposed of by the final filter.
-    // the ratio-filtered i<j expansion is the native
-    // graft.functions.JaccardPairExpand (round-19): the nested-HOF
-    // form (retained in [[jaccardPairExpandHof]] as DedupSpec's
-    // reference) paid an interpreted lambda dispatch + a boxed
-    // least/greatest predicate evaluation per PAIR — the same measured
-    // candidate-stage majority as candidatePairsFromBuckets'
-    byShingle
-      .select(explode(org.apache.spark.sql.GraftColumnBridge.column(
-        graft.functions.JaccardPairExpand(
-          org.apache.spark.sql.GraftColumnBridge.expression(col("docs")),
-          threshold))).as("p"))
-      .groupBy(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"),
-        col("p.sh_a").as("sh_a"), col("p.sh_b").as("sh_b"))
+    pairsInBuckets(withN, Seq("sh"), struct(col("doc"), col("n_sh")), maxShingleDf,
+        PairKernel.LengthRatio(threshold))
+      .groupBy("doc_a", "doc_b", "sh_a", "sh_b")
       .agg(count(lit(1)).as("n_common"))
       .withColumn("jaccard",
         col("n_common").cast("double") / (col("sh_a") + col("sh_b") - col("n_common")))
       .where(col("jaccard") >= threshold)
       .select("doc_a", "doc_b", "n_common", "jaccard")
   }
-
-  /** The superseded ratio-filtered nested-HOF expansion — DedupSpec's
-    * bit-identity reference for [[graft.functions.JaccardPairExpand]],
-    * not called on any query path. */
-  private[ops] def jaccardPairExpandHof(docs: Column, threshold: Double): Column =
-    flatten(transform(docs, (a, i) =>
-      transform(
-        filter(slice(docs, i + 2, size(docs)), b =>
-          least(a.getField("n_sh"), b.getField("n_sh")).cast("double") /
-            greatest(a.getField("n_sh"), b.getField("n_sh")).cast("double") >=
-            lit(threshold - 1e-9)),
-        b => struct(a.getField("doc").as("doc_a"), a.getField("n_sh").as("sh_a"),
-          b.getField("doc").as("doc_b"), b.getField("n_sh").as("sh_b")))))
 
   /** Exact n-gram Jaccard join via PREFIX FILTERING (the AllPairs /
     * PPJoin family) — same output as [[ngramJaccard]] (when the df
@@ -779,7 +741,8 @@ object Dedup {
     .select(col(as), explode(array_distinct(shingles(col("toks"), n))).as("shingle"))
     .select(col(as), col("shingle"), xxhash64(col("shingle")).as("sh"))
 
-  /** Embedding-cosine near-dup pairs. Candidate generation uses BANDED
+  /** Embedding-cosine near-dup pairs `(id_a, id_b, cos)` with
+    * `cos >= threshold`. Candidate generation uses BANDED
     * random-hyperplane LSH (see Similarity.bandedSignBuckets): each
     * vector explodes to `bands` rows keyed (band, r-plane sign bucket),
     * the same shape as `minhashCandidates`' band rows, so the pairwise
@@ -794,102 +757,68 @@ object Dedup {
     * cap must either drop most of a clustered corpus (recall collapse)
     * or admit near-quadratic buckets.
     *
-    * The LSH path routes through `candidatePairsFromBuckets`, so the
-    * bucketing pipeline executes once and band-buckets above `maxBucket`
-    * are dropped — the cap bounds BOTH reducer skew and the in-array
-    * pair expansion (≤ maxBucket²/2 structs materialize in one row,
-    * which is why the default is 1000, ≈ 500K structs worst case, not
-    * 10K). Recall survives the cap through the multi-band OR: a pair
-    * sharing one hot band-bucket usually also shares a colder one.
-    * Vectors are joined back only for surviving candidate pairs, so the
-    * pair expansion itself moves (id, id) rows, never embeddings.
+    * Vectors ride into the (band, bucket) groupBy and every pair is
+    * scored inside its bucket ([[graft.functions.PairsInBucket]] with
+    * the cosine kernel), so only survivors become rows and no vector is
+    * joined back. Band-buckets above `maxBucket` items are dropped — the
+    * cap bounds reducer skew and the ≤ maxBucket²/2 cosines one bucket
+    * scores. Recall survives the cap through the multi-band OR: a pair
+    * sharing one hot band-bucket usually also shares a colder one. A
+    * pair blocked by several bands is emitted once.
+    *
+    * Both paths drop a NaN cosine (a vector holding NaN) and accept any
+    * id type. Ids should be unique; an id repeated with different
+    * vectors is never paired with itself, and each of its vectors pairs
+    * with the other ids on its own (one row per distinct cosine).
     */
   def embeddingNearDup(emb: DataFrame, idCol: String, vecCol: String,
                        threshold: Double, bruteForce: Boolean = false,
                        bands: Int = 10, planesPerBand: Int = 0,
                        seed: Long = 42L, maxBucket: Int = 1000): DataFrame = {
-    val pairs =
-      if (bruteForce) {
-        val a = emb.select(col(idCol).as("id_a"), col(vecCol).as("v_a"))
-        val b = emb.select(col(idCol).as("id_b"), col(vecCol).as("v_b"))
-        a.join(b, col("id_a") < col("id_b"))
-      } else {
-        // one probe job for (corpus count, dim) — not two separate scans
-        val probe = emb.agg(count(lit(1)), max(size(col(vecCol)))).head()
-        val n = probe.getLong(0)
-        if (n == 0L) return emb.sparkSession.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("id_a", emb.schema(idCol).dataType),
-            org.apache.spark.sql.types.StructField("id_b", emb.schema(idCol).dataType),
-            org.apache.spark.sql.types.StructField("cos", org.apache.spark.sql.types.DoubleType))))
-        val dim = probe.getInt(1)
-        val r =
-          if (planesPerBand > 0) planesPerBand
-          else
-            // scale the per-band bucket space with the corpus: mean
-            // band-bucket ≈ 4 vectors, so candidate volume stays
-            // ≈ bands·2·n (linear in n) instead of quadratic. Measured
-            // against the /16 + 8-band predecessor at sf0.1: 3.4×
-            // fewer candidate pairs, 1.4× faster end-to-end, and the
-            // 10-band OR keeps theoretical recall at a marginal
-            // cos=0.9 pair at 1-(1-p^r)^10 ≈ 0.91 (p = 1-θ/π ≈ .857)
-            math.min(24, math.max(4,
-              math.ceil(math.log(math.max(n, 1L) / 4.0) / math.log(2.0)).toInt))
-        val bucketed = Similarity.bandedSignBuckets(
-            emb.select(col(idCol).as("doc"), col(vecCol)), vecCol, dim, bands, r, seed)
-          .select(col("band"), col("bucket"), col("doc"), col(vecCol).as("_v"))
-        // FUSED in-bucket scoring (round-19, the semanticNearDup shape —
-        // guide §8): vectors ride INTO the (band, bucket) groupBy (bands
-        // copies per doc) and every i<j pair is scored where it was
-        // blocked, emitting only threshold survivors; the superseded
-        // shape (pair distinct over the FULL candidate volume, then two
-        // vector join-backs carrying ~2 arrays per candidate ≈ 4·bands·n
-        // copies) is retained as [[embeddingPairsJoinForm]] — the
-        // non-long-id fallback and DedupSpec's bit-identity reference.
-        // A pair blocked by several bands emits once per band with the
-        // SAME cosine (same two vectors), so the final distinct yields
-        // exactly the join form's rows — over survivors only, not the
-        // whole candidate volume.
-        if (emb.schema(idCol).dataType == org.apache.spark.sql.types.LongType)
-          return bucketed.groupBy("band", "bucket")
-            .agg(sort_array(collect_set(struct(col("doc"), col("_v")))).as("items"))
-            .where(size(col("items")) >= 2 && size(col("items")) <= maxBucket)
-            .select(explode(org.apache.spark.sql.GraftColumnBridge.column(
-              graft.functions.CellPairsCosine(
-                org.apache.spark.sql.GraftColumnBridge.expression(col("items")),
-                threshold))).as("p"))
-            .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"), col("p.cos").as("cos"))
-            .distinct()
-        else embeddingPairsJoinForm(emb, idCol, vecCol,
-          bucketed.select(col("band"), col("bucket"), col("doc")), maxBucket)
-      }
-    pairs
-      .withColumn("cos", Similarity.cosineCol(col("v_a"), col("v_b")))
-      .where(col("cos") >= threshold)
-      .select(col("id_a"), col("id_b"), col("cos"))
+    if (bruteForce) {
+      val a = emb.select(col(idCol).as("id_a"), col(vecCol).as("v_a"))
+      val b = emb.select(col(idCol).as("id_b"), col(vecCol).as("v_b"))
+      return a.join(b, col("id_a") < col("id_b"))
+        .withColumn("cos", Similarity.cosineCol(col("v_a"), col("v_b")))
+        // Spark orders NaN above every double, so `>=` alone keeps it
+        .where(col("cos") >= threshold && !isnan(col("cos")))
+        .select(col("id_a"), col("id_b"), col("cos"))
+    }
+    // one probe job for (corpus count, dim) — not two separate scans
+    val probe = emb.agg(count(lit(1)), max(size(col(vecCol)))).head()
+    val n = probe.getLong(0)
+    if (n == 0L) return noPairs(emb, idCol)
+    val dim = probe.getInt(1)
+    val r =
+      if (planesPerBand > 0) planesPerBand
+      else
+        // scale the per-band bucket space with the corpus: mean
+        // band-bucket ≈ 4 vectors, so candidate volume stays
+        // ≈ bands·2·n (linear in n) instead of quadratic. Measured
+        // against the /16 + 8-band predecessor at sf0.1: 3.4×
+        // fewer candidate pairs, 1.4× faster end-to-end, and the
+        // 10-band OR keeps theoretical recall at a marginal
+        // cos=0.9 pair at 1-(1-p^r)^10 ≈ 0.91 (p = 1-θ/π ≈ .857)
+        math.min(24, math.max(4,
+          math.ceil(math.log(math.max(n, 1L) / 4.0) / math.log(2.0)).toInt))
+    val bucketed = Similarity.bandedSignBuckets(
+        emb.select(col(idCol).as("doc"), col(vecCol)), vecCol, dim, bands, r, seed)
+      .select(col("band"), col("bucket"), col("doc"), col(vecCol).as("_v"))
+    // a pair blocked by several bands emits once per band with the same
+    // cosine (same two vectors); the distinct runs over survivors only
+    pairsInBuckets(bucketed, Seq("band", "bucket"), struct(col("doc"), col("_v")),
+        maxBucket, PairKernel.Cosine(threshold))
+      .select(col("doc_a").as("id_a"), col("doc_b").as("id_b"), col("cos"))
+      .distinct()
   }
 
-  /** The superseded join-back candidate attachment of
-    * [[embeddingNearDup]]'s LSH branch (WITHOUT the shared cosine/
-    * threshold tail — the caller applies it) — retained as the
-    * non-long-id fallback and DedupSpec's bit-identity reference for
-    * the fused [[graft.functions.CellPairsCosine]] path. */
-  private[ops] def embeddingPairsJoinForm(emb: DataFrame, idCol: String, vecCol: String,
-                                          bucketed: DataFrame, maxBucket: Int): DataFrame = {
-    val cand = candidatePairsFromBuckets(bucketed, Seq("band", "bucket"), "doc", maxBucket)
-    val vecs = emb.select(col(idCol), col(vecCol))
-    cand.select(col("doc_a").as("id_a"), col("doc_b").as("id_b"))
-      .join(vecs.toDF("id_a", "v_a"), Seq("id_a"))
-      .join(vecs.toDF("id_b", "v_b"), Seq("id_b"))
-  }
-
-  /** Semantic dedup: embedding near-dup pairs blocked by LEARNED
-    * k-means cells instead of random hyperplanes — the SemDeDup recipe
-    * (Abbas et al. 2023, arXiv:2303.09540): cluster the corpus, compare
-    * only within a cluster, keep one representative per near-dup group
-    * (compose with [[clusters]] for the keeper step, exactly as with
-    * the other pair generators).
+  /** Semantic dedup: embedding near-dup pairs `(id_a, id_b, cos)` with
+    * `cos >= threshold`, blocked by LEARNED k-means cells instead of
+    * random hyperplanes — the SemDeDup recipe (Abbas et al. 2023,
+    * arXiv:2303.09540): cluster the corpus, compare only within a
+    * cluster, keep one representative per near-dup group (compose with
+    * [[clusters]] for the keeper step, exactly as with the other pair
+    * generators).
     *
     * vs [[embeddingNearDup]]'s banded LSH: LSH buckets are data-
     * oblivious — recall at a given cosine is a theorem, but ~L·n rows
@@ -915,9 +844,17 @@ object Dedup {
     * n^1.5; for dedup at large n pass `nlist ≈ n / targetCellSize`
     * instead — fixed-size cells make the pair volume n·cellSize,
     * LINEAR, at the cost of finer (slightly recall-lossier) cells.
-    * Vectors join back only for surviving candidate pairs. Pass pre-trained
-    * `centroids` to share one index between dedup and ANN search (the
-    * persisted-index lifecycle in Similarity applies unchanged).
+    * Each cell's pairs are scored where the cell groupBy put its
+    * vectors ([[graft.functions.PairsInBucket]], cosine kernel): one
+    * exchange, each vector moves once, and only survivors become rows.
+    * Pass pre-trained `centroids` to share one index between dedup and
+    * ANN search (the persisted-index lifecycle in Similarity applies
+    * unchanged).
+    *
+    * A NaN cosine (a vector holding NaN) is dropped; any id type works.
+    * Ids should be unique; an id repeated with different vectors is
+    * never paired with itself, and each of its vectors pairs with the
+    * other ids of its cell on its own (one row per vector pair).
     */
   def semanticNearDup(emb: DataFrame, idCol: String, vecCol: String,
                       threshold: Double, nlist: Int = 0, iters: Int = 3,
@@ -929,65 +866,25 @@ object Dedup {
     // try/catch(Throwable) or lambda refactor would silently swallow).
     // The isEmpty probe runs only on the untrained path, where it is
     // the cheap (limit-1) prefix of the training that follows.
-    if (centroids == null && emb.isEmpty)
-      return emb.sparkSession.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("id_a", emb.schema(idCol).dataType),
-          org.apache.spark.sql.types.StructField("id_b", emb.schema(idCol).dataType),
-          org.apache.spark.sql.types.StructField("cos", org.apache.spark.sql.types.DoubleType))))
+    if (centroids == null && emb.isEmpty) return noPairs(emb, idCol)
     val cents =
       if (centroids != null) centroids
       else Similarity.trainIvfCentroids(emb, idCol, vecCol, nlist, iters, seed, sampleFraction)
     val assigned = Similarity.assignedCells(
         emb.select(col(idCol).as("doc"), col(vecCol)), vecCol, cents)
       .select(col("cell"), col("doc"), col(vecCol).as("_v"))
-    // FUSED within-cell scoring (round-19, guide §8 "move heavy bytes
-    // once"): the cell groupBy already CO-LOCATES each cell's vectors —
-    // one exchange, each vector travels exactly once (a doc has exactly
-    // one argmax cell, which also makes the superseded pair-distinct a
-    // no-op by construction). The superseded shape
-    // (candidatePairsFromBuckets → distinct → join the vector table
-    // back on id_a AND id_b → cosine → filter) re-attached the vectors
-    // by TWO sort-merge joins that carried a vector payload per
-    // CANDIDATE PAIR — n·cellSize rows by the linear-law design, ~20M
-    // vector copies at the 100× probe — plus a full pair-distinct
-    // exchange. graft.functions.CellPairsCosine scores every i<j pair
-    // inside the collected cell (CosineSimilarity's exact arithmetic,
-    // norms hoisted per item — bit-identical cosines, spec-pinned in
-    // DedupSpec against the join form) and emits ONLY the survivors,
-    // so the quadratic candidate volume never materializes as rows.
-    // collect_set(struct(doc, v)) + the size guards replicate
-    // candidatePairsFromBuckets' bucket semantics exactly for unique
-    // ids (an id column — the operator's contract; the join form
-    // silently MULTIPLIED pairs for duplicate ids).
-    if (emb.schema(idCol).dataType == org.apache.spark.sql.types.LongType) {
-      assigned.groupBy("cell")
-        .agg(sort_array(collect_set(struct(col("doc"), col("_v")))).as("items"))
-        .where(size(col("items")) >= 2 && size(col("items")) <= maxCell)
-        .select(explode(org.apache.spark.sql.GraftColumnBridge.column(
-          graft.functions.CellPairsCosine(
-            org.apache.spark.sql.GraftColumnBridge.expression(col("items")),
-            threshold))).as("p"))
-        .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"), col("p.cos").as("cos"))
-    } else semanticPairsJoinForm(emb, idCol, vecCol, threshold, maxCell,
-      assigned.select(col("cell"), col("doc")))
+    // a doc has exactly one argmax cell, so no pair repeats: no distinct
+    pairsInBuckets(assigned, Seq("cell"), struct(col("doc"), col("_v")), maxCell,
+        PairKernel.Cosine(threshold))
+      .select(col("doc_a").as("id_a"), col("doc_b").as("id_b"), col("cos"))
   }
 
-  /** The superseded join-back scoring of [[semanticNearDup]] — retained
-    * as the non-long-id fallback and as DedupSpec's bit-identity
-    * reference for the fused [[graft.functions.CellPairsCosine]] path. */
-  private[ops] def semanticPairsJoinForm(emb: DataFrame, idCol: String, vecCol: String,
-                                         threshold: Double, maxCell: Int,
-                                         assigned: DataFrame): DataFrame = {
-    val cand = candidatePairsFromBuckets(assigned, Seq("cell"), "doc", maxCell)
-    val vecs = emb.select(col(idCol), col(vecCol))
-    cand.select(col("doc_a").as("id_a"), col("doc_b").as("id_b"))
-      .join(vecs.toDF("id_a", "v_a"), Seq("id_a"))
-      .join(vecs.toDF("id_b", "v_b"), Seq("id_b"))
-      .withColumn("cos", Similarity.cosineCol(col("v_a"), col("v_b")))
-      .where(col("cos") >= threshold)
-      .select(col("id_a"), col("id_b"), col("cos"))
+  /** The empty `(id_a, id_b, cos)` result of the embedding operators. */
+  private def noPairs(emb: DataFrame, idCol: String): DataFrame = {
+    import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+    val id = emb.schema(idCol).dataType
+    emb.sparkSession.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
+      StructType(Seq(StructField("id_a", id), StructField("id_b", id), StructField("cos", DoubleType))))
   }
 
   /** Connected components over near-dup PAIRS → one canonical document
@@ -1423,35 +1320,24 @@ object Dedup {
   /** Pairs of ids sharing a bucket key, with a skew cap: buckets larger
     * than `maxBucket` are dropped entirely (documented recall trade).
     *
-    * One aggregation + in-array pair expansion instead of a bucket
+    * One aggregation + in-bucket pair generation instead of a bucket
     * self-join: a join would reference `buckets` (and so re-execute its
     * whole upstream pipeline) three times — size filter, probe, build —
-    * where this form executes it once, and the size cap doubles as the
-    * bound on the expanded array (≤ maxBucket²/2 pairs per row). */
+    * where this form executes it once. */
   private[ops] def candidatePairsFromBuckets(buckets: DataFrame, keyCols: Seq[String],
-                                             idCol: String, maxBucket: Int): DataFrame = {
-    val key = keyCols.map(col)
-    // the i<j expansion is the native graft.functions.BucketPairExpand
-    // (round-19): the nested-HOF form (retained in
-    // [[candidatePairExpandHof]] as DedupSpec's reference) paid an
-    // interpreted lambda dispatch + slice allocation + boxed struct per
-    // PAIR — measured as the majority of the candidate stage at the
-    // 100× probe (8.4 s of dedup_minhash's 16.6 s candidate phase)
-    buckets.groupBy(key: _*)
-      .agg(sort_array(collect_set(col(idCol))).as("ids"))
-      .where(size(col("ids")) >= 2 && size(col("ids")) <= maxBucket)
-      .select(explode(org.apache.spark.sql.GraftColumnBridge.column(
-        graft.functions.BucketPairExpand(
-          org.apache.spark.sql.GraftColumnBridge.expression(col("ids"))))).as("p"))
-      .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
-      .distinct()
-  }
+                                             idCol: String, maxBucket: Int): DataFrame =
+    pairsInBuckets(buckets, keyCols, col(idCol), maxBucket, PairKernel.AllPairs).distinct()
 
-  /** The superseded nested-HOF i<j expansion — DedupSpec's
-    * bit-identity reference for [[graft.functions.BucketPairExpand]],
-    * not called on any query path. */
-  private[ops] def candidatePairExpandHof(ids: Column): Column =
-    flatten(transform(ids, (a, i) =>
-      transform(slice(ids, i + 2, size(ids)),
-        b => struct(a.as("doc_a"), b.as("doc_b")))))
+  /** The one blocking step behind every pair generator here: group
+    * `rows` by `keys`, collect each bucket's distinct `item`s sorted,
+    * drop buckets with fewer than 2 or more than `cap` items, and emit
+    * the i<j pairs that pass `kernel` ([[graft.functions.PairsInBucket]]:
+    * `doc_a, doc_b`, then the kernel's score fields). */
+  private def pairsInBuckets(rows: DataFrame, keys: Seq[String], item: Column, cap: Int,
+                             kernel: PairKernel): DataFrame =
+    rows.groupBy(keys.map(col): _*)
+      .agg(sort_array(collect_set(item)).as("_items"))
+      .where(size(col("_items")).between(2, cap))
+      .select(org.apache.spark.sql.GraftColumnBridge.column(
+        PairsInBucket(org.apache.spark.sql.GraftColumnBridge.expression(col("_items")), kernel)))
 }

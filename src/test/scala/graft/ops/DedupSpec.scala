@@ -1,8 +1,14 @@
 package graft.ops
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
+import graft.functions.{PairKernel, PairsInBucket}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test => Check}
+import org.scalacheck.rng.Seed
+import org.scalacheck.util.Pretty
 
 class DedupSpec extends SparkSpec {
 
@@ -209,118 +215,277 @@ class DedupSpec extends SparkSpec {
     assert(Dedup.semanticNearDup(empty, "vec_id", "embedding", 0.9).count() === 0)
   }
 
+  /** `(id_a, id_b) -> cos` of an embedding pair frame, ids as strings. */
+  private def cosPairs(df: DataFrame): Map[(String, String), Double] =
+    df.collect().map(r => (r.get(0).toString, r.get(1).toString) -> r.getDouble(2)).toMap
+
+  /** A clustered corpus: `clusters` Gaussian centers × `members`. */
+  private def clustered(seed: Int, clusters: Int, members: Int, sigma: Double,
+                        dim: Int = 16): Seq[(Long, Array[Float])] = {
+    val rnd = new scala.util.Random(seed)
+    (0 until clusters).flatMap { c =>
+      val center = Array.fill(dim)(rnd.nextGaussian())
+      (0 until members).map { m =>
+        ((c * members + m).toLong, center.map(x => (x + rnd.nextGaussian() * sigma).toFloat))
+      }
+    }
+  }
+
   test("fused cell-pair scoring equals the superseded join form bit-for-bit") {
     import spark.implicits._
-    // the round-19 CellPairsCosine path must reproduce the join-back
-    // form exactly: same pairs, same DOUBLES (hoisted norms and the
-    // fused loop must not perturb a single ulp), same orientation —
-    // on a clustered corpus with real cells, plus zero-norm and
-    // boundary-cosine rows
-    val rnd = new scala.util.Random(7)
-    val dim = 16
-    val rows = (0 until 20).flatMap { c =>
-      val center = Array.fill(dim)(rnd.nextGaussian())
-      (0 until 6).map { m =>
-        ((c * 6 + m).toLong, center.map(x => (x + rnd.nextGaussian() * 0.05).toFloat))
-      }
-    } :+ ((999L, Array.fill(dim)(0.0f))) // zero-norm: cos 0.0 everywhere
-    val emb = rows.toDF("vec_id", "embedding")
-    val cents = Similarity.trainIvfCentroids(emb, "vec_id", "embedding", nlist = 20)
-    def collectPairs(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val fused = collectPairs(Dedup.semanticNearDup(
-      emb, "vec_id", "embedding", threshold = 0.9, centroids = cents))
-    val assigned = Similarity.assignedCells(
-        emb.select(col("vec_id").as("doc"), col("embedding")), "embedding", cents)
-      .select(col("cell"), col("doc"))
-    val joined = collectPairs(Dedup.semanticPairsJoinForm(
-      emb, "vec_id", "embedding", 0.9, 10000, assigned))
-    assert(fused.size > 100, s"fixture must actually produce pairs (got ${fused.size})")
-    assert(fused === joined)
+    // semanticNearDup's in-cell cosine kernel must reproduce the
+    // join-back form exactly: same pairs, same DOUBLES (hoisted norms
+    // must not perturb a single ulp), same orientation — on a clustered
+    // corpus with real cells plus a zero-norm row, with long ids and
+    // with string ids (whose order differs from the numeric one)
+    val rows = clustered(7, 20, 6, 0.05) :+ ((999L, Array.fill(16)(0.0f))) // zero-norm: cos 0.0
+    val cents = Similarity.trainIvfCentroids(rows.toDF("vec_id", "embedding"),
+      "vec_id", "embedding", nlist = 20)
+    for (emb <- Seq(rows.toDF("vec_id", "embedding"),
+                    rows.map { case (id, v) => (s"v$id", v) }.toDF("vec_id", "embedding"))) {
+      val fused = cosPairs(Dedup.semanticNearDup(
+        emb, "vec_id", "embedding", threshold = 0.9, centroids = cents))
+      val assigned = Similarity.assignedCells(
+          emb.select(col("vec_id").as("doc"), col("embedding")), "embedding", cents)
+        .select(col("cell"), col("doc"))
+      val joined = cosPairs(PairReference.semanticPairsJoinForm(
+        emb, "vec_id", "embedding", 0.9, 10000, assigned))
+      assert(fused.size > 100, s"fixture must actually produce pairs (got ${fused.size})")
+      assert(fused === joined)
+    }
   }
 
   test("fused LSH bucket scoring equals the superseded join form bit-for-bit") {
     import spark.implicits._
-    // the embeddingNearDup LSH branch's CellPairsCosine path must
+    // the embeddingNearDup LSH branch's in-bucket cosine kernel must
     // reproduce the distinct-then-join-back form exactly: same pairs,
     // same DOUBLES, including pairs blocked by several bands (which
-    // must collapse to one row, as the pre-join distinct collapsed them)
-    val rnd = new scala.util.Random(13)
-    val dim = 16
-    val rows = (0 until 25).flatMap { c =>
-      val center = Array.fill(dim)(rnd.nextGaussian())
-      (0 until 6).map { m =>
-        ((c * 6 + m).toLong, center.map(x => (x + rnd.nextGaussian() * 0.03).toFloat))
-      }
-    }
-    val emb = rows.toDF("vec_id", "embedding")
-    def collectPairs(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val fused = collectPairs(Dedup.embeddingNearDup(
-      emb, "vec_id", "embedding", threshold = 0.9))
+    // must collapse to one row, as the pre-join distinct collapsed
+    // them); long and string ids
+    val rows = clustered(13, 25, 6, 0.03)
     // reconstruct the join form with the same auto-derived r
     val n = rows.size.toLong
     val r = math.min(24, math.max(4,
       math.ceil(math.log(math.max(n, 1L) / 4.0) / math.log(2.0)).toInt))
-    val bucketed = Similarity.bandedSignBuckets(
-        emb.select(col("vec_id").as("doc"), col("embedding")), "embedding", dim, 10, r, 42L)
-      .select(col("band"), col("bucket"), col("doc"))
-    val joined = collectPairs(
-      Dedup.embeddingPairsJoinForm(emb, "vec_id", "embedding", bucketed, 1000)
-        .withColumn("cos", Similarity.cosineCol(col("v_a"), col("v_b")))
-        .where(col("cos") >= 0.9)
-        .select(col("id_a"), col("id_b"), col("cos")))
-    assert(fused.size > 100, s"fixture must actually produce pairs (got ${fused.size})")
-    assert(fused === joined)
+    for (emb <- Seq(rows.toDF("vec_id", "embedding"),
+                    rows.map { case (id, v) => (s"v$id", v) }.toDF("vec_id", "embedding"))) {
+      val fused = cosPairs(Dedup.embeddingNearDup(emb, "vec_id", "embedding", threshold = 0.9))
+      val bucketed = Similarity.bandedSignBuckets(
+          emb.select(col("vec_id").as("doc"), col("embedding")), "embedding", 16, 10, r, 42L)
+        .select(col("band"), col("bucket"), col("doc"))
+      val joined = cosPairs(
+        PairReference.embeddingPairsJoinForm(emb, "vec_id", "embedding", 0.9, bucketed, 1000))
+      assert(fused.size > 100, s"fixture must actually produce pairs (got ${fused.size})")
+      assert(fused === joined)
+    }
   }
 
   test("native bucket-pair expansions equal the nested-HOF forms pair-for-pair") {
     import spark.implicits._
     import org.apache.spark.sql.GraftColumnBridge.{column => gc, expression => ge}
     // realistic bucket shapes: singletons, a pair, a hot bucket, plus
-    // skewed n_sh/simhash values exercising the inline filters
+    // skewed n_sh/simhash values exercising the in-bucket tests; the
+    // same buckets with long ids, then with string ids
     val rnd = new scala.util.Random(3)
-    val buckets = (1 to 200).map { b =>
+    val raw = (1 to 200).map { b =>
       val n = rnd.nextInt(6) + 1
       (b.toLong, (1 to n).map(i => (b * 100L + i, 10L + rnd.nextInt(30),
         rnd.nextLong() & 0xFFFFL)).sortBy(_._1))
     }.toDF("bucket", "raw")
-      .select(col("bucket"),
-        expr("transform(raw, x -> x._1)").as("ids"),
-        expr("transform(raw, x -> struct(x._1 as doc, x._2 as n_sh))").as("docs"),
-        expr("transform(raw, x -> struct(x._1 as doc, x._3 as simhash))").as("items"))
-      .persist()
-    try {
-      // 1. plain pair expansion
-      val pNative = buckets.select(explode(gc(graft.functions.BucketPairExpand(ge(col("ids"))))).as("p"))
-        .select("p.doc_a", "p.doc_b").collect().map(r => (r.getLong(0), r.getLong(1)))
-      val pHof = buckets.select(explode(Dedup.candidatePairExpandHof(col("ids"))).as("p"))
-        .select("p.doc_a", "p.doc_b").collect().map(r => (r.getLong(0), r.getLong(1)))
-      assert(pNative.length > 100 && pNative.toSeq === pHof.toSeq)
-      // 2. ratio-filtered jaccard expansion, incl. the tight-boundary threshold
-      for (t <- Seq(0.5, 0.9)) {
-        val jNative = buckets.select(explode(gc(graft.functions.JaccardPairExpand(ge(col("docs")), t))).as("p"))
-          .select("p.doc_a", "p.sh_a", "p.doc_b", "p.sh_b").collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-        val jHof = buckets.select(explode(Dedup.jaccardPairExpandHof(col("docs"), t)).as("p"))
-          .select("p.doc_a", "p.sh_a", "p.doc_b", "p.sh_b").collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-        assert(jNative.toSeq === jHof.toSeq, s"threshold $t diverged")
-        assert(jNative.nonEmpty)
+    for (id <- Seq("x._1", "cast(x._1 as string)")) {
+      val buckets = raw.select(col("bucket"),
+          expr(s"transform(raw, x -> $id)").as("ids"),
+          expr(s"transform(raw, x -> struct($id as doc, x._2 as n_sh))").as("docs"),
+          expr(s"transform(raw, x -> struct($id as doc, x._3 as simhash))").as("items"))
+        .persist()
+      def pairs(df: DataFrame, cols: String*): Seq[Seq[Any]] =
+        df.select(cols.map(col): _*).collect().map(_.toSeq).toSeq
+      def gen(items: String, k: PairKernel) = buckets.select(gc(PairsInBucket(ge(col(items)), k)))
+      def hof(c: Column) = buckets.select(explode(c).as("p")).select("p.*")
+      try {
+        // 1. plain pair expansion
+        val p = pairs(gen("ids", PairKernel.AllPairs), "doc_a", "doc_b")
+        assert(p.length > 100 && p === pairs(hof(PairReference.candidatePairExpandHof(col("ids"))),
+          "doc_a", "doc_b"), id)
+        // 2. ratio-filtered jaccard expansion, incl. the tight-boundary threshold
+        for (t <- Seq(0.5, 0.9)) {
+          val cols = Seq("doc_a", "sh_a", "doc_b", "sh_b")
+          val j = pairs(gen("docs", PairKernel.LengthRatio(t)), cols: _*)
+          assert(j.nonEmpty && j === pairs(hof(PairReference.jaccardPairExpandHof(col("docs"), t)),
+            cols: _*), s"$id: threshold $t diverged")
+        }
+        // 3. hamming-filtered simhash expansion (the HOF form filters
+        // after the explode)
+        for (mh <- Seq(0, 3, 16)) {
+          val s = pairs(gen("items", PairKernel.Hamming(mh)), "doc_a", "doc_b", "hamming")
+          assert(s === pairs(hof(PairReference.simhashPairExpandHof(col("items")))
+            .where(col("hamming") <= mh), "doc_a", "doc_b", "hamming"), s"$id: maxHamming $mh diverged")
+        }
+      } finally buckets.unpersist()
+    }
+  }
+
+  test("a repeated id with a different simhash or vector never pairs with itself") {
+    import spark.implicits._
+    // id 1 appears twice with payloads a bit or a hair apart: both
+    // copies share a bucket with each other and with id 2 (or 3)
+    val fps = Seq((1L, 0x0F0FL), (1L, 0x0F0EL), (2L, 0x0F0CL)).toDF("doc", "simhash")
+    val sh = Dedup.simhashCandidates(fps).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    assert(sh === Set((1L, 2L, 2), (1L, 2L, 1)), "each copy pairs with 2, never with itself")
+    val emb = Seq((1L, Array(1.0f, 0.0f, 0.2f, 0.1f)), (1L, Array(1.0f, 0.0f, 0.2f, 0.1001f)),
+      (2L, Array(0.999f, 0.01f, 0.2f, 0.1f)), (3L, Array(-1.0f, 0.5f, -0.2f, 0.9f)))
+      .toDF("vec_id", "embedding")
+    val one = Array(Array(1.0, 0.0, 0.0, 0.0)) // one cell: every item is compared
+    for ((what, out) <- Seq(
+        "semantic" -> Dedup.semanticNearDup(emb, "vec_id", "embedding", 0.99, centroids = one),
+        "lsh" -> Dedup.embeddingNearDup(emb, "vec_id", "embedding", 0.99),
+        "brute force" -> Dedup.embeddingNearDup(emb, "vec_id", "embedding", 0.99, bruteForce = true))) {
+      val rows = out.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      assert(rows.map(r => (r._1, r._2)).toSet === Set((1L, 2L)), what)
+      assert(rows.length === 2, s"$what: one row per copy of id 1")
+    }
+  }
+
+  test("a NaN cosine is dropped on the fused and the brute-force paths") {
+    import spark.implicits._
+    // [NaN, 1] scores NaN against every other vector; Spark orders NaN
+    // above every double, so a bare `cos >= t` Column filter keeps it
+    val emb = Seq((1L, Array(Float.NaN, 1.0f)), (2L, Array(1.0f, 1.0f)), (3L, Array(1.0f, 0.99f)))
+      .toDF("vec_id", "embedding")
+    for ((what, out) <- Seq(
+        "fused" -> Dedup.semanticNearDup(emb, "vec_id", "embedding", 0.9,
+          centroids = Array(Array(1.0, 1.0))),
+        "brute force" -> Dedup.embeddingNearDup(emb, "vec_id", "embedding", 0.9, bruteForce = true))) {
+      val rows = out.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      assert(rows.map(r => (r._1, r._2)).toSet === Set((2L, 3L)), what)
+      assert(!rows.exists(_._3.isNaN), what)
+    }
+  }
+
+  // ── differential property: the generator against the HOF forms ──
+
+  /** One trial: a kernel, id type, and 1–3 buckets of 0–60 items, each
+    * item `(id, payload)`; ids come from a small pool, so they repeat.
+    * `mismatch`: one bucket holds one vector of another dimension. */
+  private case class PairCase(kernel: PairKernel, stringIds: Boolean,
+                              buckets: Seq[Seq[(Long, Any)]], mismatch: Boolean)
+
+  private val vectors: Gen[Array[Float]] = Gen.frequency(
+    8 -> Gen.listOfN(4, Gen.choose(-1.0f, 1.0f)).map(v => (Array(1.0f, 1.0f, 0.5f, 0.0f) zip v)
+      .map { case (c, x) => c + 0.1f * x }),
+    2 -> Gen.listOfN(4, Gen.choose(-1.0f, 1.0f)).map(_.toArray),
+    1 -> Gen.const(Array.fill(4)(0.0f)),
+    1 -> Gen.const(Array(1.0f, Float.NaN, 0.5f, 0.0f)))
+
+  /** Item payloads for `kernel`; `base` seeds near-duplicate simhashes. */
+  private def payloads(kernel: PairKernel, base: Long): Gen[Any] = kernel match {
+    case PairKernel.AllPairs => Gen.const(null)
+    // ratios at and around the 0.9 / 0.5 boundaries, plus 1e-9 close
+    case _: PairKernel.LengthRatio => Gen.frequency(
+      3 -> Gen.oneOf(1L, 2L, 5L, 9L, 10L, 18L, 20L, 90L, 100L,
+        899999999L, 900000000L, 999999999L, 1000000000L),
+      1 -> Gen.choose(1L, 200L))
+    case _: PairKernel.Hamming => Gen.frequency(
+      6 -> Gen.listOfN(4, Gen.choose(0, 63)).map(_.foldLeft(base)((h, b) => h ^ (1L << b))),
+      2 -> Gen.choose(0, 63).map(b => base ^ (1L << b)),
+      1 -> Gen.choose(Long.MinValue, Long.MaxValue),
+      1 -> Gen.const(null))
+    case _: PairKernel.Cosine => Gen.frequency(10 -> vectors, 1 -> Gen.const(null))
+  }
+
+  private val pairCases: Gen[PairCase] = for {
+    kernel <- Gen.oneOf(
+      Gen.const(PairKernel.AllPairs),
+      Gen.oneOf(0.5, 0.9, 1.0).map(PairKernel.LengthRatio(_)),
+      Gen.oneOf(0, 3, 16).map(PairKernel.Hamming(_)),
+      Gen.oneOf(0.0, 0.5, 0.95).map(PairKernel.Cosine(_)))
+    stringIds <- Gen.oneOf(false, true)
+    base <- Gen.choose(Long.MinValue, Long.MaxValue)
+    nBuckets <- Gen.choose(1, 3)
+    buckets <- Gen.listOfN(nBuckets, Gen.choose(0, 60).flatMap(n =>
+      Gen.listOfN(n, Gen.zip(Gen.choose(0L, 40L), payloads(kernel, base)))))
+    mismatch <- Gen.frequency(6 -> false, 1 -> kernel.isInstanceOf[PairKernel.Cosine])
+  } yield PairCase(kernel, stringIds, buckets.map(_.toSeq), mismatch)
+
+  /** The case's buckets as `(bucket, items)` rows: bare ids for the
+    * all-pairs kernel, else `struct<doc, <payload name>>`. */
+  private def caseFrame(c: PairCase): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val idType = if (c.stringIds) StringType else LongType
+    def id(i: Long): Any = if (c.stringIds) s"d$i" else i
+    val (field, payloadType) = c.kernel match {
+      case _: PairKernel.LengthRatio => ("n_sh", LongType)
+      case _: PairKernel.Hamming => ("simhash", LongType)
+      case _ => ("v", ArrayType(FloatType))
+    }
+    val itemType =
+      if (c.kernel == PairKernel.AllPairs) idType
+      else StructType(Seq(StructField("doc", idType), StructField(field, payloadType)))
+    val rows = c.buckets.zipWithIndex.map { case (items, b) =>
+      val cells = items.zipWithIndex.map { case ((i, p), k) =>
+        if (c.kernel == PairKernel.AllPairs) id(i)
+        else {
+          val v = p match {
+            // the last item of bucket 0 takes a 5th dimension
+            case a: Array[Float] => if (c.mismatch && b == 0 && k == items.size - 1) (a :+ 0.5f).toSeq else a.toSeq
+            case other => other
+          }
+          Row(id(i), v)
+        }
       }
-      // 3. hamming-filtered simhash expansion (native filters inline;
-      // the HOF form filtered post-explode)
-      for (mh <- Seq(0, 3, 16)) {
-        val sNative = buckets.select(explode(gc(graft.functions.SimhashPairExpand(ge(col("items")), mh))).as("p"))
-          .select("p.doc_a", "p.doc_b", "p.hamming").collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-        val sHof = buckets.select(explode(Dedup.simhashPairExpandHof(col("items"))).as("p"))
-          .select("p.doc_a", "p.doc_b", "p.hamming")
-          .where(col("hamming") <= mh).collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-        assert(sNative.toSeq === sHof.toSeq, s"maxHamming $mh diverged")
+      Row(b, cells)
+    }
+    spark.createDataFrame(rows.asJava, StructType(Seq(
+      StructField("bucket", IntegerType), StructField("items", ArrayType(itemType)))))
+  }
+
+  /** Pairs as a multiset, doubles by their bits; or the root failure. */
+  private def outcome(df: => DataFrame, cols: Seq[String]): Either[(String, String), Map[Seq[Any], Int]] =
+    scala.util.Try(df.select(cols.map(col): _*).collect()) match {
+      case scala.util.Success(rows) => Right(rows.toSeq.map(_.toSeq.map {
+        case d: Double => java.lang.Double.doubleToRawLongBits(d)
+        case v => v
+      }).groupBy(identity).map { case (k, v) => k -> v.size })
+      case scala.util.Failure(e) =>
+        var root: Throwable = e
+        while (root.getCause != null) root = root.getCause
+        Left((root.getClass.getName, root.getMessage))
+    }
+
+  test("property: the pair generator equals the nested-HOF forms on random buckets") {
+    import org.apache.spark.sql.GraftColumnBridge.{column => gc, expression => ge}
+    // coverage: trials that threw, and trials with pairs, per kernel
+    val seen = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+    val prop = Prop.forAllNoShrink(pairCases) { c =>
+      val df = caseFrame(c)
+      def hof(e: Column) = df.select(explode(e).as("p")).select("p.*")
+      val items = col("items")
+      // the reference side, with equal-id pairs and NaN cosines dropped
+      val (cols, reference) = c.kernel match {
+        case PairKernel.AllPairs =>
+          (Seq("doc_a", "doc_b"), hof(PairReference.candidatePairExpandHof(items)))
+        case PairKernel.LengthRatio(t) =>
+          (Seq("doc_a", "doc_b", "sh_a", "sh_b"), hof(PairReference.jaccardPairExpandHof(items, t)))
+        case PairKernel.Hamming(k) =>
+          (Seq("doc_a", "doc_b", "hamming"),
+            hof(PairReference.simhashPairExpandHof(items)).where(col("hamming") <= k))
+        case PairKernel.Cosine(t) =>
+          (Seq("doc_a", "doc_b", "cos"),
+            hof(PairReference.cosinePairExpandHof(items)).where(col("cos") >= t && !isnan(col("cos"))))
       }
-    } finally buckets.unpersist()
+      val want = outcome(reference.where(col("doc_a") =!= col("doc_b")), cols)
+      val got = outcome(df.select(gc(PairsInBucket(ge(items), c.kernel))), cols)
+      seen(want.fold(_ => "threw", p => c.kernel.productPrefix + (if (p.isEmpty) "-empty" else ""))) += 1
+      Prop(got == want) :| s"got=$got want=$want case=$c"
+    }
+    val result = Check.check(Check.Parameters.default
+      .withMinSuccessfulTests(120).withInitialSeed(Seed(20261017L)).withWorkers(1), prop)
+    assert(result.passed, Pretty.pretty(result))
+    info(s"trials by outcome: $seen")
+    for (k <- Seq("threw", "AllPairs", "LengthRatio", "Hamming", "Cosine"))
+      assert(seen(k) > 0, s"no trial covered $k: $seen")
   }
 
   test("prefix-filtered jaccard equals the inverted-index form at every threshold") {
