@@ -171,11 +171,10 @@ case class ArgmaxCosineMatrix(child: Expression, cents: Array[Array[Double]])
   * Returns the stored `i` field of the winning element (NOT the
   * positional index — two-level groups store original cell ids).
   * Winner selection is the same lexicographic (score, i) max as the
-  * struct form: NaN above reals; on score ties the larger stored `i`
-  * wins (elements are built `sort_array`-ordered by `i` ascending, and
-  * we take >= on ties while scanning, which is exact for ascending `i`;
-  * a caller handing UNSORTED ids would need the struct form's full
-  * order — `centroidArrayDf`/`twoLevelArrayDf` both sort). Empty array
+  * struct form: NaN above reals, -0.0 equal to 0.0, and on score ties
+  * the larger stored `i` wins, whatever order the elements come in
+  * (`centroidArrayDf`/`twoLevelArrayDf` sort by `i`, but the winner
+  * does not depend on it). Empty array
   * → null (`array_max` of empty). Null input (either side) → null;
   * the struct form funneled a null VECTOR to the largest `i` — same
   * deliberate divergence as [[ArgmaxCosineMatrix]], unobservable
@@ -226,8 +225,7 @@ case class ArgmaxCosineOver(left: Expression, right: Expression)
       }
       val s = if (na == 0.0 || nb == 0.0) 0.0
               else dot / (math.sqrt(na) * math.sqrt(nb))
-      if (!found || java.lang.Double.isNaN(s) ||
-          (!java.lang.Double.isNaN(bestS) && s >= bestS)) {
+      if (!found || ArgmaxCosineOver.outranks(s, ci, bestS, bestI)) {
         bestS = s; bestI = ci; found = true
       }
       j += 1
@@ -282,8 +280,7 @@ case class ArgmaxCosineOver(left: Expression, right: Expression)
          |  }
          |  double $s = ($na == 0.0 || $nb == 0.0) ? 0.0 :
          |    $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
-         |  if (!$found || Double.isNaN($s) ||
-         |      (!Double.isNaN($bestS) && $s >= $bestS)) {
+         |  if (!$found || graft.functions.ArgmaxCosineOver.outranks($s, $ci, $bestS, $bestI)) {
          |    $bestS = $s; $bestI = $ci; $found = true;
          |  }
          |}
@@ -294,4 +291,14 @@ case class ArgmaxCosineOver(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
+}
+
+object ArgmaxCosineOver {
+
+  /** Whether `(s, i)` is above `(bestS, bestI)` in Spark's struct order
+    * over (double, int): NaN above every real and equal to NaN, -0.0
+    * equal to 0.0, then the larger `i`. */
+  def outranks(s: Double, i: Int, bestS: Double, bestI: Int): Boolean =
+    if (java.lang.Double.isNaN(s)) !java.lang.Double.isNaN(bestS) || i > bestI
+    else !java.lang.Double.isNaN(bestS) && (s > bestS || (s == bestS && i > bestI))
 }

@@ -258,10 +258,10 @@ object Dedup {
     //    exchange left is the (band, bucket) groupBy that IS the LSH
     //    blocking step.
     // tokens are projected ONCE as an attribute before shingling:
-    // `shingles()` references its token input ~4 times, and handing it
-    // the raw split() expression re-runs the regex per reference
-    // (CollapseProject keeps the two projections apart precisely
-    // because the alias is expensive and multiply-referenced).
+    // handing a multiply-referencing consumer the raw tokenizer
+    // expression re-runs the tokenizer per reference (CollapseProject
+    // keeps the two projections apart only when the alias is an
+    // attribute).
     // NO size() pre-filter: the expression maps an empty shingle array
     // to an empty bucket array, and posexplode of empty drops the doc —
     // exactly the old explode semantics — while keeping the `_shs`
@@ -301,26 +301,29 @@ object Dedup {
     * stage here consumes: one row per doc, `(doc, sh_set)` where
     * `sh_set` is the SORTED distinct 64-bit shingle hashes (sorted so
     * the same frame serves prefix filtering, whose theorem needs a
-    * global order; sortedness costs O(s log s) per doc next to the
-    * tokenize+shingle pass that dominates). Deriving this is THE
-    * measured hot loop of the exact-Jaccard pipelines — callers running
-    * several of them over one corpus should build it once, `persist()`
-    * it (long arrays round-trip Spark's columnar cache cheaply, the
-    * opposite of text — see the embedding-corpus note), and hand it to
-    * the `...OnSets` variants below. */
+    * global order). `sort_array` sorts the primitive longs directly;
+    * `array_sort`'s default comparator is an interpreted lambda per
+    * comparison, and gives the same ascending order here because the
+    * sets hold no nulls (spec-pinned in DedupSpec). Deriving this is a
+    * whole corpus pass (tokenize, shingle-hash, distinct, sort) —
+    * callers running several exact-Jaccard pipelines over one corpus
+    * should build it once, `persist()` it (long arrays round-trip
+    * Spark's columnar cache cheaply, the opposite of text — see the
+    * embedding-corpus note), and hand it to the `...OnSets` variants
+    * below. */
   def shingleSets(df: DataFrame, idCol: String, textCol: String,
                   n: Int = 3): DataFrame = df
     .select(col(idCol).as("doc"), TextAnalysis.tokensCol(col(textCol)).as("_tk"))
     .select(col("doc"),
-      array_sort(array_distinct(shingleHashes(col("_tk"), n))).as("sh_set"))
+      sort_array(array_distinct(shingleHashes(col("_tk"), n))).as("sh_set"))
 
   /** ONE batch pass feeding BOTH probe stages of [[IncrementalDedup]]:
     * per doc, the LSH band-bucket postings AND the sorted distinct
     * shingle-hash set, from a single tokenize+shingle derivation —
     * `(doc, sh_set, _buckets)`. Separately deriving [[minhashBuckets]]
     * and [[shingleSets]] tokenized and shingled the same batch text
-    * twice (the measured hot loop — ~40% of the warm incremental-probe
-    * cost at sf0.1); the shingle array is [[bindOnce]]-bound so both
+    * twice (~40% of the warm incremental-probe cost at sf0.1, measured
+    * with the regex tokenizer); the shingle array is [[bindOnce]]-bound so both
     * outputs read ONE evaluation (a plain double reference re-runs the
     * pipeline per reference — the CollapseProject/lambda-splice trap
     * documented at [[minhashCandidates]]). Output columns are
@@ -335,7 +338,7 @@ object Dedup {
       .select(col("doc"),
         bindOnce(shingleHashes(col("_tk"), shingleSize)) { shs =>
           struct(
-            array_sort(array_distinct(shs)).as("sh_set"),
+            sort_array(array_distinct(shs)).as("sh_set"),
             org.apache.spark.sql.GraftColumnBridge.column(
               graft.functions.MinHashBandBuckets(
                 org.apache.spark.sql.GraftColumnBridge.expression(shs),
@@ -369,8 +372,8 @@ object Dedup {
     * `ngramJaccardPrefix` (which already built them for its prefixes),
     * and callers amortizing ONE persisted set frame across several
     * pipelines (re-deriving per pipeline would repeat the
-    * tokenize+shingle corpus pass, the measured hot loop — the r7 bench
-    * regression on the anchored dedup queries was exactly that).
+    * tokenize+shingle corpus pass — the r7 bench regression on the
+    * anchored dedup queries was exactly that).
     * `array_intersect` is order-insensitive, so sorted and unsorted set
     * arrays both work. */
   def verifiedJaccardOnSets(sets0: DataFrame, pairs: DataFrame,
@@ -450,10 +453,10 @@ object Dedup {
     // stage into scan-speed work. Docs with no tokens are dropped,
     // matching the aggregate form's explode semantics.
     // the size() filter is a SECOND reference to the token alias, so
-    // CollapseProject runs the tokenizer twice per doc — measured at
-    // parity with the old aggregate form at sf0.1 (the chunk-blocking
-    // stage dominates), and a narrow re-tokenize beats re-introducing
-    // an exchange; the fingerprint itself is evaluated once
+    // CollapseProject runs the tokenizer twice per doc. Both passes are
+    // the native byte loop (graft.functions.WordTokens) over the text,
+    // narrow and cheap next to the chunk-blocking stage; the
+    // fingerprint itself is evaluated once
     df.select(col(idCol).as("doc"), TextAnalysis.tokensCol(col(textCol)).as("_tk"))
       .where(size(col("_tk")) > 0)
       .select(col("doc"),
@@ -531,7 +534,7 @@ object Dedup {
   /** [[ngramJaccard]] over a PRECOMPUTED shingle-set frame (first column
     * id, second the distinct-hash set array — [[shingleSets]]' shape):
     * identical output and the same inverted-index/no-join plan; the
-    * tokenize+shingle derivation — the measured hot loop — is skipped.
+    * tokenize+shingle derivation is skipped.
     * Built for callers amortizing one persisted set frame across
     * several exact-Jaccard pipelines. `n_sh` is `size(set)` here
     * (identical to the window count the text form uses, barring 64-bit
@@ -1079,9 +1082,10 @@ object Dedup {
     * variable — Catalyst has no CSE across higher-order-function
     * lambdas, so a Column spliced into a lambda body re-evaluates at
     * every usage site. For the window builders below that means the
-    * TOKENIZER (a regex split over the whole document) would run once
-    * per WINDOW instead of once per document — measured 40× on the
-    * sf0.1 corpus (~290 windows/doc) before binding. Same trick as
+    * TOKENIZER (a pass over the whole document) would run once per
+    * WINDOW instead of once per document — measured 40× on the sf0.1
+    * corpus (~290 windows/doc) before binding, with the regex tokenizer
+    * of the time. Same trick as
     * Similarity's PQ expressions. */
   private def bindOnce(e: Column)(f: Column => Column): Column =
     element_at(transform(array(e), f), 1)

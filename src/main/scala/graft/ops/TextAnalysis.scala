@@ -14,10 +14,20 @@ import org.apache.spark.sql.functions._
   */
 object TextAnalysis {
 
-  /** Lowercased word tokens; `\W+`-split, empties dropped. One canonical
-    * tokenizer shared by all text + dedup ops so fingerprints agree. */
+  /** Word tokens: `lower(text)` split on `[^a-z0-9]+`, empty tokens
+    * dropped — so a token is a maximal run of `[a-z0-9]` in the
+    * lower-cased text. One canonical tokenizer shared by all text and
+    * dedup ops, so fingerprints agree.
+    *
+    * Evaluated by the native [[graft.functions.WordTokens]]: a
+    * default-collation row that is all ASCII takes one byte loop; any
+    * other row goes through Spark's own `lower` and `split`, so
+    * non-ASCII case mappings (and `spark.sql.icu.caseMappings.enabled`)
+    * behave exactly as in the SQL form. Null text gives null; the type
+    * is `array<string>` with `containsNull = false`. */
   def tokensCol(text: Column): Column =
-    filter(split(lower(text), "[^a-z0-9]+"), t => length(t) > 0)
+    org.apache.spark.sql.GraftColumnBridge.column(graft.functions.WordTokens(
+      org.apache.spark.sql.GraftColumnBridge.expression(text)))
 
   private val punctPattern = "[^a-zA-Z0-9\\s]"
 
@@ -99,7 +109,7 @@ object TextAnalysis {
     val enStops = stopwords("en").map(lit(_))
     // tokens are projected ONCE as an attribute: the metrics below
     // reference them 5×, and handing them the raw tokensCol expression
-    // would re-run the regex split per reference (CollapseProject only
+    // would re-run the tokenizer per reference (CollapseProject only
     // keeps the projections apart when the alias is an attribute — the
     // same trap Dedup.minhashCandidates documents)
     val toks = col("_toks")
@@ -431,8 +441,8 @@ object TextAnalysis {
 
   /** Same one-element-transform binding trick as Dedup/Similarity:
     * Spark HOF lambdas get no common-subexpression elimination, so a
-    * tokenizer referenced once per query TERM would re-run the regex
-    * split that many times per document. */
+    * tokenizer referenced once per query TERM would re-run that many
+    * times per document. */
   private def bindOnce(e: Column)(f: Column => Column): Column =
     element_at(transform(array(e), f), 1)
 
@@ -680,8 +690,8 @@ object TextAnalysis {
         lineRatio(size(filter(l, x => x.endsWith("...")))))
       .withColumn("alpha_word_ratio",
         safeRatio(size(filter(w, x => x.rlike("[a-zA-Z]"))).cast("double")))
-      // bindOnce, or the 8-element filter lambda re-runs the regex
-      // tokenization once per stop word per row (the CollapseProject
+      // bindOnce, or the 8-element filter lambda re-runs the
+      // tokenizer once per stop word per row (the CollapseProject
       // re-run trap documented above)
       .withColumn("n_required_stops", bindOnce(tokensCol(text)) { tk =>
         size(filter(

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -274,7 +274,8 @@ object VectorIndex {
     *
     * A batch vector MATCHES (a) any resident vector in one of its
     * probed cells with cosine ≥ `threshold`, or (b) any SMALLER-ID
-    * batch vector sharing a probed cell at ≥ `threshold` — the same
+    * batch vector sharing a probed cell at ≥ `threshold` (a NaN cosine
+    * matches nothing, so a NaN-bearing vector is kept) — the same
     * greedy min-id-keeper rule as [[IncrementalDedup.ingest]],
     * deterministic and oracle-recomputable. One row per batch vector:
     * `(doc_id, kept, n_matches, min_match_id)`.
@@ -312,18 +313,21 @@ object VectorIndex {
     val resident = spark.read.parquet(s"$path/vectors")
       .where(col("cell").isin(probedCells: _*)) // partition-pruned at planning
       .select(col("cell"), col("id").as("_rid"), col("vec").as("_rvec"))
+    // Spark orders NaN above every double, so a bare `>=` would let a
+    // NaN-bearing vector match everything it meets
+    def similar(cos: Column): Column = cos >= threshold && !isnan(cos)
     val cross = resident.join(broadcast(probed), Seq("cell"))
       // self-pair guard: ids are disjoint by contract EXCEPT when a
       // replayed batch probes an index already holding its own vectors
       .where(col("_rid") =!= col("_bid") &&
-        Similarity.cosineCol(col("_bvec"), col("_rvec")) >= threshold)
+        similar(Similarity.cosineCol(col("_bvec"), col("_rvec"))))
       .select(col("_bid").as("doc"), col("_rid").as("m"))
       .distinct()
     val pa = probed.select(col("cell"), col("_bid").as("_ida"), col("_bvec").as("_va"))
     val pb = probed.select(col("cell"), col("_bid").as("_idb"), col("_bvec").as("_vb"))
     val within = pa.join(broadcast(pb), Seq("cell"))
       .where(col("_idb") < col("_ida") &&
-        Similarity.cosineCol(col("_va"), col("_vb")) >= threshold)
+        similar(Similarity.cosineCol(col("_va"), col("_vb"))))
       .select(col("_ida").as("doc"), col("_idb").as("m"))
       .distinct()
     val out = b.select(col("_bid").as("doc")).distinct()

@@ -82,6 +82,30 @@ class ArgmaxCosineSpec extends SparkSpec {
     assert(native(4L) == 2, "NaN scores outrank reals and tie among themselves → last index")
   }
 
+  test("ArgmaxCosineOver: score ties over unsorted ids pick the struct form's winner") {
+    import spark.implicits._
+    // ids 5, 9, 2 share one direction (exact ties), 7 points elsewhere;
+    // the array is NOT sorted by id, so scan order is not id order
+    val cents = spark.sql(
+      "select array(" + Seq(5 -> "1.0, 0.0", 9 -> "1.0, 0.0", 2 -> "2.0, 0.0", 7 -> "0.0, 1.0")
+        .map { case (i, v) => s"named_struct('i', $i, 'v', cast(array($v) as array<float>))" }
+        .mkString(", ") + ") as _cents")
+    val probes = Seq(
+      (1L, Seq(1.0f, 0.0f)),       // ties 5, 9, 2 → 9
+      (2L, Seq(-1.0f, 0.0f)),      // 5, 9, 2 tie at -1; 7 scores 0 → 7
+      (3L, Seq(0.0f, 0.0f)),       // zero norm: all 0.0 → 9
+      (4L, Seq(Float.NaN, 1.0f)),  // all NaN → 9
+      (5L, Seq(0.0f, 1.0f))        // 7 alone
+    ).toDF("id", "v").crossJoin(broadcast(cents))
+    def winners(f: (org.apache.spark.sql.Column, org.apache.spark.sql.Column) =>
+        org.apache.spark.sql.Column) =
+      probes.select(col("id"), f(col("_cents"), col("v"))).collect()
+        .map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val native = winners(Similarity.argmaxCosArr)
+    assert(native === winners(Similarity.argmaxCosArrHof))
+    assert(native === Map(1L -> 9, 2L -> 7, 3L -> 9, 4L -> 9, 5L -> 7))
+  }
+
   test("interpreted eval matches codegen (nullSafeEval path)") {
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.catalyst.util.GenericArrayData

@@ -488,6 +488,42 @@ class DedupSpec extends SparkSpec {
       assert(seen(k) > 0, s"no trial covered $k: $seen")
   }
 
+  test("shingle sets: sort_array orders them exactly as array_sort did") {
+    import spark.implicits._
+    val sets = Dedup.shingleSets(docs, "doc_id", "text", 3)
+      .collect().map(r => r.get(0) -> r.getSeq[Long](1)).toMap
+    // the superseded form: HOF tokenizer, lambda-comparator array_sort
+    val reference = docs
+      .select(col("doc_id").as("doc"), TextReference.tokensHof(col("text")).as("_tk"))
+      .select(col("doc"), array_sort(array_distinct(Dedup.shingleHashes(col("_tk"), 3))))
+      .collect().map(r => r.get(0) -> r.getSeq[Long](1)).toMap
+    assert(sets.size == 5 && sets === reference)
+    // the extremes of the long order, and duplicate hashes
+    val edge = Seq(
+      Seq(Long.MaxValue, 0L, Long.MinValue, -1L, Long.MaxValue, 1L, Long.MinValue),
+      Seq(7L, 7L, 7L), Seq.empty[Long]).toDF("h")
+      .select(sort_array(array_distinct(col("h"))), array_sort(array_distinct(col("h"))))
+      .collect()
+    edge.foreach(r => assert(r.getSeq[Long](0) === r.getSeq[Long](1)))
+    assert(edge(0).getSeq[Long](0) === Seq(Long.MinValue, -1L, 0L, 1L, Long.MaxValue))
+    assert(edge(1).getSeq[Long](0) === Seq(7L))
+  }
+
+  test("the minhash and simhash pipelines evaluate no interpreted lambda") {
+    // the tokenizer and the set sort used to be HOFs (CodegenFallback);
+    // a file source keeps the projections from being folded at planning
+    val dir = tmpDir("dedup_no_lambda")
+    docs.write.mode("overwrite").parquet(dir)
+    val corpus = spark.read.parquet(dir)
+    val minhash = Dedup.minhashNearDup(corpus, "doc_id", "text")
+    val simhash = Dedup.verifiedJaccard(corpus,
+      Dedup.simhashCandidates(Dedup.simhash(corpus, "doc_id", "text")), "doc_id", "text")
+    for (df <- Seq(minhash, simhash)) {
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("word_tokens") && !plan.contains("lambdafunction"), plan)
+    }
+  }
+
   test("prefix-filtered jaccard equals the inverted-index form at every threshold") {
     // prefix filtering is an EXACT algorithm — the theorem says the
     // smallest common shingle lands in both prefixes; any divergence

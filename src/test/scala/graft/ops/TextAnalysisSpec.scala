@@ -1,7 +1,17 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.functions.WordTokens
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
+import org.scalacheck.{Gen, Prop, Test => Check}
+import org.scalacheck.rng.Seed
+import org.scalacheck.util.Pretty
 
 class TextAnalysisSpec extends SparkSpec {
 
@@ -341,5 +351,104 @@ class TextAnalysisSpec extends SparkSpec {
     intercept[IllegalArgumentException](TextAnalysis.langId(bad))
     val bad2 = Seq((1L, "hello world", "keep me")).toDF("doc_id", "text", "_sh")
     intercept[IllegalArgumentException](TextAnalysis.fingerprint(bad2))
+  }
+
+  // ── the native tokenizer against the HOF reference ──
+
+  private val asciiChars: Gen[Char] = Gen.oneOf(
+    ('a' to 'z') ++ ('A' to 'Z') ++ ('0' to '9') ++ " \t\n.,;:!?-_'\"()[]/@#".toSeq)
+
+  /** Characters whose case mapping or class the ASCII loop must not
+    * guess: KELVIN SIGN and U+0130 lower-case to ASCII letters (plus a
+    * combining dot); sharp s, the sigmas, full-width digits, a
+    * combining acute, a surrogate-pair emoji and NUL. */
+  private val nonAscii: Seq[String] = Seq("\u212A", "\u0130", "\u00DF", "\u03A3", "\u03C2",
+    "\u03C3", "\uFF10", "\uFF19", "\u0301", "\uD83D\uDE00", "\u0000", "\u00C9", "\u00E9")
+
+  private val texts: Gen[String] = Gen.frequency(
+    1 -> Gen.const(null),
+    1 -> Gen.const(""),
+    4 -> Gen.choose(0, 40).flatMap(Gen.listOfN(_, asciiChars)).map(_.mkString),
+    4 -> Gen.choose(0, 40).flatMap(Gen.listOfN(_,
+      Gen.frequency(5 -> asciiChars.map(_.toString), 2 -> Gen.oneOf(nonAscii)))).map(_.mkString))
+
+  private def tokenRows(texts: Seq[String], native: String => org.apache.spark.sql.Column) = {
+    import spark.implicits._
+    texts.zipWithIndex.map(_.swap).toDF("i", "text")
+      .select(col("i"), native("text").as("got"), TextReference.tokensHof(col("text")).as("want"))
+  }
+
+  /** `body` with `conf` set, restoring the previous values after. */
+  private def withConf[T](conf: (String, String)*)(body: => T): T = {
+    val old = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("property: WordTokens equals the HOF tokenizer row by row, under both case mappings") {
+    for (icu <- Seq("true", "false")) withConf(
+        "spark.sql.icu.caseMappings.enabled" -> icu,
+        // keep the projection out of the driver-side local-relation
+        // folding, which would evaluate it interpreted
+        "spark.sql.optimizer.excludedRules" ->
+          "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation") {
+      val seen = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+      val probe = tokenRows(Seq("a"), t => TextAnalysis.tokensCol(col(t)))
+      assert(probe.schema("got").dataType === probe.schema("want").dataType)
+      assert(probe.schema("got").dataType === ArrayType(StringType, containsNull = false))
+      val codegen = GenerateUnsafeProjection.generate(
+        Seq(WordTokens(BoundReference(0, StringType, nullable = true))))
+      val prop = Prop.forAllNoShrink(Gen.choose(1, 12).flatMap(Gen.listOfN(_, texts))) { batch =>
+        val rows = tokenRows(batch, t => TextAnalysis.tokensCol(col(t))).collect()
+          .sortBy(_.getInt(0))
+        batch.foreach { t =>
+          seen(if (t == null) "null" else if (t.forall(_ < 128)) "ascii" else "non-ascii") += 1
+        }
+        // the interpreted and the generated code on the driver, too
+        def strings(a: ArrayData): Seq[String] =
+          if (a == null) null else a.toArray[AnyRef](StringType).map(_.toString).toSeq
+        val interpreted = batch.map(t => strings(
+          WordTokens(Literal.create(t, StringType)).eval().asInstanceOf[ArrayData]))
+        val generated = batch.map { t =>
+          val r = codegen(InternalRow(UTF8String.fromString(t)))
+          if (r.isNullAt(0)) null else strings(r.getArray(0))
+        }
+        val got = rows.map(r => Option(r.getSeq[String](1)).map(_.toSeq).orNull).toSeq
+        val want = rows.map(r => Option(r.getSeq[String](2)).map(_.toSeq).orNull).toSeq
+        Prop(got == want && interpreted == want && generated == want) :|
+          s"icu=$icu texts=${batch.map(Option(_).map(_.map(c => f"\\u${c.toInt}%04X").mkString))} " +
+            s"got=$got interpreted=$interpreted generated=$generated want=$want"
+      }
+      val result = Check.check(Check.Parameters.default
+        .withMinSuccessfulTests(200).withInitialSeed(Seed(20261018L)).withWorkers(1), prop)
+      assert(result.passed, Pretty.pretty(result))
+      info(s"icu=$icu rows by kind: $seen")
+      for (k <- Seq("null", "ascii", "non-ascii")) assert(seen(k) > 50, s"too few $k rows: $seen")
+    }
+  }
+
+  test("WordTokens: case mappings that create ASCII letters, nulls, and a collated input") {
+    for (icu <- Seq("true", "false")) withConf("spark.sql.icu.caseMappings.enabled" -> icu) {
+      val rows = tokenRows(Seq("\u212Aelvin 42", "\u0130stanbul", "STRASSE stra\u00DFe", null, ""),
+        t => TextAnalysis.tokensCol(col(t))).orderBy("i").collect()
+      rows.foreach(r => assert(r.get(1) == r.get(2), s"icu=$icu row ${r.getInt(0)}"))
+      assert(rows(0).getSeq[String](1) === Seq("kelvin", "42"))
+      assert(rows(1).getSeq[String](1) === Seq("i", "stanbul"))
+      assert(rows(2).getSeq[String](1) === Seq("strasse", "stra", "e"))
+      assert(rows(3).isNullAt(1))
+      assert(rows(4).getSeq[String](1).isEmpty)
+    }
+    // a collated input keeps its string type and skips the ASCII loop
+    val collated = tokenRows(Seq("Hello, \u212Aelvin", null),
+      t => TextAnalysis.tokensCol(collate(col(t), "UTF8_LCASE")))
+    val ref = tokenRows(Seq("Hello, \u212Aelvin", null), t => collate(col(t), "UTF8_LCASE"))
+      .select(TextReference.tokensHof(col("got")).as("want"))
+    assert(collated.schema("got").dataType === ref.schema("want").dataType)
+    assert(collated.schema("got").dataType !== ArrayType(StringType, containsNull = false))
+    assert(collated.orderBy("i").collect().map(_.get(1)).toSeq ===
+      ref.collect().map(_.get(0)).toSeq)
   }
 }

@@ -310,6 +310,18 @@ class VectorIndexSpec extends SparkSpec {
       "replayed batch must re-derive identical verdicts")
   }
 
+  test("ingestDedup: a NaN-bearing batch vector matches nothing") {
+    val path = tmpDir("vecidx_ingestdedup_nan")
+    VectorIndex.build(corpus, "vec_id", "embedding", path, nlist = 4)
+    // two NaN-bearing vectors: their cosine with every resident and
+    // with each other is NaN, which Spark orders above any threshold
+    val nan = { val v = Array.fill(dim)(0.01f); v(0) = 10f; v(1) = Float.NaN; v.toSeq }
+    val got = VectorIndex.ingestDedup(Seq((7100L, nan), (7101L, nan)).toDF("vec_id", "embedding"),
+        "vec_id", "embedding", path, threshold = 0.95, nprobe = 4)
+      .collect().map(r => (r.getLong(0), r.getBoolean(1), r.getLong(2))).toList.sortBy(_._1)
+    assert(got === List((7100L, true, 0L), (7101L, true, 0L)))
+  }
+
   test("ingestDedupStream dedups a vector stream against the growing index") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
