@@ -19,11 +19,16 @@ import org.apache.spark.sql.types._
   *    query's values are binary-searched against the [min,max]
   *    intervals — no Spark job, never a shuffle of the data table;
   *  - `build` scans data once at ingest (distributed; the groupBy key is
-  *    `input_file_name()` so partial min/max aggregation happens map-side
-  *    per task and only per-file partials hit the exchange);
+  *    `_metadata.file_path` so partial min/max aggregation happens
+  *    map-side per task and only per-file partials hit the exchange),
+  *    then keeps only files whose scanned row count equals the footer's;
   *  - `buildFromFooters` reads ONLY Parquet footers (KBs per file) on the
   *    executors — the reference's actual strategy (metastore.py:278-339) —
-  *    so re-stats never touches data bytes;
+  *    so re-stats never touches data bytes. Every footer sweep (this
+  *    builder, `build`'s row-count guard, [[StatsAgg]]'s per-column
+  *    harvest) is the one reader [[StatsAgg.readFooters]], with one
+  *    completeness rule: a row group without min/max leaves the file's
+  *    bounds unknown (NULL) unless its null count says it is all null;
   *  - `update` is a left-anti join on filepath (idempotent re-update),
   *    exactly the reference's skip-if-exists (metastore.py:245-260).
   */
@@ -203,29 +208,14 @@ object Metastore {
   }
 
   /** Footer-declared row count per file, `(filepath, _footer_rows)`.
-    * Distributed footer-only sweep (KBs per file) over an
+    * Distributed footer-only sweep ([[StatsAgg.readFooters]]) over an
     * already-listed path set; a file whose footer cannot be read yields
     * no row. */
   private[lake] def footerRowCounts(spark: SparkSession, paths: Seq[String]): DataFrame = {
-    import org.apache.hadoop.conf.Configuration
-    import org.apache.hadoop.fs.Path
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val confB = spark.sparkContext.broadcast(hadoopConfKVs(spark))
-    val rows = spark.sparkContext
-      .parallelize(paths, math.max(1, math.min(paths.size, spark.sparkContext.defaultParallelism)))
-      .flatMap { p =>
-        val conf = new Configuration(false)
-        confB.value.foreach { case (k, v) => conf.set(k, v) }
-        try {
-          val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(p), conf))
-          try {
-            var n = 0L
-            reader.getFooter.getBlocks.forEach(b => n += b.getRowCount)
-            Some(Row(p, n))
-          } finally reader.close()
-        } catch { case _: Exception => None }
-      }
+    val rows = StatsAgg.readFooters(spark, paths, Nil).flatMap {
+      case (p, Right(f)) => Some(Row(p, f.rows))
+      case _ => None
+    }
     spark.createDataFrame(rows, StructType(Seq(
       StructField("filepath", StringType, nullable = false),
       StructField("_footer_rows", LongType, nullable = false))))
@@ -234,25 +224,20 @@ object Metastore {
   /** Harvest per-file min/max from Parquet FOOTERS only — no data bytes
     * read. This is the reference's real mechanism
     * (lakeshack/metastore.py:278-339): fold row-group stats across each
-    * file (min of mins, max of maxes, metastore.py:321-335). At 100 TB
-    * this reads ~KBs per file; the path list is distributed across
-    * executors, replacing the reference's 16-thread pool
-    * (metastore.py:385) with cluster task parallelism.
+    * file (min of mins, max of maxes, metastore.py:321-335) under
+    * [[StatsAgg.readFooters]]' completeness rule — a column whose
+    * bounds some row group leaves unknown gets NULL bounds (never
+    * pruned on it). At 100 TB this reads ~KBs per file; the path list
+    * is distributed across executors, replacing the reference's
+    * 16-thread pool (metastore.py:385) with cluster task parallelism.
     */
   def buildFromFooters(spark: SparkSession, dataPath: String, clusterColumn: String,
                        optionalColumns: Seq[String] = Nil,
                        onlyPaths: Seq[String] = Nil): DataFrame = {
-    import org.apache.hadoop.conf.Configuration
-    import org.apache.hadoop.fs.Path
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.parquet.schema.LogicalTypeAnnotation.{TimestampLogicalTypeAnnotation, TimeUnit}
-
     // see build's evolution note — late-added columns must resolve; a
     // file whose footer lacks the column contributes NULL bounds below
     val dataSchema = evolvedRead(spark, dataPath, clusterColumn +: optionalColumns).schema
     val cols = statColumns(dataSchema, clusterColumn, optionalColumns)
-    val sparkTypes: Map[String, DataType] = cols.map(c => c -> dataSchema(c).dataType).toMap
     val outSchema = StructType(
       StructField("filepath", StringType, nullable = false) +:
       cols.flatMap { c =>
@@ -267,79 +252,25 @@ object Metastore {
     // inference above still samples the whole table so stat columns and
     // types agree with a full rebuild.
     val paths = if (onlyPaths.nonEmpty) onlyPaths else listParquetFiles(spark, dataPath)
-    val colsB = spark.sparkContext.broadcast(cols)
-    val typesB = spark.sparkContext.broadcast(sparkTypes)
-    val confB = spark.sparkContext.broadcast(hadoopConfKVs(spark))
-    val rows = spark.sparkContext
-      .parallelize(paths, math.max(1, math.min(paths.size, spark.sparkContext.defaultParallelism)))
-      .flatMap { p =>
-        val wanted = colsB.value
-        val types = typesB.value
-        val conf = new Configuration(false)
-        confB.value.foreach { case (k, v) => conf.set(k, v) }
-        // Per-file error tolerance (reference metastore.py:304-305,
-        // 394-397 logs-and-skips): a corrupt or unreadable footer skips
-        // THAT file instead of failing the whole build — at 100k files
-        // one bad object must not kill the harvest. The file then has no
-        // stats row; unknown files are never pruned, so queries stay
-        // sound (may-contain, weaker pruning only).
-        try {
-        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(p), conf))
-        try {
-          val md = reader.getFooter
-          // Fold row-group stats per column across all row groups.
-          val acc = scala.collection.mutable.Map[String, (Comparable[Any], Comparable[Any])]()
-          md.getBlocks.forEach { block =>
-            block.getColumns.forEach { cc =>
-              val name = cc.getPath.toDotString
-              if (wanted.contains(name)) {
-                val st = cc.getStatistics
-                if (st != null && st.hasNonNullValue) {
-                  val mn = st.genericGetMin.asInstanceOf[Comparable[Any]]
-                  val mx = st.genericGetMax.asInstanceOf[Comparable[Any]]
-                  acc.get(name) match {
-                    case Some((m0, m1)) =>
-                      acc(name) = (if (mn.compareTo(m0.asInstanceOf[Any]) < 0) mn else m0,
-                                   if (mx.compareTo(m1.asInstanceOf[Any]) > 0) mx else m1)
-                    case None => acc(name) = (mn, mx)
-                  }
-                }
-              }
-            }
-          }
-          val logicalByName = {
-            val m = scala.collection.mutable.Map[String, org.apache.parquet.schema.PrimitiveType]()
-            md.getFileMetaData.getSchema.getFields.forEach { f =>
-              if (f.isPrimitive) m(f.getName) = f.asPrimitiveType()
-            }
-            m
-          }
-          // Parquet physical value -> Spark external value, keyed by the
-          // Spark type the normal reader infers (so both builders agree).
-          def toExternal(name: String, v: Any): Any =
-            footerExternal(types(name), logicalByName.get(name).orNull, v)
-          val values = wanted.flatMap { c =>
-            acc.get(c) match {
-              case Some((mn, mx)) => Seq(toExternal(c, mn), toExternal(c, mx))
-              case None => Seq(null, null)
-            }
-          }
-          Some(Row.fromSeq(p +: values))
-        } finally reader.close()
-        } catch { case e: Exception =>
-          org.slf4j.LoggerFactory.getLogger("graft.lake.Metastore")
-            .warn(s"skipping unreadable parquet file during stats harvest: $p", e)
-          None
-        }
-      }
+    val rows = StatsAgg.readFooters(spark, paths, cols.map(c => c -> dataSchema(c).dataType)).flatMap {
+      case (p, Right(f)) =>
+        Some(Row.fromSeq(p +: f.columns.flatMap { case (_, mn, mx) => Seq(mn.orNull, mx.orNull) }))
+      // Per-file error tolerance (reference metastore.py:304-305,
+      // 394-397 logs-and-skips): the file then has no stats row; unknown
+      // files are never pruned, so queries stay sound (weaker pruning only).
+      case (p, Left(why)) =>
+        org.slf4j.LoggerFactory.getLogger("graft.lake.Metastore")
+          .warn(s"skipping unreadable parquet file during stats harvest: $p ($why)")
+        None
+    }
     spark.createDataFrame(rows, outSchema)
   }
 
   /** Parquet footer-statistics value → Spark EXTERNAL value for the
     * given Spark type (`prim` = the column's parquet primitive type,
     * needed to resolve the timestamp unit; may be null for
-    * non-temporal columns). Shared by [[buildFromFooters]] and
-    * [[StatsAgg]] so both agree bit-for-bit with what the normal
+    * non-temporal columns). Applied by [[StatsAgg.readFooters]], so
+    * every footer builder agrees bit-for-bit with what the normal
     * parquet reader produces. */
   private[lake] def footerExternal(
       dt: DataType, prim: org.apache.parquet.schema.PrimitiveType, v: Any): Any = {

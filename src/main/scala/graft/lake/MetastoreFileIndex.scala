@@ -172,28 +172,17 @@ object MetastoreFileIndex {
     // structure, not the file footers — declaring them in dataSchema
     // would read them (as nulls) from files where they don't exist
     val partSchema = base.partitionSchema
-    val dataSchema = StructType(schema.filterNot(f => partSchema.fieldNames.contains(f.name)))
-    val rel = HadoopFsRelation(idx, partSchema, dataSchema, None,
-      new ParquetFileFormat(), Map.empty[String, String])(spark)
-    GraftColumnBridge.ofRows(spark, LogicalRelation(rel, isStreaming = false))
+    relation(spark, idx, partSchema,
+      StructType(schema.filterNot(f => partSchema.fieldNames.contains(f.name))))
   }
 
-  /** Explicit-file-set variant for VERSIONED tables: the base index
-    * lists exactly `files` (a [[SnapshotLog]] snapshot's live set), so
-    * the view reads that version — untouched by later commits — while
-    * zone-map pruning works transparently through the same interval
-    * map. No hive partition inference (token dirs are not partition
-    * dirs); `schema` is the version's committed schema. */
-  def tableForFiles(spark: SparkSession, files: Seq[String],
-                    schema: StructType, stats: DataFrame): DataFrame = {
-    val base = new InMemoryFileIndex(spark, files.map(new Path(_)),
-      Map.empty[String, String], Some(schema), FileStatusCache.getOrCreate(spark), None, None)
-    val idx = new MetastoreFileIndex(base, () => stats,
-      Some(spark.sparkContext.hadoopConfiguration))
-    val rel = HadoopFsRelation(idx, StructType(Nil), schema, None,
-      new ParquetFileFormat(), Map.empty[String, String])(spark)
-    GraftColumnBridge.ofRows(spark, LogicalRelation(rel, isStreaming = false))
-  }
+  /** A parquet DataFrame over a hand-built file index: the one recipe
+    * (`HadoopFsRelation` → `LogicalRelation` → `ofRows`) behind every
+    * lake scan that supplies its own `FileIndex`. */
+  private[lake] def relation(spark: SparkSession, index: FileIndex,
+                             partitionSchema: StructType, dataSchema: StructType): DataFrame =
+    GraftColumnBridge.ofRows(spark, LogicalRelation(HadoopFsRelation(index, partitionSchema,
+      dataSchema, None, new ParquetFileFormat(), Map.empty[String, String])(spark), isStreaming = false))
 
   /** The MetastoreFileIndex behind a DataFrame returned by `table` —
     * call `.refresh()` on it after appending files + updating stats. */

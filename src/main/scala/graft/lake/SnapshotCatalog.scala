@@ -33,8 +33,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * story:
   *
   *  - ZONE-MAP PRUNING: `WHERE` clauses on stats-bearing columns skip
-  *    files at planning time ([[SnapshotFileIndex]]) — the API path's
-  *    `readPruned` behavior, now free inside any `spark.sql`.
+  *    files at planning time ([[SnapshotFileIndex]]) — the same index
+  *    the API's `readPruned` reads through, free inside any `spark.sql`.
   *  - DELETION VECTORS apply transparently: a post-`delete` version
   *    reads its live rows only ([[DvScanBuilder]]'s positional filter,
   *    the SQL twin of `SnapshotLog.read`'s anti-join), at a bounded,

@@ -566,16 +566,17 @@ case class PushFilteredAggToManifest(spark: SparkSession) extends Rule[LogicalPl
           schema.fields.head.dataType))
       if (st.forall(_.rows >= 0L)) Some(st.map(_.rows).sum) else None
     }
-    def extremum(n: String, wantMax: Boolean): Option[Any] = statsFor(n).map { st =>
-      val toC = CatalystTypeConverters.createToCatalystConverter(schema(n).dataType)
-      val fromC = CatalystTypeConverters.createToScalaConverter(schema(n).dataType)
-      val ord = TypeUtils.getInterpretedOrdering(schema(n).dataType)
-      // all-null files carry no extrema — they contribute nothing,
-      // exactly like MIN/MAX's null skipping
-      val vals = st.flatMap(s => if (wantMax) s.max else s.min).map(toC)
-      if (vals.isEmpty) null
-      else fromC(if (wantMax) vals.max(ord) else vals.min(ord))
-    }
+    def extremum(n: String, wantMax: Boolean): Option[Any] =
+      statsFor(n).filter(_.forall(_.boundsKnown)).map { st =>
+        val toC = CatalystTypeConverters.createToCatalystConverter(schema(n).dataType)
+        val fromC = CatalystTypeConverters.createToScalaConverter(schema(n).dataType)
+        val ord = TypeUtils.getInterpretedOrdering(schema(n).dataType)
+        // all-null files carry no extrema — they contribute nothing,
+        // exactly like MIN/MAX's null skipping
+        val vals = st.flatMap(s => if (wantMax) s.max else s.min).map(toC)
+        if (vals.isEmpty) null
+        else fromC(if (wantMax) vals.max(ord) else vals.min(ord))
+      }
     def sidecarSum(n: String): Option[Long] = {
       val present = covered.flatMap(p => sumStats(n)(qualified(p))._1)
       if (present.isEmpty) None else Some(present.sum)

@@ -1633,8 +1633,9 @@ object SnapshotLog {
 
   /** Driver-side parquet footer row count, cached per path (pool files
     * are immutable by protocol, so the count is valid for the file's
-    * life). Used by [[maintain]]'s no-op path; DV files only — data
-    * files go through the distributed [[StatsAgg.harvest]]. */
+    * life). Used by [[maintain]]'s no-op path, which must run no Spark
+    * job; DV files only — data files go through the distributed
+    * [[StatsAgg.readFooters]]. */
   private val footerRowCountCache = java.util.Collections.synchronizedMap(
     new java.util.LinkedHashMap[String, java.lang.Long](64, 0.75f, true) {
       override def removeEldestEntry(
@@ -2206,35 +2207,6 @@ object SnapshotLog {
       .getOrElse(StatsAgg.FileStats(p, 0L, None, None, None)))
   }
 
-  /** Version-pinned stats table for [[MetastoreFileIndex]], built from
-    * the per-file cache (schema comes from the SNAPSHOT, so no
-    * inference pass touches footers). Output shape matches
-    * [[Metastore.buildFromFooters]]: (filepath, <c>_min, <c>_max …). */
-  private def cachedStatsTable(spark: SparkSession, absFiles: Seq[String],
-                               schema: StructType,
-                               cols: Seq[String]): DataFrame = {
-    val present = cols.filter(c => schema.fieldNames.contains(c))
-    val byCol = present.map(c =>
-      c -> cachedHarvest(spark, absFiles, c, schema(c).dataType)
-        .map(fs => fs.path -> fs).toMap).toMap
-    val outSchema = StructType(
-      StructField("filepath", StringType, nullable = false) +:
-        present.flatMap { c =>
-          val dt = schema(c).dataType
-          Seq(StructField(c + "_min", dt), StructField(c + "_max", dt))
-        })
-    val rows = absFiles.map { p =>
-      Row.fromSeq(p +: present.flatMap { c =>
-        val fs = byCol(c)(p)
-        Seq(fs.min.orNull, fs.max.orNull)
-      })
-    }
-    // sliced like merge's key frame: a 10⁵-file version's stats rows in
-    // one slice would ship a multi-MB single task
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, math.max(1, rows.size / 20000)), outSchema)
-  }
-
   // ── reads ────────────────────────────────────────────────────────
 
   /** Table-relative path of a scanned row's file, recovered from the
@@ -2397,17 +2369,16 @@ object SnapshotLog {
   /** Manifest-fed scan over a KNOWN file list: the paths come from a
     * committed manifest, so the per-call existence probe and glob pass
     * of `spark.read.parquet(paths…)` are pure waste — this constructs
-    * the relation directly over an `InMemoryFileIndex` backed by the
-    * session [[org.apache.spark.sql.execution.datasources.FileStatusCache]]
-    * (immutable files → statuses cacheable), the same recipe as
-    * [[MetastoreFileIndex.tableForFiles]] minus the pruning index. On a
+    * the relation directly ([[MetastoreFileIndex.relation]]) over an
+    * `InMemoryFileIndex` backed by the session
+    * [[org.apache.spark.sql.execution.datasources.FileStatusCache]]
+    * (immutable files → statuses cacheable), with no pruning index. On a
     * version with 10⁵ files this turns every read construction from
     * O(files) driver FS calls into cache hits — the metadata-ops term
     * the round-12 joinview_refresh reconciliation named. */
   private[lake] def scanKnownFiles(spark: SparkSession, paths: Seq[String],
                              schema: StructType): DataFrame = {
-    import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
-    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    import org.apache.spark.sql.execution.datasources.{FileStatusCache, InMemoryFileIndex}
     // nullable like `spark.read.schema(…)` forces: a pre-evolution file
     // legitimately lacks a later column (null-filled by the reader), and
     // a non-nullable field would make the vectorized reader REFUSE the
@@ -2416,10 +2387,7 @@ object SnapshotLog {
     val idx = new InMemoryFileIndex(spark, paths.map(new Path(_)),
       Map.empty[String, String], Some(readSchema),
       FileStatusCache.getOrCreate(spark), None, None)
-    val rel = HadoopFsRelation(idx, StructType(Nil), readSchema, None,
-      new ParquetFileFormat(), Map.empty[String, String])(spark)
-    org.apache.spark.sql.GraftColumnBridge.ofRows(spark,
-      LogicalRelation(rel, isStreaming = false))
+    MetastoreFileIndex.relation(spark, idx, StructType(Nil), readSchema)
   }
 
   /** Deep nullable relaxation (what DataFrameReader.schema applies). */
@@ -2460,7 +2428,8 @@ object SnapshotLog {
 
   /** The VECTORIZED form of a DV-carrying catalog read — what
     * `GraftExtensions`' resolution rule substitutes for the row-based
-    * [[graft.lake.DvScanBuilder]] fallback. Clean files scan through a
+    * [[graft.lake.DvScanBuilder]] fallback, and the whole of
+    * [[readPruned]] for any version. Clean files scan through a
     * [[SnapshotFileIndex]] (zone-map file pruning + full parquet filter
     * pushdown + splitting + columnar batches); dirty files scan the
     * same way with their dead `(file, _metadata.row_index)` pairs
@@ -2476,18 +2445,11 @@ object SnapshotLog {
   private[lake] def vectorizedCatalogRead(spark: SparkSession, tablePath: String,
                                           schema: StructType, absFiles: Seq[String],
                                           dvs: Map[String, Seq[String]]): DataFrame = {
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
     import org.apache.spark.sql.functions.col
     val root = new Path(tablePath)
     val readSchema = StructType(schema.fields.map(relaxNullability))
-    def scan(paths: Seq[String]): DataFrame = {
-      val idx = new SnapshotFileIndex(spark, paths, readSchema, Some(tablePath))
-      val rel = HadoopFsRelation(idx, StructType(Nil), readSchema, None,
-        new ParquetFileFormat(), Map.empty[String, String])(spark)
-      org.apache.spark.sql.GraftColumnBridge.ofRows(spark,
-        LogicalRelation(rel, isStreaming = false))
-    }
+    def scan(paths: Seq[String]): DataFrame = MetastoreFileIndex.relation(spark,
+      new SnapshotFileIndex(spark, paths, readSchema, Some(tablePath)), StructType(Nil), readSchema)
     val (dirty, clean) = absFiles.partition(p =>
       dvs.contains(SnapshotTable.relOf(new Path(p).toUri.getPath)))
     val parts = Seq.newBuilder[DataFrame]
@@ -2502,15 +2464,20 @@ object SnapshotLog {
     else parts.result().reduce(_ unionByName _)
   }
 
-  /** Time travel WITH transparent zone-map pruning: harvest footer
-    * stats for the version's live files only (O(version files), KBs
-    * each — never the dead versions') and serve them through a
-    * [[MetastoreFileIndex]] over exactly that file set. Point/range
-    * queries on `clusterColumn` then skip files at PLANNING time
-    * inside any `spark.sql` over the returned frame — the lake's
-    * pruning machinery applied to a pinned version. Best after
-    * [[compact]] or a clustered write; an unclustered version prunes
-    * nothing (sound, just unhelpful). */
+  /** Time travel WITH transparent zone-map pruning: a pinned version
+    * read through the SQL catalog's own scan ([[vectorizedCatalogRead]]),
+    * so `readPruned(…).where(f)` and `SELECT … FROM snap.t WHERE f` plan
+    * the same files. At planning time the [[SnapshotFileIndex]] skips
+    * files by their footer [min,max] on EVERY orderable filtered column
+    * and by Bloom sidecars on `=`/`IN` over a column with one
+    * ([[buildBloom]]); deletion vectors apply as one broadcast anti-join
+    * over the dirty files only. `clusterColumn +: optionalColumns` name
+    * the columns whose footer stats are harvested into the per-file
+    * cache up front (O(version files) on first sight, KBs each — never
+    * the dead versions'), so queries on them plan from cache hits; any
+    * other column is harvested the first time a filter names it. Best
+    * after [[compact]] or a clustered write; an unclustered version
+    * prunes nothing (sound, just unhelpful). */
   def readPruned(spark: SparkSession, table: String, clusterColumn: String,
                  optionalColumns: Seq[String] = Nil,
                  asOf: Option[Long] = None): DataFrame = {
@@ -2519,20 +2486,13 @@ object SnapshotLog {
     if (snap.files.isEmpty)
       return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     val root = new Path(table)
-    // fs-qualified (file:/… | hdfs://…) so the harvested stats'
-    // filepath keys match the FileIndex's listed URIs — a bare /tmp/x
-    // key would silently match nothing and prune nothing (sound, but
-    // the whole point lost)
+    // fs-qualified (file:/… | hdfs://…) like the catalog's paths, so the
+    // cache keys and the index's listed URIs match
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val abs = snap.files.map(f => fs.makeQualified(new Path(dataRootOf(root), f)).toString)
-    val stats = cachedStatsTable(spark, abs, schema, clusterColumn +: optionalColumns)
-    val base = MetastoreFileIndex.tableForFiles(spark, abs, schema, stats)
-    // DV'd version: apply the positional anti-join ON TOP of the pruned
-    // relation — pruning still happens at planning time underneath
-    // (zone maps of a DV'd file stay sound: may-contain), the broadcast
-    // probe only ever matches rows of files that carry vectors
-    if (snap.dvs.isEmpty) base
-    else minusDeleted(base, dvRows(spark, root, snap), schema.fieldNames.toSeq)
+    (clusterColumn +: optionalColumns).distinct.filter(schema.fieldNames.contains)
+      .foreach(c => cachedHarvest(spark, abs, c, schema(c).dataType))
+    vectorizedCatalogRead(spark, table, schema, abs, snap.dvs)
   }
 
   /** Row-level CHANGE FEED: every insert/delete between two versions,

@@ -25,9 +25,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   *  1. ZONE-MAP FILE PRUNING ([[SnapshotFileIndex]]): `WHERE` clauses
   *     skip non-matching files at planning time from cached footer
-  *     stats, exactly like the API path's
-  *     [[MetastoreFileIndex.tableForFiles]] (one shared `ZoneMap.mayContain`,
-  *     so the SQL and API pruning semantics cannot drift);
+  *     stats. The API's `SnapshotLog.readPruned` reads through the same
+  *     index (via [[SnapshotLog.vectorizedCatalogRead]]), so the SQL and
+  *     API pruning cannot drift;
   *  2. DELETION-VECTOR application ([[DvScanBuilder]]): a version that
   *     carries DVs is readable in pure SQL — each dirty file's dead
   *     positions are dropped by a per-file positional filter inside the
@@ -334,15 +334,16 @@ private[lake] object SnapshotTable {
 }
 
 /** `InMemoryFileIndex` + transparent zone-map pruning for a snapshot
-  * version's file set. Intervals are built LAZILY per referenced
-  * column from the shared per-(file, column) footer-stats cache
-  * (`SnapshotLog.cachedHarvest`) the first time a filter mentions the
-  * column — so `snap.t VERSION AS OF 3 WHERE k = 42` pays one footer
-  * sweep over the version's files on first use and map lookups after,
-  * the identical cost shape as the API path's `readPruned`. Unknown
-  * files and unknown predicate shapes are never pruned (may-contain,
-  * sound); files are immutable by the pool protocol, so the memo never
-  * goes stale. */
+  * version's file set — the one pruned scan of a pinned version, behind
+  * both the SQL catalog and `SnapshotLog.readPruned`. Intervals are
+  * built LAZILY per referenced column from the shared per-(file, column)
+  * footer-stats cache (`SnapshotLog.cachedHarvest`) the first time a
+  * filter mentions the column — so `snap.t VERSION AS OF 3 WHERE k = 42`
+  * pays one footer sweep over the version's files on first use (none
+  * when `readPruned` harvested `k` up front) and map lookups after.
+  * Unknown files and unknown predicate shapes are never pruned
+  * (may-contain, sound); files are immutable by the pool protocol, so
+  * the memo never goes stale. */
 private[lake] class SnapshotFileIndex(
     spark: SparkSession, absFiles: Seq[String], schema: StructType,
     tablePath: Option[String] = None)
@@ -605,11 +606,11 @@ object ManifestAgg {
     def extremum(c: String, wantMax: Boolean): Option[Any] = {
       val dt = schema.fields.find(_.name == c).map(_.dataType).getOrElse(return None)
       if (!exactMinMax(dt)) return None
-      statsFor(c).map { st =>
+      statsFor(c).filter(_.forall(_.boundsKnown)).map { st =>
         val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters
           .createToCatalystConverter(dt)
-        // all-null files carry Some(nulls) but no extrema — they
-        // contribute nothing, exactly like MIN/MAX's null-skipping
+        // all-null files carry no extrema — they contribute nothing,
+        // exactly like MIN/MAX's null-skipping
         val vals = st.flatMap(s => if (wantMax) s.max else s.min).map(conv)
         if (vals.isEmpty) null
         else {

@@ -3,10 +3,14 @@ package graft.lake
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.{ColumnPath, ParquetMetadata}
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+import scala.jdk.CollectionConverters._
 
 /** Aggregation pushdown into footer statistics: answer
   * `COUNT(*) / MIN(c) / MAX(c)` under a range predicate on `c` from
@@ -39,15 +43,21 @@ import org.apache.spark.sql.types._
   *
   * The per-file classification is driver-held, one entry per file —
   * the same size class as the pruning interval map. The footer sweep
-  * itself is distributed ([[Metastore.buildFromFooters]]'s mechanism).
+  * itself is distributed: [[readFooters]], the one reader behind every
+  * footer-stats builder.
   */
 object StatsAgg {
 
-  /** Per-file footer facts for one column. `nulls`/`min`/`max` are
-    * None when any block's statistics were absent or incomplete —
-    * such a file can only be scanned. */
+  /** Per-file footer facts for one column, under [[readFooters]]'
+    * completeness rule: `nulls` is None when some row group declares no
+    * null count; `min`/`max` are None when the bounds are unknown or the
+    * column is all null ([[boundsKnown]] tells the two apart). A file
+    * without both can only be scanned. */
   final case class FileStats(path: String, rows: Long, nulls: Option[Long],
-                             min: Option[Any], max: Option[Any])
+                             min: Option[Any], max: Option[Any]) {
+    /** `min`/`max` are exact bounds: present, or absent because every row is null. */
+    private[lake] def boundsKnown: Boolean = min.isDefined || nulls.contains(rows)
+  }
 
   /** The classification a range aggregate will execute: `covered`
     * answered from footers, `scanned` read with the predicate pushed
@@ -57,72 +67,92 @@ object StatsAgg {
   final case class Plan(covered: Seq[FileStats], scanned: Seq[String],
                         skipped: Seq[String])
 
-  /** Distributed footer sweep: (path, rows, nulls, min, max) for one
-    * column of every listed file. Unreadable footers yield a
-    * stats-less entry (scan class) instead of failing the sweep —
-    * per-file error tolerance, reference metastore.py:304-305. */
-  def harvest(spark: SparkSession, paths: Seq[String], column: String,
-              dt: DataType): Seq[FileStats] = {
+  /** One readable footer: the file's row count and, per requested
+    * column in request order, `(nulls, min, max)` — see [[readFooters]]. */
+  private[lake] final case class Footer(rows: Long,
+                                        columns: Seq[(Option[Long], Option[Any], Option[Any])])
+
+  /** The footer sweep every stats builder shares ([[harvest]],
+    * [[Metastore.buildFromFooters]], [[Metastore.footerRowCounts]]):
+    * each listed file's footer is read once, on the executors, and
+    * folded across its row groups (reference metastore.py:278-339).
+    * Per file: `Right(footer)`, or `Left(reason)` when the footer is
+    * unreadable — per-file error tolerance (reference
+    * metastore.py:304-305); each caller keeps its own policy for it.
+    *
+    * The one completeness rule (may-contain: a bound may be missing,
+    * never too narrow):
+    *  - bounds are known only when every row group holds the column and
+    *    each row group either carries min/max or is all-null by its
+    *    declared null count. parquet-mr leaves min/max out of a row
+    *    group whose values exceed 4 KiB, so folding only the row groups
+    *    that carry them would miss values the file holds;
+    *  - the null count is known only when every row group declares one;
+    *  - the two are independent: `(Some(n), None, None)` with `n < rows`
+    *    means "bounds unknown", not "all null".
+    * Bounds are Spark external values of the requested types
+    * ([[Metastore.footerExternal]]). */
+  private[lake] def readFooters(spark: SparkSession, paths: Seq[String],
+                                columns: Seq[(String, DataType)]): RDD[(String, Either[String, Footer])] = {
     val confB = spark.sparkContext.broadcast(Metastore.hadoopConfKVs(spark))
-    val dtB = spark.sparkContext.broadcast(dt)
-    val colB = spark.sparkContext.broadcast(column)
     spark.sparkContext
       .parallelize(paths, math.max(1, math.min(paths.size, spark.sparkContext.defaultParallelism)))
       .map { p =>
         val conf = new Configuration(false)
         confB.value.foreach { case (k, v) => conf.set(k, v) }
-        try {
+        p -> (try {
           val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(p), conf))
-          try {
-            val md = reader.getFooter
-            val prim = {
-              var r: org.apache.parquet.schema.PrimitiveType = null
-              md.getFileMetaData.getSchema.getFields.forEach { f =>
-                if (f.getName == colB.value && f.isPrimitive) r = f.asPrimitiveType()
-              }
-              r
-            }
-            var rows = 0L; var nulls = 0L
-            var mn: Comparable[Any] = null; var mx: Comparable[Any] = null
-            var complete = prim != null
-            md.getBlocks.forEach { block =>
-              rows += block.getRowCount
-              var seen = false
-              block.getColumns.forEach { cc =>
-                if (cc.getPath.toDotString == colB.value) {
-                  seen = true
-                  val st = cc.getStatistics
-                  if (st == null || !st.isNumNullsSet) complete = false
-                  else {
-                    nulls += st.getNumNulls
-                    if (st.hasNonNullValue) {
-                      val bmn = st.genericGetMin.asInstanceOf[Comparable[Any]]
-                      val bmx = st.genericGetMax.asInstanceOf[Comparable[Any]]
-                      if (mn == null || bmn.compareTo(mn.asInstanceOf[Any]) < 0) mn = bmn
-                      if (mx == null || bmx.compareTo(mx.asInstanceOf[Any]) > 0) mx = bmx
-                    } else if (st.getNumNulls != block.getRowCount) complete = false
-                  }
-                }
-              }
-              if (!seen) complete = false
-            }
-            if (!complete) FileStats(p, rows, None, None, None)
-            else FileStats(p, rows, Some(nulls),
-              Option(Metastore.footerExternal(dtB.value, prim, mn)),
-              Option(Metastore.footerExternal(dtB.value, prim, mx)))
-          } finally reader.close()
-        } catch { case _: Exception =>
-          // rows unknown too — force the scan path with a sentinel
-          FileStats(p, -1L, None, None, None)
-        }
+          try Right(fold(reader.getFooter, columns)) finally reader.close()
+        } catch { case e: Exception => Left(e.toString) })
       }
-      .collect().toSeq
   }
 
-  /** Total-order comparison of two external values of one column type.
-    * Numbers go through BigDecimal (footer externals and caller
-    * literals may box differently — Integer vs Long); temporal types
-    * are mutually Comparable within their class. */
+  private def fold(md: ParquetMetadata, columns: Seq[(String, DataType)]): Footer = {
+    val at = columns.map(_._1).zipWithIndex.map { case (c, i) => ColumnPath.get(c) -> i }.toMap
+    val n = columns.size
+    val nulls = new Array[Long](n)
+    val mins, maxs = new Array[Any](n)
+    val nullsKnown, boundsKnown = Array.fill(n)(true)
+    var rows = 0L
+    md.getBlocks.forEach { block =>
+      rows += block.getRowCount
+      val seen = new Array[Boolean](n)
+      block.getColumns.forEach { cc =>
+        at.get(cc.getPath).foreach { i =>
+          seen(i) = true
+          val st = cc.getStatistics
+          val declared = st != null && st.isNumNullsSet
+          if (declared) nulls(i) += st.getNumNulls else nullsKnown(i) = false
+          if (st != null && st.hasNonNullValue) {
+            val ord = st.comparator().asInstanceOf[java.util.Comparator[Any]]
+            if (mins(i) == null || ord.compare(st.genericGetMin, mins(i)) < 0) mins(i) = st.genericGetMin
+            if (maxs(i) == null || ord.compare(st.genericGetMax, maxs(i)) > 0) maxs(i) = st.genericGetMax
+          } else if (!declared || st.getNumNulls != block.getRowCount) boundsKnown(i) = false
+        }
+      }
+      for (i <- 0 until n if !seen(i)) { boundsKnown(i) = false; nullsKnown(i) = false }
+    }
+    val prims = md.getFileMetaData.getSchema.getFields.asScala
+      .collect { case f if f.isPrimitive => f.getName -> f.asPrimitiveType() }.toMap
+    Footer(rows, columns.zipWithIndex.map { case ((c, dt), i) =>
+      def bound(v: Any) =
+        if (boundsKnown(i)) Option(Metastore.footerExternal(dt, prims.getOrElse(c, null), v)) else None
+      (if (nullsKnown(i)) Some(nulls(i)) else None, bound(mins(i)), bound(maxs(i)))
+    })
+  }
+
+  /** Footer stats of one column for every listed file, collected. An
+    * unreadable footer yields the `rows = -1` sentinel with no stats
+    * (scan class) instead of failing the sweep. */
+  def harvest(spark: SparkSession, paths: Seq[String], column: String,
+              dt: DataType): Seq[FileStats] =
+    readFooters(spark, paths, Seq(column -> dt)).map {
+      case (p, Right(f)) =>
+        val (nulls, mn, mx) = f.columns.head
+        FileStats(p, f.rows, nulls, mn, mx)
+      case (p, Left(_)) => FileStats(p, -1L, None, None, None)
+    }.collect().toSeq
+
   /** True iff any of `sorted` (ascending under [[cmp]]) falls in
     * [mn, mx] — binary search for the first key ≥ mn, then one compare
     * against mx. O(log keys) per file where the naive exists-scan was
@@ -136,6 +166,10 @@ object StatsAgg {
     lo < sorted.length && cmp(sorted(lo), mx) <= 0
   }
 
+  /** Total-order comparison of two external values of one column type.
+    * Numbers go through BigDecimal (footer externals and caller
+    * literals may box differently — Integer vs Long); temporal types
+    * are mutually Comparable within their class. */
   private[lake] def cmp(a: Any, b: Any): Int = (a, b) match {
     case (x: Number, y: Number) =>
       new java.math.BigDecimal(x.toString).compareTo(new java.math.BigDecimal(y.toString))

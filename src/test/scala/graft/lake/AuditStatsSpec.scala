@@ -37,6 +37,50 @@ class AuditStatsSpec extends SparkSpec {
     assert(v === Map(("k", "exact") -> 3L, ("x", "exact") -> 3L))
   }
 
+  test("a row group whose footer drops min/max (a >4 KiB string) leaves the file's bounds unknown") {
+    // parquet-mr writes no min/max for a row group whose values exceed
+    // 4096 bytes: folding only the row groups that carry them would give
+    // the file an interval that misses the long value, and pruning on it
+    // would drop the row. (The cross-builder test above cannot take this
+    // input: its fixture expects every verdict `exact`, and unknown
+    // footer bounds audit as `no_bounds`.)
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import scala.jdk.CollectionConverters._
+    val root = tmpDir("audit_longstr")
+    val d = s"$root/data"
+    val long = "z" * 5000
+    (1L to 1000L).map(i => (i, if (i == 500L) long else f"v$i%04d")).toDF("k", "s")
+      .coalesce(1).sortWithinPartitions("k")
+      .write.option("parquet.block.size", "1024").parquet(d)
+    // the fixture holds: one file, several row groups, and the long
+    // value's row group carries no min/max for `s`
+    val file = new java.io.File(d).listFiles().filter(_.getName.endsWith(".parquet")).head
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(file.getAbsolutePath), spark.sparkContext.hadoopConfiguration))
+    val groups = try reader.getFooter.getBlocks.asScala.toSeq finally reader.close()
+    assert(groups.size >= 2, s"expected several row groups, got ${groups.size}")
+    def sStats(g: org.apache.parquet.hadoop.metadata.BlockMetaData) =
+      g.getColumns.asScala.find(_.getPath.toDotString == "s").get.getStatistics
+    // rows are in k order, so k = 500 is the file's 500th row
+    val ends = groups.scanLeft(0L)(_ + _.getRowCount).tail
+    val holder = groups(ends.indexWhere(_ >= 500L))
+    assert(!sStats(holder).hasNonNullValue, "the long value's row group must lack min/max")
+    assert(groups.exists(g => sStats(g).hasNonNullValue), "other row groups carry min/max")
+
+    val stats = Metastore.buildFromFooters(spark, d, "k", Seq("s"))
+    val audit = Metastore.auditStats(spark, d, stats)
+      .groupBy("column", "verdict").count()
+      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    assert(!audit.keySet.exists(_._2 == "under_covering"), s"unsound footer stats: $audit")
+    assert(audit.get(("s", "no_bounds")).contains(1L), s"`s` bounds must be unknown: $audit")
+    val statsPath = s"$root/stats"
+    Metastore.update(spark, statsPath, stats)
+    val hits = Lakeshack.fromStats(spark, d, statsPath, "k", Seq("s"))
+      .query(Seq(500L), Seq(Clause("s", "==", long))).select("k").as[Long].collect()
+    assert(hits.toSeq == Seq(500L), "the long-valued row must not be pruned away")
+  }
+
   test("under_covering: narrowed bounds are flagged unsound, named column only") {
     // narrow ONE file's k_max below the file's true max
     val gmax = healthy.agg(max("k_max")).first().getLong(0)

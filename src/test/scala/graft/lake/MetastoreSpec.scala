@@ -48,12 +48,43 @@ class MetastoreSpec extends SparkSpec {
   }
 
   test("buildFromFooters agrees with the data-scan builder (all variants)") {
-    for (v <- Seq(NaiveTs, ZonedTs, DateTs)) {
-      val a = stats(v).orderBy("filepath").collect().map(_.toSeq.drop(1).toList).toList
-      val b = Metastore.buildFromFooters(spark, dirs(v), "id", Seq("timestamp"))
+    import spark.implicits._
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import scala.jdk.CollectionConverters._
+    def agree(dir: String, opt: String, tag: String): Unit = {
+      val a = Metastore.build(spark, dir, "id", Seq(opt))
         .orderBy("filepath").collect().map(_.toSeq.drop(1).toList).toList
-      assert(a === b, s"$v: footer stats != scan stats")
+      val b = Metastore.buildFromFooters(spark, dir, "id", Seq(opt))
+        .orderBy("filepath").collect().map(_.toSeq.drop(1).toList).toList
+      assert(a === b, s"$tag: footer stats != scan stats")
     }
+    for (v <- Seq(NaiveTs, ZonedTs, DateTs)) agree(dirs(v), "timestamp", v.toString)
+
+    // multi-row-group files where whole row groups of `x` are null: an
+    // all-null row group carries no min/max, only its null count
+    val nullGroups = tmpDir("ms_agree_nullrg") + "/t"
+    (1L to 1000L).map(i => (i, if ((i > 200 && i <= 400) || i > 600) None else Some(i * 1.5)))
+      .toDF("id", "x").repartitionByRange(2, col("id")).sortWithinPartitions("id")
+      .write.option("parquet.block.size", "2048").parquet(nullGroups)
+    val groups = new java.io.File(nullGroups).listFiles().filter(_.getName.endsWith(".parquet"))
+      .toSeq.flatMap { f =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.getAbsolutePath), spark.sparkContext.hadoopConfiguration))
+        try r.getFooter.getBlocks.asScala.toSeq finally r.close()
+      }
+    assert(groups.exists { g =>
+      val st = g.getColumns.asScala.find(_.getPath.toDotString == "x").get.getStatistics
+      st.getNumNulls == g.getRowCount && !st.hasNonNullValue
+    }, s"fixture must hold an all-null row group (${groups.size} row groups)")
+    agree(nullGroups, "x", "all-null row group")
+
+    // a schema-evolved column: absent from the old file's footer
+    val evolved = tmpDir("ms_agree_evolve") + "/t"
+    (1L to 100L).toDF("id").coalesce(1).write.parquet(evolved)
+    (101L to 200L).map(i => (i, i * 2.0)).toDF("id", "score")
+      .coalesce(1).write.mode("append").parquet(evolved)
+    agree(evolved, "score", "schema-evolved column")
   }
 
   test("single-FILE tables get qualified filepaths from both builders") {

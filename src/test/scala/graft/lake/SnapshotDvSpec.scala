@@ -162,11 +162,12 @@ class SnapshotDvSpec extends SparkSpec {
       case f: FileSourceScanExec => Seq(f)
       case other => other.children.flatMap(scans)
     }
-    val dataScan = scans(point.queryExecution.executedPlan)
-      .find(_.relation.location.isInstanceOf[MetastoreFileIndex])
-    assert(dataScan.isDefined)
-    assert(dataScan.get.metrics("numFiles").value == 1,
-      s"expected 1 pruned data file, got ${dataScan.get.metrics("numFiles").value}")
+    // clean and DV-carrying files scan as two pruned data scans
+    val dataScans = scans(point.queryExecution.executedPlan)
+      .filter(_.relation.location.isInstanceOf[SnapshotFileIndex])
+    assert(dataScans.nonEmpty)
+    val read = dataScans.map(_.metrics("numFiles").value).sum
+    assert(read == 1, s"expected 1 pruned data file, got $read")
   }
 
   test("expire reclaims dropped versions' DV files but keeps retained ones") {

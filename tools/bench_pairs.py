@@ -1,15 +1,17 @@
 #!/usr/bin/env python3
-"""Compare two checkouts on one lakebench workload with alternating pairs.
+"""Compare two checkouts on lakebench workloads with alternating pairs.
 
     python3 tools/bench_pairs.py --parent ../parent --change . \\
         --workload dedup --seeds 11-20 [--seconds 4] [--trace 0] [--out pairs.json]
 
-For each seed it runs ``python3 lakebench/run.py --workload W --seed N
---seconds S --trace T`` once in each checkout, one after the other: the
-parent first on odd seeds, the change first on even seeds. Each run builds
-its own checkout's library the way the benchmark does (the first run of a
-checkout pays the build; later runs reuse it). Nothing under ``lakebench/``
-is written by this script.
+``--workload`` takes one workload or a comma list (``lookup,ingest,dedup``);
+the workloads run one after another, each over all the seeds. For each seed
+it runs ``python3 lakebench/run.py --workload W --seed N --seconds S
+--trace T`` once in each checkout, one after the other: the parent first on
+odd seeds, the change first on even seeds. Each run builds its own
+checkout's library the way the benchmark does (the first run of a checkout
+pays the build; later runs reuse it). Nothing under ``lakebench/`` is
+written by this script.
 
 Per metric it prints each side's median and quartiles, the change's wins
 out of the pairs (ties count for neither side), and two verdicts:
@@ -19,10 +21,13 @@ out of the pairs (ties count for neither side), and two verdicts:
 - ``bound``: for an end-to-end metric of BENCHMARK.json, whether the
   change's median is within the metric's bound of the parent's.
 
-It also reports how many runs on each side were correct with no failed
-operations. ``--out`` writes the summary and every run as JSON: its result
-object plus its stdout report (load stamps, and with ``--trace 1`` the
-per-layer lines that the result object leaves out).
+It prints one table per workload, then one line saying whether any
+workload breached a bound. It also reports how many runs on each side were
+correct with no failed operations. ``--out`` writes, per workload, the
+summary and every run as JSON: its result object plus its stdout report
+(load stamps, and with ``--trace 1`` the per-layer lines that the result
+object leaves out). One workload writes that record alone; several write
+``{"workloads": [records], "bounds_breached": [names]}``.
 """
 
 import argparse
@@ -46,9 +51,9 @@ def seed_range(text):
     return list(range(lo, hi + 1))
 
 
-def run_once(checkout, args, seed):
+def run_once(checkout, args, workload, seed):
     """One lakebench run in `checkout`; the result object, or an error."""
-    cmd = [sys.executable, "lakebench/run.py", "--workload", args.workload, "--seed", str(seed),
+    cmd = [sys.executable, "lakebench/run.py", "--workload", workload, "--seed", str(seed),
            "--seconds", str(args.seconds), "--trace", str(args.trace)]
     t = time.time()
     proc = subprocess.run(cmd, cwd=checkout, stdin=subprocess.DEVNULL, stdout=subprocess.PIPE,
@@ -121,36 +126,36 @@ def fmt(x):
     return f"{x:.4g}" if isinstance(x, float) else str(x)
 
 
-def main():
-    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("--parent", required=True, help="checkout of the parent commit")
-    ap.add_argument("--change", required=True, help="checkout of the change")
-    ap.add_argument("--workload", required=True, choices=("lookup", "ingest", "dedup"))
-    ap.add_argument("--seeds", required=True, type=seed_range, help="e.g. 11-20")
-    ap.add_argument("--seconds", type=int, default=4)
-    ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument("--out", help="write every run and the summary here as JSON")
-    args = ap.parse_args()
-    for d in (args.parent, args.change):
-        if not os.path.isfile(os.path.join(d, "lakebench", "run.py")):
-            ap.error(f"{d} is not a checkout with lakebench/run.py")
+WORKLOADS = ("lookup", "ingest", "dedup")
 
+
+def workload_list(text):
+    names = [w.strip() for w in text.split(",") if w.strip()]
+    bad = [w for w in names if w not in WORKLOADS]
+    if not names or bad:
+        raise argparse.ArgumentTypeError(f"workloads are a comma list of {', '.join(WORKLOADS)}")
+    return names
+
+
+def compare(args, workload):
+    """Alternating pairs on one workload: prints its table, returns its JSON record."""
     pairs = []
     for seed in args.seeds:
         order = ("parent", "change") if seed % 2 else ("change", "parent")
         got = {}
         for side in order:
-            res = run_once(getattr(args, side), args, seed)
+            res = run_once(getattr(args, side), args, workload, seed)
             got[side] = res
             brief = res.get("error") or " ".join(
                 f"{k}={fmt(v['value'])}" for k, v in list(res["metrics"].items())[:3])
-            log(f"seed {seed} {side}: correct={res.get('correct')} failed={res.get('failed')} {brief}")
+            log(f"{workload} seed {seed} {side}: correct={res.get('correct')} "
+                f"failed={res.get('failed')} {brief}")
         pairs.append((got["parent"], got["change"]))
 
     rows = summarize(pairs, directions(args.change))
     health = {"parent": side_health([p for p, _ in pairs]),
               "change": side_health([c for _, c in pairs])}
-    print(f"workload={args.workload} seeds={args.seeds[0]}-{args.seeds[-1]} "
+    print(f"workload={workload} seeds={args.seeds[0]}-{args.seeds[-1]} "
           f"seconds={args.seconds} trace={args.trace}")
     print(f"  health: parent {health['parent']}  change {health['change']}")
     for r in rows:
@@ -161,12 +166,37 @@ def main():
               f"parent {fmt(p['median'])} (q1 {fmt(p['q1'])}, q3 {fmt(p['q3'])}) -> "
               f"change {fmt(c['median'])} (q1 {fmt(c['q1'])}, q3 {fmt(c['q3'])}) {delta}, "
               f"change wins {r['change_wins']}/{r['pairs']}, gain={r['gain']}{extra}")
+    sys.stdout.flush()
+    return {"workload": workload, "seeds": args.seeds, "seconds": args.seconds,
+            "trace": args.trace, "health": health, "summary": rows,
+            "runs": [{"seed": s, "parent": p, "change": c}
+                     for s, (p, c) in zip(args.seeds, pairs)]}
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--parent", required=True, help="checkout of the parent commit")
+    ap.add_argument("--change", required=True, help="checkout of the change")
+    ap.add_argument("--workload", required=True, type=workload_list,
+                    help="one workload or a comma list, e.g. lookup,ingest,dedup")
+    ap.add_argument("--seeds", required=True, type=seed_range, help="e.g. 11-20")
+    ap.add_argument("--seconds", type=int, default=4)
+    ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
+    ap.add_argument("--out", help="write every run and the summary here as JSON")
+    args = ap.parse_args()
+    for d in (args.parent, args.change):
+        if not os.path.isfile(os.path.join(d, "lakebench", "run.py")):
+            ap.error(f"{d} is not a checkout with lakebench/run.py")
+
+    records = [compare(args, w) for w in args.workload]
+    breached = [f"{rec['workload']}.{r['metric']}" for rec in records
+                for r in rec["summary"] if r.get("within_bound") is False]
+    print("bounds: " + (f"BREACHED by {', '.join(breached)}" if breached
+                        else f"none breached across {', '.join(args.workload)}"))
     if args.out:
         with open(args.out, "w") as f:
-            json.dump({"workload": args.workload, "seeds": args.seeds, "seconds": args.seconds,
-                       "trace": args.trace, "health": health, "summary": rows,
-                       "runs": [{"seed": s, "parent": p, "change": c}
-                                for s, (p, c) in zip(args.seeds, pairs)]}, f, indent=1)
+            json.dump(records[0] if len(records) == 1 else
+                      {"workloads": records, "bounds_breached": breached}, f, indent=1)
     return 0
 
 
