@@ -1,9 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
 /** Native codegen'd MinHash banded-LSH bucket keys for one document:
@@ -75,7 +75,7 @@ case class MinHashBandBuckets(child: Expression, numHashes: Int, bands: Int)
     // to the (expensive) shingle alias, and CollapseProject inlines a
     // multiply-referenced alias once PER REFERENCE (the measured 3×
     // regression of the first fused form)
-    if (n == 0) return new GenericArrayData(Array.emptyLongArray)
+    if (n == 0) return UnsafeArrayData.fromPrimitiveArray(Array.emptyLongArray)
     val mins = Array.fill(numHashes)(Long.MaxValue)
     var i = 0
     while (i < n) {
@@ -100,7 +100,7 @@ case class MinHashBandBuckets(child: Expression, numHashes: Int, bands: Int)
       out(b) = acc
       b += 1
     }
-    new GenericArrayData(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -124,7 +124,7 @@ case class MinHashBandBuckets(child: Expression, numHashes: Int, bands: Int)
       s"""
          |int $n = $arr.numElements();
          |if ($n == 0) {
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(new long[0]);
+         |  ${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(new long[0]);
          |} else {
          |long[] $mins = new long[$numHashes];
          |java.util.Arrays.fill($mins, Long.MAX_VALUE);
@@ -142,7 +142,7 @@ case class MinHashBandBuckets(child: Expression, numHashes: Int, bands: Int)
          |  for (int $j = 0; $j < $r; $j++) { $acc = $xxh.hashLong($mins[$b * $r + $j], $acc); }
          |  $out[$b] = $acc;
          |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
+         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($out);
          |}
        """.stripMargin
     })

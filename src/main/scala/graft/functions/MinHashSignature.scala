@@ -1,9 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
 /** Native codegen'd MinHash SIGNATURE of a shingle array: the
@@ -57,7 +57,7 @@ case class MinHashSignature(child: Expression, numHashes: Int)
     val arr = input.asInstanceOf[ArrayData]
     val n = arr.numElements()
     val hashed = preHashed
-    if (n == 0) return new GenericArrayData(Array.emptyLongArray)
+    if (n == 0) return UnsafeArrayData.fromPrimitiveArray(Array.emptyLongArray)
     val mins = Array.fill(numHashes)(Long.MaxValue)
     var i = 0
     while (i < n) {
@@ -73,7 +73,7 @@ case class MinHashSignature(child: Expression, numHashes: Int)
       }
       i += 1
     }
-    new GenericArrayData(mins)
+    UnsafeArrayData.fromPrimitiveArray(mins)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -92,7 +92,7 @@ case class MinHashSignature(child: Expression, numHashes: Int)
       s"""
          |int $n = $arr.numElements();
          |if ($n == 0) {
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(new long[0]);
+         |  ${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(new long[0]);
          |} else {
          |long[] $mins = new long[$numHashes];
          |java.util.Arrays.fill($mins, Long.MAX_VALUE);
@@ -104,7 +104,7 @@ case class MinHashSignature(child: Expression, numHashes: Int)
          |    if ($v < $mins[$s]) $mins[$s] = $v;
          |  }
          |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($mins);
+         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($mins);
          |}
        """.stripMargin
     })

@@ -1,9 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
 /** Native codegen'd PQ encoding: per subspace, the index of the
@@ -128,7 +128,7 @@ case class PqEncode(child: Expression, cb: Array[Array[Array[Float]]])
       out(j) = idx - 1
       j += 1
     }
-    new GenericArrayData(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -182,7 +182,7 @@ case class PqEncode(child: Expression, cb: Array[Array[Array[Float]]])
          |  }
          |  $out[$j] = $idx - 1;
          |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
+         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($out);
        """.stripMargin
     })
 

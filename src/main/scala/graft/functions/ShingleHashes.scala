@@ -1,9 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
 
@@ -54,7 +54,7 @@ case class ShingleHashes(child: Expression, n: Int) extends UnaryExpression {
 object ShingleHashes {
 
   private val Seed = 42L
-  private val EmptyLongs = new GenericArrayData(Array.emptyLongArray)
+  private val EmptyLongs = UnsafeArrayData.fromPrimitiveArray(Array.emptyLongArray)
 
   def compute(arr: ArrayData, n: Int): ArrayData = {
     val sz = arr.numElements()
@@ -81,7 +81,7 @@ object ShingleHashes {
     }
     if (sz < n) {
       // short doc: one shingle = the whole doc
-      return new GenericArrayData(Array(
+      return UnsafeArrayData.fromPrimitiveArray(Array(
         XXH64.hashUnsafeBytes(buf, Platform.BYTE_ARRAY_OFFSET, total, Seed)))
     }
     val out = new Array[Long](sz - n + 1)
@@ -92,7 +92,7 @@ object ShingleHashes {
         Platform.BYTE_ARRAY_OFFSET + off, ends(j + n - 1) - off, Seed)
       j += 1
     }
-    new GenericArrayData(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 
   /** Slow path for null token elements: per window (or the whole-doc
@@ -114,10 +114,10 @@ object ShingleHashes {
       XXH64.hashUTF8String(
         org.apache.spark.unsafe.types.UTF8String.fromString(sb.toString), Seed)
     }
-    if (sz < n) return new GenericArrayData(Array(joined(0, sz)))
+    if (sz < n) return UnsafeArrayData.fromPrimitiveArray(Array(joined(0, sz)))
     val out = new Array[Long](sz - n + 1)
     var j = 0
     while (j <= sz - n) { out(j) = joined(j, j + n); j += 1 }
-    new GenericArrayData(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 }

@@ -1,9 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
 
@@ -57,7 +57,7 @@ case class WindowHashes(child: Expression, k: Int) extends UnaryExpression {
 object WindowHashes {
 
   private val Seed = 42L
-  private val EmptyLongs = new GenericArrayData(Array.emptyLongArray)
+  private val EmptyLongs = UnsafeArrayData.fromPrimitiveArray(Array.emptyLongArray)
 
   /** Shared by interpreted eval and the generated code (static
     * forwarder), so both paths are one implementation. */
@@ -94,7 +94,7 @@ object WindowHashes {
         Platform.BYTE_ARRAY_OFFSET + off, ends(j + k - 1) - off, Seed)
       j += 1
     }
-    new GenericArrayData(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 
   /** Slow path for null token elements: per window, join the non-null
@@ -119,6 +119,6 @@ object WindowHashes {
         org.apache.spark.unsafe.types.UTF8String.fromString(sb.toString), Seed)
       j += 1
     }
-    new GenericArrayData(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 }

@@ -3,8 +3,6 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{PairKernel, PairsInBucket}
-
 /** Deduplication operators — exact, MinHash+LSH, SimHash, n-gram Jaccard,
   * embedding-cosine — over (id, text) corpora. Absent from the reference
   * (SURVEY.md §2.2 ★); designed for the 100 TB case:
@@ -209,8 +207,9 @@ object Dedup {
     * Pipeline: tokens → n-token shingles → the fused native expression
     * (graft.functions.MinHashBandBuckets) folds per-shingle base hash →
     * k slot minima (the signature) → b band hashes in one codegen'd
-    * pass per document → explode only the b band rows →
-    * groupBy(band, bucket) → pairs within bucket.
+    * pass per document → explode only the b band rows → one sorted
+    * exchange on (bucket, band) → pairs within each bucket's run
+    * ([[pairsInBuckets]]).
     *
     * Jaccard(J) collision probability per band is J^r; with b bands the
     * standard S-curve 1-(1-J^r)^b. Defaults (k=64, b=16, r=4) put the
@@ -227,7 +226,7 @@ object Dedup {
     * spec-pinned as a plan property) and no row blow-up happens until
     * the b-rows-per-doc band explode. Documents never move, only
     * (band, bucket, id) triples; the only shuffle is the blocking
-    * groupBy that IS the LSH step. `maxBucket` caps degenerate buckets
+    * exchange that IS the LSH step. `maxBucket` caps degenerate buckets
     * (boilerplate text) so one hot key can't produce a quadratic
     * reducer; capped buckets are dropped, trading recall for bounded
     * work, the standard production compromise.
@@ -255,8 +254,9 @@ object Dedup {
     //    .MinHashBandBuckets) folds base-hash → slot-mins → band-hashes
     //    in one primitive loop, bit-identical slot by slot
     //    (spec-pinned). The signature stage is a NARROW map; the only
-    //    exchange left is the (band, bucket) groupBy that IS the LSH
-    //    blocking step.
+    //    exchange left is the (bucket, band) hash exchange that IS the
+    //    LSH blocking step, sorted within partitions and walked run by
+    //    run (pairsInBuckets), with no aggregate on the key.
     // tokens are projected ONCE as an attribute before shingling:
     // handing a multiply-referencing consumer the raw tokenizer
     // expression re-runs the tokenizer per reference (CollapseProject
@@ -270,7 +270,7 @@ object Dedup {
     // reference: the measured 3× regression of the first fused form).
     candidatePairsFromBuckets(
       minhashBuckets(df, idCol, textCol, numHashes, bands, shingleSize),
-      Seq("band", "bucket"), "doc", maxBucket)
+      Seq("bucket", "band"), "doc", maxBucket)
   }
 
   /** The LSH posting stage of [[minhashCandidates]] alone: one
@@ -452,24 +452,22 @@ object Dedup {
     // loop is bit-identical (spec-pinned) and turns the fingerprint
     // stage into scan-speed work. Docs with no tokens are dropped,
     // matching the aggregate form's explode semantics.
-    // the size() filter is a SECOND reference to the token alias, so
-    // CollapseProject runs the tokenizer twice per doc. Both passes are
-    // the native byte loop (graft.functions.WordTokens) over the text,
-    // narrow and cheap next to the chunk-blocking stage; the
-    // fingerprint itself is evaluated once
+    // The drop is an explode of a zero- or one-element array, not a
+    // `size(_tk) > 0` filter: a filter is pushed below the projection
+    // with the token alias inlined, so the tokenizer ran twice per doc.
+    // A generator is not, and InferFiltersFromGenerate leaves a
+    // non-attribute input alone, so `_tk` is evaluated once (spec-pinned
+    // in DedupSpec); bindOnce would do it with an interpreted lambda
+    val fp = org.apache.spark.sql.GraftColumnBridge.column(
+      graft.functions.SimHash64(org.apache.spark.sql.GraftColumnBridge.expression(col("_tk"))))
     df.select(col(idCol).as("doc"), TextAnalysis.tokensCol(col(textCol)).as("_tk"))
-      .where(size(col("_tk")) > 0)
-      .select(col("doc"),
-        org.apache.spark.sql.GraftColumnBridge.column(
-          graft.functions.SimHash64(
-            org.apache.spark.sql.GraftColumnBridge.expression(col("_tk"))))
-          .as("simhash"))
+      .select(col("doc"), explode(when(size(col("_tk")) > 0, array(fp))).as("simhash"))
   }
 
   /** Near-dup pairs from simhash fingerprints with chunk blocking
     * (pigeonhole: Hamming ≤ 3 ⟹ one of 4 16-bit chunks is identical,
     * so candidates come from equi-buckets, never a cross join). Same
-    * aggregate-then-expand shape as candidatePairsFromBuckets so the
+    * block-then-expand shape as candidatePairsFromBuckets so the
     * fingerprint pipeline executes once, with the same skew cap.
     *
     * Ids should be unique. A repeated id is never paired with itself:
@@ -481,13 +479,16 @@ object Dedup {
     // Hamming <= 3; a larger threshold would silently miss pairs whose
     // difference spreads one bit per chunk
     require(maxHamming <= 3, s"maxHamming=$maxHamming exceeds what 4-chunk blocking can guarantee (3)")
+    // one long key per (chunk index, chunk): `i << 16 | chunk`, exact
+    // since a chunk has 16 bits
     val chunks = fps.select(col("doc"), col("simhash"),
-      posexplode(array((0 until 4).map(i =>
-        shiftright(col("simhash"), i * 16).bitwiseAND(0xFFFFL)): _*)).as(Seq("chunk_idx", "chunk")))
+      explode(array((0 until 4).map(i =>
+        shiftright(col("simhash"), i * 16).bitwiseAND(0xFFFFL).bitwiseOR(i.toLong << 16)): _*))
+        .as("chunk"))
     // the Hamming test runs inside the bucket: in a dup-dense chunk
     // bucket almost every candidate fails it, and only survivors become
     // rows
-    pairsInBuckets(chunks, Seq("chunk_idx", "chunk"), struct(col("doc"), col("simhash")),
+    pairsInBuckets(chunks, Seq("chunk"), struct(col("doc"), col("simhash")),
         maxBucket, PairKernel.Hamming(maxHamming))
       .distinct()
   }
@@ -760,9 +761,9 @@ object Dedup {
     * cap must either drop most of a clustered corpus (recall collapse)
     * or admit near-quadratic buckets.
     *
-    * Vectors ride into the (band, bucket) groupBy and every pair is
-    * scored inside its bucket ([[graft.functions.PairsInBucket]] with
-    * the cosine kernel), so only survivors become rows and no vector is
+    * Vectors ride into the (bucket, band) blocking exchange and every
+    * pair is scored inside its bucket ([[pairsInBuckets]] with the
+    * cosine kernel), so only survivors become rows and no vector is
     * joined back. Band-buckets above `maxBucket` items are dropped — the
     * cap bounds reducer skew and the ≤ maxBucket²/2 cosines one bucket
     * scores. Recall survives the cap through the multi-band OR: a pair
@@ -809,7 +810,7 @@ object Dedup {
       .select(col("band"), col("bucket"), col("doc"), col(vecCol).as("_v"))
     // a pair blocked by several bands emits once per band with the same
     // cosine (same two vectors); the distinct runs over survivors only
-    pairsInBuckets(bucketed, Seq("band", "bucket"), struct(col("doc"), col("_v")),
+    pairsInBuckets(bucketed, Seq("bucket", "band"), struct(col("doc"), col("_v")),
         maxBucket, PairKernel.Cosine(threshold))
       .select(col("doc_a").as("id_a"), col("doc_b").as("id_b"), col("cos"))
       .distinct()
@@ -847,8 +848,8 @@ object Dedup {
     * n^1.5; for dedup at large n pass `nlist ≈ n / targetCellSize`
     * instead — fixed-size cells make the pair volume n·cellSize,
     * LINEAR, at the cost of finer (slightly recall-lossier) cells.
-    * Each cell's pairs are scored where the cell groupBy put its
-    * vectors ([[graft.functions.PairsInBucket]], cosine kernel): one
+    * Each cell's pairs are scored where the cell exchange put its
+    * vectors ([[pairsInBuckets]], cosine kernel): one
     * exchange, each vector moves once, and only survivors become rows.
     * Pass pre-trained `centroids` to share one index between dedup and
     * ANN search (the persisted-index lifecycle in Similarity applies
@@ -1324,7 +1325,7 @@ object Dedup {
   /** Pairs of ids sharing a bucket key, with a skew cap: buckets larger
     * than `maxBucket` are dropped entirely (documented recall trade).
     *
-    * One aggregation + in-bucket pair generation instead of a bucket
+    * One sorted exchange + in-bucket pair generation instead of a bucket
     * self-join: a join would reference `buckets` (and so re-execute its
     * whole upstream pipeline) three times — size filter, probe, build —
     * where this form executes it once. */
@@ -1332,16 +1333,39 @@ object Dedup {
                                              idCol: String, maxBucket: Int): DataFrame =
     pairsInBuckets(buckets, keyCols, col(idCol), maxBucket, PairKernel.AllPairs).distinct()
 
-  /** The one blocking step behind every pair generator here: group
-    * `rows` by `keys`, collect each bucket's distinct `item`s sorted,
-    * drop buckets with fewer than 2 or more than `cap` items, and emit
-    * the i<j pairs that pass `kernel` ([[graft.functions.PairsInBucket]]:
-    * `doc_a, doc_b`, then the kernel's score fields). */
-  private def pairsInBuckets(rows: DataFrame, keys: Seq[String], item: Column, cap: Int,
-                             kernel: PairKernel): DataFrame =
-    rows.groupBy(keys.map(col): _*)
-      .agg(sort_array(collect_set(item)).as("_items"))
-      .where(size(col("_items")).between(2, cap))
-      .select(org.apache.spark.sql.GraftColumnBridge.column(
-        PairsInBucket(org.apache.spark.sql.GraftColumnBridge.expression(col("_items")), kernel)))
+  /** The one blocking step behind every pair generator here: the i<j
+    * pairs of each `keys` run of `rows` that pass `kernel`, as
+    * `doc_a, doc_b` and then the kernel's score fields.
+    *
+    * Three steps, all in Spark's sorted-group operator
+    * (`flatMapSortedGroups`): one hash exchange on `keys`, one sort
+    * within partitions on `keys` then `item`, and one pass that walks
+    * each key's run. The pass keeps the run's distinct non-null items
+    * ([[PairKernel.distinctRun]]: `collect_set`'s equality, at most
+    * `cap + 1` held), drops a run with fewer than 2 or more than `cap`
+    * of them, and hands the survivors, in `sort_array` order, to the
+    * pair loop ([[PairKernel.pairs]]). So the output is the multiset the
+    * former `sort_array(collect_set(item))` aggregate gave, without its
+    * object aggregate, which falls back to sort-based aggregation once a
+    * task holds more than 128 keys. Put a high-cardinality key first:
+    * the sort compares the first key by its prefix. */
+  private[ops] def pairsInBuckets(rows: DataFrame, keys: Seq[String], item: Column, cap: Int,
+                                  kernel: PairKernel): DataFrame = {
+    import org.apache.spark.sql.{Encoders, Row}
+    import org.apache.spark.sql.types.{DataType, StructField, StructType}
+    val in = rows.select(item.as("_item") +: keys.map(col): _*)
+    val idType = (in.schema("_item").dataType, kernel.payload) match {
+      case (id, None) => id
+      case (StructType(Array(id, p)), Some(want)) if DataType.equalsIgnoreNullability(p.dataType, want) =>
+        id.dataType
+      case (dt, want) => throw new IllegalArgumentException(s"pairsInBuckets($kernel) expects " +
+        want.fold("ids")(p => s"struct<doc, ${p.simpleString}>") + s" items, got ${dt.simpleString}")
+    }
+    val out = StructType(Seq(StructField("doc_a", idType, nullable = false),
+      StructField("doc_b", idType, nullable = false)) ++ kernel.scoreFields)
+    in.groupBy(keys.map(col): _*)
+      .as[Row, Row](Encoders.row(StructType(keys.map(in.schema(_)))), Encoders.row(in.schema))
+      .flatMapSortedGroups(col("_item"))((_: Row, run: Iterator[Row]) =>
+        PairKernel.pairs(PairKernel.distinctRun(run.map(_.get(0)), cap), kernel))(Encoders.row(out))
+  }
 }

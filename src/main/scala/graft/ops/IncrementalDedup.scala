@@ -455,7 +455,7 @@ object IncrementalDedup {
           .distinct()
         val cross = if (setsPruneActive) cross0.localCheckpoint() else cross0
         val within = Dedup.candidatePairsFromBuckets(
-          batchPost, Seq("band", "bucket"), "doc", maxBucket)
+          batchPost, Seq("bucket", "band"), "doc", maxBucket)
 
         // only the candidate old-docs' sets are fetched: the sets scan
         // is zone-map-pruned to files whose doc range intersects the

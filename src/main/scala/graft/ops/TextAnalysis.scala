@@ -448,9 +448,11 @@ object TextAnalysis {
 
   /** JVM-side twin of [[tokensCol]] — the SAME rule, for operators
     * whose inner loop is imperative (BPE) or whose input is a
-    * driver-side string (BM25 queries). */
+    * driver-side string (BM25 queries). Lower-cases with `Locale.ROOT`,
+    * so the JVM's default locale never changes a token (under a Turkish
+    * default, `"TITLE".toLowerCase` holds a dotless ı and splits). */
   private[ops] def tokenizeRaw(s: String): Seq[String] =
-    s.toLowerCase.split("[^a-z0-9]+").toSeq.filter(_.nonEmpty)
+    s.toLowerCase(java.util.Locale.ROOT).split("[^a-z0-9]+").toSeq.filter(_.nonEmpty)
 
   /** Driver-side query tokenization for BM25: distinct, sorted — the
     * deterministic summation order the scoring relies on. */

@@ -17,15 +17,18 @@ object PlanAudit {
     case _ => false
   }
 
-  def shuffles(df: DataFrame): Seq[ShuffleExchangeExec] = {
-    def walk(p: SparkPlan): Seq[ShuffleExchangeExec] = p match {
+  /** Every operator of the executed plan, through adaptive stages. */
+  def nodes(df: DataFrame): Seq[SparkPlan] = {
+    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
       case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
       case st: QueryStageExec => walk(st.plan)
-      case e: ShuffleExchangeExec => e +: e.children.flatMap(walk)
-      case other => other.children.flatMap(walk)
+      case other => other +: other.children.flatMap(walk)
     }
     walk(df.queryExecution.executedPlan)
   }
+
+  def shuffles(df: DataFrame): Seq[ShuffleExchangeExec] =
+    nodes(df).collect { case e: ShuffleExchangeExec => e }
 
   /** Schemas of every shuffle whose rows carry string (or
     * array-of-string) columns — the "moved text bytes" detector. */

@@ -74,8 +74,8 @@ class FusedFingerprintSpec extends SparkSpec {
   test("fused fingerprint stages are narrow: no exchange before the blocking groupBy") {
     // the zero-exchange claim is a PLAN property — pin it, don't argue
     // it: simhash must plan with NO shuffle at all, and the minhash
-    // candidate pipeline's only shuffles are the (band, bucket)
-    // blocking groupBy + its pair-distinct (both AFTER the signature)
+    // candidate pipeline's only shuffles are the (bucket, band)
+    // blocking exchange + its pair-distinct (both AFTER the signature)
     val sim = Dedup.simhash(docs, "doc_id", "text")
     val simPlan = sim.queryExecution.executedPlan.toString
     assert(!simPlan.contains("Exchange"),
@@ -85,7 +85,7 @@ class FusedFingerprintSpec extends SparkSpec {
     val candPlan = cand.queryExecution.executedPlan.toString
     val exchanges = "(?m)^.*Exchange hashpartitioning\\(([a-zA-Z_]+)".r
       .findAllMatchIn(candPlan).map(_.group(1)).toSet
-    assert(exchanges.subsetOf(Set("band", "doc_a", "doc")),
+    assert(exchanges.subsetOf(Set("bucket", "doc_a", "doc")),
       s"unexpected exchange keys $exchanges — a signature-stage shuffle crept back in")
   }
 

@@ -33,8 +33,15 @@ class AuditStatsSpec extends SparkSpec {
   test("footer and scan builders agree bound-for-bound (cross-builder audit)") {
     // the audit recomputes by SCAN; auditing footer-built stats to
     // all-exact pins the two builders' value conversion to each other
-    val v = verdicts(Metastore.build(spark, dataDir, "k", Seq("x")))
-    assert(v === Map(("k", "exact") -> 3L, ("x", "exact") -> 3L))
+    val footers = Metastore.buildFromFooters(spark, dataDir, "k", Seq("x"))
+    assert(verdicts(footers) === Map(("k", "exact") -> 3L, ("x", "exact") -> 3L))
+    // and each file's stored bounds are the same from both builders
+    def byFile(stats: org.apache.spark.sql.DataFrame) =
+      stats.select("filepath", "k_min", "k_max", "x_min", "x_max").collect()
+        .map(r => new org.apache.hadoop.fs.Path(r.getString(0)).getName -> r.toSeq.tail).toMap
+    val scanned = byFile(Metastore.build(spark, dataDir, "k", Seq("x")))
+    assert(scanned.size === 3)
+    assert(byFile(footers) === scanned)
   }
 
   test("a row group whose footer drops min/max (a >4 KiB string) leaves the file's bounds unknown") {

@@ -3,7 +3,6 @@ package graft.ops
 import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
-import graft.functions.{PairKernel, PairsInBucket}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => Check}
@@ -282,46 +281,46 @@ class DedupSpec extends SparkSpec {
 
   test("native bucket-pair expansions equal the nested-HOF forms pair-for-pair") {
     import spark.implicits._
-    import org.apache.spark.sql.GraftColumnBridge.{column => gc, expression => ge}
     // realistic bucket shapes: singletons, a pair, a hot bucket, plus
     // skewed n_sh/simhash values exercising the in-bucket tests; the
-    // same buckets with long ids, then with string ids
+    // same buckets with long ids, then with string ids. The blocking
+    // step reads one (bucket, item) row per item; the reference groups
+    // the same rows with collect_set and expands the arrays with HOFs
     val rnd = new scala.util.Random(3)
-    val raw = (1 to 200).map { b =>
+    val raw = (1 to 200).flatMap { b =>
       val n = rnd.nextInt(6) + 1
-      (b.toLong, (1 to n).map(i => (b * 100L + i, 10L + rnd.nextInt(30),
-        rnd.nextLong() & 0xFFFFL)).sortBy(_._1))
-    }.toDF("bucket", "raw")
-    for (id <- Seq("x._1", "cast(x._1 as string)")) {
-      val buckets = raw.select(col("bucket"),
-          expr(s"transform(raw, x -> $id)").as("ids"),
-          expr(s"transform(raw, x -> struct($id as doc, x._2 as n_sh))").as("docs"),
-          expr(s"transform(raw, x -> struct($id as doc, x._3 as simhash))").as("items"))
-        .persist()
+      (1 to n).map(i => (b.toLong, b * 100L + i, 10L + rnd.nextInt(30), rnd.nextLong() & 0xFFFFL))
+    }.toDF("bucket", "id", "n_sh", "simhash")
+    for (id <- Seq("id", "cast(id as string)")) {
+      val rows = raw.select(col("bucket"), expr(id).as("doc"), col("n_sh"), col("simhash")).persist()
       def pairs(df: DataFrame, cols: String*): Seq[Seq[Any]] =
-        df.select(cols.map(col): _*).collect().map(_.toSeq).toSeq
-      def gen(items: String, k: PairKernel) = buckets.select(gc(PairsInBucket(ge(col(items)), k)))
-      def hof(c: Column) = buckets.select(explode(c).as("p")).select("p.*")
+        df.select(cols.map(col): _*).collect().map(_.toSeq).toSeq.sortBy(_.mkString(","))
+      def gen(item: Column, k: PairKernel) = Dedup.pairsInBuckets(rows, Seq("bucket"), item, 1000, k)
+      def hof(item: Column, expand: Column => Column) =
+        PairReference.collectSetBlocking(rows, Seq("bucket"), item, 1000)
+          .select(explode(expand(col("_items"))).as("p")).select("p.*")
+      val docs = struct(col("doc"), col("n_sh"))
+      val items = struct(col("doc"), col("simhash"))
       try {
         // 1. plain pair expansion
-        val p = pairs(gen("ids", PairKernel.AllPairs), "doc_a", "doc_b")
-        assert(p.length > 100 && p === pairs(hof(PairReference.candidatePairExpandHof(col("ids"))),
+        val p = pairs(gen(col("doc"), PairKernel.AllPairs), "doc_a", "doc_b")
+        assert(p.length > 100 && p === pairs(hof(col("doc"), PairReference.candidatePairExpandHof),
           "doc_a", "doc_b"), id)
         // 2. ratio-filtered jaccard expansion, incl. the tight-boundary threshold
         for (t <- Seq(0.5, 0.9)) {
           val cols = Seq("doc_a", "sh_a", "doc_b", "sh_b")
-          val j = pairs(gen("docs", PairKernel.LengthRatio(t)), cols: _*)
-          assert(j.nonEmpty && j === pairs(hof(PairReference.jaccardPairExpandHof(col("docs"), t)),
+          val j = pairs(gen(docs, PairKernel.LengthRatio(t)), cols: _*)
+          assert(j.nonEmpty && j === pairs(hof(docs, PairReference.jaccardPairExpandHof(_, t)),
             cols: _*), s"$id: threshold $t diverged")
         }
         // 3. hamming-filtered simhash expansion (the HOF form filters
         // after the explode)
         for (mh <- Seq(0, 3, 16)) {
-          val s = pairs(gen("items", PairKernel.Hamming(mh)), "doc_a", "doc_b", "hamming")
-          assert(s === pairs(hof(PairReference.simhashPairExpandHof(col("items")))
+          val s = pairs(gen(items, PairKernel.Hamming(mh)), "doc_a", "doc_b", "hamming")
+          assert(s === pairs(hof(items, PairReference.simhashPairExpandHof)
             .where(col("hamming") <= mh), "doc_a", "doc_b", "hamming"), s"$id: maxHamming $mh diverged")
         }
-      } finally buckets.unpersist()
+      } finally rows.unpersist()
     }
   }
 
@@ -363,20 +362,34 @@ class DedupSpec extends SparkSpec {
     }
   }
 
-  // ── differential property: the generator against the HOF forms ──
+  // ── differential property: the blocking step against the HOF forms ──
 
   /** One trial: a kernel, id type, and 1–3 buckets of 0–60 items, each
-    * item `(id, payload)`; ids come from a small pool, so they repeat.
-    * `mismatch`: one bucket holds one vector of another dimension. */
+    * item `(id, payload)`; ids come from a small pool, so they repeat,
+    * and up to 6 items per bucket come again, as an exact copy or as a
+    * [[twin]]. `mismatch`: one bucket holds one vector of another
+    * dimension. `capMode`: the cap is 1000 (0), exactly bucket 0's
+    * distinct item count (1), or one less (2). */
   private case class PairCase(kernel: PairKernel, stringIds: Boolean,
-                              buckets: Seq[Seq[(Long, Any)]], mismatch: Boolean)
+                              buckets: Seq[Seq[(Long, Any)]], mismatch: Boolean, capMode: Int)
 
   private val vectors: Gen[Array[Float]] = Gen.frequency(
     8 -> Gen.listOfN(4, Gen.choose(-1.0f, 1.0f)).map(v => (Array(1.0f, 1.0f, 0.5f, 0.0f) zip v)
       .map { case (c, x) => c + 0.1f * x }),
     2 -> Gen.listOfN(4, Gen.choose(-1.0f, 1.0f)).map(_.toArray),
     1 -> Gen.const(Array.fill(4)(0.0f)),
+    1 -> Gen.const(Array(0.5f, -0.0f, 1.0f, 0.0f)),
     1 -> Gen.const(Array(1.0f, Float.NaN, 0.5f, 0.0f)))
+
+  /** A vector whose zeros flip sign and whose NaNs take another payload:
+    * the same sort key as `p`, a different item to `collect_set`. */
+  private def twin(p: Any): Any = p match {
+    case v: Array[Float] => v.map(x =>
+      if (x == 0.0f) -x
+      else if (x.isNaN) java.lang.Float.intBitsToFloat(java.lang.Float.floatToRawIntBits(x) ^ 1)
+      else x)
+    case other => other
+  }
 
   /** Item payloads for `kernel`; `base` seeds near-duplicate simhashes. */
   private def payloads(kernel: PairKernel, base: Long): Gen[Any] = kernel match {
@@ -404,27 +417,24 @@ class DedupSpec extends SparkSpec {
     base <- Gen.choose(Long.MinValue, Long.MaxValue)
     nBuckets <- Gen.choose(1, 3)
     buckets <- Gen.listOfN(nBuckets, Gen.choose(0, 60).flatMap(n =>
-      Gen.listOfN(n, Gen.zip(Gen.choose(0L, 40L), payloads(kernel, base)))))
+      Gen.listOfN(n, Gen.zip(Gen.choose(0L, 40L), payloads(kernel, base)))).flatMap { items =>
+        if (items.isEmpty) Gen.const(items)
+        else Gen.choose(0, 6)
+          .flatMap(k => Gen.listOfN(k, Gen.zip(Gen.choose(0, items.size - 1), Gen.oneOf(false, true))))
+          .map(again => items ++ again.map { case (i, flip) =>
+            val (id, p) = items(i); (id, if (flip) twin(p) else p) })
+      })
     mismatch <- Gen.frequency(6 -> false, 1 -> kernel.isInstanceOf[PairKernel.Cosine])
-  } yield PairCase(kernel, stringIds, buckets.map(_.toSeq), mismatch)
+    capMode <- Gen.frequency(2 -> 0, 1 -> 1, 1 -> 2)
+  } yield PairCase(kernel, stringIds, buckets.map(_.toSeq), mismatch, capMode)
 
-  /** The case's buckets as `(bucket, items)` rows: bare ids for the
-    * all-pairs kernel, else `struct<doc, <payload name>>`. */
-  private def caseFrame(c: PairCase): DataFrame = {
+  /** The case's items: bare ids for the all-pairs kernel, else
+    * `Row(id, payload)`, per bucket. */
+  private def caseItems(c: PairCase): Seq[Seq[Any]] = {
     import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    val idType = if (c.stringIds) StringType else LongType
     def id(i: Long): Any = if (c.stringIds) s"d$i" else i
-    val (field, payloadType) = c.kernel match {
-      case _: PairKernel.LengthRatio => ("n_sh", LongType)
-      case _: PairKernel.Hamming => ("simhash", LongType)
-      case _ => ("v", ArrayType(FloatType))
-    }
-    val itemType =
-      if (c.kernel == PairKernel.AllPairs) idType
-      else StructType(Seq(StructField("doc", idType), StructField(field, payloadType)))
-    val rows = c.buckets.zipWithIndex.map { case (items, b) =>
-      val cells = items.zipWithIndex.map { case ((i, p), k) =>
+    c.buckets.zipWithIndex.map { case (items, b) =>
+      items.zipWithIndex.map { case ((i, p), k) =>
         if (c.kernel == PairKernel.AllPairs) id(i)
         else {
           val v = p match {
@@ -435,10 +445,35 @@ class DedupSpec extends SparkSpec {
           Row(id(i), v)
         }
       }
-      Row(b, cells)
     }
+  }
+
+  /** An item as a Scala value with floats by their raw bits, or with
+    * `sortKey` by the bits Spark's ordering sees (-0.0 as 0.0, one NaN). */
+  private def itemKey(item: Any, sortKey: Boolean = false): Any = item match {
+    case r: org.apache.spark.sql.Row => r.toSeq.map(itemKey(_, sortKey))
+    case s: Seq[_] => s.map(itemKey(_, sortKey))
+    case f: Float =>
+      java.lang.Float.floatToRawIntBits(if (!sortKey) f else if (f.isNaN) Float.NaN else f + 0.0f)
+    case other => other
+  }
+
+  /** The case's `(bucket, item)` rows: one row per item. */
+  private def caseFrame(c: PairCase): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val idType = if (c.stringIds) StringType else LongType
+    val (field, payloadType) = c.kernel match {
+      case _: PairKernel.LengthRatio => ("n_sh", LongType)
+      case _: PairKernel.Hamming => ("simhash", LongType)
+      case _ => ("v", ArrayType(FloatType))
+    }
+    val itemType =
+      if (c.kernel == PairKernel.AllPairs) idType
+      else StructType(Seq(StructField("doc", idType), StructField(field, payloadType)))
+    val rows = caseItems(c).zipWithIndex.flatMap { case (items, b) => items.map(Row(b, _)) }
     spark.createDataFrame(rows.asJava, StructType(Seq(
-      StructField("bucket", IntegerType), StructField("items", ArrayType(itemType)))))
+      StructField("bucket", IntegerType), StructField("item", itemType))))
   }
 
   /** Pairs as a multiset, doubles by their bits; or the root failure. */
@@ -455,36 +490,43 @@ class DedupSpec extends SparkSpec {
     }
 
   test("property: the pair generator equals the nested-HOF forms on random buckets") {
-    import org.apache.spark.sql.GraftColumnBridge.{column => gc, expression => ge}
-    // coverage: trials that threw, and trials with pairs, per kernel
+    // coverage: trials that threw, trials with pairs per kernel, bucket
+    // 0 at exactly the cap and one over it, and ±0.0 / NaN twins
     val seen = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
     val prop = Prop.forAllNoShrink(pairCases) { c =>
       val df = caseFrame(c)
-      def hof(e: Column) = df.select(explode(e).as("p")).select("p.*")
-      val items = col("items")
+      val items = caseItems(c)
+      val distinct0 = items.head.map(itemKey(_)).distinct.size
+      val cap = c.capMode match { case 0 => 1000; case 1 => distinct0; case _ => distinct0 - 1 }
+      val blocked = PairReference.collectSetBlocking(df, Seq("bucket"), col("item"), cap)
+      def hof(e: Column => Column) = blocked.select(explode(e(col("_items"))).as("p")).select("p.*")
       // the reference side, with equal-id pairs and NaN cosines dropped
       val (cols, reference) = c.kernel match {
         case PairKernel.AllPairs =>
-          (Seq("doc_a", "doc_b"), hof(PairReference.candidatePairExpandHof(items)))
+          (Seq("doc_a", "doc_b"), hof(PairReference.candidatePairExpandHof))
         case PairKernel.LengthRatio(t) =>
-          (Seq("doc_a", "doc_b", "sh_a", "sh_b"), hof(PairReference.jaccardPairExpandHof(items, t)))
+          (Seq("doc_a", "doc_b", "sh_a", "sh_b"), hof(PairReference.jaccardPairExpandHof(_, t)))
         case PairKernel.Hamming(k) =>
           (Seq("doc_a", "doc_b", "hamming"),
-            hof(PairReference.simhashPairExpandHof(items)).where(col("hamming") <= k))
+            hof(PairReference.simhashPairExpandHof).where(col("hamming") <= k))
         case PairKernel.Cosine(t) =>
           (Seq("doc_a", "doc_b", "cos"),
-            hof(PairReference.cosinePairExpandHof(items)).where(col("cos") >= t && !isnan(col("cos"))))
+            hof(PairReference.cosinePairExpandHof).where(col("cos") >= t && !isnan(col("cos"))))
       }
       val want = outcome(reference.where(col("doc_a") =!= col("doc_b")), cols)
-      val got = outcome(df.select(gc(PairsInBucket(ge(items), c.kernel))), cols)
+      val got = outcome(Dedup.pairsInBuckets(df, Seq("bucket"), col("item"), cap, c.kernel), cols)
       seen(want.fold(_ => "threw", p => c.kernel.productPrefix + (if (p.isEmpty) "-empty" else ""))) += 1
-      Prop(got == want) :| s"got=$got want=$want case=$c"
+      if (distinct0 >= 3 && c.capMode > 0) seen(if (c.capMode == 1) "at cap" else "over cap") += 1
+      val flat = items.flatten
+      if (flat.map(itemKey(_)).distinct.size > flat.map(itemKey(_, sortKey = true)).distinct.size)
+        seen("twins") += 1
+      Prop(got == want) :| s"got=$got want=$want cap=$cap case=$c"
     }
     val result = Check.check(Check.Parameters.default
       .withMinSuccessfulTests(120).withInitialSeed(Seed(20261017L)).withWorkers(1), prop)
     assert(result.passed, Pretty.pretty(result))
     info(s"trials by outcome: $seen")
-    for (k <- Seq("threw", "AllPairs", "LengthRatio", "Hamming", "Cosine"))
+    for (k <- Seq("threw", "AllPairs", "LengthRatio", "Hamming", "Cosine", "at cap", "over cap", "twins"))
       assert(seen(k) > 0, s"no trial covered $k: $seen")
   }
 
@@ -522,6 +564,37 @@ class DedupSpec extends SparkSpec {
       val plan = df.queryExecution.executedPlan.toString
       assert(plan.contains("word_tokens") && !plan.contains("lambdafunction"), plan)
     }
+  }
+
+  test("minhash and simhash blocking runs no object or sort aggregate on the bucket key") {
+    import org.apache.spark.sql.execution.aggregate.{ObjectHashAggregateExec, SortAggregateExec}
+    val dir = tmpDir("dedup_blocking_plan")
+    docs.write.mode("overwrite").parquet(dir)
+    val corpus = spark.read.parquet(dir)
+    val keys = Set("band", "bucket", "chunk_idx", "chunk")
+    for ((what, df) <- Seq(
+        "minhashNearDup" -> Dedup.minhashNearDup(corpus, "doc_id", "text"),
+        "simhashCandidates" -> Dedup.simhashCandidates(Dedup.simhash(corpus, "doc_id", "text")))) {
+      assert(df.collect().nonEmpty, what)
+      val nodes = graft.PlanAudit.nodes(df)
+      val onBucket = nodes.collect {
+        case a: ObjectHashAggregateExec => a.groupingExpressions
+        case a: SortAggregateExec => a.groupingExpressions
+      }.filter(_.exists(_.references.exists(r => keys(r.name))))
+      assert(onBucket.isEmpty, s"$what aggregates on the bucket key: ${nodes.head.treeString}")
+      assert(graft.PlanAudit.shuffles(df).nonEmpty, s"$what: the blocking exchange is gone")
+    }
+  }
+
+  test("simhash tokenizes each document once and drops docs with no tokens") {
+    import spark.implicits._
+    val dir = tmpDir("dedup_simhash_tokens")
+    docs.unionByName(Seq((6L, ""), (7L, "!!! ..."), (8L, null)).toDF("doc_id", "text"))
+      .write.mode("overwrite").parquet(dir)
+    val fps = Dedup.simhash(spark.read.parquet(dir), "doc_id", "text")
+    val plan = fps.queryExecution.executedPlan.toString
+    assert("word_tokens\\(".r.findAllMatchIn(plan).size === 1, plan)
+    assert(fps.collect().map(_.getLong(0)).sorted.toSeq === Seq(1L, 2L, 3L, 4L, 5L))
   }
 
   test("prefix-filtered jaccard equals the inverted-index form at every threshold") {

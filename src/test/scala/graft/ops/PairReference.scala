@@ -4,15 +4,25 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Reference forms of the dedup pair step, kept for the specs that pin
-  * [[graft.functions.PairsInBucket]] against them: nested higher-order
-  * function expansions of one bucket's item array (every i<j pair,
-  * unfiltered unless noted), and the join-back forms of the two
-  * embedding operators, which re-attach vectors to candidate id pairs
-  * and score them with [[Similarity.cosineCol]].
+  * [[Dedup.pairsInBuckets]] against them: the `collect_set` blocking
+  * aggregate it replaced, nested higher-order function expansions of
+  * one bucket's item array (every i<j pair, unfiltered unless noted),
+  * and the join-back forms of the two embedding operators, which
+  * re-attach vectors to candidate id pairs and score them with
+  * [[Similarity.cosineCol]].
   *
-  * The HOF forms emit equal-id pairs and NaN cosines; the generator
+  * The HOF forms emit equal-id pairs and NaN cosines; the blocking step
   * drops both, so specs filter them out of the reference side. */
 object PairReference {
+
+  /** The blocking step [[Dedup.pairsInBuckets]] replaced: per `keys`
+    * group, its distinct non-null `item`s sorted as `_items`
+    * (`sort_array(collect_set(item))`), and only groups holding 2 to
+    * `cap` of them. Expand `_items` with the forms below. */
+  def collectSetBlocking(rows: DataFrame, keys: Seq[String], item: Column, cap: Int): DataFrame =
+    rows.groupBy(keys.map(col): _*)
+      .agg(sort_array(collect_set(item)).as("_items"))
+      .where(size(col("_items")).between(2, cap))
 
   /** Every i<j pair of an id array as `struct<doc_a, doc_b>`. */
   def candidatePairExpandHof(ids: Column): Column =

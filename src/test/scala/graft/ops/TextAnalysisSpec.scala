@@ -451,4 +451,14 @@ class TextAnalysisSpec extends SparkSpec {
     assert(collated.orderBy("i").collect().map(_.get(1)).toSeq ===
       ref.collect().map(_.get(0)).toSeq)
   }
+
+  test("tokenizeRaw lower-cases the same under a Turkish default locale") {
+    // the tr locale maps I to a dotless ı, which the [a-z0-9] split drops
+    val before = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr"))
+    try {
+      assert(TextAnalysis.tokenizeRaw("TITLE") === Seq("title"))
+      assert(TextAnalysis.tokenizeQuery("TITLE Istanbul IT") === Seq("istanbul", "it", "title"))
+    } finally java.util.Locale.setDefault(before)
+  }
 }
