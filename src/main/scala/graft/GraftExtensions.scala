@@ -3,16 +3,25 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
 
 import graft.functions.{CosineSimilarity, DotProduct, GeometricMean}
 
-/** SparkSessionExtensions entry point: registers graft's native
-  * expressions for SQL use. Activate with
+/** SparkSessionExtensions entry point. Activate with
   * `spark.sql.extensions=graft.GraftExtensions` (or
-  * `SparkSession.builder.withExtensions(new GraftExtensions)`), then:
-  *   SELECT cosine_similarity(a.embedding, b.embedding) FROM ...
-  * DataFrame callers don't need the extension — graft.ops.Similarity
-  * builds the expression directly.
+  * `SparkSession.builder.withExtensions(new GraftExtensions)`). It
+  * registers:
+  *   - graft's native functions for SQL use
+  *     (`cosine_similarity`, `dot_product`, `geo_mean`), e.g.
+  *     SELECT cosine_similarity(a.embedding, b.embedding) FROM ...
+  *     DataFrame callers don't need the extension — graft.ops.Similarity
+  *     builds the expression directly;
+  *   - the snapshot-catalog resolution rules (SQL UPDATE, filtered
+  *     aggregate pushdown, vectorized DV reads);
+  *   - one physical rule, `lake.ParameteriseScanFilters`: filters over
+  *     file scans compile once per shape, not once per literal value.
+  * A session without the extension plans and runs as plain Spark.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -51,6 +60,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // the row-based whole-version fallback scan with the pruned +
     // pushed + columnar anti-join form (graft.lake.VectorizeSnapshotDvRead)
     ext.injectResolutionRule(session => graft.lake.VectorizeSnapshotDvRead(session))
+    // filters over file scans generate code that does not depend on
+    // their literal values, so a lookup shape compiles once per JVM
+    // (graft.lake.ParameteriseScanFilters); pushed filters are untouched
+    ext.injectColumnar(_ => new ColumnarRule {
+      override def preColumnarTransitions: Rule[SparkPlan] = graft.lake.ParameteriseScanFilters
+    })
     ext.injectFunction((
       new FunctionIdentifier("geo_mean"),
       new ExpressionInfo(classOf[GeometricMean].getName, "geo_mean"),

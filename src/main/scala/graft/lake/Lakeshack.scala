@@ -63,7 +63,15 @@ final case class QueryTelemetry(
   *      (metastore.py:414-481); no Spark job per query
   *   3. scan only those files; `isin` + clause conjunction + projection are
   *      pushed by Catalyst into the Parquet reader (row-group skipping
-  *      included), replacing pyarrow's to_batches(filter=, columns=)
+  *      included), replacing pyarrow's to_batches(filter=, columns=).
+  *      The filter kept above the scan is parameterised in sessions with
+  *      `graft.GraftExtensions` ([[ParameteriseScanFilters]]): its
+  *      generated code reads the keys and clause bounds from fields of
+  *      the class, so each query shape (key count, clause operators)
+  *      compiles once per JVM and its class gets JIT-compiled, instead
+  *      of a new class, run interpreted, per key set. The pushed filters
+  *      keep the real values: Parquet's row-group and dictionary checks
+  *      compare against them.
   *   4. limit — Spark's CollectLimit is exact and early-terminating, a
   *      strict strengthening of the reference's "≤ N + batch_size"
   *      contract (lakeshack.py:504-507).

@@ -2,6 +2,7 @@ package graft.lake
 
 import graft.{Fixtures, SparkSpec}
 import graft.Fixtures.NaiveTs
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions._
 
 /** End-to-end query semantics ported from the reference
@@ -292,5 +293,57 @@ class LakeshackSpec extends SparkSpec {
     val mid = ranges(2)._1
     val kept = Metastore.prune(spark, s, Seq(mid))
     assert(kept.size <= 2, s"well-clustered point query should prune to ~1 file, got ${kept.size}")
+  }
+
+  /** A lineitem-shaped table: 1500 long order keys, four lines each,
+    * ship dates over 100 days, clustered into 8 files. */
+  private lazy val lineitemRows = spark.range(0, 6000).selectExpr("id % 1500 as l_orderkey",
+    "date_add(date'2000-01-01', cast(id div 1500 * 25 + id % 13 as int)) as l_shipdate",
+    "id as l_linenumber")
+  private lazy val lineitem: Lakeshack = {
+    val out = tmpDir("ls_lineitem")
+    ClusteredWriter.write(lineitemRows, out, "l_orderkey", nFiles = 8)
+    Lakeshack(spark, out, "l_orderkey", Seq("l_shipdate"))
+  }
+
+  private def shipFloor(d: String) = Clause("l_shipdate", ">=", java.sql.Date.valueOf(d))
+
+  test("a second query of the same shape compiles nothing") {
+    // 2 keys and a date floor, then 2 other keys and another floor: one
+    // filter shape, so the second query reuses every generated class
+    assert(lineitem.query(Seq(5L, 900L), Seq(shipFloor("2000-01-08"))).collect().nonEmpty)
+    val (keys, floor) = (Seq(17L, 1201L), shipFloor("2000-02-20"))
+    val df = lineitem.query(keys, Seq(floor))
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val got = df.collect()
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before === 0,
+      "new keys and a new date floor must not compile a new class")
+    val want = lineitemRows.where(col("l_orderkey").isin(keys: _*) && floor.toColumn)
+    assert(got.map(_.getLong(2)).sorted === want.collect().map(_.getLong(2)).sorted)
+    assert(got.nonEmpty)
+  }
+
+  test("pushed filters keep the real values; the filter above the scan holds ParamLiterals") {
+    import org.apache.spark.sql.catalyst.expressions.{GreaterThanOrEqual, In, Literal}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec}
+    val plan = lineitem.query(Seq(5L, 6L), Seq(shipFloor("2000-01-08"))).queryExecution.executedPlan
+    val scan = plan.collectFirst { case s: FileSourceScanExec => s }.get
+    val pushed = scan.metadata("PushedFilters")
+    assert(pushed.contains("In(l_orderkey, [5,6])"), pushed)
+    assert(pushed.contains("GreaterThanOrEqual(l_shipdate,2000-01-08)"), pushed)
+    assert(scan.dataFilters.exists {
+      case In(_, list) => list.toSet == Set(Literal(5L), Literal(6L))
+      case _ => false
+    }, scan.dataFilters)
+    assert(scan.dataFilters.exists {
+      case GreaterThanOrEqual(_, Literal(_, org.apache.spark.sql.types.DateType)) => true
+      case _ => false
+    }, scan.dataFilters)
+    val filter = plan.collectFirst { case f: FilterExec => f.condition }.get
+    val params = filter.collect { case p: graft.functions.ParamLiteral => p.toString }
+    assert(params.toSet === Set("5", "6", "2000-01-08"), filter)
+    assert(filter.collect { case l: Literal => l }.isEmpty, filter)
+    // the plan reads as before: the ParamLiterals render their values
+    assert(plan.toString.contains("l_orderkey#") && plan.toString.contains("IN (5,6)"), plan)
   }
 }

@@ -50,6 +50,11 @@ CATEGORIES = [
     ("shingle/minhash/simhash kernels", ["graft.functions.ShingleHashes", "graft.functions.MinHash",
                                          "graft.functions.SimHash64"]),
     ("pair kernel", ["graft.ops.PairKernel", "graft.functions.PairsInBucket"]),
+    # driver-side costs paid per query: the ASM ClassReader and ZipFile
+    # leaf frames of closure cleaning, and the Hadoop-conf copy plus the
+    # InMemoryFileIndex listing of `spark.read.parquet(files: _*)`
+    ("closure cleaning (ClosureCleaner)", ["ClosureCleaner"]),
+    ("data source resolution (DataSource.resolveRelation)", ["DataSource.resolveRelation"]),
     ("codegen (Janino)", ["org.codehaus.janino", "org.codehaus.commons", "CodeGenerator"]),
     ("shuffle write", ["DiskBlockObjectWriter", "ShuffleExternalSorter", "insertRecordIntoSorter",
                        "writeSortedFile", "mergeSpills", "ShufflePartitionPairsWriter",
