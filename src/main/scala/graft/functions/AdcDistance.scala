@@ -12,9 +12,10 @@ import org.apache.spark.sql.types._
   * corpus row's `array<int>` PQ code.
   *
   * Why an Expression (SURVEY.md §7.3): the HOF formulation it replaces
-  * (`Similarity.adcDistColHof`) is the PER-PAIR scoring loop of every
-  * ADC shortlist — |queries| · |probed codes| evaluations — and array
-  * HOFs are CodegenFallback, so each evaluation paid m · dsub
+  * (`KernelReference.adcDistColHof` in the specs) is the PER-PAIR
+  * scoring loop of every ADC shortlist — |queries| · |probed codes|
+  * evaluations — and array HOFs are CodegenFallback, so each
+  * evaluation paid m · dsub
   * interpreted lambda steps with boxing. This is the fused primitive
   * loop, on the hot path of `pqTopKWith` and the IVFADC probe.
   *

@@ -13,9 +13,9 @@ import org.apache.spark.sql.types._
   *
   * Why an Expression (SURVEY.md §7.3, the [[CosineSimilarity]] /
   * [[MinHashBandBuckets]] rationale): the higher-order-function
-  * formulation it replaces (`Similarity.pqEncodePreparedColHof`) runs
-  * m · ks · 2 interpreted `aggregate` lambdas of dsub steps each per
-  * row — ~16k boxed lambda evaluations per vector at the defaults —
+  * formulation it replaces (`KernelReference.pqEncodePreparedColHof`
+  * in the specs) runs m · ks · 2 interpreted `aggregate` lambdas of
+  * dsub steps each per row — ~16k boxed lambda evaluations per vector at the defaults —
   * because array HOFs are CodegenFallback. This is one fused primitive
   * loop.
   *

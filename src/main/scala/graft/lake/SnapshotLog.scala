@@ -450,74 +450,51 @@ object SnapshotLog {
       throw new java.util.ConcurrentModificationException(
         s"lost the claim race for v$next of $table")
     maybeCheckpoint(spark, fs, root, table, next, checkpointInterval)
-    autoIndexBloomSidecars(spark, fs, root, adds)
-    autoCollectAggStats(spark, fs, root, adds)
+    appendSidecars(spark, fs, root, adds)
     next
   }
 
-  /** AUTO-MAINTENANCE of SUM sidecars, the [[autoIndexBloomSidecars]]
-    * twin: after any commit that adds data files, append (sum, count)
-    * rows for exactly those files to every column sidecar the table
-    * carries — `CALL collect_agg_stats` is a one-time decision, not a
-    * re-CALL treadmill. Without this every appended or compacted file
-    * is absent from the sidecar: never served wrongly (the rewrite
-    * degrades it to scanned — sound) but the SUM shortcut silently
-    * decays under continuous ingest. ONE column-pruned pass over the
-    * BATCH covers every collected column (a K-column table pays one
-    * job, not K — the per-column loop re-read the same files K times);
-    * a unique delta dir per commit (two concurrent committers must not
-    * share a parquet dir's staging). Best-effort: the manifest claim
-    * already landed, so a failure here costs only freshness, never the
-    * commit. Delta-dir creep is folded by [[maybeFoldAggStats]].
-    * Disable with `spark.graft.aggstats.autoCollect = false`. */
-  private def autoCollectAggStats(spark: SparkSession, fs: FileSystem,
-                                  root: Path, adds: Seq[String]): Unit = {
+  /** SIDECAR MAINTENANCE: after any commit that adds data files, append
+    * rows for exactly those files to every Bloom and SUM column sidecar
+    * the table carries ([[Sidecar]]), so `CALL build_bloom` and `CALL
+    * collect_agg_stats` are one-time layout decisions, not a re-CALL
+    * treadmill. Without it every appended or compacted file is absent
+    * from the sidecars: never served wrongly (it scans) but pruning and
+    * the SUM shortcut silently decay under continuous ingest. The
+    * added files are read as ONE batch frame: one delta build per
+    * Bloom column with the base build's geometry (m, k), and one fused
+    * column-pruned pass for all SUM columns ([[appendAggStats]]). A
+    * table without sidecars pays two existence probes and no Spark
+    * job. Rows for files a compaction REMOVED stay behind as harmless
+    * orphans (pruning intersects the LIVE candidate list; a full
+    * `buildBloom` clears them).
+    *
+    * Best-effort by design: the manifest claim has already landed, so
+    * a failure here costs only freshness — visible in the
+    * probed-but-unindexed telemetry
+    * ([[SnapshotFileIndex.bloomUnindexedProbes]]) — never the commit. */
+  private def appendSidecars(spark: SparkSession, fs: FileSystem,
+                             root: Path, adds: Seq[String]): Unit = {
     if (adds.isEmpty) return
     try {
-      if (!spark.conf.get("spark.graft.aggstats.autoCollect", "true").toBoolean) return
-      val statsRoot = new Path(logDir(root).getParent, "_aggstats")
-      if (!fs.exists(statsRoot)) return
-      val colDirs = fs.listStatus(statsRoot).toSeq.filter(_.isDirectory)
-      if (colDirs.isEmpty) return
+      val bloomCols = Sidecar.columns(fs, root, Sidecar.Bloom)
+      val sumCols = Sidecar.columns(fs, root, Sidecar.AggStats)
+      if (bloomCols.isEmpty && sumCols.isEmpty) return
       val abs = adds.map(f => fs.makeQualified(new Path(dataRootOf(root), f)).toString)
-      import org.apache.spark.sql.functions.{col => c, coalesce, count, lit, sum}
       val batch = spark.read.option("ignoreMissingFiles", "true").parquet(abs: _*)
-      val columns = colDirs.map(_.getPath.getName).filter(n =>
-        batch.columns.contains(n) && aggStatsIntegral.contains(batch.schema(n).dataType))
-      if (columns.isEmpty) return
-      // one fused pass: per-file (exact decimal sum, non-null count)
-      // for ALL collected columns — see [[collectAggStats]] for the
-      // eval-mode-independence argument behind the decimal sums
-      val aggs = columns.zipWithIndex.flatMap { case (n, i) => Seq(
-        sum(c(n).cast(aggStatsSumType)).as(s"_s$i"), count(c(n)).as(s"_c$i")) }
-      val computed = batch
-        .select(c("_metadata.file_path").as("filepath") +: columns.map(c(_)): _*)
-        .groupBy("filepath")
-        .agg(aggs.head, aggs.tail: _*)
-      // zero-row adds produce no group: left-join the full list so
-      // every added file lands a row (null sum, 0 count). Persisted:
-      // K delta writes below must not re-run the batch pass K times
-      // (the frame is one row per added file — metadata-sized).
-      val all = spark.createDataFrame(
-        spark.sparkContext.parallelize(abs.map(Row(_)),
-          math.max(1, abs.size / 20000)),
-        StructType(Seq(StructField("filepath", StringType, nullable = false))))
-        .join(computed, Seq("filepath"), "left")
-        .persist()
-      try {
-        columns.zipWithIndex.foreach { case (n, i) =>
-          val cd = new Path(statsRoot, n)
-          aggStatsRows(all.select(c("filepath"), c(s"_s$i").as("sum_dec"),
-              coalesce(c(s"_c$i"), lit(0L)).as("cnt")))
-            .write.mode("errorifexists").parquet(new Path(cd,
-              "delta-" + java.util.UUID.randomUUID().toString.take(12)).toString)
-          maybeFoldAggStats(spark, fs, cd)
+      for (c <- bloomCols) {
+        val cd = Sidecar.dir(root, Sidecar.Bloom, c)
+        bloomGeometryOf(spark, fs, cd).foreach { case (column, m, k) =>
+          if (batch.columns.contains(column))
+            Sidecar.append(spark, fs, cd, BloomIndex.buildFromWith(batch, column, m, k))
         }
-      } finally all.unpersist()
+      }
+      appendAggStats(spark, fs, root, batch, abs, sumCols.filter(n =>
+        batch.columns.contains(n) && aggStatsIntegral.contains(batch.schema(n).dataType)))
     } catch { case e: Exception =>
       MetastoreFileIndex.log.warn(
-        s"agg-stats sidecar auto-collect failed for $root (serving stays sound, " +
-          s"the SUM shortcut decays to scanning new files): ${e.getMessage}")
+        s"sidecar maintenance failed for $root (reads stay sound, the files " +
+          s"this commit added scan until the next build): ${e.getMessage}")
     }
   }
 
@@ -528,82 +505,55 @@ object SnapshotLog {
     * session can no longer store a silently WRAPPED per-file sum that
     * an ANSI query would then serve where the stock plan raises
     * ARITHMETIC_OVERFLOW. */
-  private[lake] val aggStatsSumType = org.apache.spark.sql.types.DecimalType(38, 0)
+  private val aggStatsSumType = org.apache.spark.sql.types.DecimalType(38, 0)
 
-  /** Final projection of a sidecar delta: `(filepath, sum_dec, cnt)` →
-    * `(filepath, sum_v: long, cnt)`. A file whose exact sum falls
-    * OUTSIDE long range gets NO row (it degrades to scanned, where the
-    * stock plan's own semantics — ANSI overflow error or legacy wrap —
-    * apply); genuinely empty/all-null files keep their (null, 0) row.
-    * The in-range guard runs before the long cast, so the cast itself
-    * can never overflow under either eval mode. */
-  private def aggStatsRows(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.{col => c, lit}
-    df.where(c("cnt") === 0L || (c("sum_dec").isNotNull &&
-        c("sum_dec") >= lit(Long.MinValue) && c("sum_dec") <= lit(Long.MaxValue)))
-      .select(c("filepath"),
-        c("sum_dec").cast(org.apache.spark.sql.types.LongType).as("sum_v"), c("cnt"))
+  /** Append one SUM sidecar delta per column of `columns` (integral
+    * columns of `batch`) covering the files `abs` that `batch` reads:
+    * ONE fused column-pruned pass computes per-file (exact decimal sum,
+    * non-null count) for all of them (a K-column table pays one job,
+    * not K). Zero-row files produce no group, so the full file list is
+    * left-joined in and every file lands a row (sum NULL, cnt 0 = "no
+    * non-null values", exactly Spark's sum-over-empty). The per-file
+    * frame is persisted — it is metadata-sized, and the K writes must
+    * not re-run the pass. Each delta projects to `(filepath, sum_v:
+    * long, cnt)`; a file whose exact sum falls OUTSIDE long range gets
+    * NO row (it scans, where the stock plan's own overflow semantics
+    * apply), and the in-range guard runs before the long cast, so the
+    * cast itself never overflows under either eval mode. */
+  private def appendAggStats(spark: SparkSession, fs: FileSystem, root: Path,
+                             batch: DataFrame, abs: Seq[String],
+                             columns: Seq[String]): Unit = {
+    if (columns.isEmpty) return
+    import org.apache.spark.sql.functions.{col => c, coalesce, count, lit, sum}
+    val aggs = columns.zipWithIndex.flatMap { case (n, i) => Seq(
+      sum(c(n).cast(aggStatsSumType)).as(s"_s$i"), count(c(n)).as(s"_c$i")) }
+    val computed = batch
+      .select(c("_metadata.file_path").as("filepath") +: columns.map(c(_)): _*)
+      .groupBy("filepath")
+      .agg(aggs.head, aggs.tail: _*)
+    val all = spark.createDataFrame(
+      spark.sparkContext.parallelize(abs.map(Row(_)), math.max(1, abs.size / 20000)),
+      StructType(Seq(StructField("filepath", StringType, nullable = false))))
+      .join(computed, Seq("filepath"), "left")
+      .persist()
+    try {
+      columns.zipWithIndex.foreach { case (n, i) =>
+        val cnt = coalesce(c(s"_c$i"), lit(0L))
+        val sumDec = c(s"_s$i")
+        Sidecar.append(spark, fs, Sidecar.dir(root, Sidecar.AggStats, n),
+          all.where(cnt === 0L || (sumDec.isNotNull &&
+              sumDec >= lit(Long.MinValue) && sumDec <= lit(Long.MaxValue)))
+            .select(c("filepath"), sumDec.cast(LongType).as("sum_v"), cnt.as("cnt")))
+      }
+    } finally all.unpersist()
   }
-
-  /** SELF-COMPACTION of a SUM sidecar, the [[maybeFoldBloomDeltas]]
-    * twin: past `spark.graft.aggstats.maxDeltaDirs` (default 64) delta
-    * dirs, fold the tree into ONE dir and delete the captured inputs.
-    * Duplicate filepath rows collapse on read (files are immutable, any
-    * copy is the right copy); a racer's delta landing after the listing
-    * capture survives untouched. */
-  private def maybeFoldAggStats(spark: SparkSession, fs: FileSystem,
-                                colDir: Path): Unit = {
-    val maxDirs = spark.conf.get("spark.graft.aggstats.maxDeltaDirs", "64").toInt
-    val captured = fs.listStatus(colDir).toSeq
-      .filter(st => st.isDirectory && !st.getPath.getName.startsWith("_"))
-    if (captured.size <= maxDirs) return
-    val folded = spark.read.option("recursiveFileLookup", "true")
-      .option("ignoreMissingFiles", "true")
-      .parquet(captured.map(_.getPath.toString): _*)
-      .dropDuplicates("filepath")
-    folded.write.mode("errorifexists").parquet(new Path(colDir,
-      "delta-" + java.util.UUID.randomUUID().toString.take(12)).toString)
-    captured.foreach(st => fs.delete(st.getPath, true))
-  }
-
-  /** AUTO-MAINTENANCE of Bloom sidecars: after any commit that adds
-    * data files, append sidecar rows for exactly those files to every
-    * column sidecar the table carries — one distributed pass over the
-    * BATCH per indexed column, so `CALL build_bloom` is a one-time
-    * layout decision instead of a manual re-CALL treadmill. Without
-    * this, every file appended (or produced by `compact`/`compactBin`)
-    * after the build is absent from the sidecar: it is never pruned
-    * (sound) but every point probe pays its scan forever, an invisible
-    * perf decay under continuous ingest. Delta rows land under
-    * `_bloom/<col>/delta-<id>/` — a UNIQUE dir per commit, because two
-    * concurrent committers appending into one parquet dir would race
-    * each other's `_temporary` staging — and [[bloomFor]] reads the
-    * tree recursively with the same geometry (m, k) as the base build
-    * (read from the sidecar's own rows). Rows for files a compaction
-    * REMOVED stay behind as harmless orphans (pruning intersects the
-    * LIVE candidate list; a full `buildBloom` clears them).
-    *
-    * Best-effort by design: the manifest claim has already landed, so
-    * a failure here costs pruning freshness — visible in the
-    * probed-but-unindexed telemetry
-    * ([[SnapshotFileIndex.bloomUnindexedProbes]]) — never the commit.
-    * Disable with `spark.graft.bloom.autoIndex = false`. */
-  /** JVM-local amortization state for [[autoIndexBloomSidecars]]:
-    * pool-relative adds DEFERRED past a commit, per qualified bloom
-    * root — (commits since last build, accumulated adds). Deliberately
-    * not persisted: a crashed writer's pending files simply stay
-    * unindexed (probe-side may-contain: never pruned, always scanned —
-    * sound), and the next full build or bin-compaction re-covers them. */
-  private val bloomPendingAdds =
-    new scala.collection.concurrent.TrieMap[String, (Int, Vector[String])]
 
   /** Sidecar geometry, persisted as the tiny `_geometry` metadata file
     * (`column,m,k`) beside the filter parquet — ONE small read per
-    * commit instead of the Spark job head(1) costs. Underscore names
-    * are invisible to the parquet reads and exempt from fold deletes.
-    * Read fresh each time (never JVM-cached): a full rebuild may
-    * re-size m to the new data volume, and a stale cached geometry
-    * would append deltas whose bit positions don't match the base. */
+    * commit instead of the Spark job head(1) costs. Read fresh each
+    * time (never JVM-cached): a full rebuild may re-size m to the new
+    * data volume, and a stale cached geometry would append deltas
+    * whose bit positions don't match the base. */
   private def bloomGeometryOf(spark: SparkSession, fs: FileSystem,
                               colDir: Path): Option[(String, Int, Int)] = {
     val gp = new Path(colDir, "_geometry")
@@ -636,101 +586,6 @@ object SnapshotLog {
       try out.write(s"$column,$m,$k".getBytes(StandardCharsets.UTF_8))
       finally out.close()
     } catch { case _: java.io.IOException => () } // best-effort cache
-
-  private def autoIndexBloomSidecars(spark: SparkSession, fs: FileSystem,
-                                     root: Path, adds: Seq[String]): Unit = {
-    if (adds.isEmpty) return
-    try {
-      if (!spark.conf.get("spark.graft.bloom.autoIndex", "true").toBoolean) return
-      // the same root anchor as [[bloomDir]] (branch logs keep their
-      // own sidecars beside their own _log)
-      val bloomRoot = new Path(logDir(root).getParent, "_bloom")
-      if (!fs.exists(bloomRoot)) return
-      val colDirs = fs.listStatus(bloomRoot).toSeq.filter(_.isDirectory)
-      if (colDirs.isEmpty) return
-      // ── amortization (streaming micro-batch ingest): the delta build
-      // is several Spark jobs ON THE COMMIT CRITICAL PATH, so a table
-      // can defer it — everyCommits > 1 batches up to N commits' adds
-      // into one build; minBytes defers further until the accumulated
-      // batch is worth a job. Deferred files are merely UNINDEXED
-      // (never pruned — sound); a crash forfeits only this JVM's
-      // pending list. Defaults (1, 0) keep the index exactly fresh.
-      val everyN = spark.conf.get("spark.graft.bloom.autoIndex.everyCommits", "1").toInt
-      val minBytes = spark.conf.get("spark.graft.bloom.autoIndex.minBytes", "0").toLong
-      val key = fs.makeQualified(bloomRoot).toString
-      val (prevCommits, prevAdds) = bloomPendingAdds.getOrElse(key, (0, Vector.empty[String]))
-      val batchRel = (prevAdds ++ adds).distinct
-      val absOf = (f: String) => fs.makeQualified(new Path(dataRootOf(root), f)).toString
-      if (everyN > 1 || minBytes > 0) {
-        val commits = prevCommits + 1
-        // trigger on EITHER rule: N commits reached, or (when a byte
-        // floor is configured) the accumulated batch crossed it early
-        val bytesReady = minBytes > 0 && {
-          val sz = batchRel.map(f =>
-            try fs.getFileStatus(new Path(absOf(f))).getLen
-            catch { case _: java.io.IOException => 0L }).sum
-          sz >= minBytes
-        }
-        if (commits < everyN && !bytesReady) {
-          bloomPendingAdds.put(key, (commits, batchRel))
-          return
-        }
-        bloomPendingAdds.remove(key)
-      }
-      val abs = batchRel.map(absOf)
-      for (cd <- colDirs) {
-        bloomGeometryOf(spark, fs, cd.getPath).foreach { case (column, m, k) =>
-          val batch = spark.read.option("ignoreMissingFiles", "true").parquet(abs: _*)
-          if (batch.columns.contains(column)) {
-            BloomIndex.buildFromWith(batch, column, m, k)
-              .write.mode("errorifexists").parquet(new Path(cd.getPath,
-                "delta-" + java.util.UUID.randomUUID().toString.take(12)).toString)
-            maybeFoldBloomDeltas(spark, fs, cd.getPath)
-          }
-        }
-      }
-    } catch { case e: Exception =>
-      MetastoreFileIndex.log.warn(
-        s"bloom sidecar auto-index failed for $root (pruning stays sound, " +
-          s"freshness decays — see bloomUnindexedProbes): ${e.getMessage}")
-    }
-  }
-
-  /** SELF-COMPACTION of a column sidecar: once the delta-dir count
-    * crosses `spark.graft.bloom.maxDeltaDirs` (default 64), fold the
-    * whole tree — base + deltas — into ONE fresh delta dir and delete
-    * the folded inputs. Without this a streaming table accrues one tiny
-    * dir per commit forever and the first probe of every session pays
-    * an O(commits) listing + tiny-file read. Amortized O(sidecar bytes)
-    * once per threshold commits. Duplicate filepath rows (a fold racing
-    * an append) collapse — a file's filter is deterministic for its
-    * life, so any copy is the right copy. Concurrency: the pre-read
-    * LISTING is the delete set, so a racer's delta landing after the
-    * capture survives untouched; a concurrent READER mid-fold can see
-    * duplicates (harmless) or, in the worst case, lose a just-deleted
-    * file mid-scan and fail that one query (the same transient
-    * `buildBloom`'s full rebuild already has — retry reads it fresh). */
-  private def maybeFoldBloomDeltas(spark: SparkSession, fs: FileSystem,
-                                   colDir: Path): Unit = {
-    val maxDeltas = spark.conf.get("spark.graft.bloom.maxDeltaDirs", "64").toInt
-    val entries = fs.listStatus(colDir)
-    val deltaDirs = entries.filter(st => st.isDirectory &&
-      st.getPath.getName.startsWith("delta-"))
-    if (deltaDirs.length <= maxDeltas) return
-    val captured = entries.map(_.getPath.getName).toSet // the delete set
-    val all = spark.read.option("recursiveFileLookup", "true")
-      .option("ignoreMissingFiles", "true") // a concurrent fold's deletes
-      .parquet(colDir.toString)
-      .dropDuplicates("filepath")
-    val foldDir = new Path(colDir,
-      "delta-fold-" + java.util.UUID.randomUUID().toString.take(12))
-    all.write.mode("errorifexists").parquet(foldDir.toString)
-    // underscore names ( _geometry ) are metadata, not folded inputs
-    for (name <- captured if name != foldDir.getName && !name.startsWith("_"))
-      fs.delete(new Path(colDir, name), true)
-    MetastoreFileIndex.log.info(
-      s"bloom sidecar folded: ${deltaDirs.length} delta dirs -> 1 at $colDir")
-  }
 
   /** Write a checkpoint when the version lands on the interval. Crash
     * here is harmless (readers validate + skip); a later commit on the
@@ -1269,9 +1124,7 @@ object SnapshotLog {
   // go stale; files written after the build are simply absent and are
   // never pruned (may-contain). [[SnapshotFileIndex]] consults it
   // transparently for `=`/`IN` filters on both the SQL and vectorized
-  // read paths.
-  private[lake] def bloomDir(root: Path, column: String): Path =
-    new Path(logDir(root).getParent, s"_bloom/$column")
+  // read paths. Layout, reads and commit-time appends: [[Sidecar]].
 
   /** Build (or refresh) the Bloom sidecar for `column` over the HEAD's
     * live files. Returns the number of files indexed. Cost: one
@@ -1289,7 +1142,7 @@ object SnapshotLog {
     val abs = cur.files.map(f => fs.makeQualified(new Path(dataRoot, f)).toString)
     val df = BloomIndex.buildFrom(spark.read.parquet(abs: _*), column,
       expectedItemsPerFile, fpp)
-    val dir = bloomDir(rootP, column)
+    val dir = Sidecar.dir(rootP, Sidecar.Bloom, column)
     df.write.mode("overwrite").parquet(dir.toString)
     // persist the geometry beside the filters (the overwrite wiped any
     // previous copy — a full rebuild may legitimately re-size m):
@@ -1300,34 +1153,11 @@ object SnapshotLog {
     spark.read.parquet(dir.toString).count()
   }
 
-  /** The sidecar's filter table for `column`, if one was built.
-    * RENAME-PROOF: rows store the filepath as written at build time
-    * (absolute), but `ALTER TABLE RENAME TO` relocates the whole pool —
-    * so every row's key is re-anchored at the CURRENT data root by its
-    * pool-relative `data/…` suffix (the same last-`/data/`-segment
-    * anchor manifests and DV keys use). A row whose path carries no
-    * such suffix keeps its stored form (never matches → never prunes —
-    * sound). Read recursively: incremental maintenance appends delta
-    * dirs under the sidecar root (see [[appendBloomSidecars]]). */
+  /** The sidecar's filter table for `column`, if one was built
+    * (rename-proof, see [[Sidecar.read]]). */
   private[lake] def bloomFor(spark: SparkSession, tablePath: String,
-                             column: String): Option[DataFrame] = {
-    import org.apache.spark.sql.functions.{col, concat, lit, regexp_extract, when}
-    val (fs, rootP) = fsOf(spark, tablePath)
-    val dir = bloomDir(rootP, column)
-    if (!fs.exists(dir)) return None
-    val prefix = fs.makeQualified(dataRootOf(rootP)).toString + "/"
-    val rel = regexp_extract(col("filepath"), "^.*/(data/.*)$", 1)
-    // ignoreMissingFiles (scoped to THIS read): a sidecar self-fold
-    // ([[maybeFoldBloomDeltas]]) deletes its captured inputs after the
-    // fold dir lands, so a reader that listed before the delete would
-    // otherwise fail its whole query mid-scan; skipping the vanished
-    // delta is sound — its rows live on in the fold dir, and a file
-    // with no sidecar row is never pruned (may-contain)
-    Some(spark.read.option("recursiveFileLookup", "true")
-      .option("ignoreMissingFiles", "true").parquet(dir.toString)
-      .withColumn("filepath",
-        when(rel === lit(""), col("filepath")).otherwise(concat(lit(prefix), rel))))
-  }
+                             column: String): Option[DataFrame] =
+    Sidecar.read(spark, tablePath, Sidecar.Bloom, column)
 
   // ── per-file SUM sidecar (agg stats) ─────────────────────────────
   // Parquet footers carry count/min/max but never SUMS, so the
@@ -1345,7 +1175,7 @@ object SnapshotLog {
   // integer addition is exact and associative, where float sums are
   // rounding-order-dependent. EVAL-MODE INDEPENDENCE: the collect
   // accumulates in DECIMAL(38,0) and refuses (→ scan) any file whose
-  // exact sum exceeds long range ([[aggStatsSumType]]/[[aggStatsRows]]),
+  // exact sum exceeds long range ([[aggStatsSumType]]/[[appendAggStats]]),
   // so a stored sum is the file's true sum under ANY collecting
   // session's mode. Serving is then sound for both query modes: a
   // LEGACY fold of exact per-file sums equals the stock wrapped total
@@ -1357,9 +1187,6 @@ object SnapshotLog {
   private[lake] val aggStatsIntegral: Set[org.apache.spark.sql.types.DataType] =
     Set(org.apache.spark.sql.types.ByteType, org.apache.spark.sql.types.ShortType,
       org.apache.spark.sql.types.IntegerType, org.apache.spark.sql.types.LongType)
-
-  private[lake] def aggStatsDir(root: Path, column: String): Path =
-    new Path(logDir(root).getParent, s"_aggstats/$column")
 
   /** Collect per-file (sum, non-null count) for `column` over the
     * HEAD's live files that don't already have a sidecar row —
@@ -1389,52 +1216,17 @@ object SnapshotLog {
       .getOrElse(Set.empty)
     val missing = abs.filterNot(have)
     if (missing.isEmpty) return 0L
-    import org.apache.spark.sql.functions.{col => c, count, lit, sum}
-    // the sum accumulates in DECIMAL(38,0) ([[aggStatsSumType]]) so the
-    // stored per-file sum is mathematically EXACT whatever eval mode
-    // the collecting session runs — the long-range guard in
-    // [[aggStatsRows]] drops (→ scan) the pathological file whose sum
-    // a long cannot hold, closing the legacy-collect/ANSI-serve hole
-    val computed = spark.read.parquet(missing: _*)
-      .select(c("_metadata.file_path").as("filepath"), c(column))
-      .groupBy("filepath")
-      .agg(sum(c(column).cast(aggStatsSumType)).as("sum_dec"),
-        count(c(column)).as("cnt"))
-    // zero-row files produce no group — left-join the full list so
-    // every missing file lands a row (sum NULL, cnt 0 = "no non-null
-    // values", exactly Spark's sum-over-empty)
-    val all = aggStatsRows(spark.createDataFrame(
-      spark.sparkContext.parallelize(missing.map(Row(_)), math.max(1, missing.size / 20000)),
-      StructType(Seq(StructField("filepath", StringType, nullable = false))))
-      .join(computed, Seq("filepath"), "left")
-      .select(c("filepath"), c("sum_dec"),
-        org.apache.spark.sql.functions.coalesce(c("cnt"), lit(0L)).as("cnt")))
-    val dir = aggStatsDir(rootP, column)
-    val delta = new Path(dir, s"delta-${java.util.UUID.randomUUID().toString.take(12)}")
-    all.write.mode("errorifexists").parquet(delta.toString)
+    appendAggStats(spark, fs, rootP, spark.read.parquet(missing: _*), missing, Seq(column))
     missing.size.toLong
   }
 
   /** The sidecar's (filepath, sum_v, cnt) table for `column`, if one
-    * was collected. Rename-proof exactly like [[bloomFor]]: rows are
-    * re-anchored at the current data root by their pool-relative
-    * suffix. Read recursively over the delta dirs; duplicate rows for
-    * one file (two concurrent collects) are IDENTICAL — files are
-    * immutable — so readers may pick either. */
+    * was collected (rename-proof, see [[Sidecar.read]]), one row per
+    * file: duplicate rows for one file (two concurrent collects) are
+    * IDENTICAL — files are immutable — so either copy serves. */
   def aggStatsFor(spark: SparkSession, tablePath: String,
-                  column: String): Option[DataFrame] = {
-    import org.apache.spark.sql.functions.{col, concat, lit, regexp_extract, when}
-    val (fs, rootP) = fsOf(spark, tablePath)
-    val dir = aggStatsDir(rootP, column)
-    if (!fs.exists(dir)) return None
-    val prefix = fs.makeQualified(dataRootOf(rootP)).toString + "/"
-    val rel = regexp_extract(col("filepath"), "^.*/(data/.*)$", 1)
-    Some(spark.read.option("recursiveFileLookup", "true")
-      .option("ignoreMissingFiles", "true").parquet(dir.toString)
-      .withColumn("filepath",
-        when(rel === lit(""), col("filepath")).otherwise(concat(lit(prefix), rel)))
-      .dropDuplicates("filepath"))
-  }
+                  column: String): Option[DataFrame] =
+    Sidecar.read(spark, tablePath, Sidecar.AggStats, column).map(_.dropDuplicates("filepath"))
 
   // the collected sidecar, ONE entry per sidecar dir (a version-keyed
   // map would retain every superseded version's rows across a long
@@ -1450,7 +1242,7 @@ object SnapshotLog {
   private[lake] def aggStatsMap(spark: SparkSession, tablePath: String,
                                 column: String): Map[String, (Option[Long], Long)] = {
     val (fs, rootP) = fsOf(spark, tablePath)
-    val dir = aggStatsDir(rootP, column)
+    val dir = Sidecar.dir(rootP, Sidecar.AggStats, column)
     if (!fs.exists(dir)) return Map.empty
     val ls = fs.listStatus(dir)
     val ver = s"${ls.length}#${ls.map(_.getModificationTime).foldLeft(0L)(math.max)}"
@@ -2370,12 +2162,11 @@ object SnapshotLog {
     * committed manifest, so the per-call existence probe and glob pass
     * of `spark.read.parquet(paths…)` are pure waste — this constructs
     * the relation directly ([[MetastoreFileIndex.relation]]) over an
-    * `InMemoryFileIndex` backed by the session
-    * [[org.apache.spark.sql.execution.datasources.FileStatusCache]]
-    * (immutable files → statuses cacheable), with no pruning index. On a
-    * version with 10⁵ files this turns every read construction from
-    * O(files) driver FS calls into cache hits — the metadata-ops term
-    * the round-12 joinview_refresh reconciliation named. */
+    * `InMemoryFileIndex` with no pruning index. The index still lists
+    * every file once per read: `FileStatusCache.getOrCreate` hands each
+    * call a fresh client namespace, so no status survives from one
+    * read to the next. A file the listing lacks fails the read
+    * ([[SnapshotFileIndex.requireListed]]) instead of being skipped. */
   private[lake] def scanKnownFiles(spark: SparkSession, paths: Seq[String],
                              schema: StructType): DataFrame = {
     import org.apache.spark.sql.execution.datasources.{FileStatusCache, InMemoryFileIndex}
@@ -2387,6 +2178,7 @@ object SnapshotLog {
     val idx = new InMemoryFileIndex(spark, paths.map(new Path(_)),
       Map.empty[String, String], Some(readSchema),
       FileStatusCache.getOrCreate(spark), None, None)
+    SnapshotFileIndex.requireListed(idx, paths)
     MetastoreFileIndex.relation(spark, idx, StructType(Nil), readSchema)
   }
 

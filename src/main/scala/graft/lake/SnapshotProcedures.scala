@@ -236,11 +236,7 @@ private[lake] object SnapshotProcedures {
           if (snap.files.isEmpty) 0L
           else SnapshotLog.fileSizes(fs, rootP, snap.files).values.sum
         val cb = SnapshotLog.clusterByOf(s, p)
-        val bloomRoot = new org.apache.hadoop.fs.Path(p, "_bloom")
-        val bloomCols =
-          if (!fs.exists(bloomRoot)) Nil
-          else fs.listStatus(bloomRoot).toSeq.filter(_.isDirectory)
-            .map(_.getPath.getName).sorted
+        val bloomCols = Sidecar.columns(fs, rootP, Sidecar.Bloom)
         one(snap.version, snap.files.size.toLong, bytes,
           snap.dvs.size.toLong, snap.dvs.values.flatten.toSeq.distinct.size.toLong,
           if (cb.isEmpty) null else UTF8String.fromString(cb.mkString(",")),

@@ -351,6 +351,8 @@ private[lake] class SnapshotFileIndex(
     Map.empty[String, String], Some(schema),
     FileStatusCache.getOrCreate(spark), None, None) {
 
+  SnapshotFileIndex.requireListed(this, absFiles)
+
   // per-COLUMN memo (ConcurrentHashMap.computeIfAbsent): concurrent
   // first-planning of many queries on one huge version serializes only
   // per contended column — a coarse synchronized block here was a
@@ -432,7 +434,7 @@ private[lake] class SnapshotFileIndex(
         }
         // staleness telemetry: unindexed candidates survive every probe
         // unpruned — a growing count means sidecar maintenance stopped
-        // keeping up with ingest (SnapshotLog.autoIndexBloomSidecars)
+        // keeping up with ingest (SnapshotLog.appendSidecars)
         if (unindexed > 0)
           SnapshotFileIndex.bloomUnindexedProbes.addAndGet(unindexed)
         MetastoreFileIndex.log.info(
@@ -445,12 +447,28 @@ private[lake] class SnapshotFileIndex(
 }
 
 object SnapshotFileIndex {
+  /** Throw `FileNotFoundException` naming a requested file that the
+    * index's listing lacks. `InMemoryFileIndex` skips a missing root
+    * path with only a WARN, so a version whose data file was deleted
+    * would otherwise read as the other files' rows, silently partial.
+    * The count check keeps the common case to one `allFiles` pass. */
+  private[lake] def requireListed(idx: PartitioningAwareFileIndex, paths: Seq[String]): Unit = {
+    val listed = idx.allFiles()
+    val wanted = paths.distinct
+    if (listed.size < wanted.size) {
+      val have = listed.iterator.map(_.getPath.toUri.getPath).toSet
+      wanted.find(p => !have.contains(new Path(p).toUri.getPath)).foreach { p =>
+        throw new java.io.FileNotFoundException(s"snapshot data file $p does not exist")
+      }
+    }
+  }
+
   /** Specs pin sidecar point-lookup pruning with this counter. */
   val bloomPrunedFiles = new java.util.concurrent.atomic.AtomicLong(0L)
   /** Probed-but-unindexed file count — the sidecar STALENESS signal:
     * each unit is one candidate file a point probe could not test
-    * (sound, scanned anyway). Flat under commit-time auto-indexing;
-    * growing when it is disabled or failing. */
+    * (sound, scanned anyway). Flat under commit-time sidecar
+    * maintenance; growing when it fails. */
   val bloomUnindexedProbes = new java.util.concurrent.atomic.AtomicLong(0L)
 }
 

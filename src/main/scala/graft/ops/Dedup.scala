@@ -1096,21 +1096,13 @@ object Dedup {
     * token array itself is null — a null text tokenizes to null).
     * Native fused expression ([[graft.functions.WindowHashes]], joined
     * buffer + per-window byte-slice hashes); the superseded HOF form is
-    * [[windowHashesHof]], kept as the spec's bit-identity anchor. */
+    * `KernelReference.windowHashesHof`, the spec's bit-identity anchor. */
   private[ops] def windowHashes(tk: Column, k: Int): Column =
     coalesce(
       org.apache.spark.sql.GraftColumnBridge.column(
         graft.functions.WindowHashes(
           org.apache.spark.sql.GraftColumnBridge.expression(tk), k)),
       array().cast("array<bigint>"))
-
-  /** The superseded per-window HOF formulation — retained ONLY as the
-    * arithmetic reference DedupSpec pins [[windowHashes]] against. */
-  private[ops] def windowHashesHof(tk: Column, k: Int): Column =
-    when(size(tk) >= k,
-      transform(sequence(lit(0), size(tk) - k),
-        i => xxhash64(array_join(slice(tk, i + 1, lit(k)), " "))))
-      .otherwise(array().cast("array<bigint>"))
 
   /** Substring-level duplication profile (the exact-substring dedup of
     * Lee et al., "Deduplicating Training Data Makes Language Models

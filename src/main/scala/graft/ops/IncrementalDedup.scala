@@ -52,7 +52,7 @@ import graft.lake.{ClusteredWriter, Metastore}
   *   (`postings_stats/`, `sets_stats/`), so a probe reads only the
   *   files whose key range intersects the batch's keys — the prune
   *   decision itself is driver-side interval math over cached stats
-  *   rows (zero Spark jobs), and engages only past `minPruneBytes`
+  *   rows (zero Spark jobs), and engages only past `IndexRead.minPruneBytes`
   *   (a few-MB table is one task wave either way). At steady state
   *   that turns the per-batch scans from O(index) to
   *   O(batch · files-per-key). For micro-batches, amortize further by
@@ -139,23 +139,6 @@ object IncrementalDedup {
     * all disk-resident indexes; specs pin pruning claims on it). */
   val lastPrune = IndexRead.lastPrune
 
-  /** Prune-engagement threshold seam — see [[IndexRead.minPruneBytes]]. */
-  private[ops] def minPruneBytes: Long = IndexRead.minPruneBytes
-  private[ops] def minPruneBytes_=(v: Long): Unit = IndexRead.minPruneBytes = v
-
-  private def listFiles(spark: SparkSession, dir: String): Seq[String] =
-    IndexRead.listFiles(spark, dir)
-
-  private def listEntries(spark: SparkSession, dir: String): Seq[(String, Long)] =
-    IndexRead.listEntries(spark, dir)
-
-  private def prunedRead(spark: SparkSession, tablePath: String,
-                         stats: String, values: => Seq[Any]): DataFrame =
-    IndexRead.prunedRead(spark, tablePath, stats, values)
-
-  private def exists(spark: SparkSession, dir: String): Boolean =
-    IndexRead.exists(spark, dir)
-
   /** Probes `batch` against the index and returns one row PER BATCH DOC:
     * `(doc_id, kept, n_matches, min_match_id)` where a match is a
     * verified J ≥ `threshold` pair with (a) any indexed doc, or (b) a
@@ -214,15 +197,15 @@ object IncrementalDedup {
         // scan is zone-map-pruned to the files whose [doc_min, doc_max]
         // intersects the batch's ids — dropping a file that can't match
         // cannot change an anti-join verdict.
-        .join(prunedRead(spark, s"$indexPath/sets", statsPath(indexPath, "sets"),
+        .join(IndexRead.prunedRead(spark, s"$indexPath/sets", statsPath(indexPath, "sets"),
             batchIds).select(col("doc").as(idCol)),
           Seq(idCol), "left_anti")
       // persist the kept set: the two appends below would otherwise
       // re-run the whole probe (out depends on the index being read)
       val keptP = kept.persist()
       try {
-        val postingsBefore = listFiles(spark, s"$indexPath/postings").toSet
-        val setsBefore = listFiles(spark, s"$indexPath/sets").toSet
+        val postingsBefore = IndexRead.listFiles(spark, s"$indexPath/postings").toSet
+        val setsBefore = IndexRead.listFiles(spark, s"$indexPath/sets").toSet
         Dedup.minhashBuckets(keptP, idCol, textCol,
             meta.numHashes, meta.bands, meta.shingleSize)
           .write.mode("append").parquet(s"$indexPath/postings")
@@ -235,9 +218,9 @@ object IncrementalDedup {
         // prunedRead always reads unknown files, so probes stay sound
         // until the next append (or compact) catches the stats up.
         upsertStats(spark, indexPath, "postings", "bucket",
-          listFiles(spark, s"$indexPath/postings").filterNot(postingsBefore))
+          IndexRead.listFiles(spark, s"$indexPath/postings").filterNot(postingsBefore))
         upsertStats(spark, indexPath, "sets", "doc",
-          listFiles(spark, s"$indexPath/sets").filterNot(setsBefore))
+          IndexRead.listFiles(spark, s"$indexPath/sets").filterNot(setsBefore))
       } finally keptP.unpersist()
     }
     out
@@ -315,7 +298,7 @@ object IncrementalDedup {
   def auditIndex(spark: SparkSession, indexPath: String): DataFrame = {
     val audits = Seq("postings", "sets").flatMap { table =>
       val sp = statsPath(indexPath, table)
-      if (!exists(spark, sp)) None
+      if (!IndexRead.exists(spark, sp)) None
       else Some(
         Metastore.auditStats(spark, s"$indexPath/$table", Metastore.load(spark, sp))
           .withColumn("table", lit(table)))
@@ -410,7 +393,7 @@ object IncrementalDedup {
     val probed: DataFrame = {
       val postings =
         if (broadcastProbe)
-          prunedRead(spark, s"$indexPath/postings",
+          IndexRead.prunedRead(spark, s"$indexPath/postings",
             statsPath(indexPath, "postings"),
             batchKeys.select("bucket").distinct().collect().map(_.get(0)).toSeq)
         else spark.read.parquet(s"$indexPath/postings")
@@ -440,8 +423,9 @@ object IncrementalDedup {
         // (its two remaining uses recompute inside ONE action, the
         // pre-clustering shape).
         val setsPruneActive = broadcastProbe &&
-          listEntries(spark, s"$indexPath/sets").iterator.map(_._2).sum >= minPruneBytes &&
-          exists(spark, statsPath(indexPath, "sets"))
+          IndexRead.listEntries(spark, s"$indexPath/sets").iterator.map(_._2).sum >=
+            IndexRead.minPruneBytes &&
+          IndexRead.exists(spark, statsPath(indexPath, "sets"))
         val cross0 = probed
           .join(probeSide(okKeys), Seq("band", "bucket"), "left_semi")
           .select(col("band"), col("bucket"), col("doc").as("_old"))
@@ -466,7 +450,7 @@ object IncrementalDedup {
         val candidates = cross.select(col("doc_b").as("doc")).distinct()
         val setsSrc =
           if (broadcastProbe)
-            prunedRead(spark, s"$indexPath/sets", statsPath(indexPath, "sets"),
+            IndexRead.prunedRead(spark, s"$indexPath/sets", statsPath(indexPath, "sets"),
               candidates.collect().map(_.get(0)).toSeq)
           else spark.read.parquet(s"$indexPath/sets")
         val oldSets = setsSrc.join(probeSide(candidates), Seq("doc"), "left_semi")

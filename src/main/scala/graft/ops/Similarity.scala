@@ -328,31 +328,22 @@ object Similarity {
   /** A centroid as an `array<float>` literal — the native cosine
     * expression's input type; float truncation only perturbs cell
     * boundaries, never the reported scores. */
-  private def floatLits(c: Array[Double]): Column =
+  private[ops] def floatLits(c: Array[Double]): Column =
     array(c.toIndexedSeq.map(x => lit(x.toFloat)): _*)
 
   /** Index (0-based) of the centroid most cosine-similar to `v`, as
     * ONE fused codegen node (graft.functions.ArgmaxCosineMatrix): the
     * matrix rides as a reference object, the loop hoists the vector
     * norm and reads precomputed centroid norms — bit-identical scores
-    * and tiebreak to [[argmaxCosHof]], the superseded struct-max form
-    * it replaces (spec-pinned in ArgmaxCosineSpec). The HOF form's
-    * plan grew O(nlist): one CosineSimilarity node + struct + array
+    * and tiebreak to the superseded struct-max form it replaces
+    * (`KernelReference.argmaxCosHof`, pinned in ArgmaxCosineSpec). The
+    * HOF form's plan grew O(nlist): one CosineSimilarity node + struct + array
     * slot per centroid, and past ~2K cells the generated methods blow
     * the JIT's bytecode ceiling and run interpreted. */
   private[ops] def argmaxCos(centroids: Array[Array[Double]], v: Column): Column =
     org.apache.spark.sql.GraftColumnBridge.column(
       graft.functions.ArgmaxCosineMatrix(
         org.apache.spark.sql.GraftColumnBridge.expression(v), centroids))
-
-  /** The superseded struct-max argmax (array_max over (score, index)
-    * structs, one CosineSimilarity per centroid) — retained as the
-    * bit-identity REFERENCE for ArgmaxCosineSpec, not called on any
-    * query path. */
-  private[ops] def argmaxCosHof(centroids: Array[Array[Double]], v: Column): Column =
-    array_max(array(centroids.zipWithIndex.toIndexedSeq.map { case (c, i) =>
-      struct(cosineCol(floatLits(c), v).as("s"), lit(i).as("i"))
-    }: _*)).getField("i")
 
   /** Top-`nprobe` centroid indices for a query vector, as an array
     * column: sort the (score, index) struct array descending, slice,
@@ -398,7 +389,7 @@ object Similarity {
   /** Broadcast-table twin of [[argmaxCos]]: argmax-cosine over the
     * `_cents` array column, as ONE fused codegen node
     * (graft.functions.ArgmaxCosineOver). The superseded `transform` +
-    * `array_max` form ([[argmaxCosArrHof]], kept as the spec's
+    * `array_max` form (`KernelReference.argmaxCosArrHof`, the spec's
     * bit-identity reference) dispatched an interpreted lambda + struct
     * allocation per centroid per row (CodegenFallback), dropping the
     * whole projection out of whole-stage codegen — the flat-assignment
@@ -408,14 +399,6 @@ object Similarity {
       graft.functions.ArgmaxCosineOver(
         org.apache.spark.sql.GraftColumnBridge.expression(cents),
         org.apache.spark.sql.GraftColumnBridge.expression(v)))
-
-  /** The superseded transform/struct-max broadcast-table argmax —
-    * retained as the bit-identity REFERENCE for ArgmaxCosineSpec, not
-    * called on any query path. */
-  private[ops] def argmaxCosArrHof(cents: Column, v: Column): Column =
-    array_max(transform(cents, c =>
-      struct(cosineCol(c.getField("v"), v).as("s"), c.getField("i").as("i"))))
-      .getField("i")
 
   /** Broadcast-table twin of [[topProbes]]. */
   private def topProbesArr(cents: Column, v: Column, nprobe: Int): Column =
@@ -996,14 +979,6 @@ object Similarity {
     }
   }
 
-  /** Squared L2 between the j-th dsub-slice of a normalized vector and
-    * one codebook entry. */
-  private def sqDistSlice(vn: Column, j: Column, entry: Column, dsub: Int): Column =
-    aggregate(sequence(lit(1), lit(dsub)), lit(0.0), (acc, t) => {
-      val d = element_at(vn, j * dsub + t) - element_at(entry, t)
-      acc + d * d
-    })
-
   /** PQ code (array<int>, one entry per subspace) for a vector column:
     * per subspace, the index of the L2-nearest codebook entry of the
     * NORMALIZED vector. First-minimum tiebreak via a min-then-locate
@@ -1018,32 +993,12 @@ object Similarity {
     * for raw PQ; normalized-minus-centroid for residual IVFADC — the
     * residual must NOT be re-normalized, its magnitude IS the signal).
     * Native codegen'd ([[graft.functions.PqEncode]]) — the HOF form it
-    * replaces ([[pqEncodePreparedColHof]], the spec's bit-identity
-    * anchor) paid ~m·ks·2·dsub interpreted lambda steps per row. */
+    * replaces (`KernelReference.pqEncodePreparedColHof`, the spec's
+    * bit-identity anchor) paid ~m·ks·2·dsub interpreted lambda steps per row. */
   private[ops] def pqEncodePreparedCol(prepared: Column, cb: Array[Array[Array[Float]]]): Column =
     org.apache.spark.sql.GraftColumnBridge.column(
       graft.functions.PqEncode(
         org.apache.spark.sql.GraftColumnBridge.expression(prepared), cb))
-
-  /** The superseded higher-order-function encode — retained ONLY as the
-    * arithmetic reference [[PqFusedSpec]] pins the native expression
-    * against (least-fold, first-minimum locate, null/NaN corners). */
-  private[ops] def pqEncodePreparedColHof(prepared: Column, cb: Array[Array[Array[Float]]]): Column = {
-    val dsub = cb(0)(0).length
-    val cbL = pqLit(cb)
-    bindOnce(prepared) { vn =>
-      transform(sequence(lit(0), lit(cb.length - 1)), j => {
-        val entries = element_at(cbL, j + 1)
-        bindOnce(aggregate(entries, lit(Double.MaxValue),
-          (acc, e) => least(acc, sqDistSlice(vn, j, e, dsub)))) { minD =>
-          aggregate(sequence(lit(1), size(entries)), lit(0),
-            (acc, ci) => when(acc === 0 &&
-              sqDistSlice(vn, j, element_at(entries, ci), dsub) === minD, ci)
-              .otherwise(acc)) - 1
-        }
-      })
-    }
-  }
 
   /** `normalized − centroid` (both double arrays), the IVFADC residual. */
   private[ops] def residualCol(vn: Column, centroid: Column): Column =
@@ -1062,7 +1017,7 @@ object Similarity {
     * the corpus side. Native codegen'd expression
     * ([[graft.functions.AdcDistance]]) — this is the per-PAIR scoring
     * loop of every ADC shortlist, and the HOF form it replaces
-    * ([[adcDistColHof]], kept as the spec's bit-identity anchor) paid
+    * (`KernelReference.adcDistColHof`, the spec's bit-identity anchor) paid
     * m·dsub interpreted lambda steps per pair. */
   private[ops] def adcDistCol(qn0: Column, code0: Column,
                               cb: Array[Array[Array[Float]]]): Column =
@@ -1070,23 +1025,6 @@ object Similarity {
       graft.functions.AdcDistance(
         org.apache.spark.sql.GraftColumnBridge.expression(qn0),
         org.apache.spark.sql.GraftColumnBridge.expression(code0), cb))
-
-  /** The superseded higher-order-function ADC formulation — retained
-    * ONLY as the arithmetic reference [[PqFusedSpec]] pins the native
-    * expression against, element-order and corner cases included. */
-  private[ops] def adcDistColHof(qn0: Column, code0: Column, cbL: Column, dsub: Int): Column =
-    // both inputs bound once: even if the optimizer splices the full
-    // encode expression in place of the `code` attribute (projection
-    // collapse through the cross join), it evaluates once per pair —
-    // not once per subspace access inside the aggregate below
-    bindOnce(qn0) { qn =>
-      bindOnce(code0) { code =>
-        aggregate(sequence(lit(0), size(code) - 1), lit(0.0), (acc, j) => {
-          val entry = element_at(element_at(cbL, j + 1), element_at(code, j + 1) + 1)
-          acc + sqDistSlice(qn, j, entry, dsub)
-        })
-      }
-    }
 
   /** Two-stage PQ search against pre-encoded codes: ADC shortlist of
     * `candK` per query (RANK, not row_number — an ADC tie never drops

@@ -440,13 +440,18 @@ class FilteredAggSpec extends SparkSpec {
     assert(got == stockFirst, s"sidecar fold must equal the stock scan: $got vs $stockFirst")
     // the answer algebra: ids 200..799 → n=600, sid=Σ, aid=499.5
     assert(got(0) == 600L && got(1) == (200L to 799L).sum && got(2) == 499.5d)
-    // a file appended with AUTO-COLLECT OFF lacks sidecar rows: it
-    // must degrade to scanned (it spans the range, so it can't skip)
-    // and the answer must fold it in
-    spark.conf.set("spark.graft.aggstats.autoCollect", "false")
-    try SnapshotLog.write(Seq((500L, Some(7L), 0.5), (501L, None, 1.5))
+    // a file whose commit-time collect failed after the manifest claim
+    // (its delta dirs deleted here) lacks sidecar rows: it must degrade
+    // to scanned (it spans the range, so it can't skip) and the answer
+    // must fold it in
+    val statsDirs = Seq("v", "id")
+      .map(n => new org.apache.hadoop.fs.Path(s"$table/_aggstats/$n"))
+    val fs = statsDirs.head.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def deltas() = statsDirs.flatMap(fs.listStatus(_)).map(_.getPath).toSet
+    val beforeAppend = deltas()
+    SnapshotLog.write(Seq((500L, Some(7L), 0.5), (501L, None, 1.5))
       .toDF("id", "v", "d").coalesce(1), table, "append")
-    finally spark.conf.unset("spark.graft.aggstats.autoCollect")
+    (deltas() -- beforeAppend).foreach(fs.delete(_, true))
     val (s3, c3, n3) = counters()
     val got2 = run()
     val (s4, c4, n4) = counters()
@@ -464,7 +469,7 @@ class FilteredAggSpec extends SparkSpec {
     SnapshotLog.write(Seq((502L, Some(11L), 2.5)).toDF("id", "v", "d")
       .coalesce(1), table, "append")
     assert(SnapshotLog.collectAggStats(spark, table, "v") == 1L,
-      "only the auto-collect-off file should need the incremental collect")
+      "only the file whose deltas were deleted should need the incremental collect")
     SnapshotLog.collectAggStats(spark, table, "id")
     val (s5, c5, n5) = counters()
     val got3 = run()

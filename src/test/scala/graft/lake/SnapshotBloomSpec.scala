@@ -108,21 +108,25 @@ class SnapshotBloomSpec extends SparkSpec {
       "the 4 base files must bloom-prune after the pack")
     assert(SnapshotFileIndex.bloomUnindexedProbes.get() == u1,
       "the bin-packed output must be auto-indexed (telemetry stays flat)")
-    // escape hatch: with auto-indexing off, a new file IS unindexed and
-    // the staleness telemetry says so
-    spark.conf.set("spark.graft.bloom.autoIndex", "false")
-    try {
-      SnapshotLog.write(Seq((100002L, 4205L)).toDF("k", "u"), table, "append")
-      val u2 = SnapshotFileIndex.bloomUnindexedProbes.get()
-      assert(spark.sql("SELECT k FROM snba.t WHERE u = 4205").as[Long].collect()
-        .toSeq == Seq(100002L))
-      assert(SnapshotFileIndex.bloomUnindexedProbes.get() > u2,
-        "an unindexed probe must register in the staleness telemetry")
-    } finally spark.conf.set("spark.graft.bloom.autoIndex", "true")
+    // a commit whose maintenance failed after the manifest claim leaves
+    // its file unindexed (its delta dir missing), and the staleness
+    // telemetry says so
+    val colDir = new org.apache.hadoop.fs.Path(s"$table/_bloom/u")
+    val fs = colDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def deltas() =
+      fs.listStatus(colDir).map(_.getPath).filter(_.getName.startsWith("delta-")).toSet
+    val before = deltas()
+    SnapshotLog.write(Seq((100002L, 4205L)).toDF("k", "u"), table, "append")
+    (deltas() -- before).foreach(fs.delete(_, true))
+    val u2 = SnapshotFileIndex.bloomUnindexedProbes.get()
+    assert(spark.sql("SELECT k FROM snba.t WHERE u = 4205").as[Long].collect()
+      .toSeq == Seq(100002L))
+    assert(SnapshotFileIndex.bloomUnindexedProbes.get() > u2,
+      "an unindexed probe must register in the staleness telemetry")
   }
 
-  test("amortized auto-indexing: deferred commits batch into ONE delta build") {
-    val root = tmpDir("snapbloom_amort")
+  test("sidecar delta dirs self-compact past the threshold; probes unaffected") {
+    val root = tmpDir("snapbloom_fold")
     val table = s"$root/t"
     SnapshotLog.write((0 until 4000).map(i =>
       (i.toLong, ((i * 3571L) % 4000L) * 2L)).toDF("k", "u"),
@@ -133,64 +137,41 @@ class SnapshotBloomSpec extends SparkSpec {
     assert(java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$table/_bloom/u/_geometry")),
       "buildBloom must persist the _geometry metadata file")
-    spark.conf.set("spark.sql.catalog.snbam", classOf[SnapshotCatalog].getName)
-    spark.conf.set("spark.sql.catalog.snbam.root", root)
-    spark.conf.set("spark.graft.bloom.autoIndex.everyCommits", "3")
-    try {
-      SnapshotLog.write(Seq((200000L, 4301L)).toDF("k", "u"), table, "append")
-      SnapshotLog.write(Seq((200001L, 4303L)).toDF("k", "u"), table, "append")
-      // two deferred commits: the new files are UNINDEXED (sound — they
-      // scan, never prune) and the staleness telemetry says so
-      val u0 = SnapshotFileIndex.bloomUnindexedProbes.get()
-      assert(spark.sql("SELECT k FROM snbam.t WHERE u = 4303").as[Long].collect()
-        .toSeq == Seq(200001L))
-      assert(SnapshotFileIndex.bloomUnindexedProbes.get() > u0,
-        "deferred files must read as unindexed before the batched build")
-      // the third commit crosses everyCommits=3: ONE delta build covers
-      // all three pending files
-      SnapshotLog.write(Seq((200002L, 4305L)).toDF("k", "u"), table, "append")
-      val u1 = SnapshotFileIndex.bloomUnindexedProbes.get()
-      assert(spark.sql("SELECT k FROM snbam.t WHERE u = 4301").as[Long].collect()
-        .toSeq == Seq(200000L))
-      assert(spark.sql("SELECT k FROM snbam.t WHERE u = 4305").as[Long].collect()
-        .toSeq == Seq(200002L))
-      assert(SnapshotFileIndex.bloomUnindexedProbes.get() == u1,
-        "one batched build must cover every deferred file")
-    } finally spark.conf.unset("spark.graft.bloom.autoIndex.everyCommits")
-  }
-
-  test("sidecar delta dirs self-compact past the threshold; probes unaffected") {
-    val root = tmpDir("snapbloom_fold")
-    val table = s"$root/t"
-    SnapshotLog.write((0 until 4000).map(i =>
-      (i.toLong, ((i * 3571L) % 4000L) * 2L)).toDF("k", "u"),
-      table, "overwrite", clusterColumn = Some("k"), nFiles = 4)
-    SnapshotLog.buildBloom(spark, table, "u", expectedItemsPerFile = 2000)
+    assert(SnapshotLog.collectAggStats(spark, table, "u") == 4L)
     spark.conf.set("spark.sql.catalog.snbf", classOf[SnapshotCatalog].getName)
     spark.conf.set("spark.sql.catalog.snbf.root", root)
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def deltaDirs(): Int = fs.listStatus(
-      new org.apache.hadoop.fs.Path(s"$table/_bloom/u"))
+    val colDirs = Seq(s"$table/_bloom/u", s"$table/_aggstats/u")
+      .map(new org.apache.hadoop.fs.Path(_))
+    def deltaDirs(d: org.apache.hadoop.fs.Path): Int = fs.listStatus(d)
       .count(st => st.isDirectory && st.getPath.getName.startsWith("delta-"))
-    spark.conf.set("spark.graft.bloom.maxDeltaDirs", "3")
-    try {
-      // 6 appends: without folding that is 6 delta dirs; the threshold
-      // folds the tree back to ONE whenever the count crosses 3
-      for (i <- 0 until 6)
-        SnapshotLog.write(Seq((200000L + i, 4211L + 2 * i)).toDF("k", "u"),
-          table, "append")
-      assert(deltaDirs() <= 4, s"delta dirs must fold, got ${deltaDirs()}")
-      // every appended file still indexed: an odd probe prunes the 4
-      // base files and nothing reads unindexed
-      val u0 = SnapshotFileIndex.bloomUnindexedProbes.get()
-      val p0 = SnapshotFileIndex.bloomPrunedFiles.get()
-      assert(spark.sql("SELECT k FROM snbf.t WHERE u = 4221").as[Long].collect()
-        .toSeq == Seq(200005L))
-      assert(SnapshotFileIndex.bloomPrunedFiles.get() - p0 >= 4L)
-      assert(SnapshotFileIndex.bloomUnindexedProbes.get() == u0,
-        "folding must not lose any file's sidecar row")
-    } finally spark.conf.unset("spark.graft.bloom.maxDeltaDirs")
+    // 64 planted empty delta dirs: the threshold, reached; the next
+    // commit's delta crosses it and folds each sidecar to ONE dir
+    for (d <- colDirs; i <- 0 until 64)
+      fs.mkdirs(new org.apache.hadoop.fs.Path(d, f"delta-planted$i%02d"))
+    assert(colDirs.forall(deltaDirs(_) >= 64))
+    SnapshotLog.write(Seq((200000L, 4211L)).toDF("k", "u"), table, "append")
+    for (d <- colDirs) assert(deltaDirs(d) == 1, s"$d must fold, got ${deltaDirs(d)} delta dirs")
+    SnapshotLog.write(Seq((200001L, 4221L)).toDF("k", "u"), table, "append")
+    // every appended file still indexed: an odd probe prunes the 4
+    // base files and nothing reads unindexed
+    val u0 = SnapshotFileIndex.bloomUnindexedProbes.get()
+    val p0 = SnapshotFileIndex.bloomPrunedFiles.get()
+    assert(spark.sql("SELECT k FROM snbf.t WHERE u = 4221").as[Long].collect()
+      .toSeq == Seq(200001L))
+    assert(SnapshotFileIndex.bloomPrunedFiles.get() - p0 >= 4L)
+    assert(SnapshotFileIndex.bloomUnindexedProbes.get() == u0,
+      "folding must not lose any file's sidecar row")
+    // the SUM sidecar kept one row per live file through its fold, and
+    // its sums add up to the table's
+    val live = SnapshotLog.state(spark, table).files.size
+    val sums = SnapshotLog.aggStatsFor(spark, table, "u").get
+    assert(sums.count() == live.toLong)
+    assert(sums.agg(sum("sum_v")).as[Long].head() ==
+      SnapshotLog.read(spark, table).agg(sum("u")).as[Long].head())
+    assert(SnapshotLog.collectAggStats(spark, table, "u") == 0L,
+      "commit-time maintenance must have covered both appends")
   }
 
   test("sidecar survives ALTER TABLE RENAME TO (pool-relative re-anchor)") {

@@ -647,6 +647,26 @@ class SnapshotLogSpec extends SparkSpec {
     assert(!java.nio.file.Files.exists(crc),
       "the stale .crc must be repaired (deleted) once the body adjudicates committed")
   }
+
+  test("a version with a deleted data file fails its reads, never reads partial") {
+    val root = tmpDir("snap_missing")
+    val t = s"$root/t"
+    SnapshotLog.write((0 until 100).map(i => (i.toLong, "x")).toDF("id", "s"), t,
+      "overwrite", clusterColumn = Some("id"), nFiles = 2)
+    val files = SnapshotLog.state(spark, t).files
+    assert(files.size == 2, s"fixture expects a 2-file version, got $files")
+    val gone = new Path(t, files.head)
+    gone.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(gone, false)
+    def failsNaming(read: => Long): Unit = {
+      val e = intercept[java.io.FileNotFoundException](read)
+      assert(e.getMessage.contains(files.head), e.getMessage)
+    }
+    failsNaming(SnapshotLog.read(spark, t).count())
+    failsNaming(SnapshotLog.readPruned(spark, t, "id").count())
+    spark.conf.set("spark.sql.catalog.snmiss", classOf[SnapshotCatalog].getName)
+    spark.conf.set("spark.sql.catalog.snmiss.root", root)
+    failsNaming(spark.sql("SELECT * FROM snmiss.t").count())
+  }
 }
 
 object SnapshotLogSpec {

@@ -9,7 +9,7 @@ import org.apache.spark.sql.types._
   * ([[graft.functions.ArgmaxCosineMatrix]] /
   * [[graft.functions.ArgmaxCosineOver]]) BIT-IDENTICAL to the
   * struct-max formulations they replaced — the superseded forms are
-  * retained in [[Similarity]] (`argmaxCosHof` / `argmaxCosArrHof`) as
+  * retained in [[KernelReference]] (`argmaxCosHof` / `argmaxCosArrHof`) as
   * this spec's arithmetic reference, so any drift in accumulation
   * order, float promotion, norm hoisting, NaN ordering or the
   * larger-index tiebreak fails loudly instead of silently moving cell
@@ -40,7 +40,7 @@ class ArgmaxCosineSpec extends SparkSpec {
         Similarity.argmaxCos(cents, col("embedding")).as("c"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     val hof = emb.select(col("vec_id"),
-        Similarity.argmaxCosHof(cents, col("embedding")).as("c"))
+        KernelReference.argmaxCosHof(cents, col("embedding")).as("c"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(native.size > 100, "fixture corpus must actually exercise the assignment")
     assert(native === hof)
@@ -53,7 +53,7 @@ class ArgmaxCosineSpec extends SparkSpec {
         Similarity.argmaxCosArr(col("_cents"), col("embedding")).as("c"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     val hof = withCents.select(col("vec_id"),
-        Similarity.argmaxCosArrHof(col("_cents"), col("embedding")).as("c"))
+        KernelReference.argmaxCosArrHof(col("_cents"), col("embedding")).as("c"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(native.size > 100)
     assert(native === hof)
@@ -74,7 +74,7 @@ class ArgmaxCosineSpec extends SparkSpec {
     ).toDF("id", "v")
     val native = probes.select(col("id"), Similarity.argmaxCos(dup, col("v")).as("c"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val hof = probes.select(col("id"), Similarity.argmaxCosHof(dup, col("v")).as("c"))
+    val hof = probes.select(col("id"), KernelReference.argmaxCosHof(dup, col("v")).as("c"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(native === hof)
     assert(native(1L) == 1, "exact tie must break to the larger index (array_max order)")
@@ -102,7 +102,7 @@ class ArgmaxCosineSpec extends SparkSpec {
       probes.select(col("id"), f(col("_cents"), col("v"))).collect()
         .map(r => r.getLong(0) -> r.getInt(1)).toMap
     val native = winners(Similarity.argmaxCosArr)
-    assert(native === winners(Similarity.argmaxCosArrHof))
+    assert(native === winners(KernelReference.argmaxCosArrHof))
     assert(native === Map(1L -> 9, 2L -> 7, 3L -> 9, 4L -> 9, 5L -> 7))
   }
 
@@ -124,7 +124,7 @@ class ArgmaxCosineSpec extends SparkSpec {
       s"select cast(array() as array<struct<i int, v array<float>>>) as _cents, " +
         "cast(array(1.0, 0.0) as array<float>) as v")
     val native = empty.select(Similarity.argmaxCosArr(col("_cents"), col("v"))).head()
-    val hof = empty.select(Similarity.argmaxCosArrHof(col("_cents"), col("v"))).head()
+    val hof = empty.select(KernelReference.argmaxCosArrHof(col("_cents"), col("v"))).head()
     assert(native.isNullAt(0) && hof.isNullAt(0))
   }
 

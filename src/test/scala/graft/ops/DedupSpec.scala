@@ -992,7 +992,7 @@ class DedupSpec extends SparkSpec {
       .select(col("doc_id"), f(col("tk"), 8).as("wh"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     val native = run(Dedup.windowHashes)
-    val hof = run(Dedup.windowHashesHof)
+    val hof = run(KernelReference.windowHashesHof)
     assert(native.size > 100 && native.exists(_._2.nonEmpty))
     assert(native === hof)
     // edge cases: null text -> empty, short doc -> empty, multi-space
@@ -1004,7 +1004,7 @@ class DedupSpec extends SparkSpec {
       .select(col("doc_id"), TextAnalysis.tokensCol(col("text")).as("tk"))
     val en = edge.select(col("doc_id"), Dedup.windowHashes(col("tk"), 8).as("wh"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    val eh = edge.select(col("doc_id"), Dedup.windowHashesHof(col("tk"), 8).as("wh"))
+    val eh = edge.select(col("doc_id"), KernelReference.windowHashesHof(col("tk"), 8).as("wh"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(en === eh)
     assert(en(2L).isEmpty && en(3L).isEmpty)

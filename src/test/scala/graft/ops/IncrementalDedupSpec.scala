@@ -205,8 +205,8 @@ class IncrementalDedupSpec extends SparkSpec {
     // must fetch candidate sets from a strict subset of those files.
     // minPruneBytes dropped to 0: this table is KBs, and the
     // production threshold would (correctly) skip pruning it.
-    val savedThreshold = IncrementalDedup.minPruneBytes
-    IncrementalDedup.minPruneBytes = 0L
+    val savedThreshold = IndexRead.minPruneBytes
+    IndexRead.minPruneBytes = 0L
     try {
     val filler = (1L to 196L).map(i =>
       (i + 4, s"filler document number $i with entirely unique content token$i about topic${i % 17}"))
@@ -247,7 +247,7 @@ class IncrementalDedupSpec extends SparkSpec {
     val (compRead, compTotal) = IncrementalDedup.lastPrune.get(s"$idx/sets")
     assert(compRead < compTotal,
       s"compact must restore sets pruning ($compRead of $compTotal read)")
-    } finally IncrementalDedup.minPruneBytes = savedThreshold
+    } finally IndexRead.minPruneBytes = savedThreshold
   }
 
   test("appended files are covered by stats and pruned probes stay sound") {

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 /** Pins the native PQ expressions ([[graft.functions.PqEncode]],
   * [[graft.functions.AdcDistance]]) BIT-IDENTICAL to the
   * higher-order-function formulations they replaced — the superseded
-  * forms are retained in [[Similarity]] (`pqEncodePreparedColHof` /
-  * `adcDistColHof`) precisely as this spec's arithmetic reference, so
+  * forms are retained in [[KernelReference]] (`pqEncodePreparedColHof`
+  * / `adcDistColHof`) precisely as this spec's arithmetic reference, so
   * any drift in accumulation order, float→double promotion, tie-breaks
   * or null/NaN corners fails loudly instead of silently moving
   * `sim_pq_topk`/`sim_indexed_pq` oracle hashes. */
@@ -26,7 +26,7 @@ class PqFusedSpec extends SparkSpec {
         Similarity.pqEncodePreparedCol(prepared, cb).as("code"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
     val hof = emb.select(col("vec_id"),
-        Similarity.pqEncodePreparedColHof(prepared, cb).as("code"))
+        KernelReference.pqEncodePreparedColHof(prepared, cb).as("code"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
     assert(native.size > 100, "fixture corpus must actually exercise the encoder")
     assert(native === hof)
@@ -44,7 +44,7 @@ class PqFusedSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     val hof = pairs
       .select(col("qid"), col("vec_id"),
-        Similarity.adcDistColHof(col("_qn"), col("code"),
+        KernelReference.adcDistColHof(col("_qn"), col("code"),
           Similarity.pqLit(cb), cb(0)(0).length).as("d"))
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     assert(native.size > 500, "pair set must actually exercise the distance")
@@ -62,7 +62,7 @@ class PqFusedSpec extends SparkSpec {
       nan.select(col("id"), f(col("v"), cb).as("code"))
         .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
     val native = run(Similarity.pqEncodePreparedCol)
-    val hof = run(Similarity.pqEncodePreparedColHof)
+    val hof = run(KernelReference.pqEncodePreparedColHof)
     assert(native === hof)
     assert(native(1L).forall(_ == -1), "all-NaN vector must yield -1 codes like the HOF")
   }
@@ -87,7 +87,7 @@ class PqFusedSpec extends SparkSpec {
         emb.where(col("vec_id") < 5), "vec_id", "embedding", 5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))).toSet
     val hofCodes = emb.where(col("embedding").isNotNull)
-      .select(col("vec_id"), Similarity.pqEncodePreparedColHof(
+      .select(col("vec_id"), KernelReference.pqEncodePreparedColHof(
         Similarity.normalizedCol(col("embedding")), cb).as("code"))
     val hofOut = Similarity.pqTopKWith(cb, hofCodes, emb,
         emb.where(col("vec_id") < 5), "vec_id", "embedding", 5)
