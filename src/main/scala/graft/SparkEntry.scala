@@ -1869,7 +1869,7 @@ object SparkEntry {
       val cat = sqlBloomCatalog(s, dir)
       val u1 = (1L * 2654435761L) % 1000000000L + 1L
       val u7 = (7L * 2654435761L) % 1000000000L + 1L
-      val before = graft.lake.SnapshotFileIndex.bloomPrunedFiles.get()
+      val before = graft.lake.BloomIndex.prunedFiles.get()
       val q = s.sql(
         s"""SELECT l_orderkey, l_linenumber, l_quantity
            |FROM $cat.lineitem_u
@@ -1877,7 +1877,7 @@ object SparkEntry {
            |ORDER BY l_orderkey, l_linenumber""".stripMargin)
       q.collect() // force planning+pruning HERE so the counter reads true
       q.withColumn("bloom_pruned",
-        lit(graft.lake.SnapshotFileIndex.bloomPrunedFiles.get() > before))
+        lit(graft.lake.BloomIndex.prunedFiles.get() > before))
     }),
 
     // schema evolution: v1 appended a derived column under mergeSchema

@@ -1,6 +1,9 @@
 package graft.lake
 
 import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters.convertToScala
+import org.apache.spark.sql.catalyst.expressions.{Attribute, EqualTo, Expression, In, InSet, Literal}
+import org.apache.spark.sql.execution.datasources.PartitionDirectory
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DataType
 
@@ -171,6 +174,60 @@ object BloomIndex {
     val hit = prune(bloomStats, values).toSet
     (candidates.filter(f => !indexed.contains(f) || hit.contains(f)),
       candidates.count(f => !indexed.contains(f)))
+  }
+
+  /** Files dropped from listings by a Bloom probe ([[pruneListing]]);
+    * specs pin point-lookup pruning with it. */
+  val prunedFiles = new java.util.concurrent.atomic.AtomicLong(0L)
+  /** Probed-but-unindexed file count — the sidecar STALENESS signal:
+    * each unit is one candidate file a point probe could not test
+    * (sound, scanned anyway). Flat under commit-time sidecar
+    * maintenance; growing when it fails. */
+  val unindexedProbes = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** A Catalyst `FileIndex` listing without the files whose Bloom table
+    * proves every probe value absent: the Bloom step of both pruning
+    * indexes ([[MetastoreFileIndex]], [[SnapshotFileIndex]]). Each
+    * `=`/`IN` conjunct of `dataFilters` on a column with a table
+    * (`bloomOf`) is one probe. Files the table does not index are never
+    * dropped (may-contain: a file written after the build costs a false
+    * positive, never a lost row), and other filter shapes probe
+    * nothing. */
+  private[lake] def pruneListing(listing: Seq[PartitionDirectory], dataFilters: Seq[Expression],
+                                 label: String)(
+      bloomOf: String => Option[DataFrame]): Seq[PartitionDirectory] = {
+    val probes: Seq[(String, Seq[Any])] = dataFilters.flatMap {
+      case EqualTo(a: Attribute, l: Literal) =>
+        Some(a.name -> Seq(convertToScala(l.value, l.dataType)))
+      case EqualTo(l: Literal, a: Attribute) =>
+        Some(a.name -> Seq(convertToScala(l.value, l.dataType)))
+      case In(a: Attribute, vs) if vs.forall(_.isInstanceOf[Literal]) =>
+        Some(a.name -> vs.map { case l: Literal => convertToScala(l.value, l.dataType) })
+      case InSet(a: Attribute, vs) =>
+        Some(a.name -> vs.toSeq.map(v => convertToScala(v, a.dataType)))
+      case _ => None
+    }.filter(_._2.nonEmpty)
+    var out = listing
+    probes.foreach { case (c, values) =>
+      bloomOf(c).foreach { bloomDf =>
+        val candidates = out.flatMap(_.files.map(f => f.getPath.toString))
+        val (keepSeq, unindexed) = mayContainFilesStats(bloomDf, values, candidates)
+        val keep = keepSeq.toSet
+        val dropped = candidates.size - keep.size
+        if (dropped > 0) {
+          prunedFiles.addAndGet(dropped)
+          out = out.map(pd => pd.copy(files = pd.files.filter(f =>
+            keep.contains(f.getPath.toString))))
+        }
+        // staleness telemetry: unindexed candidates survive every probe
+        // unpruned — a growing count means sidecar maintenance stopped
+        // keeping up with ingest (SnapshotLog.appendSidecars)
+        if (unindexed > 0) unindexedProbes.addAndGet(unindexed)
+        MetastoreFileIndex.log.info(
+          s"$label[$c]: files_pruned=$dropped/${candidates.size} unindexed=$unindexed")
+      }
+    }
+    out
   }
 
   /** Zone-map ∩ Bloom pruning: the stats table bounds the CLUSTER

@@ -23,10 +23,11 @@ import org.apache.spark.sql.SparkSession
   *
   * READER visibility: between `swap.commit()` and the stats refresh the
   * live dir already holds the new files while the stats table still
-  * references the deleted old ones. Both metastore-routed readers
-  * (`Lakeshack.query`, `MetastoreFileIndex`) detect the `.cbak` marker
-  * (`underCompaction`) at planning time and fall back to scanning the
-  * live listing unpruned, so queries PLANNED inside the window succeed.
+  * references the deleted old ones. The one metastore-routed reader,
+  * `MetastoreFileIndex` (under `Lakeshack.query` too), detects the
+  * `.cbak` marker (`underCompaction`) at planning time and falls back
+  * to scanning the live listing unpruned, so queries PLANNED inside the
+  * window succeed.
   * What remains is the planning-to-execution instant: a query planned
   * just before the swap commits still resolves the old paths and can
   * FileNotFound — for that residual race the contract is the same as
@@ -38,7 +39,7 @@ import org.apache.spark.sql.SparkSession
 object Compactor {
 
   /** The swap protocol's staging/marker suffixes — ONE definition for
-    * the writer (`compact`/`recoverIfNeeded`), the reader guards
+    * the writer (`compact`/`recoverIfNeeded`), the reader guard
     * (`underCompaction`) and Vacuum's safety gate, so the naming cannot
     * drift between the side that creates markers and the sides that
     * must notice them. */
@@ -47,10 +48,11 @@ object Compactor {
 
   /** True while `dataPath` has a live swap marker (`<path>.cbak`) —
     * the window between the data swap and the stats refresh, or a
-    * crash inside it. Readers (Lakeshack.query, MetastoreFileIndex)
-    * use this to fall back to live-listing instead of resolving stale
-    * stats paths. ONE definition so the commit protocol's marker
-    * naming cannot drift apart from the readers that depend on it. */
+    * crash inside it. `MetastoreFileIndex.listFiles` probes it once per
+    * root per planning call to fall back to live-listing instead of
+    * resolving stale stats paths. ONE definition so the commit
+    * protocol's marker naming cannot drift apart from the reader that
+    * depends on it. */
   def underCompaction(fs: org.apache.hadoop.fs.FileSystem, dataPath: Path): Boolean =
     dataPath.getParent != null &&
       fs.exists(new Path(dataPath.getParent, dataPath.getName + BakSuffix))

@@ -3,8 +3,11 @@ package graft.lake
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -34,6 +37,8 @@ final case class QueryTelemetry(
     filesTotal: Long,
     filesScanned: Long,
     filesSkippedMissing: Long,
+    /** Seconds in `query`: planning, whose file listing prunes, and the
+      * missing-file probe of a tolerant query. */
     pruneSec: Double,
     nRecords: Option[Long],
     elapsedSec: Option[Double],
@@ -48,30 +53,34 @@ final case class QueryTelemetry(
       * prune counter. */
     scanFiles: Option[Long] = None)
 
-/** The retrieval engine: prune files via the Metastore, then scan only the
-  * surviving Parquet files with projection + conjunctive predicate
-  * pushdown — the Spark rebuild of `Lakeshack.query`
-  * (lakeshack/lakeshack.py:476-579). The reference's second path,
-  * `query_s3_select` (lakeshack.py:303-474), collapses into this same
-  * plan: per-file server-side filter+projection is exactly what a Spark
-  * executor task does against Parquet, so there is ONE code path.
+/** The retrieval engine: a filter, projection and limit over one
+  * relation whose file index prunes by the Metastore — the Spark
+  * rebuild of `Lakeshack.query` (lakeshack/lakeshack.py:476-579). The
+  * reference's second path, `query_s3_select` (lakeshack.py:303-474),
+  * collapses into this same plan: per-file server-side
+  * filter+projection is exactly what a Spark executor task does against
+  * Parquet, so there is ONE code path. Where the reference builds a
+  * dataset per query (lakeshack.py:550-557), the engine builds its
+  * relation once, on first use: a [[MetastoreFileIndex]] over the data
+  * path (`apply`/`fromStats`) or, with stats alone, over the files the
+  * stats name.
   *
   * Query lifecycle (SURVEY.md §3):
   *   1. normalize scalar→list input (lakeshack.py:514-515)
-  *   2. prune on the driver: the instance's [[ZoneMap]] snapshot of the
-  *      stats (collected once, on first use) → surviving file list
-  *      (metastore.py:414-481); no Spark job per query
-  *   3. scan only those files; `isin` + clause conjunction + projection are
-  *      pushed by Catalyst into the Parquet reader (row-group skipping
-  *      included), replacing pyarrow's to_batches(filter=, columns=).
-  *      The filter kept above the scan is parameterised in sessions with
-  *      `graft.GraftExtensions` ([[ParameteriseScanFilters]]): its
-  *      generated code reads the keys and clause bounds from fields of
-  *      the class, so each query shape (key count, clause operators)
-  *      compiles once per JVM and its class gets JIT-compiled, instead
-  *      of a new class, run interpreted, per key set. The pushed filters
-  *      keep the real values: Parquet's row-group and dictionary checks
-  *      compare against them.
+  *   2. plan `isin` + clause conjunction + projection over the relation.
+  *      Planning hands the pushed filters to the index's `listFiles`,
+  *      which prunes on the driver against the engine's [[ZoneMap]]
+  *      snapshot of the stats (metastore.py:414-481), then by Bloom
+  *      membership when a Bloom table is attached; no Spark job without
+  *      one. `query` reads its prune counters off the planned scan, so
+  *      `filesScanned` is the set of files the scan reads.
+  *   3. the scan reads only those files, with the filters pushed into
+  *      the Parquet reader (row-group skipping included), replacing
+  *      pyarrow's to_batches(filter=, columns=); a scan that selects no
+  *      file returns no rows, with the projected schema. The filter kept
+  *      above the scan is parameterised in sessions with
+  *      `graft.GraftExtensions` ([[ParameteriseScanFilters]]), so each
+  *      query shape (key count, clause operators) compiles once per JVM.
   *   4. limit — Spark's CollectLimit is exact and early-terminating, a
   *      strict strengthening of the reference's "≤ N + batch_size"
   *      contract (lakeshack.py:504-507).
@@ -83,42 +92,51 @@ final case class QueryTelemetry(
   * both the membership predicate and every clause — including clauses on
   * columns the metastore never indexed.
   *
-  * Snapshot lifetime: the stats are read ONCE, on the first query (or
-  * `filesTotal`), and are immutable for the instance's lifetime. Files
-  * harvested by a later `Metastore.update` are unknown to the snapshot;
-  * build a new instance after updating the stats.
+  * Snapshot lifetime: the stats are read ONCE, and the files listed
+  * once, when the relation is built (the first query, `filesTotal` or
+  * `withBloom`). A file under the data path that the stats do not know
+  * is scanned, never pruned. Build a new instance after
+  * `Metastore.update`.
   */
 class Lakeshack(spark: SparkSession, stats: DataFrame, dataSchema: Option[StructType] = None,
                 dataPath: Option[String] = None) {
 
   val clusterColumn: String = Metastore.clusterColumnOf(stats)
 
-  /** Optional per-file Bloom table over the CLUSTER column
-    * (`BloomIndex.build(..., clusterColumn, ...)`). Zone maps prune by
-    * [min,max] overlap, which collapses to "keep everything" on a
-    * table that is NOT well-clustered (every file's range spans the
-    * domain — the reference's unclustered-table failure mode,
-    * docs/source/lakeshack.rst:184-250). With a Bloom table attached,
-    * `query` intersects the zone-map survivors with Bloom membership,
-    * so point lookups stay tight even on a badly laid-out table. */
-  private var bloomStats: Option[DataFrame] = None
+  /** The engine's one relation, built on first use. `dataSchema` serves
+    * only an engine without a data path (inferred from the files when
+    * absent); a data path's relation reads the directory's schema. */
+  private lazy val table: DataFrame = dataPath match {
+    case Some(dp) => MetastoreFileIndex.table(spark, dp, stats)
+    case None => MetastoreFileIndex.overStatsFiles(spark, ZoneMap(stats), dataSchema)
+  }
 
-  /** Attach a Bloom filter table for the cluster column; returns this
-    * for chaining. */
-  def withBloom(bloom: DataFrame): Lakeshack = { bloomStats = Some(bloom); this }
+  private lazy val index: MetastoreFileIndex = MetastoreFileIndex.indexOf(table)
+
+  /** The same relation with the reader's per-file error tolerance. */
+  private lazy val tolerantTable: DataFrame = MetastoreFileIndex.withOptions(table,
+    Map("ignoreCorruptFiles" -> "true", "ignoreMissingFiles" -> "true"))
+
+  /** Attach a per-file Bloom table over the CLUSTER column
+    * (`BloomIndex.build(..., clusterColumn, ...)`) to the engine's
+    * index; returns this. Zone maps keep every file of a table that is
+    * NOT well-clustered (the reference's unclustered-table failure
+    * mode, docs/source/lakeshack.rst:184-250); Bloom membership keeps
+    * point lookups tight there. */
+  def withBloom(bloom: DataFrame): Lakeshack = {
+    index.withBloom(clusterColumn, bloom)
+    this
+  }
 
   /** Counters of the most recent `query` call (prune side immediately;
     * rows/elapsed after its DataFrame first executes). */
   @volatile var lastTelemetry: Option[QueryTelemetry] = None
 
-  /** The stats, collected once: every query prunes against it. */
-  private lazy val zoneMap: ZoneMap = ZoneMap(stats)
-
   /** Total indexed files — the prune denominator: the snapshot's size. */
-  lazy val filesTotal: Long = zoneMap.files.size
+  lazy val filesTotal: Long = index.zoneMap.files.size
 
-  /** Point/range retrieval. Returns an unexecuted DataFrame so callers
-    * can compose further operators (the host engine IS Spark).
+  /** Point/range retrieval. Returns an unexecuted, planned DataFrame so
+    * callers can compose further operators (the host engine IS Spark).
     *
     * @param values   requested cluster-column value(s)
     * @param clauses  AND-conjoined comparison clauses (6 ops, see Clause)
@@ -128,13 +146,13 @@ class Lakeshack(spark: SparkSession, stats: DataFrame, dataSchema: Option[Struct
     * @param tolerateCorrupt opt-in per-file error tolerance, mirroring
     *                 the reference's scan loop (lakeshack.py:223-230,
     *                 386-388: log-and-skip a file that errors during the
-    *                 scan). Pruned files missing on disk are dropped
-    *                 up front (logged at WARN) and files whose bytes
-    *                 fail to decode are skipped by the reader
-    *                 (`ignoreCorruptFiles`) — the query returns every
-    *                 healthy file's rows instead of failing whole. Off
-    *                 by default: silently incomplete results must be
-    *                 asked for, never handed out.
+    *                 scan). Selected files missing on disk are counted
+    *                 and logged at WARN, and the reader skips them and
+    *                 files whose bytes fail to decode
+    *                 (`ignoreMissingFiles`, `ignoreCorruptFiles`) — the
+    *                 query returns every healthy file's rows instead of
+    *                 failing whole. Off by default: silently incomplete
+    *                 results must be asked for, never handed out.
     */
   def query(values: Seq[Any],
             clauses: Seq[Clause] = Nil,
@@ -142,89 +160,42 @@ class Lakeshack(spark: SparkSession, stats: DataFrame, dataSchema: Option[Struct
             limit: Option[Int] = None,
             tolerateCorrupt: Boolean = false): DataFrame = {
     val t0 = System.nanoTime()
-    // Compaction tolerance (same contract as MetastoreFileIndex): while
-    // Compactor's `.cbak` marker is up, the stats rows reference
-    // renamed-away files, so a stats-routed file list would
-    // FileNotFound. Scan the live dir unpruned instead — the query's
-    // own filter re-applies every predicate, so the window costs
-    // pruning, never correctness. Only engines built through
-    // `Lakeshack.apply`/`fromStats` know their data path; a direct
-    // constructor caller keeps the retry/tolerateCorrupt contract.
-    dataPath.foreach { dp =>
-      val p = new org.apache.hadoop.fs.Path(dp)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (Compactor.underCompaction(fs, p)) {
-        Lakeshack.log.warn("lakeshack.query: .cbak marker present (compaction in " +
-          "flight or crashed) — scanning live files unpruned for this query")
-        val pruneSec = (System.nanoTime() - t0) / 1e9
-        // -1 sentinel (see QueryTelemetry): the stale stats count the
-        // renamed-away files and the live set is mid-swap — reporting
-        // either would match neither what was scanned nor what exists
-        val telemetry = QueryTelemetry(values.size, -1L, -1L, 0,
-          pruneSec, nRecords = None, elapsedSec = None)
-        lastTelemetry = Some(telemetry)
-        var reader = dataSchema.fold(spark.read)(s => spark.read.schema(s))
-          .option("recursiveFileLookup", "true")
-        if (tolerateCorrupt)
-          reader = reader.option("ignoreCorruptFiles", "true").option("ignoreMissingFiles", "true")
-        var df = reader.parquet(dp)
-          .where(col(clusterColumn).isin(values: _*) && Clause.conjunction(clauses))
-        df = columns.fold(df)(cs => df.select(cs.map(col): _*))
-        df = limit.fold(df)(df.limit)
-        return Lakeshack.observed(spark, this, telemetry, df)
-      }
-    }
-    val zonePruned = zoneMap.prune(values, clauses)
-    val pruned = bloomStats match {
-      // intersect with Bloom membership of the requested values — both
-      // prunes are may-contain, so the intersection is too (the scan
-      // filter below still re-applies every predicate). Files UNKNOWN
-      // to the Bloom table survive: a stale index must cost a false
-      // positive, never a lost row.
-      case Some(bloom) if values.nonEmpty =>
-        BloomIndex.mayContainFiles(bloom, values, zonePruned)
-      case _ => zonePruned
-    }
-    val (files, missing) =
-      if (!tolerateCorrupt || pruned.isEmpty) (pruned, Nil)
-      else {
-        val conf = spark.sparkContext.hadoopConfiguration
-        val (ok, gone) = pruned.partition { p =>
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(conf).exists(hp)
-        }
-        gone.foreach(p => Lakeshack.log.warn(s"lakeshack.query: skipping missing file $p"))
-        (ok, gone)
-      }
-    val pruneSec = (System.nanoTime() - t0) / 1e9
-    val telemetry = QueryTelemetry(values.size, filesTotal, files.size, missing.size,
-      pruneSec, nRecords = None, elapsedSec = None)
-    lastTelemetry = Some(telemetry)
-    Lakeshack.log.info(
-      f"lakeshack.query: n_values=${values.size} files_scanned=${files.size}/$filesTotal " +
-        f"files_pruned=${filesTotal - files.size} files_skipped_missing=${missing.size} " +
-        f"prune_sec=$pruneSec%.3f")
-
-    if (files.isEmpty) {
-      // no surviving file: empty result with the right schema — and the
-      // execution-side counters are already known
-      lastTelemetry = Some(telemetry.copy(nRecords = Some(0L), elapsedSec = Some(0.0)))
-      val schema = dataSchema.getOrElse(
-        throw new IllegalStateException("No files matched and no schema supplied for empty result"))
-      val projected = columns.map(cs => StructType(cs.map(schema(_)))).getOrElse(schema)
-      return spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), projected)
-    }
-    var reader = dataSchema.fold(spark.read)(s => spark.read.schema(s))
-    if (tolerateCorrupt)
-      // per-read options, not session confs: tolerance is scoped to THIS
-      // query. ignoreMissingFiles covers files that vanish between the
-      // exists() probe above and task execution (e.g. a racing compactor)
-      reader = reader.option("ignoreCorruptFiles", "true").option("ignoreMissingFiles", "true")
-    var df = reader.parquet(files: _*)
+    var df = (if (tolerateCorrupt) tolerantTable else table)
       .where(col(clusterColumn).isin(values: _*) && Clause.conjunction(clauses))
     df = columns.fold(df)(cs => df.select(cs.map(col): _*))
     df = limit.fold(df)(df.limit)
-    Lakeshack.observed(spark, this, telemetry, df)
+    val (name, out) = Lakeshack.observe(spark, df)
+    // planning prunes. The executed plan is a copy of the planned one
+    // that lists again when it runs: listing the executed plan here
+    // would leave its scan metrics at zero, since a run resets them
+    val files = Lakeshack.selectedFiles(out.queryExecution.sparkPlan)
+    val missing =
+      if (!tolerateCorrupt) Nil
+      else {
+        val conf = spark.sparkContext.hadoopConfiguration
+        val gone = files.filterNot(p => p.getFileSystem(conf).exists(p))
+        gone.foreach(p => Lakeshack.log.warn(s"lakeshack.query: skipping missing file $p"))
+        gone
+      }
+    val pruneSec = (System.nanoTime() - t0) / 1e9
+    // -1 sentinel (see QueryTelemetry): the stale stats count the
+    // renamed-away files and the live set is mid-swap — reporting
+    // either would match neither what was scanned nor what exists
+    val unpruned = files.nonEmpty && index.lastListingUnpruned
+    val telemetry = QueryTelemetry(values.size, if (unpruned) -1L else filesTotal,
+      if (unpruned) -1L else files.size - missing.size, missing.size,
+      pruneSec, nRecords = None, elapsedSec = None)
+    Lakeshack.log.info(
+      f"lakeshack.query: n_values=${values.size} files_scanned=${telemetry.filesScanned}/" +
+        f"${telemetry.filesTotal} files_skipped_missing=${missing.size} prune_sec=$pruneSec%.3f")
+    if (files.isEmpty)
+      // no surviving file: the execution-side counters are already known
+      lastTelemetry = Some(telemetry.copy(nRecords = Some(0L), elapsedSec = Some(0.0)))
+    else {
+      lastTelemetry = Some(telemetry)
+      Lakeshack.pending.put(name, (this, telemetry))
+    }
+    out
   }
 
   /** Scalar-input convenience, mirroring the reference's scalar→list
@@ -253,46 +224,43 @@ object Lakeshack {
   /** Wrap a query result with a named row-count observation so the
     * execution-side counters (n_records, elapsed) land in the owner's
     * `lastTelemetry` — and in the INFO log — when the lazy plan finally
-    * runs. `observe` adds a CollectMetrics node ABOVE the limit/project,
-    * so it counts exactly the rows the query returned, costs one
-    * accumulator update per row, and triggers no extra job. */
-  private def observed(spark: SparkSession, owner: Lakeshack,
-                       t: QueryTelemetry, df: DataFrame): DataFrame = {
+    * runs, once the owner puts the name in `pending`. `observe` adds a
+    * CollectMetrics node ABOVE the limit/project, so it counts exactly
+    * the rows the query returned, costs one accumulator update per row,
+    * and triggers no extra job. */
+  private def observe(spark: SparkSession, df: DataFrame): (String, DataFrame) = {
     ensureListener(spark)
     val name = s"lakeshack.query.${obsCounter.incrementAndGet()}"
-    pending.put(name, (owner, t))
-    df.observe(name, count(lit(1)).as("n_records"))
+    (name, df.observe(name, count(lit(1)).as("n_records")))
   }
 
+  /** The parquet scan nodes of a plan — descending into AQE's
+    * adaptively-executed subtree, which hides its children from the
+    * plain TreeNode walk. */
+  private def scans(plan: SparkPlan): Seq[FileSourceScanExec] = plan match {
+    case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+    // AQE materializes each stage behind a QueryStageExec whose
+    // subtree is NOT in `children`
+    case q: QueryStageExec => scans(q.plan)
+    case _: ReusedExchangeExec => Nil // already counted at its original site
+    case s: FileSourceScanExec => Seq(s)
+    case p => p.children.flatMap(scans)
+  }
+
+  /** The files the scans of a planned query select: listing them runs
+    * the file index's pruning, once per scan node. */
+  private def selectedFiles(plan: SparkPlan): Seq[Path] =
+    scans(plan).flatMap(_.selectedPartitions.filePartitionIterator.flatMap(_.files.map(_.getPath)))
+
   /** Sum (filesSize, numFiles) over every parquet scan node of an
-    * executed plan — descending into AQE's adaptively-executed subtree,
-    * which hides its children from the plain TreeNode walk. `None` when
-    * the plan has no file scan at all (e.g. an empty-relation shortcut),
-    * distinguishing "scanned zero bytes" from "nothing to measure". */
-  private def scanTotals(plan: org.apache.spark.sql.execution.SparkPlan)
-      : (Option[Long], Option[Long]) = {
-    var bytes = 0L; var files = 0L; var seen = false
-    def walk(p: org.apache.spark.sql.execution.SparkPlan): Unit = {
-      p match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          walk(a.executedPlan)
-        // AQE materializes each stage behind a QueryStageExec whose
-        // subtree is NOT in `children` — without this case an adaptive
-        // plan reports no scan at all
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          walk(q.plan)
-        case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec =>
-          () // already counted at its original site
-        case s: org.apache.spark.sql.execution.FileSourceScanExec =>
-          seen = true
-          s.metrics.get("filesSize").foreach(m => bytes += m.value)
-          s.metrics.get("numFiles").foreach(m => files += m.value)
-        case _ => ()
-      }
-      p.children.foreach(walk)
-    }
-    walk(plan)
-    if (seen) (Some(bytes), Some(files)) else (None, None)
+    * executed plan. `None` when the plan has no file scan at all (e.g.
+    * an empty-relation shortcut), distinguishing "scanned zero bytes"
+    * from "nothing to measure". */
+  private def scanTotals(plan: SparkPlan): (Option[Long], Option[Long]) = {
+    val found = scans(plan)
+    if (found.isEmpty) (None, None)
+    else (Some(found.flatMap(_.metrics.get("filesSize")).map(_.value).sum),
+      Some(found.flatMap(_.metrics.get("numFiles")).map(_.value).sum))
   }
 
   private def ensureListener(spark: SparkSession): Unit =
@@ -326,13 +294,9 @@ object Lakeshack {
   /** Build stats in one pass and return a ready-to-query engine. The
     * stats build runs once, when the engine takes its snapshot. */
   def apply(spark: SparkSession, dataPath: String, clusterColumn: String,
-            optionalColumns: Seq[String] = Nil): Lakeshack = {
-    // recursive, matching Metastore.build's discovery on nested layouts
-    val schema = spark.read.option("recursiveFileLookup", "true").parquet(dataPath).schema
-    new Lakeshack(spark,
-      Metastore.build(spark, dataPath, clusterColumn, optionalColumns),
-      Some(schema), Some(dataPath))
-  }
+            optionalColumns: Seq[String] = Nil): Lakeshack =
+    new Lakeshack(spark, Metastore.build(spark, dataPath, clusterColumn, optionalColumns),
+      dataPath = Some(dataPath))
 
   /** The steady-state path: load a PERSISTED stats table instead of
     * re-harvesting — harvest once at ingest (`Metastore.update`), then
@@ -344,7 +308,8 @@ object Lakeshack {
   def fromStats(spark: SparkSession, dataPath: String, statsPath: String,
                 clusterColumn: String, optionalColumns: Seq[String] = Nil): Lakeshack = {
     val schema = spark.read.option("recursiveFileLookup", "true").parquet(dataPath).schema
-    val stats = Metastore.loadValidated(spark, statsPath, schema, clusterColumn, optionalColumns)
-    new Lakeshack(spark, stats, Some(schema), Some(dataPath))
+    new Lakeshack(spark,
+      Metastore.loadValidated(spark, statsPath, schema, clusterColumn, optionalColumns),
+      dataPath = Some(dataPath))
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, SparkPlan}
-import org.apache.spark.sql.types.{ByteType, DataType, DateType, IntegerType, ShortType}
+import org.apache.spark.sql.types.{ByteType, DataType, DateType, DoubleType, FloatType, IntegerType, ShortType}
 
 import graft.functions.{ParamInSet, ParamLiteral}
 
@@ -24,9 +24,11 @@ import graft.functions.{ParamInSet, ParamLiteral}
   * date with a [[ParamInSet]]; the lookup workload's 8 query shapes then
   * compile 8 classes, once.
   *
-  * Only the `FilterExec` changes. The scan's `dataFilters` and pushed
-  * filters keep the real literals, so Parquet row-group and dictionary
-  * pushdown and the file indexes' pruning see the values as before.
+  * The scan's `dataFilters` and pushed filters keep the real literals,
+  * so Parquet row-group and dictionary pushdown and the file indexes'
+  * pruning see the values as before — except [[signedZeroEquality]]
+  * conjuncts, which the rule drops from the scan's data filters and
+  * leaves to the `FilterExec`.
   * Registered by `graft.GraftExtensions` as a columnar rule's
   * `preColumnarTransitions`: that runs on every physical plan, AQE or
   * not, before a `ColumnarToRowExec` separates the filter from the scan
@@ -34,8 +36,26 @@ import graft.functions.{ParamInSet, ParamLiteral}
 object ParameteriseScanFilters extends Rule[SparkPlan] {
 
   override def apply(plan: SparkPlan): SparkPlan = plan.transformUp {
-    case f @ FilterExec(condition, _: FileSourceScanExec) =>
-      f.copy(condition = parameterise(condition))
+    case FilterExec(condition, scan: FileSourceScanExec) =>
+      val pushable = scan.dataFilters.filterNot(signedZeroEquality)
+      FilterExec(parameterise(condition),
+        if (pushable.size == scan.dataFilters.size) scan else scan.copy(dataFilters = pushable))
+  }
+
+  /** True when `e` holds a float or double `=`, `<=>` or `IN` with a
+    * ±0.0 operand: a filter Parquet must not evaluate. Its dictionary
+    * filter compares by bits, so a pushed `d = -0.0` skips a row group
+    * of `0.0`s that Spark's `=` matches. */
+  private[lake] def signedZeroEquality(e: Expression): Boolean = e.exists {
+    case c @ (_: EqualTo | _: EqualNullSafe) => c.children.exists(zero)
+    case In(_, list) => list.exists(zero)
+    case InSet(child, hset) => hset.exists(v => zero(Literal(v, child.dataType)))
+    case _ => false
+  }
+
+  private def zero(e: Expression): Boolean = PartialFunction.cond(e) {
+    case Literal(v: Double, DoubleType) => v == 0.0
+    case Literal(v: Float, FloatType) => v == 0.0f
   }
 
   private def parameterise(condition: Expression): Expression = condition.transformUp {

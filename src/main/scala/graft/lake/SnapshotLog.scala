@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, InMemoryFileIndex}
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 
 /** Versioned snapshot log for a lake table — time travel, history,
@@ -472,7 +473,7 @@ object SnapshotLog {
     * Best-effort by design: the manifest claim has already landed, so
     * a failure here costs only freshness — visible in the
     * probed-but-unindexed telemetry
-    * ([[SnapshotFileIndex.bloomUnindexedProbes]]) — never the commit. */
+    * ([[BloomIndex.unindexedProbes]]) — never the commit. */
   private def appendSidecars(spark: SparkSession, fs: FileSystem,
                              root: Path, adds: Seq[String]): Unit = {
     if (adds.isEmpty) return
@@ -1971,11 +1972,13 @@ object SnapshotLog {
     *
     * EVICTION CONTRACT: the only operations that ever delete a pool
     * file are [[expire]] and [[expireOrphans]], and both evict the
-    * dropped paths from this cache (and the session `FileStatusCache`)
-    * before returning — so a stale entry for a deleted file cannot
-    * exist by construction, not merely because no retained manifest
-    * references one. (Tokens are never reused, so a future file can
-    * never take a dropped file's path either.) */
+    * dropped paths from this cache and the row-count cache
+    * ([[evictCaches]]) before returning — so a stale entry for a
+    * deleted file cannot exist by construction, not merely because no
+    * retained manifest references one. (Tokens are never reused, so a
+    * future file can never take a dropped file's path either.) No file
+    * status outlives a read (see [[knownFiles]]), so there is no status
+    * cache to evict. */
   private val footerStatsCache = java.util.Collections.synchronizedMap(
     new java.util.LinkedHashMap[String, StatsAgg.FileStats](1024, 0.75f, true) {
       override def removeEldestEntry(
@@ -2161,25 +2164,29 @@ object SnapshotLog {
   /** Manifest-fed scan over a KNOWN file list: the paths come from a
     * committed manifest, so the per-call existence probe and glob pass
     * of `spark.read.parquet(paths…)` are pure waste — this constructs
-    * the relation directly ([[MetastoreFileIndex.relation]]) over an
-    * `InMemoryFileIndex` with no pruning index. The index still lists
-    * every file once per read: `FileStatusCache.getOrCreate` hands each
-    * call a fresh client namespace, so no status survives from one
-    * read to the next. A file the listing lacks fails the read
-    * ([[SnapshotFileIndex.requireListed]]) instead of being skipped. */
+    * the relation directly ([[MetastoreFileIndex.relation]]) over the
+    * [[knownFiles]] listing, with no pruning index. */
   private[lake] def scanKnownFiles(spark: SparkSession, paths: Seq[String],
                              schema: StructType): DataFrame = {
-    import org.apache.spark.sql.execution.datasources.{FileStatusCache, InMemoryFileIndex}
     // nullable like `spark.read.schema(…)` forces: a pre-evolution file
     // legitimately lacks a later column (null-filled by the reader), and
     // a non-nullable field would make the vectorized reader REFUSE the
     // file instead
     val readSchema = StructType(schema.fields.map(relaxNullability))
+    MetastoreFileIndex.relation(spark, knownFiles(spark, paths, Some(readSchema)),
+      StructType(Nil), readSchema)
+  }
+
+  /** An `InMemoryFileIndex` over exactly `paths`, listed once per build
+    * (`FileStatusCache.getOrCreate` hands each call a fresh namespace).
+    * A file the listing lacks fails the build
+    * ([[SnapshotFileIndex.requireListed]]) instead of being skipped. */
+  private[lake] def knownFiles(spark: SparkSession, paths: Seq[String],
+                               schema: Option[StructType]): InMemoryFileIndex = {
     val idx = new InMemoryFileIndex(spark, paths.map(new Path(_)),
-      Map.empty[String, String], Some(readSchema),
-      FileStatusCache.getOrCreate(spark), None, None)
+      Map.empty[String, String], schema, FileStatusCache.getOrCreate(spark), None, None)
     SnapshotFileIndex.requireListed(idx, paths)
-    MetastoreFileIndex.relation(spark, idx, StructType(Nil), readSchema)
+    idx
   }
 
   /** Deep nullable relaxation (what DataFrameReader.schema applies). */
@@ -2605,30 +2612,22 @@ object SnapshotLog {
     dropFiles.foreach(f => fs.delete(new Path(root, f), false))
     listing.manifests.filter(_ < horizon).foreach(v => fs.delete(manifestPath(root, v), false))
     listing.checkpoints.filter(_ < horizon).foreach(v => fs.delete(checkpointPath(root, v), false))
-    evictCaches(spark, fs, root, dropFiles)
+    if (dropFiles.nonEmpty)
+      evictCaches(dropFiles.map(f => fs.makeQualified(new Path(dataRootOf(root), f)).toString).toSet)
     dropFiles
   }
 
   /** Drop every cached fact about the (just deleted) pool files — the
-    * eviction half of the footer-stats cache's contract. Targeted for
-    * the per-file caches; the session [[org.apache.spark.sql.execution
-    * .datasources.FileStatusCache]] only offers invalidateAll, which is
-    * the right blunt tool on a maintenance cadence (the next read
-    * re-lists and re-caches). */
-  private def evictCaches(spark: SparkSession, fs: FileSystem, root: Path,
-                          droppedRel: Seq[String]): Unit = {
-    if (droppedRel.isEmpty) return
-    val absSet = droppedRel.map(f =>
-      fs.makeQualified(new Path(dataRootOf(root), f)).toString).toSet
+    * eviction half of the footer-stats cache's contract: each entry of
+    * the per-file caches whose absolute file path `dropped` holds. */
+  private def evictCaches(dropped: String => Boolean): Unit = {
     def evict[V](m: java.util.Map[String, V], pathOf: String => String): Unit =
       m.synchronized {
         val it = m.keySet.iterator()
-        while (it.hasNext) if (absSet.contains(pathOf(it.next()))) it.remove()
+        while (it.hasNext) if (dropped(pathOf(it.next()))) it.remove()
       }
     evict(footerStatsCache, _.takeWhile(_ != '|'))
     evict(footerRowCountCache, identity)
-    org.apache.spark.sql.execution.datasources.FileStatusCache
-      .getOrCreate(spark).invalidateAll()
   }
 
   /** Every pool-relative file path any live branch's log references
@@ -2680,21 +2679,8 @@ object SnapshotLog {
     // same eviction contract as expire — a reclaimed token dir's files
     // must not survive in any per-file cache (prefix match: the caches
     // key by absolute file path, all under the deleted dir)
-    if (out.nonEmpty) {
-      val prefixes = out.map(d => fs.makeQualified(new Path(d)).toString + "/")
-      def evict[V](m: java.util.Map[String, V], pathOf: String => String): Unit =
-        m.synchronized {
-          val it = m.keySet.iterator()
-          while (it.hasNext) {
-            val p = pathOf(it.next())
-            if (prefixes.exists(p.startsWith)) it.remove()
-          }
-        }
-      evict(footerStatsCache, _.takeWhile(_ != '|'))
-      evict(footerRowCountCache, identity)
-      org.apache.spark.sql.execution.datasources.FileStatusCache
-        .getOrCreate(spark).invalidateAll()
-    }
+    val prefixes = out.map(d => fs.makeQualified(new Path(d)).toString + "/")
+    if (out.nonEmpty) evictCaches(p => prefixes.exists(p.startsWith))
     out
   }
 }

@@ -2,7 +2,7 @@ package graft.lake
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.FileSourceOptions
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
@@ -361,6 +361,8 @@ private[lake] class SnapshotFileIndex(
   private val colIntervals = new java.util.concurrent.ConcurrentHashMap[
     String, Map[String, (Literal, Literal)]]()
 
+  private val bloomCache = new java.util.concurrent.ConcurrentHashMap[String, Option[DataFrame]]()
+
   private def intervalsOf(c: String): Map[String, (Literal, Literal)] =
     colIntervals.computeIfAbsent(c, { c =>
       val dt = schema(c).dataType
@@ -383,66 +385,10 @@ private[lake] class SnapshotFileIndex(
     val out = ZoneMap.pruneListing(base, dataFilters, "snapshot catalog prune") { p =>
       Some(byCol.flatMap { case (c, m) => m.get(p).map(c -> _) }.toMap)
     }
-    bloomPrune(out, dataFilters)
-  }
-
-  // ── Bloom sidecar pruning (point lookups on unclustered columns) ──
-  // `=`/`IN` conjuncts on a column with a built sidecar
-  // (`SnapshotLog.buildBloom`) drop every file whose filter proves the
-  // probe values absent. Files the sidecar does not index are NEVER
-  // dropped (may-contain: a post-build file costs a false positive,
-  // never a lost row), and unknown filter shapes probe nothing.
-  private val bloomCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Option[org.apache.spark.sql.DataFrame]]()
-
-  private def bloomOf(c: String): Option[org.apache.spark.sql.DataFrame] =
-    tablePath match {
-      case None => None
-      case Some(tp) =>
-        bloomCache.computeIfAbsent(c, c => SnapshotLog.bloomFor(spark, tp, c))
+    BloomIndex.pruneListing(out, dataFilters, "snapshot bloom prune") { c =>
+      // a Bloom sidecar per column (`SnapshotLog.buildBloom`), read once
+      tablePath.flatMap(tp => bloomCache.computeIfAbsent(c, c => SnapshotLog.bloomFor(spark, tp, c)))
     }
-
-  private def bloomPrune(base: Seq[PartitionDirectory],
-                         dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    import org.apache.spark.sql.catalyst.expressions.{Attribute, EqualTo, In, InSet}
-    import org.apache.spark.sql.catalyst.CatalystTypeConverters.convertToScala
-    if (tablePath.isEmpty) return base
-    val probes: Seq[(String, Seq[Any])] = dataFilters.flatMap {
-      case EqualTo(a: Attribute, l: Literal) =>
-        Some(a.name -> Seq(convertToScala(l.value, l.dataType)))
-      case EqualTo(l: Literal, a: Attribute) =>
-        Some(a.name -> Seq(convertToScala(l.value, l.dataType)))
-      case In(a: Attribute, vs) if vs.forall(_.isInstanceOf[Literal]) =>
-        Some(a.name -> vs.map { case l: Literal => convertToScala(l.value, l.dataType) })
-      case InSet(a: Attribute, vs) =>
-        Some(a.name -> vs.toSeq.map(v => convertToScala(v, a.dataType)))
-      case _ => None
-    }.filter(_._2.nonEmpty)
-    if (probes.isEmpty) return base
-    var out = base
-    probes.foreach { case (c, values) =>
-      bloomOf(c).foreach { bloomDf =>
-        val candidates = out.flatMap(_.files.map(f => f.getPath.toString))
-        val (keepSeq, unindexed) =
-          BloomIndex.mayContainFilesStats(bloomDf, values, candidates)
-        val keep = keepSeq.toSet
-        val dropped = candidates.size - keep.size
-        if (dropped > 0) {
-          SnapshotFileIndex.bloomPrunedFiles.addAndGet(dropped)
-          out = out.map(pd => pd.copy(files = pd.files.filter(f =>
-            keep.contains(f.getPath.toString))))
-        }
-        // staleness telemetry: unindexed candidates survive every probe
-        // unpruned — a growing count means sidecar maintenance stopped
-        // keeping up with ingest (SnapshotLog.appendSidecars)
-        if (unindexed > 0)
-          SnapshotFileIndex.bloomUnindexedProbes.addAndGet(unindexed)
-        MetastoreFileIndex.log.info(
-          s"snapshot bloom prune[$c]: files_pruned=$dropped/${candidates.size} " +
-            s"unindexed=$unindexed")
-      }
-    }
-    out
   }
 }
 
@@ -463,13 +409,6 @@ object SnapshotFileIndex {
     }
   }
 
-  /** Specs pin sidecar point-lookup pruning with this counter. */
-  val bloomPrunedFiles = new java.util.concurrent.atomic.AtomicLong(0L)
-  /** Probed-but-unindexed file count — the sidecar STALENESS signal:
-    * each unit is one candidate file a point probe could not test
-    * (sound, scanned anyway). Flat under commit-time sidecar
-    * maintenance; growing when it fails. */
-  val bloomUnindexedProbes = new java.util.concurrent.atomic.AtomicLong(0L)
 }
 
 /** The clean-version scan builder: stock parquet pushdown + a scan

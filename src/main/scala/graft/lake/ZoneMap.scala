@@ -9,9 +9,9 @@ import org.apache.spark.sql.types._
 
 /** Driver-side zone maps: a one-time snapshot of a stats table's
   * per-file [min,max] intervals, and the ONE may-contain kernel every
-  * prune path evaluates against it — `Lakeshack.query`/`Metastore.prune`,
-  * the Catalyst file indexes (`MetastoreFileIndex`, `SnapshotFileIndex`)
-  * and `IndexRead.prunedRead`. Like the reference's driver-side
+  * prune path evaluates against it — `Metastore.prune`, the Catalyst
+  * file indexes (`MetastoreFileIndex`, behind `Lakeshack.query`, and
+  * `SnapshotFileIndex`) and `IndexRead.prunedRead`. Like the reference's driver-side
   * metastore lookup (lakeshack/metastore.py:414-481), no Spark job runs
   * per query: values are sorted once, each file is one binary search.
   *

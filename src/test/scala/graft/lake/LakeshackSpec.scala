@@ -124,14 +124,30 @@ class LakeshackSpec extends SparkSpec {
   }
 
   test("pruned scan equals full scan for random value sets (may-contain property)") {
+    // random keys and clauses, with and without a Bloom table: the rows
+    // of a filter over the full table, and the scan reads the files the
+    // telemetry counts. A fresh engine per query, so no async completion
+    // of an earlier query can overwrite the telemetry under test
+    val stats = Metastore.build(spark, dir, "id", Seq("timestamp")).cache()
+    val bloom = BloomIndex.build(spark, dir, "id", expectedItemsPerFile = 100L).cache()
     val rng = new scala.util.Random(99)
     val hex = "0123456789abcdef"
-    for (_ <- 1 to 5) {
+    val ops = Seq(">=", ">", "=", "==", "<", "<=")
+    for (withBloom <- Seq(false, true); _ <- 1 to 5) {
+      val engine = new Lakeshack(spark, stats, dataPath = Some(dir))
+      if (withBloom) engine.withBloom(bloom)
       val values = Seq.fill(5)(s"${hex(rng.nextInt(16))}${hex(rng.nextInt(16))}")
-      val got = shack.query(values).select("id", "x")
-      val expected = all.where(col("id").isin(values: _*)).select("id", "x")
-      assert(got.exceptAll(expected).count() === 0 && expected.exceptAll(got).count() === 0,
-        s"pruned scan diverged from full scan for $values")
+      val clauses = Seq.fill(rng.nextInt(3))(
+        if (rng.nextBoolean()) Clause("x", ops(rng.nextInt(6)), rng.nextInt(500))
+        else Clause("timestamp", ops(rng.nextInt(6)),
+          Fixtures.tsLit(NaiveTs, Fixtures.windowOf(rng.nextInt(10))._1 + rng.nextInt(86400 * 20))))
+      val df = engine.query(values, clauses)
+      val filesScanned = engine.lastTelemetry.get.filesScanned
+      val got = df.collect().map(r => (r.getAs[String]("id"), r.getAs[Int]("x"))).sorted
+      val expected = all.where(col("id").isin(values: _*) && Clause.conjunction(clauses))
+        .collect().map(r => (r.getAs[String]("id"), r.getAs[Int]("x"))).sorted
+      assert(got === expected, s"pruned scan diverged from full scan for $values $clauses")
+      assert(filesScanned === scanNumFiles(df), s"telemetry and scan disagree for $values $clauses")
     }
   }
 
@@ -164,9 +180,13 @@ class LakeshackSpec extends SparkSpec {
 
   test("tolerateCorrupt drops a missing pruned file (logged, counted)") {
     val d = tmpDir("ls_missing")
+    val statsPath = tmpDir("ls_missing_stats")
     Fixtures.generate(spark, d, NaiveTs, nFiles = 4)
-    val s = Lakeshack(spark, d, "id", Seq("timestamp"))
-    assert(s.filesTotal === 4) // materialize stats before deleting (see above)
+    Metastore.update(spark, statsPath, Metastore.build(spark, d, "id", Seq("timestamp")))
+    // an engine over the data path, and one over the files the stats name
+    val engines = Seq(Lakeshack.fromStats(spark, d, statsPath, "id", Seq("timestamp")),
+      new Lakeshack(spark, Metastore.load(spark, statsPath)))
+    engines.foreach(s => assert(s.filesTotal === 4)) // build both before deleting (see above)
     val allIds = spark.read.parquet(d).select("id").distinct()
       .collect().map(_.getString(0)).toSeq
     val files = new java.io.File(d).listFiles()
@@ -174,10 +194,19 @@ class LakeshackSpec extends SparkSpec {
     java.nio.file.Files.delete(files.head)
     val healthy = files.tail.map(_.toString)
     val expected = spark.read.parquet(healthy: _*).count()
-    assert(s.query(allIds, tolerateCorrupt = true).count() === expected)
-    val t = s.lastTelemetry.get
-    assert(t.filesSkippedMissing === 1)
-    assert(t.filesScanned === 3)
+    for (s <- engines) {
+      // default: the missing file fails the query
+      intercept[org.apache.spark.SparkException](s.query(allIds).collect())
+      assert(s.query(allIds, tolerateCorrupt = true).collect().length === expected)
+      val t = s.lastTelemetry.get
+      assert(t.filesSkippedMissing === 1)
+      assert(t.filesScanned === 3)
+    }
+    // built after the deletion, an engine over the stats' files refuses
+    // to read partial
+    intercept[java.io.FileNotFoundException] {
+      new Lakeshack(spark, Metastore.load(spark, statsPath)).query(allIds)
+    }
   }
 
   test("query telemetry reports prune counters and, after execution, rows + elapsed") {
@@ -300,11 +329,12 @@ class LakeshackSpec extends SparkSpec {
   private lazy val lineitemRows = spark.range(0, 6000).selectExpr("id % 1500 as l_orderkey",
     "date_add(date'2000-01-01', cast(id div 1500 * 25 + id % 13 as int)) as l_shipdate",
     "id as l_linenumber")
-  private lazy val lineitem: Lakeshack = {
+  private lazy val lineitemDir: String = {
     val out = tmpDir("ls_lineitem")
     ClusteredWriter.write(lineitemRows, out, "l_orderkey", nFiles = 8)
-    Lakeshack(spark, out, "l_orderkey", Seq("l_shipdate"))
+    out
   }
+  private lazy val lineitem: Lakeshack = Lakeshack(spark, lineitemDir, "l_orderkey", Seq("l_shipdate"))
 
   private def shipFloor(d: String) = Clause("l_shipdate", ">=", java.sql.Date.valueOf(d))
 
@@ -345,5 +375,36 @@ class LakeshackSpec extends SparkSpec {
     assert(filter.collect { case l: Literal => l }.isEmpty, filter)
     // the plan reads as before: the ParamLiterals render their values
     assert(plan.toString.contains("l_orderkey#") && plan.toString.contains("IN (5,6)"), plan)
+  }
+
+  /** Σ numFiles over the parquet scans of a DataFrame's executed plan. */
+  private def scanNumFiles(df: org.apache.spark.sql.DataFrame): Long =
+    new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(df.queryExecution.executedPlan) {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec => s.metrics("numFiles").value
+      }.sum
+
+  test("a second query of the same shape lists no file") {
+    import org.apache.spark.metrics.source.HiveCatalogMetrics
+    val own = Lakeshack(spark, lineitemDir, "l_orderkey", Seq("l_shipdate"))
+    assert(own.query(Seq(5L, 900L), Seq(shipFloor("2000-01-08"))).collect().nonEmpty)
+    val before = HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount
+    val got = own.query(Seq(17L, 1201L), Seq(shipFloor("2000-02-20"))).collect()
+    assert(HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount - before === 0,
+      "the engine's relation lists its files once, not per query")
+    assert(got.nonEmpty)
+  }
+
+  test("a file under the data path that the stats do not know is scanned") {
+    import spark.implicits._
+    val root = tmpDir("ls_unknown")
+    val (d, statsPath) = (s"$root/t", s"$root/stats")
+    (0L until 100L).map(k => (k, s"p$k")).toDF("k", "payload").coalesce(1).write.parquet(d)
+    Metastore.update(spark, statsPath, Metastore.buildFromFooters(spark, d, "k"))
+    Seq((500L, "late")).toDF("k", "payload").coalesce(1).write.mode("append").parquet(d)
+    val s = Lakeshack.fromStats(spark, d, statsPath, "k")
+    assert(s.queryOne(500L).select("payload").collect().map(_.getString(0)).toSeq === Seq("late"))
+    assert(s.filesTotal === 1)
+    assert(s.lastTelemetry.get.filesScanned === 1, "the known file prunes, the unknown one is read")
   }
 }

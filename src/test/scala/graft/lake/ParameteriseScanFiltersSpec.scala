@@ -42,6 +42,43 @@ class ParameteriseScanFiltersSpec extends SparkSpec {
       "the 20-key isin is an InSet over int: the filter must hold a ParamInSet")
   }
 
+  test("float and double equality at ±0.0 keeps its rows through Lakeshack.query, readPruned and SQL") {
+    import spark.implicits._
+    // one file holds 0.0 twice (ids 1, 2), the other only -0.0 (id 3):
+    // Parquet's dictionary filter compares doubles by their bits, so a
+    // pushed `= -0.0` drops the first file and a pushed `= 0.0` the second
+    val root = tmpDir("signed_zero")
+    val (plain, snap) = (s"$root/plain", s"$root/snap/t")
+    val fileA = Seq((1, 0.0, 0.0f), (2, 0.0, 0.0f)).toDF("id", "d", "f")
+    val fileB = Seq((3, -0.0, -0.0f)).toDF("id", "d", "f")
+    fileA.coalesce(1).write.parquet(plain)
+    fileB.coalesce(1).write.mode("append").parquet(plain)
+    SnapshotLog.write(fileA, snap, "overwrite", nFiles = 1)
+    SnapshotLog.write(fileB, snap, "append", nFiles = 1)
+    spark.conf.set("spark.sql.catalog.signedzero", classOf[SnapshotCatalog].getName)
+    spark.conf.set("spark.sql.catalog.signedzero.root", s"$root/snap")
+    val shack = Lakeshack(spark, plain, "d", Seq("f"))
+    def idsOf(df: DataFrame): Set[Int] = df.select("id").collect().map(_.getInt(0)).toSet
+    val everyRow = Set(1, 2, 3)
+    // SQL folds the literal -0.0 to 0.0: the casts of a string keep the sign
+    for ((sql, c, keys) <- Seq(
+        ("d = CAST('-0.0' AS DOUBLE)", col("d") === -0.0, Seq(-0.0)),
+        ("d IN (CAST('-0.0' AS DOUBLE), 2.5)", col("d").isin(-0.0, 2.5), Seq(-0.0, 2.5)),
+        ("d = 0.0", col("d") === 0.0, Seq(0.0)),
+        ("f = CAST('-0.0' AS FLOAT)", col("f") === lit(-0.0f), Nil),
+        ("f IN (CAST('-0.0' AS FLOAT), CAST(2.5 AS FLOAT))", col("f").isin(-0.0f, 2.5f), Nil),
+        ("f = CAST(0.0 AS FLOAT)", col("f") === lit(0.0f), Nil))) {
+      val viaQuery =
+        if (keys.nonEmpty) shack.query(keys)
+        else shack.query(Seq(0.0), Seq(Clause("f", "=", if (sql.contains("-0.0")) -0.0f else 0.0f)))
+      if (!sql.startsWith("f IN")) assert(idsOf(viaQuery) === everyRow, s"Lakeshack.query: $sql")
+      assert(idsOf(SnapshotLog.readPruned(spark, snap, "d", Seq("f")).where(c)) === everyRow,
+        s"readPruned: $sql")
+      assert(idsOf(spark.sql(s"SELECT id FROM signedzero.t WHERE $sql")) === everyRow, s"SQL: $sql")
+      assert(idsOf(spark.read.parquet(plain).where(c)) === everyRow, s"parquet: $sql")
+    }
+  }
+
   test("differential: parameterised Parquet filter == local-relation filter, every primitive type") {
     val seen = scala.collection.mutable.Map[String, Int]().withDefaultValue(0)
     val prop = Prop.forAllNoShrink(tableGen, Gen.listOfN(Columns.size,
@@ -75,16 +112,10 @@ class ParameteriseScanFiltersSpec extends SparkSpec {
       }
       Prop(failures.isEmpty) :| failures.mkString("; ")
     }
-    // Parquet's own filter pushdown drops the 0.0 rows of `f = -0.0` and
-    // `d = -0.0` in the reader, before any filter runs (the rule leaves
-    // pushed filters as they are): the property pins the rule's filter,
-    // so the scan pushes nothing
-    val result =
-      try {
-        spark.conf.set("spark.sql.parquet.filterPushdown", "false")
-        Check.check(Check.Parameters.default
-          .withMinSuccessfulTests(20).withInitialSeed(Seed(20261019L)).withWorkers(1), prop)
-      } finally spark.conf.unset("spark.sql.parquet.filterPushdown")
+    // Parquet filter pushdown stays on (the session default): the pushed
+    // filters and the parameterised filter above them must agree
+    val result = Check.check(Check.Parameters.default
+      .withMinSuccessfulTests(20).withInitialSeed(Seed(20261019L)).withWorkers(1), prop)
     assert(result.passed, Pretty.pretty(result))
     info(s"predicates by operator: $seen")
     for (op <- Ops) assert(seen(op) > 5, s"too few $op predicates: $seen")

@@ -94,8 +94,8 @@ class ReadPrunedSqlParitySpec extends SparkSpec {
   }
 
   test("an = on a column with a built Bloom sidecar") {
-    val before = SnapshotFileIndex.bloomPrunedFiles.get()
+    val before = BloomIndex.prunedFiles.get()
     same(Some(0L), "u = 123", col("u") === 123L)
-    assert(SnapshotFileIndex.bloomPrunedFiles.get() > before, "the sidecar pruned nothing")
+    assert(BloomIndex.prunedFiles.get() > before, "the sidecar pruned nothing")
   }
 }

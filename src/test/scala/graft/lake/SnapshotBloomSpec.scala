@@ -25,10 +25,10 @@ class SnapshotBloomSpec extends SparkSpec {
     val indexed = spark.sql(
       "CALL snb.system.build_bloom('t', 'u', expected_items => 2000)").as[Long].head()
     assert(indexed == 8L)
-    val before = SnapshotFileIndex.bloomPrunedFiles.get()
+    val before = BloomIndex.prunedFiles.get()
     val hit = spark.sql("SELECT k, s FROM snb.t WHERE u = 4242").as[(Long, String)].collect()
     assert(hit.length == 1)
-    val prunedOnce = SnapshotFileIndex.bloomPrunedFiles.get() - before
+    val prunedOnce = BloomIndex.prunedFiles.get() - before
     assert(prunedOnce >= 5, s"expected most of 8 files bloom-pruned, got $prunedOnce")
     // IN-list probes prune too, and return exactly the right rows
     val rows = spark.sql("SELECT u FROM snb.t WHERE u IN (1, 4242, 7999)")
@@ -54,10 +54,10 @@ class SnapshotBloomSpec extends SparkSpec {
     SnapshotLog.delete(spark, table, col("k") === 7L) // head carries a DV
     spark.conf.set("spark.sql.catalog.snbd", classOf[SnapshotCatalog].getName)
     spark.conf.set("spark.sql.catalog.snbd.root", root)
-    val before = SnapshotFileIndex.bloomPrunedFiles.get()
+    val before = BloomIndex.prunedFiles.get()
     val n = spark.sql("SELECT count(*) FROM snbd.t WHERE u = 123").as[Long].head()
     assert(n == 1L)
-    assert(SnapshotFileIndex.bloomPrunedFiles.get() > before,
+    assert(BloomIndex.prunedFiles.get() > before,
       "vectorized DV read did not bloom-prune")
     // the DV-deleted row stays dead even when its file bloom-matches
     val deadU = (7 * 3571) % 4000
@@ -81,17 +81,17 @@ class SnapshotBloomSpec extends SparkSpec {
     // scanned on every probe)
     SnapshotLog.write(Seq((100000L, 4201L)).toDF("k", "u"), table, "append")
     SnapshotLog.write(Seq((100001L, 4203L)).toDF("k", "u"), table, "append")
-    val p0 = SnapshotFileIndex.bloomPrunedFiles.get()
-    val u0 = SnapshotFileIndex.bloomUnindexedProbes.get()
+    val p0 = BloomIndex.prunedFiles.get()
+    val u0 = BloomIndex.unindexedProbes.get()
     // probe an odd value living ONLY in one appended file: the 4 base
     // files bloom-prune (it is absent from them; their zone maps span
     // it, so only the bloom can drop them) and ZERO candidates read as
     // unindexed — proof the appended files carry sidecar rows
     assert(spark.sql("SELECT k FROM snba.t WHERE u = 4203").as[Long].collect()
       .toSeq == Seq(100001L))
-    assert(SnapshotFileIndex.bloomPrunedFiles.get() - p0 >= 4L,
+    assert(BloomIndex.prunedFiles.get() - p0 >= 4L,
       "the 4 base files must bloom-prune for an absent odd probe")
-    assert(SnapshotFileIndex.bloomUnindexedProbes.get() == u0,
+    assert(BloomIndex.unindexedProbes.get() == u0,
       "no probed file may be unindexed after auto-maintenance")
     // bin-pack folds the crumbs into a NEW file — its commit must
     // auto-index the packed output too
@@ -100,13 +100,13 @@ class SnapshotBloomSpec extends SparkSpec {
     val v = SnapshotLog.compactBin(spark, table, targetBytes = 64L * 1024 * 1024,
       smallBytes = 4096L)
     assert(v > 2L, "compactBin must have committed")
-    val p1 = SnapshotFileIndex.bloomPrunedFiles.get()
-    val u1 = SnapshotFileIndex.bloomUnindexedProbes.get()
+    val p1 = BloomIndex.prunedFiles.get()
+    val u1 = BloomIndex.unindexedProbes.get()
     assert(spark.sql("SELECT k FROM snba.t WHERE u = 4201").as[Long].collect()
       .toSeq == Seq(100000L))
-    assert(SnapshotFileIndex.bloomPrunedFiles.get() - p1 >= 4L,
+    assert(BloomIndex.prunedFiles.get() - p1 >= 4L,
       "the 4 base files must bloom-prune after the pack")
-    assert(SnapshotFileIndex.bloomUnindexedProbes.get() == u1,
+    assert(BloomIndex.unindexedProbes.get() == u1,
       "the bin-packed output must be auto-indexed (telemetry stays flat)")
     // a commit whose maintenance failed after the manifest claim leaves
     // its file unindexed (its delta dir missing), and the staleness
@@ -118,10 +118,10 @@ class SnapshotBloomSpec extends SparkSpec {
     val before = deltas()
     SnapshotLog.write(Seq((100002L, 4205L)).toDF("k", "u"), table, "append")
     (deltas() -- before).foreach(fs.delete(_, true))
-    val u2 = SnapshotFileIndex.bloomUnindexedProbes.get()
+    val u2 = BloomIndex.unindexedProbes.get()
     assert(spark.sql("SELECT k FROM snba.t WHERE u = 4205").as[Long].collect()
       .toSeq == Seq(100002L))
-    assert(SnapshotFileIndex.bloomUnindexedProbes.get() > u2,
+    assert(BloomIndex.unindexedProbes.get() > u2,
       "an unindexed probe must register in the staleness telemetry")
   }
 
@@ -156,12 +156,12 @@ class SnapshotBloomSpec extends SparkSpec {
     SnapshotLog.write(Seq((200001L, 4221L)).toDF("k", "u"), table, "append")
     // every appended file still indexed: an odd probe prunes the 4
     // base files and nothing reads unindexed
-    val u0 = SnapshotFileIndex.bloomUnindexedProbes.get()
-    val p0 = SnapshotFileIndex.bloomPrunedFiles.get()
+    val u0 = BloomIndex.unindexedProbes.get()
+    val p0 = BloomIndex.prunedFiles.get()
     assert(spark.sql("SELECT k FROM snbf.t WHERE u = 4221").as[Long].collect()
       .toSeq == Seq(200001L))
-    assert(SnapshotFileIndex.bloomPrunedFiles.get() - p0 >= 4L)
-    assert(SnapshotFileIndex.bloomUnindexedProbes.get() == u0,
+    assert(BloomIndex.prunedFiles.get() - p0 >= 4L)
+    assert(BloomIndex.unindexedProbes.get() == u0,
       "folding must not lose any file's sidecar row")
     // the SUM sidecar kept one row per live file through its fold, and
     // its sums add up to the table's
@@ -182,12 +182,12 @@ class SnapshotBloomSpec extends SparkSpec {
       .toDF("k", "u"), s"$root/t", "overwrite", clusterColumn = Some("k"), nFiles = 4)
     SnapshotLog.buildBloom(spark, s"$root/t", "u", expectedItemsPerFile = 2000)
     spark.sql("ALTER TABLE snbm.t RENAME TO t2")
-    val before = SnapshotFileIndex.bloomPrunedFiles.get()
+    val before = BloomIndex.prunedFiles.get()
     assert(spark.sql("SELECT count(*) FROM snbm.t2 WHERE u = 123").as[Long].head() == 1L)
     // >= 3: a planning pass may invoke listFiles more than once, each
     // pass pruning the same 3-of-4 — the claim is that pruning happens
     // at all post-rename, which the re-anchor alone makes possible
-    assert(SnapshotFileIndex.bloomPrunedFiles.get() - before >= 3L,
+    assert(BloomIndex.prunedFiles.get() - before >= 3L,
       "sidecar keys must re-anchor at the renamed root (3 of 4 files pruned)")
   }
 }

@@ -52,7 +52,7 @@ CATEGORIES = [
     ("pair kernel", ["graft.ops.PairKernel", "graft.functions.PairsInBucket"]),
     # driver-side costs paid per query: the ASM ClassReader and ZipFile
     # leaf frames of closure cleaning, and the Hadoop-conf copy plus the
-    # InMemoryFileIndex listing of `spark.read.parquet(files: _*)`
+    # InMemoryFileIndex listing of a `spark.read.parquet(...)`
     ("closure cleaning (ClosureCleaner)", ["ClosureCleaner"]),
     ("data source resolution (DataSource.resolveRelation)", ["DataSource.resolveRelation"]),
     ("codegen (Janino)", ["org.codehaus.janino", "org.codehaus.commons", "CodeGenerator"]),
@@ -66,6 +66,10 @@ CATEGORIES = [
     ("hash aggregate map", ["UnsafeFixedWidthAggregationMap", "BytesToBytesMap",
                             "ObjectAggregationMap"]),
     ("sorted-group walk (MapGroups)", ["MapGroupsExec", "GroupedIterator"]),
+    # Parquet's writer frames also sit under `parquet` packages: match
+    # them first, or every write sample counts as a read
+    ("parquet write", ["ParquetOutputWriter", "InternalParquetRecordWriter", "ColumnWriter",
+                       "ValuesWriter"]),
     ("parquet read", ["parquet"]),
     ("noop write", ["NoopWriter"]),
     ("planning (Catalyst)", ["catalyst.rules.RuleExecutor", "QueryPlanner",
