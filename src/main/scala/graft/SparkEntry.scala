@@ -1056,8 +1056,7 @@ object SparkEntry {
         .select(col("doc_id"), TextAnalysis.tokensCol(col("text")).as("_tk"))
         .select(col("doc_id"),
           md5(array_join(col("_tk"), " ")).as("content_md5"),
-          sort_array(array_distinct(
-            Dedup.shingleHashes(col("_tk"), 3))).as("sh_set"))
+          Dedup.shingleSet(Dedup.shingleHashes(col("_tk"), 3)).as("sh_set"))
         .persist()
     }
 

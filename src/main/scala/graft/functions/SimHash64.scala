@@ -27,7 +27,7 @@ import org.apache.spark.sql.types._
   * `XXH64.hashUTF8String` the `xxhash64()` function dispatches to —
   * and a null token contributes the seed itself, exactly like
   * `xxhash64(null)`. Pinned against a DataFrame recomputation in
-  * SimHashFusedSpec; `dedup_simhash`'s oracle hash is unchanged.
+  * FusedFingerprintSpec; `dedup_simhash`'s oracle hash is unchanged.
   */
 case class SimHash64(child: Expression) extends UnaryExpression {
 

@@ -152,7 +152,8 @@ object Dedup {
       .select(col("doc"),
         org.apache.spark.sql.GraftColumnBridge.column(
           graft.functions.MinHashSignature(
-            org.apache.spark.sql.GraftColumnBridge.expression(col("_shs")), numHashes))
+            org.apache.spark.sql.GraftColumnBridge.expression(col("_shs")), numHashes,
+            preHashed = true))
           .as("sig"))
     // banding in a typed flatMap: same XXH64 fold as MinHashBandBuckets
     // (hashInt(b, 42) seed, hashLong over the band's r slot-mins); a
@@ -294,42 +295,49 @@ object Dedup {
         posexplode(org.apache.spark.sql.GraftColumnBridge.column(
           graft.functions.MinHashBandBuckets(
             org.apache.spark.sql.GraftColumnBridge.expression(col("_shs")),
-            numHashes, bands))).as(Seq("band", "bucket")))
+            numHashes, bands, preHashed = true))).as(Seq("band", "bucket")))
   }
 
+  /** The shingle-hash SET of a shingle-hash array: its distinct values,
+    * ascending, by the native [[graft.functions.SortedDistinct]] kernel
+    * (one primitive sort and one adjacent-duplicate pass; equal to
+    * `sort_array(array_distinct(hashes))`, property-pinned). The one set
+    * builder: [[shingleSets]], [[postingsAndSets]] and the scorecard's
+    * planted sets all call it, so sets built anywhere, or persisted by
+    * [[IncrementalDedup]], compare equal. */
+  private[graft] def shingleSet(hashes: Column): Column =
+    org.apache.spark.sql.GraftColumnBridge.column(graft.functions.SortedDistinct(
+      org.apache.spark.sql.GraftColumnBridge.expression(hashes)))
+
   /** The canonical per-doc shingle-hash SET frame every exact-Jaccard
-    * stage here consumes: one row per doc, `(doc, sh_set)` where
-    * `sh_set` is the SORTED distinct 64-bit shingle hashes (sorted so
-    * the same frame serves prefix filtering, whose theorem needs a
-    * global order). `sort_array` sorts the primitive longs directly;
-    * `array_sort`'s default comparator is an interpreted lambda per
-    * comparison, and gives the same ascending order here because the
-    * sets hold no nulls (spec-pinned in DedupSpec). Deriving this is a
-    * whole corpus pass (tokenize, shingle-hash, distinct, sort) —
-    * callers running several exact-Jaccard pipelines over one corpus
-    * should build it once, `persist()` it (long arrays round-trip
-    * Spark's columnar cache cheaply, the opposite of text — see the
-    * embedding-corpus note), and hand it to the `...OnSets` variants
-    * below. */
+    * stage here consumes: one row per doc, `(doc, sh_set)`, where
+    * `sh_set` is the doc's [[shingleSet]] of its n-token
+    * [[shingleHashes]] — distinct and ascending, so the same frame
+    * serves the merge of [[verifiedJaccardOnSets]] and prefix filtering,
+    * whose theorem needs a global order. A doc with no tokens has the
+    * empty set. Deriving this is a whole-corpus pass (tokenize,
+    * shingle-hash, sort); callers running several exact-Jaccard
+    * pipelines over one corpus should build it once, `persist()` it
+    * (long arrays round-trip Spark's columnar cache cheaply, the
+    * opposite of text — see the embedding-corpus note), and hand it to
+    * the `...OnSets` variants below. */
   def shingleSets(df: DataFrame, idCol: String, textCol: String,
                   n: Int = 3): DataFrame = df
     .select(col(idCol).as("doc"), TextAnalysis.tokensCol(col(textCol)).as("_tk"))
-    .select(col("doc"),
-      sort_array(array_distinct(shingleHashes(col("_tk"), n))).as("sh_set"))
+    .select(col("doc"), shingleSet(shingleHashes(col("_tk"), n)).as("sh_set"))
 
   /** ONE batch pass feeding BOTH probe stages of [[IncrementalDedup]]:
-    * per doc, the LSH band-bucket postings AND the sorted distinct
-    * shingle-hash set, from a single tokenize+shingle derivation —
-    * `(doc, sh_set, _buckets)`. Separately deriving [[minhashBuckets]]
-    * and [[shingleSets]] tokenized and shingled the same batch text
-    * twice (~40% of the warm incremental-probe cost at sf0.1, measured
-    * with the regex tokenizer); the shingle array is [[bindOnce]]-bound so both
-    * outputs read ONE evaluation (a plain double reference re-runs the
-    * pipeline per reference — the CollapseProject/lambda-splice trap
-    * documented at [[minhashCandidates]]). Output columns are
-    * bit-identical to the two separate builders' (spec-pinned in
-    * IncrementalDedupSpec): posexplode(_buckets) IS minhashBuckets'
-    * row set, (doc, sh_set) IS shingleSets'. */
+    * per doc, the LSH band-bucket postings AND the shingle-hash set, from
+    * a single tokenize+shingle derivation — `(doc, sh_set, _buckets)`.
+    * The shingle-hash array is [[bindOnce]]-bound, so the set kernel and
+    * [[graft.functions.MinHashBandBuckets]] read ONE evaluation (a plain
+    * double reference re-runs the pipeline per reference — the
+    * CollapseProject trap documented at [[minhashCandidates]]); deriving
+    * [[minhashBuckets]] and [[shingleSets]] separately tokenized and
+    * shingled the batch twice. Output columns are bit-identical to the
+    * two separate builders' (spec-pinned in IncrementalDedupSpec):
+    * posexplode(_buckets) IS minhashBuckets' row set, (doc, sh_set) IS
+    * shingleSets'. */
   private[ops] def postingsAndSets(df: DataFrame, idCol: String, textCol: String,
                                    numHashes: Int, bands: Int,
                                    shingleSize: Int): DataFrame = {
@@ -338,11 +346,11 @@ object Dedup {
       .select(col("doc"),
         bindOnce(shingleHashes(col("_tk"), shingleSize)) { shs =>
           struct(
-            sort_array(array_distinct(shs)).as("sh_set"),
+            shingleSet(shs).as("sh_set"),
             org.apache.spark.sql.GraftColumnBridge.column(
               graft.functions.MinHashBandBuckets(
                 org.apache.spark.sql.GraftColumnBridge.expression(shs),
-                numHashes, bands)).as("_buckets"))
+                numHashes, bands, preHashed = true)).as("_buckets"))
         }.as("_ps"))
       .select(col("doc"), col("_ps")("sh_set").as("sh_set"),
         col("_ps")("_buckets").as("_buckets"))
@@ -354,28 +362,38 @@ object Dedup {
     * matches `ngramJaccard` exactly: (doc_a, doc_b, n_common, jaccard),
     * filtered to `jaccard >= threshold`.
     *
-    * Scale shape: per-doc DISTINCT shingle-hash sets travel as one
-    * `array<long>` row per doc (proportional to the text itself, the
-    * same bytes a scan already moves), joined to the pair list twice;
-    * the intersection is a codegen'd `array_intersect` per pair. Work is
-    * O(candidate pairs · doc length) — the candidate generator's job is
-    * to keep the pair count near-linear, and `maxBucket` already
-    * enforces that. */
+    * Derives the corpus's [[shingleSets]] and verifies on them with
+    * [[verifiedJaccardOnSets]]: per-doc sets travel as one
+    * `array<bigint>` row per doc (proportional to the text itself, the
+    * same bytes a scan already moves), and each pair costs one linear
+    * merge of its two sorted sets. Work is O(candidate pairs · doc
+    * length) — the candidate generator's job is to keep the pair count
+    * near-linear, and `maxBucket` already enforces that. */
   def verifiedJaccard(df: DataFrame, pairs: DataFrame, idCol: String,
                       textCol: String, n: Int = 3,
                       threshold: Double = 0.5): DataFrame =
     verifiedJaccardOnSets(shingleSets(df, idCol, textCol, n), pairs, threshold)
 
   /** Verification core over PRECOMPUTED shingle-hash sets (first column
-    * id, second the set array — [[shingleSets]]' shape) — shared by
-    * `verifiedJaccard` (which derives the sets from text),
+    * id, second the `array<bigint>` set — [[shingleSets]]' shape) —
+    * shared by `verifiedJaccard` (which derives the sets from text),
     * `ngramJaccardPrefix` (which already built them for its prefixes),
     * and callers amortizing ONE persisted set frame across several
     * pipelines (re-deriving per pipeline would repeat the
-    * tokenize+shingle corpus pass — the r7 bench regression on the
-    * anchored dedup queries was exactly that).
-    * `array_intersect` is order-insensitive, so sorted and unsorted set
-    * arrays both work. */
+    * tokenize+shingle corpus pass).
+    *
+    * Each pair is scored by the native [[graft.functions.SetOverlap]]
+    * kernel: a linear merge of two sorted distinct sets, and for any
+    * other array (unsorted, duplicates, nulls) exactly what
+    * `size(array_intersect(a, b))` counts, so sorted and unsorted set
+    * arrays both work. The filter evaluates the kernel's Jaccard once
+    * per candidate pair; `n_common` and `jaccard` are computed only for
+    * the pairs that pass, and `jaccard` is bit-identical to
+    * `n_common.cast(double) / (size(a) + size(b) - n_common)` over the
+    * raw array sizes. A pair of two empty sets divides by zero: under
+    * ANSI mode the query fails with DIVIDE_BY_ZERO, otherwise the pair
+    * is dropped (its Jaccard is null), as Spark's own division does. A
+    * pair with a set-less side is dropped. */
   def verifiedJaccardOnSets(sets0: DataFrame, pairs: DataFrame,
                             threshold: Double): DataFrame = {
     val sets = sets0.toDF("_vid", "_shs")
@@ -396,8 +414,11 @@ object Dedup {
     // ngramJaccard's old join form) and the sets side grows with the
     // corpus, so sort-merge is the only strategy safe on both sides.
     // Inner-join semantics preserved: a pair with a set-less side loses
-    // that role row, its folded set is null, and the null jaccard fails
-    // the threshold — dropped, exactly as the two inner joins did.
+    // that role row, its folded set is null, and the kernel's null
+    // fails the threshold — dropped, exactly as the two inner joins did.
+    def overlap(jaccard: Boolean): Column = org.apache.spark.sql.GraftColumnBridge.column(
+      graft.functions.SetOverlap(org.apache.spark.sql.GraftColumnBridge.expression(col("_sa")),
+        org.apache.spark.sql.GraftColumnBridge.expression(col("_sb")), jaccard))
     pairs.select("doc_a", "doc_b")
       .select(col("doc_a"), col("doc_b"),
         posexplode(array(col("doc_a"), col("doc_b"))).as(Seq("_role", "_d")))
@@ -405,11 +426,9 @@ object Dedup {
       .groupBy("doc_a", "doc_b")
       .agg(max(when(col("_role") === 0, col("_shs"))).as("_sa"),
         max(when(col("_role") === 1, col("_shs"))).as("_sb"))
-      .withColumn("n_common", size(array_intersect(col("_sa"), col("_sb"))).cast("long"))
-      .withColumn("jaccard", col("n_common").cast("double") /
-        (size(col("_sa")) + size(col("_sb")) - col("n_common")))
-      .where(col("jaccard") >= threshold)
-      .select("doc_a", "doc_b", "n_common", "jaccard")
+      .where(overlap(jaccard = true) >= threshold)
+      .select(col("doc_a"), col("doc_b"), overlap(jaccard = false).as("n_common"),
+        overlap(jaccard = true).as("jaccard"))
   }
 
   /** MinHash-blocked near-dup pairs WITH exact verification — the
@@ -896,12 +915,25 @@ object Dedup {
     * embedding) answers "which pairs look alike"; an actual dedup
     * pipeline must then pick ONE keeper per transitive group — A~B and
     * B~C must collapse to a single canonical even when A~C was never
-    * emitted. Returns `(idCol, canonical)` for every id that appears in
-    * a pair, canonical = the component's minimum id (deterministic);
-    * ids in no pair are their own canonical and are simply absent here
+    * emitted. Returns `(id, canonical)` for every id that appears in a
+    * pair, canonical = the component's minimum id (deterministic); ids
+    * in no pair are their own canonical and are simply absent here
     * (callers left-join and coalesce to the id itself).
     *
-    * Algorithm: iterative min-label propagation (the classic
+    * SCALE-ADAPTIVE, in the spirit of broadcast-join thresholds: a graph
+    * of at most `localEdgeThreshold` distinct directed edges (each pair
+    * gives its two directions) is solved exactly on the driver by
+    * [[localClusters]]' union-find. The pairs are read ONCE with a
+    * bounded `limit(localEdgeThreshold + 1).collect()`; when that read
+    * holds every pair, the edge count is taken on the driver and no
+    * other job runs (over a local pair frame, not even that one: Spark
+    * answers a limit over local rows without a job). The path choice is
+    * the edge count's for every threshold; `localEdgeThreshold = 0`
+    * forces the distributed path for any non-empty graph (specs do). A
+    * graph past the threshold pays that one bounded read on top of the
+    * distributed path.
+    *
+    * Distributed path: iterative min-label propagation (the classic
     * large-graph connected components — what GraphX's
     * `connectedComponents` runs — expressed as DataFrame joins so
     * Catalyst/AQE handle the physical plan): every vertex starts as its
@@ -926,20 +958,24 @@ object Dedup {
     */
   def clusters(pairs: DataFrame, aCol: String = "doc_a", bCol: String = "doc_b",
                maxIters: Int = 20, localEdgeThreshold: Long = 1000000L): DataFrame = {
-    val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .unionByName(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
+    val ends = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
+    val idType = ends.schema("src").dataType
+    // one bounded read picks the path: a read that stops short of the
+    // limit holds the whole graph, and one that reaches it with more
+    // distinct edges than the threshold proves the graph large
+    val limit = math.max(0L, math.min(localEdgeThreshold + 1, Int.MaxValue.toLong)).toInt
+    val head = ends.limit(limit).collect()
+    val headEdges = head.iterator
+      .flatMap(r => Iterator((r.get(0), r.get(1)), (r.get(1), r.get(0)))).toSet.size
+    if (head.length < limit && headEdges <= localEdgeThreshold)
+      return localClusters(pairs, head, idType)
+    val edges = ends.unionByName(ends.select(col("dst").as("src"), col("src").as("dst")))
       .distinct().persist()
     try {
-      // SCALE-ADAPTIVE, same spirit as broadcast-join thresholds: a pair
-      // graph under ~1M edges (tens of MBs) is solved exactly on the
-      // driver with union-find in milliseconds, where the iterative
-      // DataFrame loop pays several shuffle stages PER ROUND — pure
-      // fixed overhead at small scale (measured: 4.3 s → 0.3 s on the
-      // bench corpus). Past the threshold the distributed loop below is
-      // the only shape that fits in memory. Set the threshold to 0 to
-      // force the distributed path (specs do).
-      val edgeCount = edges.count()
-      if (edgeCount <= localEdgeThreshold) return localClusters(pairs, edges)
+      // only a capped read of repeated rows can leave the count open
+      if (head.length == limit && headEdges <= localEdgeThreshold &&
+          edges.count() <= localEdgeThreshold)
+        return localClusters(pairs, edges.collect(), idType)
       var labels = edges.select(col("src").as("id")).distinct()
         .withColumn("label", col("id")).localCheckpoint(true)
       // bit_xor, not sum: summing 64-bit hashes overflows Long (a hard
@@ -982,11 +1018,12 @@ object Dedup {
   }
 
   /** Driver-side exact connected components for SMALL pair graphs:
-    * path-compressed union-find over the collected edge list, then one
-    * min-id pass per component. Output schema matches the distributed
-    * path exactly. */
-  private def localClusters(pairs: DataFrame, edges: DataFrame): DataFrame = {
-    val idType = edges.schema("src").dataType
+    * path-compressed union-find over the collected `(src, dst)` rows
+    * (repeats and either direction are harmless), then one min-id pass
+    * per component. Output schema matches the distributed path
+    * exactly. */
+  private def localClusters(pairs: DataFrame, edges: Array[org.apache.spark.sql.Row],
+                            idType: org.apache.spark.sql.types.DataType): DataFrame = {
     val parent = scala.collection.mutable.HashMap.empty[Any, Any]
     def find(x: Any): Any = {
       var r = x
@@ -995,7 +1032,7 @@ object Dedup {
       while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
       r
     }
-    edges.collect().foreach { row =>
+    edges.foreach { row =>
       val a = row.get(0); val b = row.get(1)
       parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
       val ra = find(a); val rb = find(b)

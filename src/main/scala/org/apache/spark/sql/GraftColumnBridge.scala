@@ -12,6 +12,11 @@ object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** Spark's DIVIDE_BY_ZERO error, as ANSI-mode division raises it —
+    * `QueryExecutionErrors` is `sql`-private. */
+  def divideByZeroError(): ArithmeticException =
+    org.apache.spark.sql.errors.QueryExecutionErrors.divideByZeroError(null)
+
   /** DataFrame from a hand-built LogicalPlan (e.g. a LogicalRelation over
     * a custom FileIndex) — `Dataset.ofRows` is `private[sql]`. */
   def ofRows(spark: SparkSession,

@@ -786,6 +786,98 @@ class DedupSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getString(1))).toMap === expect)
   }
 
+  test("verifiedJaccardOnSets: two empty sets divide by zero as the session's ANSI mode says") {
+    import spark.implicits._
+    val sets = Seq((1L, Seq.empty[Long]), (2L, Seq.empty[Long]), (3L, Seq(5L, 7L)))
+      .toDF("doc", "sh_set")
+    val pairs = Seq((1L, 2L), (1L, 3L)).toDF("doc_a", "doc_b")
+    val key = "spark.sql.ansi.enabled"
+    val before = spark.conf.get(key)
+    try {
+      spark.conf.set(key, "true")
+      val err = intercept[Exception](Dedup.verifiedJaccardOnSets(sets, pairs, 0.0).collect())
+      var root: Throwable = err
+      while (root.getCause != null) root = root.getCause
+      assert(root.isInstanceOf[ArithmeticException] &&
+        root.asInstanceOf[org.apache.spark.SparkThrowable].getCondition == "DIVIDE_BY_ZERO", root)
+      spark.conf.set(key, "false")
+      // the empty-empty pair's Jaccard is null and fails any threshold; the
+      // one-sided pair scores 0
+      val rows = Dedup.verifiedJaccardOnSets(sets, pairs, 0.0)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+      assert(rows.toSeq === Seq((1L, 3L, 0L, 0.0)))
+    } finally spark.conf.set(key, before)
+  }
+
+  test("verification plans sort, dedup and intersect sets with the native kernels only") {
+    import org.apache.spark.sql.execution.FilterExec
+    val dir = tmpDir("dedup_set_kernels")
+    docs.write.mode("overwrite").parquet(dir)
+    val corpus = spark.read.parquet(dir)
+    for ((what, df) <- Seq(
+        "minhashNearDup" -> Dedup.minhashNearDup(corpus, "doc_id", "text"),
+        "simhash verifiedJaccard" -> Dedup.verifiedJaccard(corpus,
+          Dedup.simhashCandidates(Dedup.simhash(corpus, "doc_id", "text")), "doc_id", "text"))) {
+      assert(df.collect().nonEmpty, what)
+      val plan = df.queryExecution.executedPlan.toString
+      for (f <- Seq("array_intersect", "array_distinct", "sort_array"))
+        assert(!plan.contains(f), s"$what still runs $f:\n$plan")
+      assert(plan.contains("sorted_distinct"), s"$what: no set kernel\n$plan")
+      val filters = graft.PlanAudit.nodes(df).collect { case f: FilterExec => f.condition.toString }
+        .filter(_.contains("set_"))
+      assert(filters.size == 1 && "set_jaccard\\(".r.findAllMatchIn(filters.head).size == 1 &&
+        !filters.head.contains("set_overlap"), s"$what: pair kernel in the filter: $filters")
+    }
+  }
+
+  /** Spark jobs started while `body` runs. */
+  private def jobsDuring(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.GraftTestBridge.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try { body; org.apache.spark.GraftTestBridge.drain(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get()
+  }
+
+  test("clusters over a small local pair frame starts no Spark job") {
+    import spark.implicits._
+    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b")
+    var got = Map.empty[Long, Long]
+    val jobs = jobsDuring {
+      got = Dedup.clusters(pairs).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
+    assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
+    assert(jobs === 0, s"clusters over local pairs ran $jobs job(s)")
+  }
+
+  test("clusters: identical labels on both paths with the edge count at, under and over the threshold") {
+    import spark.implicits._
+    // 5 distinct pairs = 10 directed edges; the repeats and the reversed
+    // copy add rows but no edge, so the row count is not the edge count
+    val pairs = Seq((1L, 2L), (2L, 3L), (2L, 1L), (3L, 4L), (1L, 2L), (10L, 11L), (20L, 21L), (20L, 21L))
+      .toDF("doc_a", "doc_b")
+    val file = tmpDir("dedup_cluster_threshold")
+    pairs.write.mode("overwrite").parquet(file)
+    val expect = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L,
+      20L -> 20L, 21L -> 20L)
+    for (src <- Seq(pairs, spark.read.parquet(file)); t <- Seq(0L, 3L, 9L, 10L, 11L, 1000000L)) {
+      val got = Dedup.clusters(src, localEdgeThreshold = t).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got === expect, s"threshold $t")
+      // the local path answers from a local relation; the distributed
+      // path from its last label-propagation round
+      val local = Dedup.clusters(src, localEdgeThreshold = t).queryExecution.analyzed
+        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+      assert(local === (t >= 10L), s"threshold $t picked the ${if (local) "local" else "distributed"} path")
+    }
+  }
+
   test("clusters: long chain needs its diameter in rounds; maxIters guards") {
     import spark.implicits._
     val chain = (1L until 30L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")

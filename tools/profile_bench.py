@@ -21,6 +21,13 @@ of its frames, or as ``other``. Executor samples are those of Spark's task
 threads (``Executor task launch worker``); every other Java thread counts as
 driver. JIT and GC threads are not Java threads and are not sampled.
 
+The lists of top leaf methods (``--top``) name generated code by class and
+method. Every query's whole-stage codegen stages share the class names
+``GeneratedIteratorForCodegenStageN``, numbered from 1 within each query, so
+a row such as ``Stage1.generate_doConsume_0`` lumps together the first
+stage of every query the workload runs, not one stage of one query (in a
+``dedup`` profile that one row read 24.5% of executor samples).
+
 The recording and the table go to ``--out`` (default: a new temporary
 directory); nothing is written under ``lakebench/`` beyond what the
 benchmark's own build and run write.
@@ -50,6 +57,8 @@ CATEGORIES = [
     ("shingle/minhash/simhash kernels", ["graft.functions.ShingleHashes", "graft.functions.MinHash",
                                          "graft.functions.SimHash64"]),
     ("pair kernel", ["graft.ops.PairKernel", "graft.functions.PairsInBucket"]),
+    ("set kernels (SortedDistinct, SetOverlap)", ["graft.functions.SortedDistinct",
+                                                  "graft.functions.SetOverlap"]),
     # driver-side costs paid per query: the ASM ClassReader and ZipFile
     # leaf frames of closure cleaning, and the Hadoop-conf copy plus the
     # InMemoryFileIndex listing of a `spark.read.parquet(...)`
