@@ -33,13 +33,8 @@ import org.apache.spark.sql.types._
   * Duplicate shingles are min-absorbed exactly as the aggregate was.
   * Pinned against a DataFrame recomputation in FusedFingerprintSpec;
   * `dedup_minhash`'s oracle hash is unchanged.
-  *
-  * `preHashed = true` takes PRE-HASHED shingles (an `array<bigint>` of
-  * [[ShingleHashes]] output): the base-hash step is skipped, every
-  * downstream slot/band step is identical. The flag must match the
-  * child's type (`array<string>` without it), or analysis fails.
   */
-case class MinHashBandBuckets(child: Expression, numHashes: Int, bands: Int, preHashed: Boolean)
+case class MinHashBandBuckets(child: Expression, numHashes: Int, bands: Int)
   extends UnaryExpression {
 
   require(numHashes > 0 && bands > 0 && numHashes % bands == 0,
@@ -52,13 +47,20 @@ case class MinHashBandBuckets(child: Expression, numHashes: Int, bands: Int, pre
   private lazy val bandSeeds: Array[Long] =
     Array.tabulate(bands)(b => XXH64.hashInt(b, 42L))
 
-  override def checkInputDataTypes(): TypeCheckResult = (child.dataType, preHashed) match {
-    case (ArrayType(StringType, _), false) | (ArrayType(LongType, _), true) =>
+  /** True when the child carries PRE-HASHED shingles (array<long> — the
+    * [[ShingleHashes]] output): the base-hash step is skipped, every
+    * downstream slot/band step is identical. */
+  private def preHashed: Boolean = child.dataType match {
+    case ArrayType(LongType, _) => true
+    case _ => false
+  }
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(StringType, _) | ArrayType(LongType, _) =>
       TypeCheckResult.TypeCheckSuccess
-    case (dt, _) => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName with preHashed=$preHashed expects " +
-        s"${if (preHashed) "array<bigint> shingle hashes" else "array<string> shingles"}, " +
-        s"got ${dt.simpleString}")
+    case dt => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName expects array<string> shingles or array<long> shingle " +
+        s"hashes, got ${dt.simpleString}")
   }
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "minhash_band_buckets"
@@ -66,6 +68,7 @@ case class MinHashBandBuckets(child: Expression, numHashes: Int, bands: Int, pre
   override protected def nullSafeEval(input: Any): Any = {
     val arr = input.asInstanceOf[ArrayData]
     val n = arr.numElements()
+    val hashed = preHashed
     // empty in → empty out: a doc with no shingles has no signature, and
     // the empty array lets the downstream posexplode DROP the doc with
     // no separate size() filter — a filter would be the second reference
@@ -78,7 +81,7 @@ case class MinHashBandBuckets(child: Expression, numHashes: Int, bands: Int, pre
     while (i < n) {
       val h =
         if (arr.isNullAt(i)) 42L
-        else if (preHashed) arr.getLong(i)
+        else if (hashed) arr.getLong(i)
         else XXH64.hashUTF8String(arr.getUTF8String(i), 42L)
       var s = 0
       while (s < numHashes) {

@@ -22,16 +22,14 @@ import org.apache.spark.sql.types._
   * h = XXH64(shingle, 42); slot i = hashLong(h, hashInt(i, 42)); min
   * over shingles. Empty in → empty out, same contract.
   *
-  * PRE-HASHED MODE (`preHashed = true`, the [[MinHashBandBuckets]]
-  * twin): the `array<bigint>` child carries [[ShingleHashes]] output —
-  * the same XXH64(shingle, 42) base values the string path computes —
-  * so the base-hash step is skipped and no shingle string is ever
-  * materialized on the streaming path; every downstream slot step is
-  * identical, signatures bit-for-bit (spec-pinned in
-  * FusedFingerprintSpec). The mode is the caller's explicit choice, and
-  * analysis rejects a child type that does not match it: a miswired
-  * `array<bigint>` of token ids cannot pass for shingle hashes. */
-case class MinHashSignature(child: Expression, numHashes: Int, preHashed: Boolean)
+  * LONG-INPUT MODE (round-19, the [[MinHashBandBuckets]] twin): an
+  * `array<long>` child carries PRE-HASHED shingles ([[ShingleHashes]]
+  * output — the same XXH64(shingle, 42) base values the string path
+  * computes), so the base-hash step is skipped and no shingle string
+  * is ever materialized on the streaming path; every downstream slot
+  * step is identical, signatures bit-for-bit (spec-pinned in
+  * FusedFingerprintSpec). */
+case class MinHashSignature(child: Expression, numHashes: Int)
   extends UnaryExpression {
 
   require(numHashes > 0, s"numHashes=$numHashes must be positive")
@@ -39,13 +37,18 @@ case class MinHashSignature(child: Expression, numHashes: Int, preHashed: Boolea
   private lazy val slotSeeds: Array[Long] =
     Array.tabulate(numHashes)(i => XXH64.hashInt(i, 42L))
 
-  override def checkInputDataTypes(): TypeCheckResult = (child.dataType, preHashed) match {
-    case (ArrayType(StringType, _), false) | (ArrayType(LongType, _), true) =>
+  /** True when the child carries pre-hashed shingles (array<long>). */
+  private def preHashed: Boolean = child.dataType match {
+    case ArrayType(LongType, _) => true
+    case _ => false
+  }
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(StringType, _) | ArrayType(LongType, _) =>
       TypeCheckResult.TypeCheckSuccess
-    case (dt, _) => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName with preHashed=$preHashed expects " +
-        s"${if (preHashed) "array<bigint> shingle hashes" else "array<string> shingles"}, " +
-        s"got ${dt.simpleString}")
+    case dt => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName expects array<string> shingles or array<long> shingle " +
+        s"hashes, got ${dt.simpleString}")
   }
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "minhash_signature"
@@ -53,13 +56,14 @@ case class MinHashSignature(child: Expression, numHashes: Int, preHashed: Boolea
   override protected def nullSafeEval(input: Any): Any = {
     val arr = input.asInstanceOf[ArrayData]
     val n = arr.numElements()
+    val hashed = preHashed
     if (n == 0) return UnsafeArrayData.fromPrimitiveArray(Array.emptyLongArray)
     val mins = Array.fill(numHashes)(Long.MaxValue)
     var i = 0
     while (i < n) {
       val h =
         if (arr.isNullAt(i)) 42L
-        else if (preHashed) arr.getLong(i)
+        else if (hashed) arr.getLong(i)
         else XXH64.hashUTF8String(arr.getUTF8String(i), 42L)
       var s = 0
       while (s < numHashes) {

@@ -152,8 +152,7 @@ object Dedup {
       .select(col("doc"),
         org.apache.spark.sql.GraftColumnBridge.column(
           graft.functions.MinHashSignature(
-            org.apache.spark.sql.GraftColumnBridge.expression(col("_shs")), numHashes,
-            preHashed = true))
+            org.apache.spark.sql.GraftColumnBridge.expression(col("_shs")), numHashes))
           .as("sig"))
     // banding in a typed flatMap: same XXH64 fold as MinHashBandBuckets
     // (hashInt(b, 42) seed, hashLong over the band's r slot-mins); a
@@ -295,7 +294,7 @@ object Dedup {
         posexplode(org.apache.spark.sql.GraftColumnBridge.column(
           graft.functions.MinHashBandBuckets(
             org.apache.spark.sql.GraftColumnBridge.expression(col("_shs")),
-            numHashes, bands, preHashed = true))).as(Seq("band", "bucket")))
+            numHashes, bands))).as(Seq("band", "bucket")))
   }
 
   /** The shingle-hash SET of a shingle-hash array: its distinct values,
@@ -350,7 +349,7 @@ object Dedup {
             org.apache.spark.sql.GraftColumnBridge.column(
               graft.functions.MinHashBandBuckets(
                 org.apache.spark.sql.GraftColumnBridge.expression(shs),
-                numHashes, bands, preHashed = true)).as("_buckets"))
+                numHashes, bands)).as("_buckets"))
         }.as("_ps"))
       .select(col("doc"), col("_ps")("sh_set").as("sh_set"),
         col("_ps")("_buckets").as("_buckets"))
@@ -921,17 +920,18 @@ object Dedup {
     * (callers left-join and coalesce to the id itself).
     *
     * SCALE-ADAPTIVE, in the spirit of broadcast-join thresholds: a graph
-    * of at most `localEdgeThreshold` distinct directed edges (each pair
-    * gives its two directions) is solved exactly on the driver by
-    * [[localClusters]]' union-find. The pairs are read ONCE with a
-    * bounded `limit(localEdgeThreshold + 1).collect()`; when that read
-    * holds every pair, the edge count is taken on the driver and no
-    * other job runs (over a local pair frame, not even that one: Spark
-    * answers a limit over local rows without a job). The path choice is
-    * the edge count's for every threshold; `localEdgeThreshold = 0`
-    * forces the distributed path for any non-empty graph (specs do). A
-    * graph past the threshold pays that one bounded read on top of the
-    * distributed path.
+    * of at most `localEdgeThreshold` pair rows is solved exactly on the
+    * driver by [[localClusters]]' union-find. The pairs are read ONCE
+    * with a bounded `limit(localEdgeThreshold + 1).collect()`; a read
+    * that stops short of the limit holds the whole graph and no other
+    * job runs (over a local pair frame, not even that one: Spark
+    * answers a limit over local rows without a job). A read that
+    * reaches the limit sends the graph down the distributed path;
+    * `localEdgeThreshold = 0` does so for any non-empty graph (specs
+    * do). Any other pair frame is persisted for the call, so its
+    * lineage runs once: the bounded read fills part of the cache, and a
+    * large graph's distributed path reads the rest of it (and the
+    * shuffles the read already ran) instead of recomputing the pairs.
     *
     * Distributed path: iterative min-label propagation (the classic
     * large-graph connected components — what GraphX's
@@ -959,23 +959,21 @@ object Dedup {
   def clusters(pairs: DataFrame, aCol: String = "doc_a", bCol: String = "doc_b",
                maxIters: Int = 20, localEdgeThreshold: Long = 1000000L): DataFrame = {
     val ends = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-    val idType = ends.schema("src").dataType
-    // one bounded read picks the path: a read that stops short of the
-    // limit holds the whole graph, and one that reaches it with more
-    // distinct edges than the threshold proves the graph large
-    val limit = math.max(0L, math.min(localEdgeThreshold + 1, Int.MaxValue.toLong)).toInt
-    val head = ends.limit(limit).collect()
-    val headEdges = head.iterator
-      .flatMap(r => Iterator((r.get(0), r.get(1)), (r.get(1), r.get(0)))).toSet.size
-    if (head.length < limit && headEdges <= localEdgeThreshold)
-      return localClusters(pairs, head, idType)
+    val local = ends.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+    if (!local) ends.persist()
+    try {
+      val limit = math.max(0L, math.min(localEdgeThreshold + 1, Int.MaxValue.toLong)).toInt
+      val head = ends.limit(limit).collect()
+      if (head.length < limit) localClusters(ends, head) else distributedClusters(ends, maxIters)
+    } finally if (!local) ends.unpersist()
+  }
+
+  /** [[clusters]]' label propagation over the `(src, dst)` pair rows. */
+  private def distributedClusters(ends: DataFrame, maxIters: Int): DataFrame = {
     val edges = ends.unionByName(ends.select(col("dst").as("src"), col("src").as("dst")))
       .distinct().persist()
     try {
-      // only a capped read of repeated rows can leave the count open
-      if (head.length == limit && headEdges <= localEdgeThreshold &&
-          edges.count() <= localEdgeThreshold)
-        return localClusters(pairs, edges.collect(), idType)
       var labels = edges.select(col("src").as("id")).distinct()
         .withColumn("label", col("id")).localCheckpoint(true)
       // bit_xor, not sum: summing 64-bit hashes overflows Long (a hard
@@ -1022,8 +1020,8 @@ object Dedup {
     * (repeats and either direction are harmless), then one min-id pass
     * per component. Output schema matches the distributed path
     * exactly. */
-  private def localClusters(pairs: DataFrame, edges: Array[org.apache.spark.sql.Row],
-                            idType: org.apache.spark.sql.types.DataType): DataFrame = {
+  private def localClusters(ends: DataFrame, edges: Array[org.apache.spark.sql.Row]): DataFrame = {
+    val idType = ends.schema("src").dataType
     val parent = scala.collection.mutable.HashMap.empty[Any, Any]
     def find(x: Any): Any = {
       var r = x
@@ -1051,7 +1049,7 @@ object Dedup {
     }
     val out = new java.util.ArrayList[org.apache.spark.sql.Row]()
     parent.keys.toSeq.foreach(v => out.add(org.apache.spark.sql.Row(v, minOf(find(v)))))
-    pairs.sparkSession.createDataFrame(out,
+    ends.sparkSession.createDataFrame(out,
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("id", idType),
         org.apache.spark.sql.types.StructField("canonical", idType))))

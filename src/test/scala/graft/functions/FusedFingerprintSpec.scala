@@ -54,8 +54,7 @@ class FusedFingerprintSpec extends SparkSpec {
       .select(col("doc"), Dedup.shingles(col("toks"), 3).as("shs"))
     val fused = shs.where(size(col("shs")) > 0)
       .select(col("doc"), posexplode(GraftColumnBridge.column(
-        MinHashBandBuckets(GraftColumnBridge.expression(col("shs")), numHashes, bands,
-          preHashed = false)))
+        MinHashBandBuckets(GraftColumnBridge.expression(col("shs")), numHashes, bands)))
         .as(Seq("band", "bucket")))
       .collect().map(x => (x.getLong(0), x.getInt(1), x.getLong(2))).toSet
     // the superseded aggregate form, verbatim
@@ -99,7 +98,7 @@ class FusedFingerprintSpec extends SparkSpec {
         Dedup.shingleHashes(col("toks"), 3).as("shh"))
     def buckets(c: String) = shs
       .select(col("doc"), posexplode(GraftColumnBridge.column(
-        MinHashBandBuckets(GraftColumnBridge.expression(col(c)), 64, 16, preHashed = c == "shh")))
+        MinHashBandBuckets(GraftColumnBridge.expression(col(c)), 64, 16)))
         .as(Seq("band", "bucket")))
       .collect().map(x => (x.getLong(0), x.getInt(1), x.getLong(2))).toSet
     val fromStrings = buckets("shs")
@@ -118,7 +117,7 @@ class FusedFingerprintSpec extends SparkSpec {
         Dedup.shingleHashes(col("toks"), 3).as("shh"))
     def sigs(c: String) = shs
       .select(col("doc"), GraftColumnBridge.column(
-        MinHashSignature(GraftColumnBridge.expression(col(c)), 64, preHashed = c == "shh")).as("sig"))
+        MinHashSignature(GraftColumnBridge.expression(col(c)), 64)).as("sig"))
       .collect().map(x => x.getLong(0) -> x.getSeq[Long](1)).toMap
     val fromStrings = sigs("shs")
     val fromHashes = sigs("shh")
@@ -127,38 +126,15 @@ class FusedFingerprintSpec extends SparkSpec {
 
   test("MinHashBandBuckets validates its knobs and input type") {
     assertThrows[IllegalArgumentException](
-      MinHashBandBuckets(GraftColumnBridge.expression(lit(1L)), 63, 16, preHashed = true))
+      MinHashBandBuckets(GraftColumnBridge.expression(lit(1L)), 63, 16))
     import spark.implicits._
     // duplicate shingles are min-absorbed: a doc repeated inline changes nothing
     val one = Seq((1L, Seq("a b c", "b c d", "a b c"))).toDF("doc", "shs")
     val dd = Seq((1L, Seq("a b c", "b c d"))).toDF("doc", "shs")
     def buckets(df: org.apache.spark.sql.DataFrame) = df.select(
       GraftColumnBridge.column(MinHashBandBuckets(
-        GraftColumnBridge.expression(col("shs")), 64, 16, preHashed = false)))
+        GraftColumnBridge.expression(col("shs")), 64, 16)))
       .collect().map(_.getSeq[Long](0)).head
     assert(buckets(one) === buckets(dd))
-  }
-
-  test("a preHashed flag that does not match the input type fails at analysis") {
-    import spark.implicits._
-    val df = Seq((Seq("a b c", "b c d"), Seq(1L, 2L))).toDF("shs", "shh")
-    def expr(c: String) = GraftColumnBridge.expression(col(c))
-    val mismatched = Seq(
-      "bands over strings as hashes" -> MinHashBandBuckets(expr("shs"), 64, 16, preHashed = true),
-      "bands over hashes as strings" -> MinHashBandBuckets(expr("shh"), 64, 16, preHashed = false),
-      "signature over strings as hashes" -> MinHashSignature(expr("shs"), 64, preHashed = true),
-      "signature over hashes as strings" -> MinHashSignature(expr("shh"), 64, preHashed = false))
-    for ((what, e) <- mismatched) {
-      val err = intercept[org.apache.spark.sql.AnalysisException](
-        df.select(GraftColumnBridge.column(e)))
-      assert(err.getMessage.contains(s"preHashed=${!what.contains("as strings")}"), what)
-    }
-    // the matching flag analyzes, and both modes agree on equal input
-    val both = Seq(Seq("a b c", "b c d")).toDF("shs")
-      .select(col("shs"), transform(col("shs"), s => xxhash64(s)).as("shh"))
-      .select(GraftColumnBridge.column(MinHashBandBuckets(expr("shs"), 64, 16, preHashed = false)),
-        GraftColumnBridge.column(MinHashBandBuckets(expr("shh"), 64, 16, preHashed = true)))
-      .head()
-    assert(both.getSeq[Long](0) === both.getSeq[Long](1))
   }
 }

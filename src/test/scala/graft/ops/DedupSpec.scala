@@ -856,17 +856,16 @@ class DedupSpec extends SparkSpec {
     assert(jobs === 0, s"clusters over local pairs ran $jobs job(s)")
   }
 
-  test("clusters: identical labels on both paths with the edge count at, under and over the threshold") {
+  test("clusters: identical labels on both paths with the pair count at, under and over the threshold") {
     import spark.implicits._
-    // 5 distinct pairs = 10 directed edges; the repeats and the reversed
-    // copy add rows but no edge, so the row count is not the edge count
+    // 8 pair rows; the repeats and the reversed copy add rows but no edge
     val pairs = Seq((1L, 2L), (2L, 3L), (2L, 1L), (3L, 4L), (1L, 2L), (10L, 11L), (20L, 21L), (20L, 21L))
       .toDF("doc_a", "doc_b")
     val file = tmpDir("dedup_cluster_threshold")
     pairs.write.mode("overwrite").parquet(file)
     val expect = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L,
       20L -> 20L, 21L -> 20L)
-    for (src <- Seq(pairs, spark.read.parquet(file)); t <- Seq(0L, 3L, 9L, 10L, 11L, 1000000L)) {
+    for (src <- Seq(pairs, spark.read.parquet(file)); t <- Seq(0L, 7L, 8L, 9L, 1000000L)) {
       val got = Dedup.clusters(src, localEdgeThreshold = t).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got === expect, s"threshold $t")
@@ -874,7 +873,27 @@ class DedupSpec extends SparkSpec {
       // path from its last label-propagation round
       val local = Dedup.clusters(src, localEdgeThreshold = t).queryExecution.analyzed
         .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
-      assert(local === (t >= 10L), s"threshold $t picked the ${if (local) "local" else "distributed"} path")
+      assert(local === (t >= 8L), s"threshold $t picked the ${if (local) "local" else "distributed"} path")
+    }
+  }
+
+  test("clusters reads a computed pair frame's lineage once on the distributed path") {
+    import spark.implicits._
+    // every pair row passes through a counting UDF: the bounded read and
+    // the label propagation must not each recompute the pairs
+    val calls = spark.sparkContext.longAccumulator("clusters_pair_rows")
+    val tick = udf { (a: Long) => calls.add(1L); a }
+    val file = tmpDir("dedup_cluster_lineage")
+    Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b")
+      .write.mode("overwrite").parquet(file)
+    val pairs = spark.read.parquet(file).select(tick(col("doc_a")).as("doc_a"), col("doc_b"))
+    // twice: a cache left behind by the first call would serve the second
+    for (run <- 1 to 2) {
+      calls.reset()
+      val got = Dedup.clusters(pairs, localEdgeThreshold = 0L).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
+      assert(calls.value === 3L, s"call $run computed the 3 pair rows ${calls.value} times")
     }
   }
 
