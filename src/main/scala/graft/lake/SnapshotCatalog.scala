@@ -149,17 +149,15 @@ class SnapshotCatalog extends TableCatalog
     // reader refuse the file
     val schema = StructType(DataType.fromJson(snap.schemaJson)
       .asInstanceOf[StructType].fields.map(SnapshotLog.relaxNullability))
-    val rootP = new Path(p)
-    val fs = rootP.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val dataRoot = SnapshotLog.dataRootOf(rootP)
-    val paths = snap.files.map(f => fs.makeQualified(new Path(dataRoot, f)).toString)
+    val (fs, rootP) = SnapshotLog.fsOf(s, p)
+    val paths = SnapshotLog.qualified(fs, rootP, snap.files)
     // a pinned version is immutable by definition — only the HEAD load
     // (no AS OF) accepts INSERT/DELETE, and those commit through the
     // claim protocol like every other writer. The driver-side dead map
     // stays a THUNK: with GraftExtensions active, a DV version reads
     // through the vectorized anti-join rewrite and never builds it.
     new SnapshotParquetTable(s"$catalogName.${ident.toString}@v${snap.version}",
-      s, paths, schema, dvFiles = snap.dvs,
+      s, paths, schema, snap,
       deadFn = () => SnapshotLog.deadPositions(s, rootP, snap),
       tablePath = p, writable = asOf.isEmpty)
   }

@@ -14,8 +14,8 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
   * but the whole version devectorizes, dirty files can't split, and NO
   * parquet filters push — one deleted row taxes a 100 TB scan until
   * `purgeDeletes`/`maintain`. This rule replaces the DV-carrying
-  * `DataSourceV2Relation` at analysis time with the plan the API path
-  * already uses ([[SnapshotLog.vectorizedCatalogRead]]):
+  * `DataSourceV2Relation` at analysis time with the scan every API
+  * read of a version uses ([[SnapshotLog.scanVersion]]):
   *
   * {{{
   *   clean files  → SnapshotFileIndex scan (pruned, pushed, columnar)

@@ -437,11 +437,7 @@ case class PushFilteredAggToManifest(spark: SparkSession) extends Rule[LogicalPl
             count(col(x)).as(s"_a${i}c"))
           case (GroupRef, _) => Nil
         }
-        val base0 =
-          if (scanAll.exists(hasDv))
-            SnapshotLog.vectorizedCatalogRead(spark, tbl.tablePath, schema,
-              scanAll, tbl.dvFiles)
-          else SnapshotLog.scanKnownFiles(spark, scanAll, schema)
+        val base0 = tbl.vectorizedRead(spark, scanAll)
         // the predicate REBUILT from the extracted g-bounds (provably
         // the whole condition — every conjunct folded into them)
         val base =
@@ -614,11 +610,7 @@ case class PushFilteredAggToManifest(spark: SparkSession) extends Rule[LogicalPl
           case (AvgC(x), i) => Seq(sum(col(x)).cast(LongType).as(s"_a${i}s"),
             count(col(x)).as(s"_a${i}c"))
         }
-        val base =
-          if (scan.exists(hasDv))
-            SnapshotLog.vectorizedCatalogRead(spark, tbl.tablePath, schema, scan, tbl.dvFiles)
-          else SnapshotLog.scanKnownFiles(spark, scan, schema)
-        coveredDf.unionByName(base.agg(partials.head, partials.tail: _*))
+        coveredDf.unionByName(tbl.vectorizedRead(spark, scan).agg(partials.head, partials.tail: _*))
       }
     val folds = kinds.zipWithIndex.map {
       case (CountStar | CountCol(_), i) => coalesce(sum(col(s"_a$i")), lit(0L)).as(s"_a$i")
@@ -1041,14 +1033,9 @@ case class PushFilteredAggToManifest(spark: SparkSession) extends Rule[LogicalPl
           case (AvgC(x), i) => Seq(sum(col(x)).cast(LongType).as(s"_a${i}s"),
             count(col(x)).as(s"_a${i}c"))
         }
-        // a scanned file with a deletion vector reads through the
-        // DV-applying form (dead rows anti-joined out); clean-only
-        // boundary sets keep the cheap known-files relation
-        val base =
-          if (scan.exists(hasDv))
-            SnapshotLog.vectorizedCatalogRead(spark, tbl.tablePath, schema, scan, tbl.dvFiles)
-          else SnapshotLog.scanKnownFiles(spark, scan, schema)
-        val scanDf = base
+        // a scanned file with a deletion vector has its dead rows
+        // anti-joined out by the version's scan
+        val scanDf = tbl.vectorizedRead(spark, scan)
           .where(pred)
           .agg(partials.head, partials.tail: _*)
         coveredDf.unionByName(scanDf)

@@ -102,6 +102,12 @@ object SnapshotLog {
   /** The shared `data/` pool a log root commits into. */
   private[lake] def poolDir(root: Path) = new Path(dataRootOf(root), "data")
 
+  /** The fs-qualified paths (`file:/…`, `hdfs://…`) of the pool-relative
+    * data files `files`: the form the footer-stats cache and the scan's
+    * file listing key by. */
+  private[lake] def qualified(fs: FileSystem, root: Path, files: Seq[String]): Seq[String] =
+    files.map(f => fs.makeQualified(new Path(dataRootOf(root), f)).toString)
+
   private[lake] def logDir(root: Path) = new Path(root, "_log")
   private def manifestPath(root: Path, v: Long) = new Path(logDir(root), f"v$v%012d.mf")
   private def checkpointPath(root: Path, v: Long) = new Path(logDir(root), f"v$v%012d.cp")
@@ -481,7 +487,7 @@ object SnapshotLog {
       val bloomCols = Sidecar.columns(fs, root, Sidecar.Bloom)
       val sumCols = Sidecar.columns(fs, root, Sidecar.AggStats)
       if (bloomCols.isEmpty && sumCols.isEmpty) return
-      val abs = adds.map(f => fs.makeQualified(new Path(dataRootOf(root), f)).toString)
+      val abs = qualified(fs, root, adds)
       val batch = spark.read.option("ignoreMissingFiles", "true").parquet(abs: _*)
       for (c <- bloomCols) {
         val cd = Sidecar.dir(root, Sidecar.Bloom, c)
@@ -1139,8 +1145,7 @@ object SnapshotLog {
     val cur = state(spark, table, Some(head))
     if (cur.files.isEmpty) return 0L
     val (fs, rootP) = fsOf(spark, table)
-    val dataRoot = dataRootOf(rootP)
-    val abs = cur.files.map(f => fs.makeQualified(new Path(dataRoot, f)).toString)
+    val abs = qualified(fs, rootP, cur.files)
     val df = BloomIndex.buildFrom(spark.read.parquet(abs: _*), column,
       expectedItemsPerFile, fpp)
     val dir = Sidecar.dir(rootP, Sidecar.Bloom, column)
@@ -1210,8 +1215,7 @@ object SnapshotLog {
         "so a sidecar fold could differ from a scan in the last ulp)")
     if (cur.files.isEmpty) return 0L
     val (fs, rootP) = fsOf(spark, table)
-    val dataRoot = dataRootOf(rootP)
-    val abs = cur.files.map(f => fs.makeQualified(new Path(dataRoot, f)).toString)
+    val abs = qualified(fs, rootP, cur.files)
     val have: Set[String] = aggStatsFor(spark, table, column)
       .map(_.select("filepath").collect().map(_.getString(0)).toSet)
       .getOrElse(Set.empty)
@@ -1293,7 +1297,7 @@ object SnapshotLog {
     if (small.size < math.max(2, minFiles)) return head
     val smallFiles = small.map(_._1)
     val nOut = math.max(1, math.ceil(small.map(_._2).sum.toDouble / targetBytes).toInt)
-    val df = readSnapshot(spark, table, cur, onlyFiles = Some(smallFiles))
+    val df = scanVersion(spark, table, cur, Some(smallFiles))
     val token = java.util.UUID.randomUUID().toString.take(12)
     val tokenDir = new Path(poolDir(rootP), token)
     val shaped = clusterByOf(spark, table) match {
@@ -1370,7 +1374,7 @@ object SnapshotLog {
     val (fs, rootP) = fsOf(spark, table)
     val token = java.util.UUID.randomUUID().toString.take(12)
     val tokenDir = new Path(poolDir(rootP), token)
-    readSnapshot(spark, table, cur, onlyFiles = Some(dirty))
+    scanVersion(spark, table, cur, Some(dirty))
       .write.mode("errorifexists").parquet(tokenDir.toString)
     val adds = partFiles(fs, rootP, tokenDir)
     // removing a file drops its DV set in the same replay step (state's
@@ -1474,26 +1478,13 @@ object SnapshotLog {
     val cur = state(spark, table, Some(head))
     val schema = DataType.fromJson(cur.schemaJson).asInstanceOf[StructType]
     val (fs, rootP) = fsOf(spark, table)
-    val absAll = cur.files.map(f => fs.makeQualified(new Path(dataRootOf(rootP), f)).toString)
     val upsertKeys = upserts.select(keyCol).distinct().collect().map(_.get(0)).toSeq
     val keys = (upsertKeys ++ deleteKeys).distinct
     if (keys.isEmpty) return head
 
     // affected = live files whose footer interval may contain a key;
     // files without usable stats rewrite (never silently kept)
-    val kstats = cachedHarvest(spark, absAll, keyCol, schema(keyCol).dataType)
-    // sorted keys + binary search: the may-contain probe is
-    // files x log(keys), not files x keys (a large CDC batch against a
-    // 100k-file version would otherwise burn the driver)
-    val sortedKeys = keys.toArray.sortWith(StatsAgg.cmp(_, _) < 0)
-    val affectedAbs = kstats.filter { fsRow =>
-      (fsRow.min, fsRow.max) match {
-        case (Some(mn), Some(mx)) => StatsAgg.anyKeyInRange(sortedKeys, mn, mx)
-        case _ => true
-      }
-    }.map(_.path).toSet
-    val affectedRel = cur.files.filter(f =>
-      affectedAbs.contains(fs.makeQualified(new Path(dataRootOf(rootP), f)).toString))
+    val affectedRel = filesMayContain(spark, table, cur, keyCol, keys)
 
     val keysDf = spark.createDataFrame(
       // slice the key batch so no single task ships megabytes of keys
@@ -1504,7 +1495,7 @@ object SnapshotLog {
       StructType(Seq(schema(keyCol).copy(name = "_mk"))))
     // DV-aware: rows already dead in an affected file must not be
     // resurrected by its rewrite
-    val survivors = readSnapshot(spark, table, cur, onlyFiles = Some(affectedRel))
+    val survivors = scanVersion(spark, table, cur, Some(affectedRel))
       .join(org.apache.spark.sql.functions.broadcast(keysDf),
         org.apache.spark.sql.functions.col(keyCol) ===
           org.apache.spark.sql.functions.col("_mk"), "left_anti")
@@ -1555,21 +1546,13 @@ object SnapshotLog {
     require(scanFiles.forall(cur.files.contains),
       "candidate files must be live in the head version")
     if (scanFiles.isEmpty) return head
-    val schema = DataType.fromJson(cur.schemaJson).asInstanceOf[StructType]
     val (fs, root) = fsOf(spark, table)
-    val abs = scanFiles.map(f => new Path(dataRootOf(root), f).toString)
 
-    var hits = spark.read.schema(schema).parquet(abs: _*)
+    // the scan excludes rows already dead — a re-run of the same delete
+    // (or an overlapping predicate) must not grow the vectors
+    val hits = scanVersion(spark, table, cur, Some(scanFiles), positions = true)
       .where(predicate)
-      .select(relFileCol.as("file"), col("_metadata.row_index").as("pos"))
-    // exclude rows already dead — a re-run of the same delete (or an
-    // overlapping predicate) must not grow the vectors
-    val dirtyScanned = scanFiles.filter(cur.dvs.contains)
-    if (dirtyScanned.nonEmpty) {
-      val sub = cur.copy(dvs = cur.dvs.filter { case (f, _) => dirtyScanned.contains(f) })
-      hits = hits.join(org.apache.spark.sql.functions.broadcast(
-        dvRows(spark, root, sub)), Seq("file", "pos"), "left_anti")
-    }
+      .select(col("_uf").as("file"), col("_up").as("pos"))
 
     // count-aware DV layout: the CDC-sized common case writes ONE file,
     // but a predicate matching 10⁸ rows must not funnel through one
@@ -1615,7 +1598,7 @@ object SnapshotLog {
              assignments: Map[String, org.apache.spark.sql.Column],
              checkpointInterval: Int = DefaultCheckpointInterval,
              dvRowsPerFile: Long = 8L * 1024 * 1024): Long = {
-    import org.apache.spark.sql.functions.{broadcast, col}
+    import org.apache.spark.sql.functions.col
     require(assignments.nonEmpty, "update needs at least one assignment")
     val head = currentVersion(spark, table)
     val cur = state(spark, table, Some(head))
@@ -1623,21 +1606,10 @@ object SnapshotLog {
     val schema = DataType.fromJson(cur.schemaJson).asInstanceOf[StructType]
     assignments.keys.foreach(c => require(schema.fieldNames.contains(c),
       s"unknown column '$c' in UPDATE of $table (schema: ${schema.fieldNames.mkString(",")})"))
-    Seq("_uf", "_up").foreach(c => require(!schema.fieldNames.contains(c),
-      s"input column '$c' clashes with the update working columns"))
     val (fs, root) = fsOf(spark, table)
-    val abs = cur.files.map(f => new Path(dataRootOf(root), f).toString)
 
-    // ONE scan finds the matched rows with their positions AND payload
-    var hits = spark.read.schema(schema).parquet(abs: _*)
-      .where(predicate)
-      .select(relFileCol.as("_uf") +: col("_metadata.row_index").as("_up") +:
-        schema.fieldNames.toSeq.map(col): _*)
-    if (cur.dvs.nonEmpty) {
-      val dv = dvRows(spark, root, cur)
-      hits = hits.join(broadcast(dv),
-        hits("_uf") === dv("file") && hits("_up") === dv("pos"), "left_anti")
-    }
+    // ONE scan finds the live matched rows with their positions AND payload
+    val hits = scanVersion(spark, table, cur, positions = true).where(predicate)
     hits.persist()
     try {
       val nHit = hits.count()
@@ -1726,8 +1698,6 @@ object SnapshotLog {
     val head = currentVersion(spark, table)
     val cur = state(spark, table, Some(head))
     val schema = DataType.fromJson(cur.schemaJson).asInstanceOf[StructType]
-    Seq("_uf", "_up").foreach(c => require(!schema.fieldNames.contains(c),
-      s"input column '$c' clashes with the merge working columns"))
     val (fs, root) = fsOf(spark, table)
 
     // Pin the source to ONE materialization before anything reads it:
@@ -1755,7 +1725,7 @@ object SnapshotLog {
                 notMatchedBySource: Seq[MatchedAction],
                 head: Long, cur: Snapshot, schema: StructType,
                 fs: org.apache.hadoop.fs.FileSystem, root: Path): Long = {
-    import org.apache.spark.sql.functions.{broadcast, col, lit, when}
+    import org.apache.spark.sql.functions.{col, lit, when}
 
     // zone-map prune of the target scan by the source's key batch —
     // sound for matched arms AND the not-matched anti-join (a pruned
@@ -1769,43 +1739,12 @@ object SnapshotLog {
           .collect().map(_.get(0)).filter(_ != null).toSeq
         if (keys.size > maxProbeKeys) cur.files // backfill: full scan
         else if (keys.isEmpty) Nil
-        else {
-          val absAll = cur.files.map(f =>
-            fs.makeQualified(new Path(dataRootOf(root), f)).toString)
-          val kstats = cachedHarvest(spark, absAll, tk, schema(tk).dataType)
-          val sorted = keys.toArray.sortWith(StatsAgg.cmp(_, _) < 0)
-          val keep = kstats.filter { r =>
-            (r.min, r.max) match {
-              case (Some(mn), Some(mx)) => StatsAgg.anyKeyInRange(sorted, mn, mx)
-              case _ => true
-            }
-          }.map(_.path).toSet
-          cur.files.filter(f =>
-            keep.contains(fs.makeQualified(new Path(dataRootOf(root), f)).toString))
-        }
+        else filesMayContain(spark, table, cur, tk, keys)
       case _ => cur.files
     }
 
     // live target rows with their physical positions, aliased `_t`
-    val tFrame: DataFrame = {
-      if (scanFiles.isEmpty) {
-        val fields = StructField("_uf", StringType) +:
-          StructField("_up", LongType) +: schema.fields
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType(fields))
-      } else {
-        val abs = scanFiles.map(f => new Path(dataRootOf(root), f).toString)
-        var t = spark.read.schema(schema).parquet(abs: _*)
-          .select(relFileCol.as("_uf") +: col("_metadata.row_index").as("_up") +:
-            schema.fieldNames.toSeq.map(col): _*)
-        if (cur.dvs.nonEmpty) {
-          val dv = dvRows(spark, root, cur)
-          t = t.join(broadcast(dv),
-            t("_uf") === dv("file") && t("_up") === dv("pos"), "left_anti")
-        }
-        t
-      }
-    }
-    val tA = tFrame.alias("_t")
+    val tA = scanVersion(spark, table, cur, Some(scanFiles), positions = true).alias("_t")
     val sA = source.alias("_s")
 
     /** First-arm-wins action index: 0 = no arm applies (row untouched). */
@@ -1915,20 +1854,7 @@ object SnapshotLog {
                    checkpointInterval: Int = DefaultCheckpointInterval): Long = {
     if (keys.isEmpty) return currentVersion(spark, table)
     val head = currentVersion(spark, table)
-    val cur = state(spark, table, Some(head))
-    val schema = DataType.fromJson(cur.schemaJson).asInstanceOf[StructType]
-    val (fs, root) = fsOf(spark, table)
-    val absAll = cur.files.map(f => fs.makeQualified(new Path(dataRootOf(root), f)).toString)
-    val kstats = cachedHarvest(spark, absAll, keyCol, schema(keyCol).dataType)
-    val sortedKeys = keys.toArray.sortWith(StatsAgg.cmp(_, _) < 0)
-    val affectedAbs = kstats.filter { r =>
-      (r.min, r.max) match {
-        case (Some(mn), Some(mx)) => StatsAgg.anyKeyInRange(sortedKeys, mn, mx)
-        case _ => true
-      }
-    }.map(_.path).toSet
-    val candidateRel = cur.files.filter(f =>
-      affectedAbs.contains(fs.makeQualified(new Path(dataRootOf(root), f)).toString))
+    val candidateRel = filesMayContain(spark, table, state(spark, table, Some(head)), keyCol, keys)
     if (candidateRel.isEmpty) return head
     delete(spark, table,
       org.apache.spark.sql.functions.col(keyCol).isin(keys: _*),
@@ -1964,7 +1890,8 @@ object SnapshotLog {
     * protocol — a commit token is never reused for different data and
     * data files are never modified in place — so harvested bounds are
     * valid for the file's whole life and a maintenance loop (merge /
-    * deleteByKeys / readPruned per tick) pays footer reads for NEW
+    * deleteByKeys / readPruned, or any filtered [[scanVersion]] such as
+    * a delete or update predicate, per tick) pays footer reads for NEW
     * files only, not O(version files) per call. That re-harvest was the
     * one measured per-refresh O(files) term in the steady-state JoinView
     * cycle (round-12 reconciliation). LRU-capped at 1M entries
@@ -1977,8 +1904,10 @@ object SnapshotLog {
     * deleted file cannot exist by construction, not merely because no
     * retained manifest references one. (Tokens are never reused, so a
     * future file can never take a dropped file's path either.) No file
-    * status outlives a read (see [[knownFiles]]), so there is no status
-    * cache to evict. */
+    * status outlives a read: every [[scanVersion]] lists its files into
+    * a fresh [[SnapshotFileIndex]] (`FileStatusCache.getOrCreate` hands
+    * each build its own namespace), so there is no status cache to
+    * evict. */
   private val footerStatsCache = java.util.Collections.synchronizedMap(
     new java.util.LinkedHashMap[String, StatsAgg.FileStats](1024, 0.75f, true) {
       override def removeEldestEntry(
@@ -2002,6 +1931,26 @@ object SnapshotLog {
       .getOrElse(StatsAgg.FileStats(p, 0L, None, None, None)))
   }
 
+  /** The live files of `snap` whose cached footer [min,max] on `column`
+    * may contain one of `keys`; a file without usable stats always may
+    * (never silently skipped). Sorted keys + binary search keep the
+    * probe at files × log(keys), not files × keys: a large CDC batch
+    * against a 100k-file version would otherwise burn the driver. */
+  private def filesMayContain(spark: SparkSession, table: String, snap: Snapshot,
+                              column: String, keys: Seq[Any]): Seq[String] = {
+    val (fs, root) = fsOf(spark, table)
+    val abs = qualified(fs, root, snap.files)
+    val dt = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType](column).dataType
+    val sorted = keys.toArray.sortWith(StatsAgg.cmp(_, _) < 0)
+    val keep = cachedHarvest(spark, abs, column, dt).filter { r =>
+      (r.min, r.max) match {
+        case (Some(mn), Some(mx)) => StatsAgg.anyKeyInRange(sorted, mn, mx)
+        case _ => true
+      }
+    }.map(_.path).toSet
+    snap.files.zip(abs).collect { case (f, a) if keep(a) => f }
+  }
+
   // ── reads ────────────────────────────────────────────────────────
 
   /** Table-relative path of a scanned row's file, recovered from the
@@ -2017,17 +1966,13 @@ object SnapshotLog {
     regexp_extract(col("_metadata.file_path"), "^.*/(data/.*)$", 1)
   }
 
-  /** All DV rows `(file, pos)` any live file's vector set references.
+  /** The DV rows `(file, pos)` of the DV files `relPaths` (pool-relative).
     * Sound to pool across files: a row is dead for file `f` iff some DV
     * in `f`'s OWN set lists `(f, pos)`, and vector sets only ever grow
     * append-only within a history branch (rollback restores aligned
     * prefixes across every file one commit touched) — so a pooled DV's
     * `f`-rows are in the pool exactly when `f`'s set contains it. */
-  private def dvRows(spark: SparkSession, root: Path, snap: Snapshot): DataFrame =
-    dvRowsFromPaths(spark, root, snap.dvs.values.flatten.toSeq.distinct)
-
-  private[lake] def dvRowsFromPaths(spark: SparkSession, root: Path,
-                                    relPaths: Seq[String]): DataFrame = {
+  private def dvRows(spark: SparkSession, root: Path, relPaths: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions.col
     val paths = relPaths.map(f => new Path(dataRootOf(root), f).toString)
     spark.read.parquet(paths: _*).select(col("file"), col("pos"))
@@ -2059,7 +2004,8 @@ object SnapshotLog {
     val key = fs.makeQualified(root).toString + "@" + snap.version
     val cached = deadPositionsCache.get(key)
     if (cached != null) return cached
-    val rows = dvRows(spark, root, snap).limit(maxRows.toInt + 1).collect()
+    val rows = dvRows(spark, root, snap.dvs.values.flatten.toSeq.distinct)
+      .limit(maxRows.toInt + 1).collect()
     if (rows.length > maxRows) throw new IllegalStateException(
       s"version ${snap.version} of $root carries more than $maxRows " +
         "deletion-vector rows — too many to apply row-based on the driver. " +
@@ -2080,32 +2026,66 @@ object SnapshotLog {
         size() > 64
     })
 
-  /** Drop `dv`-listed rows from `scan` (which must expose `_metadata`):
-    * per-file positional anti-join, broadcast — the DV side is
-    * dead-row-sized (CDC contract; [[compact]] folds it to zero), so no
-    * shuffle touches the data. */
-  private def minusDeleted(scan: DataFrame, dv: DataFrame,
-                           outCols: Seq[String]): DataFrame = {
+  /** The one scan of a snapshot version's data files (`files`, default
+    * every live file of `snap`, all pool-relative): [[read]],
+    * [[readPruned]], [[readLineage]], [[readChanges]], the matched-row
+    * scans of [[delete]], [[update]] and [[mergeInto]], the rewrites of
+    * [[merge]], [[compactBin]] and [[purgeDeletes]], and the SQL
+    * catalog's DV-applying read all build their scan here. The files
+    * scan through a [[SnapshotFileIndex]] relation, so on every one of
+    * those reads a filter prunes files by footer zone maps and Bloom
+    * sidecars and pushes into parquet, and a listed file that is
+    * missing fails the build instead of reading partial. The version's
+    * committed schema is imposed with deep-relaxed nullability, like
+    * `DataFrameReader.schema`: a pre-evolution file legitimately lacks a
+    * later (null-filled) column, and a non-nullable field would make the
+    * vectorized reader refuse it. A scan over zero files is the same
+    * relation, empty, with the same schema.
+    *
+    * Deletion vectors apply merge-on-read: clean files scan untouched,
+    * and the dirty files' dead rows are dropped by ONE broadcast
+    * anti-join on `(file, _metadata.row_index)`. Sound under pushdown
+    * and splits because `_metadata.row_index` is intrinsic to the row
+    * (the reader derives it from footer offsets), not a count of
+    * delivered rows; the DV side is dead-row-sized ([[maintain]] bounds
+    * it), so nothing is shuffled. `positions = true` keeps each row's
+    * pool-relative file as `_uf` and its row index as `_up`: the keys a
+    * DV row is written with. */
+  private[lake] def scanVersion(spark: SparkSession, table: String, snap: Snapshot,
+                                files: Option[Seq[String]] = None,
+                                positions: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col}
-    scan
-      .withColumn("_dv_file", relFileCol)
-      .withColumn("_dv_pos", col("_metadata.row_index"))
-      .join(broadcast(dv),
-        col("_dv_file") === dv("file") && col("_dv_pos") === dv("pos"), "left_anti")
-      .select(outCols.map(col): _*)
+    val schema = StructType(DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
+      .fields.map(relaxNullability))
+    if (positions) Seq("_uf", "_up").foreach(c => require(!schema.fieldNames.contains(c),
+      s"input column '$c' clashes with the positional scan columns"))
+    val (fs, root) = fsOf(spark, table)
+    val (dirty, clean) = files.getOrElse(snap.files).partition(snap.dvs.contains)
+    val data = schema.fieldNames.toSeq.map(col)
+    def over(part: Seq[String], withPositions: Boolean): DataFrame =
+      MetastoreFileIndex.relation(spark,
+        new SnapshotFileIndex(spark, qualified(fs, root, part), schema, Some(table)),
+        StructType(Nil), schema)
+        .select(data ++ (if (withPositions)
+          Seq(relFileCol.as("_uf"), col("_metadata.row_index").as("_up")) else Nil): _*)
+    val parts = Seq.newBuilder[DataFrame]
+    if (clean.nonEmpty || dirty.isEmpty) parts += over(clean, positions)
+    if (dirty.nonEmpty) {
+      val dv = dvRows(spark, root, dirty.flatMap(snap.dvs).distinct)
+      parts += over(dirty, withPositions = true)
+        .join(broadcast(dv), col("_uf") === dv("file") && col("_up") === dv("pos"), "left_anti")
+        .select(data ++ (if (positions) Seq(col("_uf"), col("_up")) else Nil): _*)
+    }
+    parts.result().reduce(_ unionByName _)
   }
 
-  /** Read a snapshot (default: head). The committed schema of THAT
-    * version is imposed on the scan, so time travel returns the table
-    * as it was — a column added later does not bleed into old versions,
-    * and an empty snapshot still has its schema. Deletion vectors of
-    * the version are applied merge-on-read: files without dead rows
-    * scan untouched; files with them pay one broadcast positional
-    * anti-join (`_metadata.row_index` keyed) and nothing is shuffled. */
-  def read(spark: SparkSession, table: String, asOf: Option[Long] = None): DataFrame = {
-    val snap = state(spark, table, asOf)
-    readSnapshot(spark, table, snap)
-  }
+  /** Read a snapshot (default: head) through [[scanVersion]]. The
+    * committed schema of THAT version is imposed on the scan, so time
+    * travel returns the table as it was: a column added later does not
+    * bleed into old versions, and an empty snapshot still has its
+    * schema. Deletion vectors of the version are applied merge-on-read. */
+  def read(spark: SparkSession, table: String, asOf: Option[Long] = None): DataFrame =
+    scanVersion(spark, table, state(spark, table, asOf))
 
   /** [[read]] with row-level provenance: every row carries
     * `_commit_version` — the log version whose manifest FIRST added
@@ -2128,11 +2108,6 @@ object SnapshotLog {
     import org.apache.spark.sql.functions.{broadcast, col}
     val snap = state(spark, table, asOf)
     val (fs, root) = fsOf(spark, table)
-    val schema = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
-    val outSchema = StructType(schema.fields ++ Seq(
-      StructField("_commit_version", LongType), StructField("_source_file", StringType)))
-    if (snap.files.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], outSchema)
     val listing = listLog(fs, root)
     val firstAdd = scala.collection.mutable.LinkedHashMap[String, Long]()
     for (v <- listing.manifests;
@@ -2143,44 +2118,18 @@ object SnapshotLog {
         snap.files.map(f => Row(f, firstAdd.getOrElse(f, -1L))), 1),
       StructType(Seq(StructField("_source_file", StringType),
         StructField("_commit_version", LongType))))
-    def abs(f: String) = new Path(dataRootOf(root), f).toString
-    def withProvenance(files: Seq[String]) =
-      spark.read.schema(schema).parquet(files.map(abs): _*)
-        .withColumn("_source_file", relFileCol)
-    val clean = snap.files.filterNot(snap.dvs.contains)
-    val dirty = snap.files.filter(snap.dvs.contains)
-    val parts = Seq.newBuilder[DataFrame]
-    if (clean.nonEmpty) parts += withProvenance(clean)
-    if (dirty.nonEmpty) {
-      val sub = snap.copy(dvs = snap.dvs.filter { case (f, _) => dirty.contains(f) })
-      parts += minusDeleted(withProvenance(dirty), dvRows(spark, root, sub),
-        schema.fieldNames.toSeq :+ "_source_file")
-    }
-    parts.result().reduce(_ unionByName _)
+    val names = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType].fieldNames.toSeq
+    scanVersion(spark, table, snap, positions = true)
+      .withColumnRenamed("_uf", "_source_file")
       .join(broadcast(verDf), "_source_file")
-      .select(outSchema.fieldNames.map(col): _*)
-  }
-
-  /** Manifest-fed scan over a KNOWN file list: the paths come from a
-    * committed manifest, so the per-call existence probe and glob pass
-    * of `spark.read.parquet(paths…)` are pure waste — this constructs
-    * the relation directly ([[MetastoreFileIndex.relation]]) over the
-    * [[knownFiles]] listing, with no pruning index. */
-  private[lake] def scanKnownFiles(spark: SparkSession, paths: Seq[String],
-                             schema: StructType): DataFrame = {
-    // nullable like `spark.read.schema(…)` forces: a pre-evolution file
-    // legitimately lacks a later column (null-filled by the reader), and
-    // a non-nullable field would make the vectorized reader REFUSE the
-    // file instead
-    val readSchema = StructType(schema.fields.map(relaxNullability))
-    MetastoreFileIndex.relation(spark, knownFiles(spark, paths, Some(readSchema)),
-      StructType(Nil), readSchema)
+      .select((names :+ "_commit_version" :+ "_source_file").map(col): _*)
   }
 
   /** An `InMemoryFileIndex` over exactly `paths`, listed once per build
-    * (`FileStatusCache.getOrCreate` hands each call a fresh namespace).
-    * A file the listing lacks fails the build
-    * ([[SnapshotFileIndex.requireListed]]) instead of being skipped. */
+    * (`FileStatusCache.getOrCreate` hands each call a fresh namespace),
+    * behind [[MetastoreFileIndex.overStatsFiles]]. A file the listing
+    * lacks fails the build ([[SnapshotFileIndex.requireListed]])
+    * instead of being skipped. */
   private[lake] def knownFiles(spark: SparkSession, paths: Seq[String],
                                schema: Option[StructType]): InMemoryFileIndex = {
     val idx = new InMemoryFileIndex(spark, paths.map(new Path(_)),
@@ -2201,80 +2150,16 @@ object SnapshotLog {
     f.copy(dataType = relax(f.dataType), nullable = true)
   }
 
-  /** [[read]] for an already-resolved snapshot (shared by merge /
-    * compact / the change feed so they all see the same dead rows). */
-  private[graft] def readSnapshot(spark: SparkSession, table: String,
-                                  snap: Snapshot,
-                                  onlyFiles: Option[Seq[String]] = None): DataFrame = {
-    val schema = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
-    val files = onlyFiles.getOrElse(snap.files)
-    if (files.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    val root = new Path(table)
-    def abs(f: String) = new Path(dataRootOf(root), f).toString
-    val clean = files.filterNot(snap.dvs.contains)
-    val dirty = files.filter(snap.dvs.contains)
-    val parts = Seq.newBuilder[DataFrame]
-    if (clean.nonEmpty) parts += scanKnownFiles(spark, clean.map(abs), schema)
-    if (dirty.nonEmpty) {
-      val sub = snap.copy(dvs = snap.dvs.filter { case (f, _) => dirty.contains(f) })
-      parts += minusDeleted(
-        scanKnownFiles(spark, dirty.map(abs), schema),
-        dvRows(spark, root, sub), schema.fieldNames.toSeq)
-    }
-    parts.result().reduce(_ unionByName _)
-  }
-
-  /** The VECTORIZED form of a DV-carrying catalog read — what
-    * `GraftExtensions`' resolution rule substitutes for the row-based
-    * [[graft.lake.DvScanBuilder]] fallback, and the whole of
-    * [[readPruned]] for any version. Clean files scan through a
-    * [[SnapshotFileIndex]] (zone-map file pruning + full parquet filter
-    * pushdown + splitting + columnar batches); dirty files scan the
-    * same way with their dead `(file, _metadata.row_index)` pairs
-    * dropped by ONE broadcast anti-join ([[minusDeleted]]). Sound under
-    * pushdown and splits because `_metadata.row_index` is INTRINSIC to
-    * the row (the reader derives it from footer offsets), not a count
-    * of delivered rows — row-group skipping cannot desynchronize it,
-    * which is exactly what the positional-counter fallback cannot
-    * claim. So one deleted row no longer devectorizes a 100 TB version:
-    * the DV tax becomes O(dead rows) broadcast + the dirty files'
-    * anti-join probe, with every file still pruned, split, and pushed.
-    */
-  private[lake] def vectorizedCatalogRead(spark: SparkSession, tablePath: String,
-                                          schema: StructType, absFiles: Seq[String],
-                                          dvs: Map[String, Seq[String]]): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val root = new Path(tablePath)
-    val readSchema = StructType(schema.fields.map(relaxNullability))
-    def scan(paths: Seq[String]): DataFrame = MetastoreFileIndex.relation(spark,
-      new SnapshotFileIndex(spark, paths, readSchema, Some(tablePath)), StructType(Nil), readSchema)
-    val (dirty, clean) = absFiles.partition(p =>
-      dvs.contains(SnapshotTable.relOf(new Path(p).toUri.getPath)))
-    val parts = Seq.newBuilder[DataFrame]
-    if (clean.nonEmpty)
-      parts += scan(clean).select(readSchema.fieldNames.toSeq.map(col): _*)
-    if (dirty.nonEmpty)
-      parts += minusDeleted(scan(dirty),
-        dvRowsFromPaths(spark, root, dvs.values.flatten.toSeq.distinct),
-        readSchema.fieldNames.toSeq)
-    if (parts.result().isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], readSchema)
-    else parts.result().reduce(_ unionByName _)
-  }
-
-  /** Time travel WITH transparent zone-map pruning: a pinned version
-    * read through the SQL catalog's own scan ([[vectorizedCatalogRead]]),
-    * so `readPruned(…).where(f)` and `SELECT … FROM snap.t WHERE f` plan
-    * the same files. At planning time the [[SnapshotFileIndex]] skips
-    * files by their footer [min,max] on EVERY orderable filtered column
-    * and by Bloom sidecars on `=`/`IN` over a column with one
-    * ([[buildBloom]]); deletion vectors apply as one broadcast anti-join
-    * over the dirty files only. `clusterColumn +: optionalColumns` name
-    * the columns whose footer stats are harvested into the per-file
-    * cache up front (O(version files) on first sight, KBs each — never
-    * the dead versions'), so queries on them plan from cache hits; any
-    * other column is harvested the first time a filter names it. Best
+  /** Time travel WITH transparent zone-map pruning: [[read]] after
+    * harvesting the footer stats of `clusterColumn +: optionalColumns`
+    * into the per-file cache up front (O(version files) on first sight,
+    * KBs each — never the dead versions'), so queries on those columns
+    * plan from cache hits; any other column is harvested the first time
+    * a filter names it. The scan is the SQL catalog's, so
+    * `readPruned(…).where(f)` and `SELECT … FROM snap.t WHERE f` plan
+    * the same files: the [[SnapshotFileIndex]] skips files by their
+    * footer [min,max] on every orderable filtered column and by Bloom
+    * sidecars on `=`/`IN` over a column with one ([[buildBloom]]). Best
     * after [[compact]] or a clustered write; an unclustered version
     * prunes nothing (sound, just unhelpful). */
   def readPruned(spark: SparkSession, table: String, clusterColumn: String,
@@ -2282,16 +2167,12 @@ object SnapshotLog {
                  asOf: Option[Long] = None): DataFrame = {
     val snap = state(spark, table, asOf)
     val schema = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
-    if (snap.files.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    val root = new Path(table)
-    // fs-qualified (file:/… | hdfs://…) like the catalog's paths, so the
-    // cache keys and the index's listed URIs match
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val abs = snap.files.map(f => fs.makeQualified(new Path(dataRootOf(root), f)).toString)
+    val (fs, root) = fsOf(spark, table)
+    // fs-qualified like the index's paths, so the cache keys match
+    val abs = qualified(fs, root, snap.files)
     (clusterColumn +: optionalColumns).distinct.filter(schema.fieldNames.contains)
       .foreach(c => cachedHarvest(spark, abs, c, schema(c).dataType))
-    vectorizedCatalogRead(spark, table, schema, abs, snap.dvs)
+    scanVersion(spark, table, snap)
   }
 
   /** Row-level CHANGE FEED: every insert/delete between two versions,
@@ -2345,7 +2226,6 @@ object SnapshotLog {
     val outSchema = DataType.fromJson(state(spark, table, Some(to)).schemaJson)
       .asInstanceOf[StructType]
     val outFields = outSchema.fields.toSeq
-    def abs(f: String) = new Path(dataRootOf(root), f).toString
 
     /** Null-fill `df` to the output schema (shared by the tag step and
       * the except-diffs, whose two sides may sit on different commit
@@ -2393,8 +2273,7 @@ object SnapshotLog {
       val p = parse(readFile(fs, manifestPath(root, v))).getOrElse(
         throw new IllegalStateException(s"torn manifest v$v in $table"))
       val schemaV = DataType.fromJson(p.schemaJson).asInstanceOf[StructType]
-      def readAdds(): DataFrame =
-        spark.read.schema(schemaV).parquet(p.adds.map(abs): _*)
+      def readAdds(): DataFrame = scanVersion(spark, table, Snapshot(v, p.adds, p.schemaJson))
       p.entry.op match {
         case "append" =>
           if (p.adds.nonEmpty) parts += conform(readAdds(), "insert", v)
@@ -2411,12 +2290,9 @@ object SnapshotLog {
             case (f, set) if set != prev.dvs.getOrElse(f, Nil) => f
           }
           if (newDv.nonEmpty && grown.nonEmpty) {
-            val dvNew = spark.read.parquet(newDv.map(abs): _*).select("file", "pos")
-            val scan = spark.read.schema(schemaV).parquet(grown.map(abs): _*)
-              .withColumn("_dv_file", relFileCol)
-              .withColumn("_dv_pos", col("_metadata.row_index"))
-            val dead = scan.join(broadcast(dvNew),
-                col("_dv_file") === dvNew("file") && col("_dv_pos") === dvNew("pos"),
+            val dvNew = dvRows(spark, root, newDv)
+            val dead = scanVersion(spark, table, Snapshot(v, grown, p.schemaJson), positions = true)
+              .join(broadcast(dvNew), col("_uf") === dvNew("file") && col("_up") === dvNew("pos"),
                 "left_semi")
               .select(schemaV.fieldNames.map(col): _*)
             parts += conform(dead, "delete", v)
@@ -2430,8 +2306,7 @@ object SnapshotLog {
           // live set with its DVs applied IS the insert set — reachable
           // only via fromVersion = -1 on a branch, i.e. the consumer
           // asked for the creation
-          parts += conform(
-            readSnapshot(spark, table, state(spark, table, Some(v))), "insert", v)
+          parts += conform(scanVersion(spark, table, state(spark, table, Some(v))), "insert", v)
         case op if op.startsWith("publish:") =>
           // WAP fast-forward (Branches.publish): ONE main commit carrying
           // a branch's net diff — adds, removes, AND DV restates on
@@ -2445,8 +2320,8 @@ object SnapshotLog {
           val restated = p.dvSets.map(_._1)
           val prevAffected = (p.removes ++ restated.filter(prevSet)).distinct
           val curAffected = (p.adds ++ restated.filter(curSet)).distinct
-          val before = align(readSnapshot(spark, table, prev, onlyFiles = Some(prevAffected)))
-          val after = align(readSnapshot(spark, table, cur, onlyFiles = Some(curAffected)))
+          val before = align(scanVersion(spark, table, prev, Some(prevAffected)))
+          val after = align(scanVersion(spark, table, cur, Some(curAffected)))
           diffParts(after, before, v)
         case op @ ("merge" | "overwrite" | "rollback") =>
           val prev = prevState(v)
@@ -2457,7 +2332,7 @@ object SnapshotLog {
             if (p.adds.nonEmpty) parts += conform(readAdds(), "insert", v)
           } else if (op == "merge") {
             // affected files only: removed side with prior DVs applied
-            val removed = readSnapshot(spark, table, prev, onlyFiles = Some(p.removes))
+            val removed = scanVersion(spark, table, prev, Some(p.removes))
             val added = readAdds()
             diffParts(added, removed, v)
           } else {
@@ -2468,8 +2343,8 @@ object SnapshotLog {
             val curSnap = state(spark, table, Some(v))
             require(curSnap.schemaJson == prev.schemaJson,
               s"full diff across a schema change at v$v is not supported")
-            val before = readSnapshot(spark, table, prev)
-            val after = readSnapshot(spark, table, curSnap)
+            val before = scanVersion(spark, table, prev)
+            val after = scanVersion(spark, table, curSnap)
             diffParts(after, before, v)
           }
         case other =>
@@ -2491,8 +2366,8 @@ object SnapshotLog {
                 "full read of the new version")
             val prev = prevState(v)
             val curSnap = state(spark, table, Some(v))
-            val before = align(readSnapshot(spark, table, prev))
-            val after = align(readSnapshot(spark, table, curSnap))
+            val before = align(scanVersion(spark, table, prev))
+            val after = align(scanVersion(spark, table, curSnap))
             diffParts(after, before, v)
           }
       }
@@ -2613,7 +2488,7 @@ object SnapshotLog {
     listing.manifests.filter(_ < horizon).foreach(v => fs.delete(manifestPath(root, v), false))
     listing.checkpoints.filter(_ < horizon).foreach(v => fs.delete(checkpointPath(root, v), false))
     if (dropFiles.nonEmpty)
-      evictCaches(dropFiles.map(f => fs.makeQualified(new Path(dataRootOf(root), f)).toString).toSet)
+      evictCaches(qualified(fs, root, dropFiles).toSet)
     dropFiles
   }
 

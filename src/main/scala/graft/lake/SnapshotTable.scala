@@ -25,14 +25,15 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   *  1. ZONE-MAP FILE PRUNING ([[SnapshotFileIndex]]): `WHERE` clauses
   *     skip non-matching files at planning time from cached footer
-  *     stats. The API's `SnapshotLog.readPruned` reads through the same
-  *     index (via [[SnapshotLog.vectorizedCatalogRead]]), so the SQL and
-  *     API pruning cannot drift;
+  *     stats. Every API read of a version (`SnapshotLog.read`,
+  *     `readPruned`, the DML scans) goes through the same index
+  *     ([[SnapshotLog.scanVersion]]), so the SQL and API pruning cannot
+  *     drift;
   *  2. DELETION-VECTOR application ([[DvScanBuilder]]): a version that
   *     carries DVs is readable in pure SQL — each dirty file's dead
   *     positions are dropped by a per-file positional filter inside the
-  *     scan, the row-level equivalent of `SnapshotLog.read`'s broadcast
-  *     anti-join (reference capability: query-the-lake,
+  *     scan, the row-level equivalent of `SnapshotLog.scanVersion`'s
+  *     broadcast anti-join (reference capability: query-the-lake,
   *     lakeshack/lakeshack.py:476-579, here versioned + SQL + DV-aware).
   *
   * DV READ TAX (the price of merge-on-read, cleared by
@@ -94,7 +95,7 @@ private[lake] class SnapshotParquetTable(
     tname: String, spark: SparkSession,
     private[lake] val filePaths: Seq[String],
     tableSchema: StructType,
-    private[lake] val dvFiles: Map[String, Seq[String]],
+    private[lake] val snap: SnapshotLog.Snapshot,
     deadFn: () => Map[String, Array[Long]],
     private[lake] val tablePath: String, private[lake] val writable: Boolean)
   extends org.apache.spark.sql.connector.catalog.Table
@@ -102,15 +103,20 @@ private[lake] class SnapshotParquetTable(
   with org.apache.spark.sql.connector.catalog.SupportsWrite
   with SupportsDelete {
 
+  private[lake] def dvFiles: Map[String, Seq[String]] = snap.dvs
+
   private val readTable =
     new SnapshotReadTable(tname, spark, filePaths, tableSchema, dvFiles.nonEmpty,
       deadFn, tablePath, streamable = writable)
 
-  /** The vectorized DV-applying read `VectorizeSnapshotDvRead`
-    * substitutes for this relation (see
-    * [[SnapshotLog.vectorizedCatalogRead]]). */
-  private[lake] def vectorizedRead(session: SparkSession): org.apache.spark.sql.DataFrame =
-    SnapshotLog.vectorizedCatalogRead(session, tablePath, tableSchema, filePaths, dvFiles)
+  /** The version's scan over `absFiles` (default: all of them), deletion
+    * vectors applied ([[SnapshotLog.scanVersion]]): what
+    * `VectorizeSnapshotDvRead` substitutes for this relation, and the
+    * boundary-file scan of `PushFilteredAggToManifest`. */
+  private[lake] def vectorizedRead(session: SparkSession,
+                                   absFiles: Seq[String] = filePaths): org.apache.spark.sql.DataFrame =
+    SnapshotLog.scanVersion(session, tablePath, snap,
+      Some(absFiles.map(p => SnapshotTable.relOf(new Path(p).toUri.getPath))))
 
   override def name(): String = tname
   override def schema(): StructType = tableSchema

@@ -111,7 +111,10 @@ object ChangeRelay {
         // keyless REBALANCE: a typical single version's change set is
         // small and lands in one advisory-sized file instead of one
         // sliver per upstream task, while AQE still splits a huge
-        // version across writers (see relayRange's note)
+        // version across writers (see relayRange's note). Spark drops
+        // the hint when AQE is off (a foreachBatch session may run so):
+        // the write is then the unhinted one, never a plain shuffle
+        // into spark.sql.shuffle.partitions slivers
         SnapshotLog.readChanges(spark, table, v - 1, Some(v), allowFullDiff)
           .hint("rebalance")
           .write.mode("errorifexists").parquet(stage.toString)
@@ -146,7 +149,8 @@ object ChangeRelay {
     // never funnel into one task — the row-count-bounded sizing a
     // plain repartition(col) (one task per version, a skew bomb at
     // scale) cannot give. Content is identical; only file layout
-    // changes.
+    // changes. With AQE off Spark drops the hint and the write is the
+    // unhinted one.
     SnapshotLog.readChanges(spark, table, from, Some(head), allowFullDiff)
       .withColumn("__graft_cv", col("_commit_version"))
       .hint("rebalance", col("__graft_cv"))

@@ -331,12 +331,67 @@ class SnapshotLogSpec extends SparkSpec {
   test("empty snapshot reads as an empty, correctly-typed frame") {
     val t = mkTable()
     SnapshotLog.write(Seq((1L, "a")).toDF("id", "s"), t, "overwrite")
+    def schemas = Seq(SnapshotLog.read(spark, t).schema,
+      SnapshotLog.readPruned(spark, t, "id").schema, SnapshotLog.readLineage(spark, t).schema)
+    val nonEmpty = schemas
     val cur = SnapshotLog.state(spark, t)
     SnapshotLog.commit(spark, t, "overwrite", Nil, cur.files, cur.schemaJson,
       expected = cur.version)
     val df = SnapshotLog.read(spark, t)
     assert(df.columns.toSeq == Seq("id", "s"))
     assert(df.count() == 0L)
+    // one schema rule: an empty version reads with the same schema as a
+    // non-empty one, nullability included
+    assert(schemas == nonEmpty)
+  }
+
+  test("delete prunes its predicate scan by zone maps") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    val t = mkTable()
+    SnapshotLog.write((0 until 400).map(i => (i.toLong, s"r$i")).toDF("id", "s"), t,
+      "overwrite", clusterColumn = Some("id"), nFiles = 4)
+    assert(SnapshotLog.state(spark, t).files.size == 4)
+    // every file scan the delete's queries executed, cached plans included
+    val scans = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[FileSourceScanExec, java.lang.Boolean]())
+    def walk(p: SparkPlan): Unit = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
+      case m: InMemoryTableScanExec => walk(m.relation.cachedPlan)
+      case s: FileSourceScanExec => scans.add(s); ()
+      case o => o.children.foreach(walk)
+    }
+    val plans = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = walk(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val jobCounter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.GraftTestBridge.drain(spark.sparkContext)
+    spark.listenerManager.register(plans)
+    spark.sparkContext.addSparkListener(jobCounter)
+    try {
+      assert(SnapshotLog.delete(spark, t, col("id") === 150L) == 1L)
+      org.apache.spark.GraftTestBridge.drain(spark.sparkContext)
+    } finally {
+      spark.listenerManager.unregister(plans)
+      spark.sparkContext.removeSparkListener(jobCounter)
+    }
+    info(s"the delete ran ${jobs.get()} Spark jobs")
+    val dataScans = scans.asScala.toSeq.filter(_.relation.location.isInstanceOf[SnapshotFileIndex])
+    assert(dataScans.nonEmpty, "the delete's predicate scan goes through the version's index")
+    assert(dataScans.map(_.metrics("numFiles").value).sum == 1L,
+      "a point delete on the cluster column scans the one file that may hold the key")
+    assert(SnapshotLog.read(spark, t).count() == 399L)
+    assert(SnapshotLog.read(spark, t).where(col("id") === 150L).count() == 0L)
   }
 
   test("compactZ: multi-dimension pruning on the versioned format, history untouched") {
@@ -663,6 +718,11 @@ class SnapshotLogSpec extends SparkSpec {
     }
     failsNaming(SnapshotLog.read(spark, t).count())
     failsNaming(SnapshotLog.readPruned(spark, t, "id").count())
+    failsNaming(SnapshotLog.readLineage(spark, t).count())
+    failsNaming(SnapshotLog.readChanges(spark, t, -1L, Some(0L)).count())
+    failsNaming(SnapshotLog.delete(spark, t, col("id") === 1L))
+    failsNaming(SnapshotLog.update(spark, t, col("id") === 1L, Map("s" -> lit("y"))))
+    assert(SnapshotLog.currentVersion(spark, t) == 0L, "no DML committed over the missing file")
     spark.conf.set("spark.sql.catalog.snmiss", classOf[SnapshotCatalog].getName)
     spark.conf.set("spark.sql.catalog.snmiss.root", root)
     failsNaming(spark.sql("SELECT * FROM snmiss.t").count())

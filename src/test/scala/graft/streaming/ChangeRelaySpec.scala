@@ -84,6 +84,32 @@ class ChangeRelaySpec extends SparkSpec {
       "no nested duplicate may remain under the published version")
   }
 
+  test("with AQE off a one-version relay writes no more files than the unhinted write") {
+    // foreachBatch sessions may run with AQE off. A REBALANCE hint that
+    // planned as a plain shuffle to spark.sql.shuffle.partitions there
+    // would write one sliver per shuffle partition (4 here); Spark drops
+    // the hint without AQE, and this pins that the relay gets no worse
+    // than writing the change set as it comes
+    val base = tmpDir("chrelay_noaqe"); val t = s"$base/t"
+    SnapshotLog.write((0 until 40).map(i => (i.toLong, s"r$i")).toDF("id", "s").coalesce(1),
+      t, "overwrite") // v0: one file
+    val ob = s"$base/outbox"
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      assert(ChangeRelay.relay(spark, t, ob) == Seq(0L))
+      SnapshotLog.readChanges(spark, t, -1L, Some(0L)).write.parquet(s"$base/unhinted")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def files(dir: String): Int =
+      fs.listStatus(new Path(dir)).count(_.getPath.getName.endsWith(".parquet"))
+    val relayed = files(s"$ob/v000000000000")
+    val unhinted = files(s"$base/unhinted")
+    assert(relayed >= 1 && relayed <= unhinted,
+      s"relay wrote $relayed files, the unhinted write $unhinted")
+    assert(spark.read.parquet(s"$ob/v000000000000").count() == 40L)
+  }
+
   test("no-row commits publish an empty marker dir that advances the cursor") {
     val base = tmpDir("chrelay"); val t = mkTable(base); val ob = s"$base/outbox"
     SnapshotLog.purgeDeletes(spark, t) // v3: row-content no-op
